@@ -394,12 +394,15 @@ class Crawler:
 
         return (url, "POST", json.dumps(obj, separators=(",", ":")))
 
-    def seed_df(self, urls_df: DataFrame) -> None:
+    def seed_df(self, urls_df: DataFrame) -> int:
         """DataFrame-native seeding — the scale path for recipe chaining:
         the next step's URLs stay a distributed plan end-to-end (no driver
         round-trip of fetched rows). Requires columns (url, seq); method,
         body, priority, depth, attempt are defaulted when absent. seq is
-        the caller's program order (replay-deterministic)."""
+        the caller's program order (replay-deterministic). Returns the
+        seeded frontier snapshot id: its rows carry each URL's canonical
+        form and key, so callers read them back instead of canonicalizing
+        again."""
         df = urls_df
         defaults = {
             "method": F.lit("GET"),
@@ -421,7 +424,7 @@ class Crawler:
             F.col("attempt").cast("int"),
         )
         prepared = prepare_frontier(df, self.canonicalize)
-        self.frontier_t.overwrite(prepared, {"op": "seed_df"})
+        return self.frontier_t.overwrite(prepared, {"op": "seed_df"})
 
     # --- the round ---------------------------------------------------------------
 
@@ -485,10 +488,18 @@ class Crawler:
         )
 
     def current_round(self) -> int:
+        """The next round's number: one past the last committed metrics
+        round. Every metrics snapshot records its round in its meta, so
+        this is a manifest read; the aggregate over the table runs only
+        when a data dir's meta has no round (e.g. after a compaction)."""
         if self._round is None:
-            m = self.metrics_t.read()
-            row = m.agg(F.max("round").alias("r")).collect()[0]
-            self._round = (row.r if row.r is not None else -1) + 1
+            rounds = [m.get("round") for m in self.metrics_t.dir_metas()]
+            if None in rounds:
+                row = self.metrics_t.read().agg(F.max("round").alias("r")).collect()[0]
+                last = row.r
+            else:
+                last = max(rounds, default=None)
+            self._round = (last if last is not None else -1) + 1
         return self._round
 
     def run_round(self, budget: int | None = None) -> dict:
@@ -505,6 +516,11 @@ class Crawler:
                 marks.append((label, time.time()))
 
         rnd = self.current_round()
+        if self.frontier_t.approx_rows() == 0:
+            # drained frontier, known from the manifest's row stats: no
+            # job, no commit (an empty round would only add vacuous
+            # fetched/seen snapshots)
+            return {"round": rnd, "selected": 0, "done": True}
         frontier = self.frontier_t.read()
         mark("start")
         par = self.spark.sparkContext.defaultParallelism
@@ -732,7 +748,8 @@ class Crawler:
         ).collect()[0]
         has_redirects = bool((st.hop_rows or 0) > 0 or (st.any_moved or 0) > 0)
         if int(st.n or 0) == 0:
-            # drained frontier: skip the empty seen append — it's history
+            # every frontier row was seen, blocked or filtered, so nothing
+            # was fetched: skip the empty seen append — it's history
             # noise (one vacuous snapshot per drained run at scale) and it
             # would leave the just-synced probe sidecars one empty
             # snapshot behind, forcing interactive status()/cached() off

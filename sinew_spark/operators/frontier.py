@@ -200,7 +200,9 @@ def per_group_cap(
     capacity key). Virtual-host farms that spread one server across
     thousands of hostnames defeat a per-HOST cap; grouping by resolved
     IP restores the per-server budget. Hosts absent from the mapping
-    form their own singleton group (ungrouped hosts lose nothing).
+    form their own singleton group (ungrouped hosts lose nothing). A host
+    mapped to several groups (e.g. two A records) joins its smallest
+    group, so each frontier row is kept or dropped once, deterministically.
 
     Selection within a group is (priority, seq) — the same deterministic
     order per_host_cap uses, with host as the final tie-break so replay
@@ -214,8 +216,8 @@ def per_group_cap(
     """
     if cap < 1:
         raise ValueError("cap must be >= 1")
-    m = host_groups.select(
-        F.col("host").alias("_gh"), F.col(group_col).alias("_grp")
+    m = host_groups.groupBy(F.col("host").alias("_gh")).agg(
+        F.min(group_col).alias("_grp")
     )
     out = frontier.join(F.broadcast(m), frontier["host"] == F.col("_gh"), "left")
     grp = F.coalesce(F.col("_grp"), F.concat(F.lit("\x00host:"), F.col("host")))

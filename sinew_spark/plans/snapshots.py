@@ -84,10 +84,21 @@ class SnapshotTable:
             return json.load(f)
 
     def _commit(self, manifest: dict) -> None:
+        """Durable atomic swap: the temp file's bytes reach the disk before
+        the rename, and the rename reaches the disk through the directory
+        fsync — after a power loss the manifest is the old or the new one,
+        never a torn or empty file."""
         tmp = self._manifest_path + f".tmp.{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
             json.dump(manifest, f, indent=1)
+            f.flush()
+            os.fsync(f.fileno())
         os.replace(tmp, self._manifest_path)  # atomic on POSIX
+        fd = os.open(self.path, os.O_RDONLY)
+        try:
+            os.fsync(fd)
+        finally:
+            os.close(fd)
 
     def current_snapshot(self) -> int | None:
         return self._read_manifest()["current"]
@@ -324,6 +335,20 @@ class SnapshotTable:
                     )
                 return s["dirs"]
         raise KeyError(f"snapshot {sid} not found in {self.path}")
+
+    def dir_metas(self, snapshot_id: int | None = None) -> list[dict]:
+        """For each data dir of a snapshot (default: current), the meta of
+        the snapshot that added it — e.g. the crawl round that wrote it.
+        Manifest read only; [] for an empty table."""
+        m = self._read_manifest()
+        sid = snapshot_id if snapshot_id is not None else m["current"]
+        if sid is None:
+            return []
+        added: dict[str, dict] = {}
+        for s in sorted(m["snapshots"], key=lambda s: s["id"]):
+            for d in s["dirs"]:
+                added.setdefault(d, s.get("meta") or {})
+        return [added[d] for d in self._dirs(sid)]
 
     def approx_rows(self, snapshot_id: int | None = None) -> int:
         """Row count of a snapshot from manifest file stats — no Spark job,

@@ -85,8 +85,16 @@ def run_recipe(
     - step chaining is DataFrame-native: a ``url_join`` step resolves the
       next URLs from the previous step's fetched DataFrame (vectorized
       urljoin) and seeds the crawler with the plan — fetched rows are never
-      collected to the driver; the only driver-side materialization is the
-      final CSV render, which is driver-side by contract (golden bytes).
+      collected to the driver. Each step's ``want`` (canonical URL -> step
+      order) is read back from the seeded frontier snapshot, so the
+      canonicalize UDF runs once per step URL, not once per emit
+      evaluation.
+    - the emit plans (fetched scan, ``want`` join, extract, normalize)
+      execute ONCE, in ``CsvSink.render``: one Arrow materialization of
+      all steps' emits, which is driver-side by contract (golden bytes)
+      and from which the tally is also computed. Without ``limit`` no
+      other emit job runs; a drained round and the round counter cost no
+      job either (manifest reads).
     - ``limit`` is FLOW CONTROL, not just render truncation (the
       reference's LimitError aborts fetching mid-run, lib/sinew/main.rb:
       25-27, base.rb:146-149): each fetch step runs budget-bounded rounds
@@ -132,9 +140,7 @@ def run_recipe(
             prev_fetched = None
             continue
 
-        # resolve step URLs as a DataFrame. `want` maps canonical_url ->
-        # step_ord (the step's program order) for result alignment.
-        canon = crawler.canonicalize
+        # resolve step URLs as a DataFrame
         if step.url_join is not None:
             from sinew_spark.functions.urls import urljoin_udf
 
@@ -146,9 +152,6 @@ def run_recipe(
                 urljoin_udf(F.col("final_url"), F.lit(step.url_join)).alias("url"),
                 F.col("seq"),
             )
-            if urls_df.isEmpty():
-                prev_fetched = None
-                continue
         else:
             urls = list(step.urls or [])
             if not urls:
@@ -158,10 +161,16 @@ def run_recipe(
                 [(u if isinstance(u, str) else u[0], i) for i, u in enumerate(urls)],
                 "url string, seq long",
             )
-        want = urls_df.select(
-            canon(F.col("url")).alias("canonical_url"), F.col("seq").alias("step_ord")
+        seeded = crawler.seed_df(urls_df)
+        if crawler.frontier_t.approx_rows(seeded) == 0:
+            prev_fetched = None
+            continue
+        # `want` maps canonical_url -> step_ord (the step's program order)
+        # for result alignment: one row per step URL, duplicates included —
+        # a URL listed twice is fetched once but emits once per seq
+        want = crawler.frontier_t.read(seeded).select(
+            "canonical_url", F.col("seq").alias("step_ord")
         )
-        crawler.seed_df(urls_df)
 
         def step_emits() -> DataFrame:
             fetched = (
@@ -193,17 +202,19 @@ def run_recipe(
             # budget-bounded rounds: fetch at most `remaining` URLs per
             # round, stop as soon as the step has emitted enough rows (a
             # regex/css step can emit >1 row per doc, so this over-fetches
-            # at most one round)
+            # at most one round). A done round commits no fetched rows, so
+            # the loop's last count is the step's emit count; only a step
+            # whose first round is already done counts separately.
+            n_emits = None
             while True:
                 stats = crawler.run_round(budget=remaining)
                 if stats.get("done"):
                     break
-                if step_emits().count() >= remaining:
+                n_emits = step_emits().count()
+                if n_emits >= remaining:
                     break
-        emits = step_emits()
-        sink.emit(emits)
-        if remaining is not None:
-            emitted += emits.count()
+            emitted += n_emits if n_emits is not None else step_emits().count()
+        sink.emit(step_emits())
         # keep the fetched view for chaining (final_url + program order)
         prev_fetched = (
             crawler.fetched_t.read()

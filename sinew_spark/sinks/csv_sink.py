@@ -14,11 +14,17 @@ base.rb:130-151):
   column) — `limit` keeps the first k by seq (base.rb:146-149)
 - tally counts non-null cells per column (csv.rb:36-39) == Spark count(col)
 
-Two writers: `csv_bytes` collects ordered rows and renders byte-exact CSV
-(golden compare; quoting rules identical to Ruby's CSV — quote iff the cell
-contains quote/comma/newline); `write_csv_distributed` uses Spark's CSV
-writer for scale (one file per partition, ordered within+across by seq via
-repartitionByRange)."""
+Two writers:
+
+- `CsvSink.render` materializes the projected emits ONCE, as one Arrow
+  table (`toArrow`; with a `limit` the plan is `orderBy(seq).limit(k)`, a
+  take-ordered), orders it by seq on the driver and renders byte-exact CSV
+  from it (golden compare; quoting rules identical to Ruby's CSV — quote
+  iff the cell contains quote/comma/newline). `CsvSink.report` answers the
+  tally from the same cached table's null counts — no second job, no
+  re-execution of the fetch/extract/normalize plan behind the emits.
+- `write_csv_distributed` uses Spark's CSV writer for scale (one file per
+  partition, ordered within+across by seq via repartitionByRange)."""
 
 from __future__ import annotations
 
@@ -58,16 +64,6 @@ def project_emits(df: DataFrame, columns: list[str]) -> DataFrame:
     return df.select(*cols, F.col("seq"))
 
 
-def tally_counts(projected: DataFrame, columns: list[str]) -> tuple[int, dict]:
-    """(total rows, per-column non-null counts) — csv.rb:36-42. Spark's
-    count(col) skips nulls, matching the reference exactly; one job, one
-    partial-aggregated pass."""
-    row = projected.agg(
-        F.count(F.lit(1)).alias("__total"), *[F.count(c).alias(c) for c in columns]
-    ).collect()[0]
-    return row["__total"], {c: row[c] for c in columns}
-
-
 def tally_report(total: int, tally: dict) -> list[tuple[str, int, float]]:
     """Footer report rows sorted by (-count, column) (main.rb:53-60)."""
     if total == 0:
@@ -84,20 +80,6 @@ def _ruby_csv_cell(v: str | None) -> str:
     if any(ch in v for ch in (",", '"', "\n", "\r")):
         return '"' + v.replace('"', '""') + '"'
     return v
-
-
-def csv_bytes(projected: DataFrame, columns: list[str], limit: int | None = None) -> str:
-    """Byte-exact CSV (header + rows ordered by seq, limit applied) — the
-    golden-compare path. Collect is bounded by `limit`/test scale; use
-    write_csv_distributed for big outputs."""
-    df = projected.orderBy("seq")
-    if limit is not None:
-        df = df.limit(limit)
-    buf = io.StringIO()
-    buf.write(",".join(_ruby_csv_cell(c) for c in columns) + "\n")
-    for row in df.select(columns).toLocalIterator():
-        buf.write(",".join(_ruby_csv_cell(row[c]) for c in columns) + "\n")
-    return buf.getvalue()
 
 
 def write_csv_distributed(projected: DataFrame, columns: list[str], path: str, n_files: int = 32) -> None:
@@ -120,6 +102,8 @@ class CsvSink:
     def __init__(self, columns: list[str] | None = None):
         self.columns: list[str] | None = list(columns) if columns else None
         self._emits: list[DataFrame] = []
+        # (limit, Arrow table) of the last render — report() reads it
+        self._rendered: tuple | None = None
 
     @property
     def started(self) -> bool:
@@ -136,6 +120,7 @@ class CsvSink:
         if not self.started:
             self.freeze_header([c for c in df.columns if c != "seq"])
         self._emits.append(project_emits(df, self.columns))
+        self._rendered = None
 
     def dataframe(self) -> DataFrame:
         if not self._emits:
@@ -145,11 +130,32 @@ class CsvSink:
             out = out.unionByName(e)
         return out
 
+    def _table(self, limit: int | None):
+        """The emitted rows (first ``limit`` by seq) as one Arrow table in
+        seq order — the sink's single Spark job, cached until the next
+        emit. Rendering is driver-side by contract, so the rows are bounded
+        by ``limit``/test scale; use write_csv_distributed for big outputs."""
+        if self._rendered is None or self._rendered[0] != limit:
+            df = self.dataframe()
+            if limit is not None:
+                df = df.orderBy("seq").limit(limit)
+            table = df.select(*self.columns, "seq").toArrow().sort_by("seq")
+            self._rendered = (limit, table)
+        return self._rendered[1]
+
     def render(self, limit: int | None = None) -> str:
-        return csv_bytes(self.dataframe(), self.columns, limit)
+        """Byte-exact CSV: header + rows ordered by seq, limit applied."""
+        table = self._table(limit)
+        buf = io.StringIO()
+        buf.write(",".join(_ruby_csv_cell(c) for c in self.columns) + "\n")
+        cols = [table.column(c).to_pylist() for c in self.columns]
+        for i in range(table.num_rows):
+            buf.write(",".join(_ruby_csv_cell(col[i]) for col in cols) + "\n")
+        return buf.getvalue()
 
     def report(self, limit: int | None = None) -> tuple[int, dict]:
-        df = self.dataframe().orderBy("seq")
-        if limit is not None:
-            df = df.limit(limit)
-        return tally_counts(df, self.columns)
+        """(total rows, per-column non-null counts) — csv.rb:36-42; the
+        Arrow null counts equal Spark's count(col), which skips nulls."""
+        table = self._table(limit)
+        n = table.num_rows
+        return n, {c: n - table.column(c).null_count for c in self.columns}

@@ -640,3 +640,59 @@ def test_probe_driver_local_in_semantic_crawls(spark, tmpdir_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert tuple(sc.statusTracker().getJobIdsForGroup("semprobe")) == ()
+
+
+def _aggregate_round(c):
+    """The next round by aggregate over the metrics table."""
+    r = c.metrics_t.read().agg(F.max("round").alias("r")).collect()[0].r
+    return (r if r is not None else -1) + 1
+
+
+def test_drained_round_runs_no_job_and_commits_nothing(spark, tmpdir_path):
+    c = make_crawler(spark, tmpdir_path)
+    c.seed(["http://httpbingo.org/html"])
+    assert not c.run_round()["done"]
+    tables = {
+        "fetched": c.fetched_t, "seen": c.seen_t,
+        "frontier": c.frontier_t, "metrics": c.metrics_t,
+    }
+    before = {n: len(t.snapshots()) for n, t in tables.items()}
+    sc = spark.sparkContext
+    group = "test_drained_round_runs_no_job"
+    sc.setJobGroup(group, group)
+    try:
+        stats = c.run_round()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert stats == {"round": 1, "selected": 0, "done": True}
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert {n: len(t.snapshots()) for n, t in tables.items()} == before
+
+
+def test_current_round_matches_metrics_aggregate(spark, tmpdir_path):
+    """current_round() from the metrics manifest equals the aggregate over
+    the metrics table: fresh, after 3 rounds, on resume with a new Crawler,
+    after a metrics rollback, and after a compaction drops the meta."""
+    wd = tmpdir_path + "/crawl"
+
+    def crawler():
+        return Crawler(
+            spark, wd, FixtureFetcher(seed=42), CrawlOptions(per_host_cap=1)
+        )
+
+    c = crawler()
+    assert c.current_round() == _aggregate_round(c) == 0
+    c.seed([f"http://site.test/p{i}" for i in range(4)])
+    for _ in range(3):
+        c.run_round()
+    assert c.current_round() == _aggregate_round(c) == 3
+    resumed = crawler()
+    assert resumed.current_round() == _aggregate_round(resumed) == 3
+    first = resumed.metrics_t.snapshots()[0]["id"]
+    resumed.metrics_t.rollback_to(first)
+    rolled = crawler()
+    assert rolled.current_round() == _aggregate_round(rolled) == 1
+    rolled.metrics_t.compact()
+    compacted = crawler()
+    assert compacted.current_round() == _aggregate_round(compacted) == 1

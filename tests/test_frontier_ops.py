@@ -180,3 +180,23 @@ def test_per_group_cap_priority_and_validation(spark):
     assert sorted((r.host, r.seq) for r in out) == [("a", 1), ("b", 9)]
     with _pytest.raises(ValueError):
         per_group_cap(fr, cap=0, host_groups=groups)
+
+
+def test_per_group_cap_host_with_two_ips(spark):
+    """A host listed under two IPs keeps each frontier row once and joins
+    its smallest group deterministically (here 10.0.0.1, shared with b)."""
+    from sinew_spark.operators.frontier import per_group_cap
+
+    rows = [("a.test", f"http://a.test/p{j}", 0.0, j) for j in range(4)]
+    rows += [("b.test", f"http://b.test/p{j}", 0.0, 10 + j) for j in range(4)]
+    fr = spark.createDataFrame(rows, "host string, url string, priority double, seq long")
+    groups = spark.createDataFrame(
+        [("a.test", "10.0.0.2"), ("a.test", "10.0.0.1"), ("b.test", "10.0.0.1")],
+        "host string, ip string",
+    )
+    for parts in (1, 3):
+        out = per_group_cap(fr.repartition(parts), cap=5, host_groups=groups)
+        got = sorted(r.seq for r in out.collect())
+        # one shared budget of 5 across a and b: a's 4 rows, then b's first
+        assert got == [0, 1, 2, 3, 10]
+        assert out.columns == fr.columns

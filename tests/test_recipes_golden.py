@@ -6,6 +6,7 @@ verbatim (extraction logic: test_recipes.rb:22-32). This is the
 BASELINE.json exact-match metric at test scale."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from sinew_spark.crawl import CrawlOptions
 from sinew_spark.recipes import Recipe, RecipeResult, Step, run_recipe
@@ -242,3 +243,61 @@ def test_url_join_chaining_stays_distributed(spark, tmpdir_path):
         crawler.fetched_t.read().where("canonical_url = 'http://chain.test/get'").count()
     )
     assert n_get_fetches == 1  # exactly-once fetch despite 5 chained refs
+
+
+def test_basic_recipe_spark_job_budget(spark, tmpdir_path):
+    """A one-URL recipe's fixed cost in Spark jobs: the emit plan runs
+    once (one Arrow materialization serves the CSV and the tally) and the
+    drained second round runs none."""
+    sc = spark.sparkContext
+    group = "test_basic_recipe_spark_job_budget"
+    sc.setJobGroup(group, group)
+    try:
+        r = run(
+            spark,
+            tmpdir_path,
+            Recipe(
+                steps=[
+                    Step(
+                        urls=["http://httpbingo.org/html"],
+                        iterate=("regex", "<h1>([^<]+)"),
+                        columns={"h1": ("regex_group", 1)},
+                    )
+                ]
+            ),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert r.csv == "h1\nHerman Melville - Moby-Dick\n"
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 14
+
+
+def test_arrow_tally_matches_spark_count(spark):
+    """The tally read from the rendered Arrow table's null counts equals
+    Spark's count(col) over the same first-k-by-seq rows: two emits with
+    NULL cells, a column missing from one emit, and a limit."""
+    from sinew_spark.sinks.csv_sink import CsvSink
+
+    sink = CsvSink(["a", "b", "c"])
+    sink.emit(spark.createDataFrame(
+        [("1", None, 5), (None, "x", 2), ("3", "y", 8)], "a string, b string, seq long"
+    ))
+    sink.emit(spark.createDataFrame(
+        [(None, "z", 1), ("4", None, 9), (None, None, 3)], "a string, c string, seq long"
+    ))
+    for limit in (None, 4):
+        csv = sink.render(limit=limit)
+        count, tally = sink.report(limit=limit)
+        df = sink.dataframe().orderBy("seq")
+        if limit is not None:
+            df = df.limit(limit)
+        row = df.agg(
+            F.count(F.lit(1)).alias("__n"), *[F.count(c).alias(c) for c in "abc"]
+        ).collect()[0]
+        assert count == row["__n"]
+        assert tally == {c: row[c] for c in "abc"}
+        assert csv.count("\n") == count + 1
+    # seq order 1, 2, 3, 5 under limit 4
+    assert csv == "a,b,c\n,,z\n,x,\n,,\n1,,\n"
+    assert (count, tally) == (4, {"a": 1, "b": 1, "c": 1})
