@@ -270,9 +270,9 @@ def q_ttl_expiry(spark, sf_dir):
 
 
 def q_seen_vals_semantic(spark, sf_dir):
-    """C5+C6 scale path: SeenValueShardStore — the zero-shuffle valued seen
-    shards (per-key class-max fetched_at) — answering the combined
-    TTL + force_errors recrawl predicate exactly. Seen entries derive
+    """C5+C6 scale path: SeenKeyShardStore — the zero-shuffle seen index
+    (per-key class-max fetched_at) — answering the combined TTL +
+    force_errors recrawl predicate exactly. Seen entries derive
     deterministically from events (key = event_id, every 7th key an error
     entry, fetched_at = floor(epoch(ts))); the frontier re-offers every
     seen key plus 500 never-seen keys; the result is the fetchable set —
@@ -284,7 +284,7 @@ def q_seen_vals_semantic(spark, sf_dir):
     import shutil
     import tempfile
 
-    from sinew_spark.operators.bloom import SeenValueShardStore
+    from sinew_spark.operators.bloom import SeenKeyShardStore
     from sinew_spark.plans.snapshots import SnapshotTable
 
     _utc(spark)
@@ -312,7 +312,7 @@ def q_seen_vals_semantic(spark, sf_dir):
         )
         t = SnapshotTable(spark, os.path.join(workdir, "seen"), schema)
         t.append(seen)
-        store = SeenValueShardStore(os.path.join(workdir, "vals"), n_shards=8)
+        store = SeenKeyShardStore(os.path.join(workdir, "seen.keys.d"), n_shards=8)
         store.sync(t)
         frontier = spark.range(0, int(lims.mx_id) + 501).select(F.col("id").alias("key"))
         out = store.reject_seen(frontier, expires=86400.0 * 7, force_errors=True, now=now)
@@ -4144,8 +4144,9 @@ def q_semdedup(spark, sf_dir):
     planted copies are the ONLY pairs >= 0.95 in this data); centroids
     are the first 16 embedding rows themselves (seed centroids = Lloyd
     iteration zero) so the oracle replays cell assignment in pure SQL
-    (argmin of |e|^2 - 2e.c + |c|^2, ties to the lowest centroid id —
-    the same first-min-index rule as assign_cells). Expect kept=false
+    (argmin of the element-wise sum((e - c)^2), folded left to right
+    like assign_cells so the distances are bit-identical, ties to the
+    lowest centroid id — the same first-min-index rule as assign_cells). Expect kept=false
     exactly on the planted clones: a clone's cell equals its original's
     (identical vector -> identical distance vector) and its id is
     larger."""
@@ -5137,18 +5138,20 @@ def oracle_sql() -> dict[str, str]:
     )
 
     return {
-        # semdedup: replay cell assignment from the 8 seed centroids
-        # (argmin of |e|^2 - 2e.c + |c|^2, ties to lowest centroid id =
-        # assign_cells' first-min-index), then the min-id-survivor rule
-        # on round(cos,4) >= 0.95 pairs within a cell
+        # semdedup: replay cell assignment from the 16 seed centroids
+        # (argmin of sum((e - c)^2) folded left to right — assign_cells'
+        # exact arithmetic — ties to lowest centroid id = assign_cells'
+        # first-min-index), then the min-id-survivor rule on
+        # round(cos,4) >= 0.95 pairs within a cell
         "semdedup": (
             "WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings), "
             "planted AS (SELECT vec_id + 100000 AS vec_id, e FROM base WHERE vec_id % 40 = 0), "
             "s AS (SELECT * FROM base UNION ALL SELECT * FROM planted), "
             "c AS (SELECT vec_id AS cid, e AS ce FROM base WHERE vec_id < 16), "
             "d AS (SELECT s.vec_id, c.cid, "
-            "list_dot_product(s.e, s.e) - 2*list_dot_product(s.e, c.ce) + "
-            "list_dot_product(c.ce, c.ce) AS dist FROM s CROSS JOIN c), "
+            "list_reduce(list_transform(list_zip(s.e, c.ce), "
+            "p -> (p[1] - p[2]) * (p[1] - p[2])), (a, b) -> a + b) AS dist "
+            "FROM s CROSS JOIN c), "
             "cells AS (SELECT vec_id, cid AS cell FROM ("
             "SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id "
             "ORDER BY dist, cid) AS rn FROM d) WHERE rn = 1), "
@@ -5165,7 +5168,7 @@ def oracle_sql() -> dict[str, str]:
         # lm_perplexity: identical tokenization (lower, [^a-z0-9]+ ->
         # space, split, drop empties), identical pruned tables (ties by
         # token string), identical per-bigram int64 quantization of
-        # ln((c12+1)/(c1+V)) — the sums are then exact integers
+        # ln((c12+1)/(max(c1,c12)+V)) — the sums are then exact integers
         "lm_perplexity": (
             "WITH tok AS (SELECT doc_id, list_filter(string_split("
             "regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '), "
@@ -5183,7 +5186,8 @@ def oracle_sql() -> dict[str, str]:
             "unnest(range(1, len(t))) AS r(i) WHERE len(t) >= 2), "
             "lp AS (SELECT doc_id, CAST(round(ln("
             "CAST(coalesce(big.c12, 0) + 1 AS DOUBLE) / "
-            "CAST(coalesce(ctx.c1, 0) + (SELECT vn FROM v) AS DOUBLE)"
+            "CAST(greatest(coalesce(ctx.c1, 0), coalesce(big.c12, 0)) "
+            "+ (SELECT vn FROM v) AS DOUBLE)"
             ") * 1000000) AS BIGINT) AS lp FROM dbg "
             "LEFT JOIN big USING (w1, w2) LEFT JOIN ctx ON dbg.w1 = ctx.cw), "
             "sc AS (SELECT doc_id, count(*) AS n_bigrams, "

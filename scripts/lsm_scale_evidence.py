@@ -44,7 +44,9 @@ def steal_ticks() -> int:
 
 
 def run_file_count(workdir: str) -> int:
-    return len(glob.glob(os.path.join(workdir, "seen.keys.d", "*.npy")))
+    """Add + tombstone runs of the seen index (vals-/vdel- .npz files)."""
+    side = os.path.join(workdir, "seen.keys.d")
+    return sum(len(glob.glob(os.path.join(side, f"{p}-*.npz"))) for p in ("vals", "vdel"))
 
 
 def main() -> None:

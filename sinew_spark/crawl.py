@@ -14,11 +14,12 @@ round loop of declarative DataFrame plans:
 Durability/resumability: frontier, seen, fetched, documents, metrics are
 snapshot tables (plans/snapshots.py); each round commits one snapshot per
 table, so a killed crawl resumes from the last committed round with
-identical ordering (seq is data, not runtime state). The exact seen-key
-shards are snapshot-synced truth with an anti-join fallback; the Bloom
-sidecar (same snapshot discipline) is a short-circuit consulted INSIDE the
-exact probe — a bloom false positive falls through to the binary search,
-never drops a row (operators/bloom.py).
+identical ordering (seq is data, not runtime state). The exact seen index
+(sorted shard runs of key + per-class max fetched_at) is snapshot-synced
+truth with an anti-join fallback; the Bloom sidecar (same snapshot
+discipline) is a short-circuit consulted INSIDE the plain exact probe — a
+bloom false positive falls through to the binary search, never drops a
+row (operators/bloom.py).
 
 Determinism: every row carries (priority, seq); seq for discovered links is
 parent_seq * LINK_STRIDE + link_index, so replay ordering is a pure function
@@ -29,9 +30,9 @@ Scale notes (100 TB design point):
   downstream seen filter reuses) and groupBy(host) for paced fetch —
   nothing else: the exactly-once check is a shard-local probe whose
   key-only filter Catalyst pushes below the dedup shuffle (seen rows
-  never shuffle) — plain membership via SeenKeyShardStore with the bloom
-  short-circuit fused in, TTL/force_errors semantics via
-  SeenValueShardStore (per-key class-max fetched_at), so even the
+  never shuffle) — one seen index, SeenKeyShardStore, answers plain
+  membership (bloom short-circuit fused in) and the TTL/force_errors
+  semantics (per-key class-max fetched_at) alike, so even the
   continuous-recrawl mode never joins against the seen table; the
   anti-join fallback serves small-seen runs
 - per-host caps bound fetch-task skew regardless of host distribution
@@ -57,11 +58,7 @@ from sinew_spark.functions.urls import (
     make_canonicalize_udf,
     request_key_expr,
 )
-from sinew_spark.operators.bloom import (
-    BloomShardStore,
-    SeenKeyShardStore,
-    SeenValueShardStore,
-)
+from sinew_spark.operators.bloom import BloomShardStore, SeenKeyShardStore
 from sinew_spark.operators.frontier import (
     FRONTIER_SCHEMA,
     SEEN_SCHEMA,
@@ -349,18 +346,12 @@ class Crawler:
             capacity=self.opts.bloom_capacity,
             n_shards=self.opts.bloom_shards,
         )
-        # exact seen-key shards: the anti-join's zero-shuffle replacement
-        # for the plain exactly-once path (semantic modes — force / TTL /
-        # force_errors — need seen columns and keep the join)
+        # the exact seen index: the anti-join's zero-shuffle replacement
+        # for every exactly-once mode (per-key class-max fetched_at answers
+        # plain, TTL and force_errors probes with anti_join_seen's exact
+        # semantics)
         self._seen_keys = SeenKeyShardStore(
             os.path.join(workdir, "seen.keys.d"), n_shards=self.opts.bloom_shards
-        )
-        # valued shards for the semantic modes (TTL expiry / force_errors):
-        # per-key class-max fetched_at lets the recrawl loop reject
-        # shard-locally with anti_join_seen's exact semantics. Distinct
-        # sidecar dir — the two stores version against seen independently.
-        self._seen_vals = SeenValueShardStore(
-            os.path.join(workdir, "seen.vals.d"), n_shards=self.opts.bloom_shards
         )
         self._round: int | None = None  # lazily read from metrics, then cached
 
@@ -502,6 +493,47 @@ class Crawler:
             self._round = (last if last is not None else -1) + 1
         return self._round
 
+    @property
+    def _semantic(self) -> bool:
+        """A recrawl mode (force / force_errors / TTL) rather than plain
+        exactly-once."""
+        return self.opts.force or self.opts.force_errors or self.opts.expires is not None
+
+    def _reject_seen(
+        self,
+        df: DataFrame,
+        use_shards: bool,
+        expires: float | None = None,
+        force_errors: bool = False,
+        now: float | None = None,
+    ) -> DataFrame:
+        """The exactly-once probe, ``anti_join_seen`` semantics. With
+        ``use_shards`` the seen index (and, for plain crawls, the Bloom
+        sidecar) is first synced to the committed seen snapshot, then
+        probed shard-local: Catalyst pushes the key-only probe filter below
+        the dedup shuffle, so seen rows never shuffle and the seen table's
+        keys are never reshuffled per round. A plain probe fuses in the
+        in-sync Bloom as a short-circuit — rows it cannot contain skip the
+        binary search, maybe-seen rows fall through to it (a false positive
+        costs one search, never a dropped URL). Without ``use_shards``
+        (small seen: AQE broadcasts it) or when the index can't sync, the
+        exact anti-join. The Bloom is only synced in plain crawls: the
+        semantic modes' round-start probe never consults it, so a per-round
+        add_delta job (and a full first-round rebuild) there is pure
+        overhead."""
+        if use_shards:
+            self._seen_keys.sync(self.seen_t)
+            if not self._semantic:
+                self._bloom.sync(self.seen_t)
+        if not (use_shards and self._seen_keys.in_sync_with(self.seen_t)):
+            return anti_join_seen(
+                df, self.seen_t.read(), expires=expires, force_errors=force_errors, now=now
+            )
+        bloom = self._bloom if self._bloom.in_sync_with(self.seen_t) else None
+        return self._seen_keys.reject_seen(
+            df, expires=expires, force_errors=force_errors, now=now, bloom=bloom
+        )
+
     def run_round(self, budget: int | None = None) -> dict:
         """One frontier superstep. ``budget`` overrides opts.round_budget
         for this round (recipe limit flow control: fetch at most the rows
@@ -537,55 +569,22 @@ class Crawler:
         if self.opts.url_allow or self.opts.url_deny:
             cand = apply_url_scope(cand, self.opts.url_allow, self.opts.url_deny)
 
-        # 2. exactly-once filter. Normal path at scale: EXACT shard-local
-        # key probe (SeenKeyShardStore) with the bloom fused in as a
-        # short-circuit — rows the bloom cannot contain skip the binary
-        # search, maybe-seen rows fall through to it (a bloom false
-        # positive costs one search, never a dropped URL). Catalyst pushes
-        # the key-only probe filter below the dedup shuffle, so seen rows
-        # never shuffle and the seen table's keys are never reshuffled per
-        # round. Both sidecars are snapshot-synced before the probe; if
-        # either can't sync the probe degrades safely (exact-only, or the
-        # anti-join fallback). Semantic modes (TTL expiry / force_errors)
-        # need the per-key status/fetched_at statistics: at scale they
-        # probe the VALUED shards (SeenValueShardStore — same zero-shuffle
-        # discipline, the recrawl loop's hot path since `expires`
-        # re-examines the whole corpus every round), falling back to the
-        # exact anti-join while the seen side is still broadcast-small.
-        # `force` ignores seen entirely — no filter, no sync. The bloom is
-        # never consulted in semantic modes: maybe-seen rows must be
-        # re-examined with their stats, not short-circuited.
-        semantic = self.opts.force or self.opts.force_errors or self.opts.expires is not None
+        # 2. exactly-once filter (``_reject_seen``): the shard-local
+        # probe of the seen index at scale, the exact anti-join while the
+        # seen side is still broadcast-small. `force` ignores seen
+        # entirely — no filter, no sync.
         use_shards = (
             self.opts.exact_shards
             if self.opts.exact_shards is not None
             else self.seen_t.approx_rows() > EXACT_SHARDS_AUTO_ROWS
         )
-        if not semantic:
-            if use_shards:
-                self._seen_keys.sync(self.seen_t)
-                self._bloom.sync(self.seen_t)
-            if use_shards and self._seen_keys.in_sync_with(self.seen_t):
-                bloom = self._bloom if self._bloom.in_sync_with(self.seen_t) else None
-                cand = self._seen_keys.reject_seen(cand, bloom=bloom)
-            else:  # small seen (broadcast join is free) or sync impossible
-                cand = anti_join_seen(cand, self.seen_t.read())
-        elif not self.opts.force:
-            if use_shards:
-                self._seen_vals.sync(self.seen_t)
-            if use_shards and self._seen_vals.in_sync_with(self.seen_t):
-                cand = self._seen_vals.reject_seen(
-                    cand,
-                    expires=self.opts.expires,
-                    force_errors=self.opts.force_errors,
-                )
-            else:
-                cand = anti_join_seen(
-                    cand,
-                    self.seen_t.read(),
-                    expires=self.opts.expires,
-                    force_errors=self.opts.force_errors,
-                )
+        if not self.opts.force:
+            cand = self._reject_seen(
+                cand,
+                use_shards,
+                expires=self.opts.expires,
+                force_errors=self.opts.force_errors,
+            )
 
         # 3. robots gating (north-rule addition; reference lacks it)
         if self.robots is not None:
@@ -691,7 +690,7 @@ class Crawler:
         validators = None
         if (
             self.opts.revalidate
-            and semantic
+            and self._semantic
             and self.fetched_t.current_snapshot() is not None
         ):
             validators = latest_validators(self.fetched_t.read())
@@ -844,18 +843,6 @@ class Crawler:
         n_fetched = n_selected
         if n_selected == 0:
             return {"round": rnd, "selected": 0, "done": True}
-        # bloom update: snapshot-gated catch-up to the just-committed seen
-        # state — in steady state one distributed shard-local OR of the
-        # delta's keys (one task per shard; the driver writes only
-        # meta.json), after a crash or a legacy sidecar the same call
-        # re-absorbs whatever is missing. Gated on the one configuration
-        # whose probe consults the bloom (the fused shard probe): the
-        # anti-join path below the auto threshold and the semantic modes
-        # never read it, so paying a per-round add_delta job (and a full
-        # first-round rebuild) there is pure overhead.
-        if use_shards and not semantic:
-            self._bloom.sync(self.seen_t)
-        mark("keys+bloom")
 
         # host_budget spend ledger: one O(hosts) append per round (pruned
         # 1-column scan of the round's delta; 304 revalidations count —
@@ -995,11 +982,9 @@ class Crawler:
             # paths: a key fetched this run is out of the frontier, and in TTL
             # mode a still-fresh key cannot be fetched before the loop drains —
             # recrawl re-enters it by re-seeding (module doctrine). The shard
-            # path absorbs the fresh delta into its shards (the sync the next
+            # path absorbs the fresh delta into the index (the sync the next
             # round would do anyway) and probes shard-local — the per-round
-            # O(seen) shuffle this join used to cost is gone. Semantic runs
-            # keep only the valued store in sync (it answers every probe
-            # flavor below).
+            # O(seen) shuffle this join used to cost is gone.
             #
             # force/force_errors are DIFFERENT: a key seen only in a PREVIOUS
             # run is exactly what these modes exist to refetch (C6,
@@ -1012,52 +997,20 @@ class Crawler:
             #     run, even for a host that 500s forever);
             #   - for force_errors additionally every ever-OK key, which that
             #     mode never refetches.
-            store = self._seen_vals if semantic else self._seen_keys
-            if use_shards:
-                store.sync(self.seen_t)
-            refetch_mode = self.opts.force or self.opts.force_errors
-            # expires=0 with now pinned at run start makes the probe's TTL
-            # cutoff EXACTLY _run_started_at (blocked iff fetched_at >= run
-            # start = attempted this run) — no clock re-read, no race with
-            # stamps taken earlier this round
-            if use_shards and store.in_sync_with(self.seen_t):
-                if refetch_mode:
-                    if self.opts.force_errors and not self.opts.force:
-                        next_frontier = store.reject_seen(
-                            next_frontier, force_errors=True
-                        )
-                    next_frontier = store.reject_seen(
-                        next_frontier, expires=0.0, now=self._run_started_at
+            if self.opts.force or self.opts.force_errors:
+                if self.opts.force_errors and not self.opts.force:
+                    next_frontier = self._reject_seen(
+                        next_frontier, use_shards, force_errors=True
                     )
-                elif semantic:
-                    next_frontier = store.reject_seen(next_frontier)
-                else:
-                    # keys store: fuse the bloom short-circuit exactly like
-                    # the round-start probe — it was synced to the same
-                    # post-commit snapshot above, and next_frontier is the
-                    # mostly-NEW population (fresh links) the bloom exists
-                    # to skip binary searches for
-                    bloom = (
-                        self._bloom
-                        if self._bloom.in_sync_with(self.seen_t)
-                        else None
-                    )
-                    next_frontier = store.reject_seen(next_frontier, bloom=bloom)
+                # expires=0 with now pinned at run start makes the probe's
+                # TTL cutoff EXACTLY _run_started_at (blocked iff fetched_at
+                # >= run start = attempted this run) — no clock re-read, no
+                # race with stamps taken earlier this round
+                next_frontier = self._reject_seen(
+                    next_frontier, use_shards, expires=0.0, now=self._run_started_at
+                )
             else:
-                seen_after = self.seen_t.read()
-                if refetch_mode:
-                    if self.opts.force_errors and not self.opts.force:
-                        next_frontier = anti_join_seen(
-                            next_frontier, seen_after, force_errors=True
-                        )
-                    next_frontier = anti_join_seen(
-                        next_frontier, seen_after, expires=0.0,
-                        now=self._run_started_at,
-                    )
-                else:
-                    next_frontier = next_frontier.join(
-                        seen_after.select("key"), "key", "left_anti"
-                    )
+                next_frontier = self._reject_seen(next_frontier, use_shards)
             if self.opts.max_depth is not None:
                 next_frontier = next_frontier.where(F.col("depth") <= self.opts.max_depth)
             if self.robots is not None:
@@ -1168,17 +1121,17 @@ class Crawler:
         the handle is (table dir, identity key) rather than a per-request
         file.
 
-        Fast path: when EITHER exact shard sidecar (key store, or the
-        valued store — the one semantic TTL/force_errors runs keep in
-        sync) is warm and in sync with the seen table, a MISS is answered
-        entirely on the driver (local canonicalize + hash + shard binary
-        search — no Spark job, matching the reference's O(1) local
-        probe). Only a HIT (needs the row's status/fetched_at) or a cold
-        store runs the 1-row Spark lookup."""
+        Fast path: when the seen index is warm and in sync with the seen
+        table, a MISS is answered entirely in this process (local
+        canonicalize + hash + shard binary search — no Spark job, matching
+        the reference's O(1) local probe). Only a HIT (needs the row's
+        status/fetched_at) or a cold index runs the 1-row Spark lookup."""
         key, curl = self._key_for(url, method, body)
         diskpath = os.path.join(self.workdir, "fetched")
-        probe_store = self._local_probe_store()
-        if probe_store is not None and probe_store.probe_local(key) is False:
+        if (
+            self._seen_keys.in_sync_with(self.seen_t)
+            and self._seen_keys.probe_local(key) is False
+        ):
             return {"status": "miss", "key": key, "url": curl, "diskpath": diskpath}
         rows = self.seen_t.read().where(F.col("key") == key).limit(1).collect()
         if not rows:
@@ -1194,31 +1147,19 @@ class Crawler:
 
     def cached(self, url: str, method: str = "GET", body: str = "") -> bool:
         """Boolean probe (sinew's ``cached?``): fully driver-local when the
-        key OR valued shards are warm — membership alone answers it, no
-        Spark job in either direction."""
-        probe_store = self._local_probe_store()
-        if probe_store is not None:
-            hit = probe_store.probe_local(self._key_for(url, method, body)[0])
+        seen index is warm — membership alone answers it, no Spark job in
+        either direction."""
+        if self._seen_keys.in_sync_with(self.seen_t):
+            hit = self._seen_keys.probe_local(self._key_for(url, method, body)[0])
             if hit is not None:
                 return hit
         return self.status(url, method, body)["status"] != "miss"
 
-    def _local_probe_store(self):
-        """Whichever exact shard sidecar is in sync with the seen table —
-        the key store (plain crawls) or the valued store (semantic
-        TTL/force_errors crawls sync only that one) — for O(1)
-        driver-local probes; None when both are cold."""
-        for s in (self._seen_keys, self._seen_vals):
-            if s.in_sync_with(self.seen_t):
-                return s
-        return None
-
     def uncache(self, url: str, method: str = "GET", body: str = "") -> None:
         """Row-level delete (sinew's uncache) — O(delta) end to end at the
         10^10-key design point: a merge-on-read equality-delete snapshot
-        (tiny delete file, no table rewrite) that the key/value shard
-        stores absorb as tombstone runs on their next sync (no O(seen)
-        rebuild). The Bloom may retain the key — fail-safe: under the
+        (tiny delete file, no table rewrite) that the seen index absorbs
+        as tombstone runs on its next sync (no O(seen) rebuild). The Bloom may retain the key — fail-safe: under the
         fused probe a stale bloom entry only sends the key to the exact
         search, which honors the tombstone."""
         key, _ = self._key_for(url, method, body)

@@ -1,10 +1,12 @@
 """Sharded Bloom filter for the URL-seen set.
 
 The exactly-once guarantee is enforced by an EXACT check — the left-anti
-join against the `seen` table, or its zero-shuffle scale path, the
-``SeenKeyShardStore`` binary-search probe (/root/reference/README.md:114 —
-"Each URL will be hit exactly once"). The Bloom filter is a probabilistic
-short-circuit INSIDE that exact probe (``SeenKeyShardStore.reject_seen``):
+join against the `seen` table, or its zero-shuffle scale path, the one
+seen index ``SeenKeyShardStore`` (sorted shard runs of every seen key with
+its per-class max fetched_at, answering plain, TTL and force_errors probes
+by binary search; the reference README's "Each URL will be hit exactly
+once"). The Bloom filter is a probabilistic short-circuit INSIDE
+that index's plain probe (``SeenKeyShardStore.reject_seen``):
 rows whose key the bloom cannot contain skip the sorted-run search; rows
 the bloom flags as maybe-seen fall through to the exact search, so a bloom
 false positive costs one redundant binary search — NEVER a dropped URL. (An
@@ -16,7 +18,7 @@ Because "definitely new skips the exact search" is load-bearing, the bloom
 must contain EVERY key of the seen snapshot it claims to cover — an
 under-populated bloom would let a seen key skip the search and be
 refetched. ``sync()`` enforces the same snapshot discipline as the key
-store: meta records the last absorbed seen snapshot id, newer append
+index: meta records the last absorbed seen snapshot id, newer append
 deltas are absorbed before any probe, and the fused probe only consults a
 bloom that is in sync (otherwise it runs exact-only, which is always
 safe). Non-append history (uncache's delete, compaction) only ever REMOVES
@@ -42,12 +44,12 @@ Two layers:
   of the whole bitset. At the 10^10-key design point (~12 GB of bits at
   fpp 0.01) the driver cost is a meta.json write per round.
 
-Why keep a bloom at all when the key shards are exact: the bitset is
-~25x smaller than the sorted key runs (1.2 vs 8 bytes/key at fpp 0.01),
-so under the worker LRU budget the bloom stays resident when the key runs
+Why keep a bloom at all when the index is exact: the bitset is ~20x
+smaller than the index runs (1.2 vs 24 bytes/key at fpp 0.01), and both
+share one worker LRU budget, so the bloom stays resident when the runs
 don't — in the steady-state crawl, where most candidates are NEW, the
-bloom answers most rows from memory and the key-run load/search happens
-only for the maybe-seen minority.
+bloom answers most rows from memory and the run load/search happens only
+for the maybe-seen minority.
 
 Crash safety: shard files are written tmp+rename; the snapshot id only
 advances after the shard writes land, so a crash mid-sync is repaired by
@@ -156,7 +158,8 @@ class BloomShards:
 
 
 class _ShardLRU:
-    """Byte-bounded per-python-worker cache of shard payloads, keyed by a
+    """Byte-bounded per-python-worker cache of shard payloads (Bloom
+    shards and the seen index's folded runs alike), keyed by a
     stable shard identity plus a freshness fingerprint (mtime/size — a new
     fingerprint drops the shard's stale generations on insert). Worker
     processes are reused across tasks/batches, so a hot shard is read once
@@ -491,135 +494,230 @@ class BloomShardStore:
         self.snapshot_id = None
 
 
-# --- exact seen-key shards (the anti-join's scale path) ----------------------------
-
-_KEYS_CACHE = _ShardLRU(_CACHE_BUDGET)  # (dirpath, shard) + run-list fp -> sorted int64 keys
+# --- the exact seen index (the anti-join's scale path) -----------------------------
 
 # LSM knobs: a shard is a set of sorted-unique RUN files (one per absorbed
-# round) unioned at probe time; when a shard accumulates this many runs the
+# round) folded at probe time; when a shard accumulates this many runs the
 # next absorb merges them into one. Bounds per-round write volume to
 # O(delta) instead of O(shard) — at the 10^10-key design point a round
-# writes ~0.8 GB of new runs instead of rewriting the full 80 GB key set,
-# while probes still see one worker-cached sorted array per shard.
+# writes ~2.4 GB of new runs instead of rewriting the full 240 GB index,
+# while probes still see one worker-cached sorted array set per shard.
 KEYS_COMPACT_RUNS = 8
+
+# meta.json layout marker. A meta without it was written by the key-only
+# store this one replaced (keys-/dels- .npy runs, no per-key statistics):
+# its runs cannot answer the probe, so the store opens it cold and the
+# first sync() rebuilds.
+_LAYOUT = "valued-runs"
+
+_NEG_INF = float("-inf")
+
+# run kind -> file prefix: 'k' add runs carry (keys, fa_ok, fa_err),
+# 'd' tombstone runs carry keys only
+_RUN_PREFIX = {"k": "vals", "d": "vdel"}
 
 
 def _run_gen(name: str) -> int:
-    """Run-file generation: keys-SSSSS.rGGGGGG.npy -> G; legacy
-    keys-SSSSS.npy (pre-LSM single-file shard) counts as generation 0."""
-    base = name[:-4]  # strip .npy
-    pos = base.rfind(".r")
-    return int(base[pos + 2 :]) if pos >= 0 else 0
+    """Run-file generation: vals-SSSSS.rGGGGGG.npz -> G."""
+    base = name[:-4]  # strip .npz
+    return int(base[base.rfind(".r") + 2 :])
 
 
-def _shard_run_files(dirpath: str, shard: int, prefix: str = "keys") -> list[str]:
-    pre = f"{prefix}-{shard:05d}"
+def _run_entries(dirpath: str, shard: int) -> list[tuple[int, str, str]]:
+    """(generation, kind, path) for a shard's add and tombstone runs."""
     try:
         names = os.listdir(dirpath)
     except FileNotFoundError:
         return []
-    return sorted(
-        os.path.join(dirpath, n)
-        for n in names
-        if n.startswith(pre) and n.endswith(".npy")
-    )
+    out = []
+    for kind, prefix in _RUN_PREFIX.items():
+        pre = f"{prefix}-{shard:05d}."
+        out += [
+            (_run_gen(n), kind, os.path.join(dirpath, n))
+            for n in names
+            if n.startswith(pre) and n.endswith(".npz")
+        ]
+    return sorted(out)
 
 
-def _fold_key_runs(entries: list[tuple[int, str, np.ndarray]]) -> np.ndarray:
-    """Resolve a shard's run sequence into one sorted-unique key array.
-    ``entries`` are (generation, kind, sorted-unique array) with kind 'k'
-    (add run) or 'd' (tombstone run); later generations win, so a key
-    deleted at gen g and re-added at gen g' > g is a member. Runs within
-    one kind commute, so the no-tombstone fast path is a plain union."""
+def _load_run(path: str, kind: str):
+    with np.load(path) as z:
+        return (z["keys"], z["fa_ok"], z["fa_err"]) if kind == "k" else z["keys"]
+
+
+def _merge_runs(arrs: list[tuple]) -> tuple:
+    """Union add runs into (sorted unique keys, per-key class maxima)."""
+    keys = np.concatenate([a[0] for a in arrs])
+    fa_ok = np.concatenate([a[1] for a in arrs])
+    fa_err = np.concatenate([a[2] for a in arrs])
+    uk, inv = np.unique(keys, return_inverse=True)
+    mok = np.full(len(uk), _NEG_INF)
+    merr = np.full(len(uk), _NEG_INF)
+    np.maximum.at(mok, inv, fa_ok)
+    np.maximum.at(merr, inv, fa_err)
+    return uk, mok, merr
+
+
+def _fold_runs(entries: list[tuple[int, str, object]]) -> tuple:
+    """Resolve add runs + tombstones in generation order: add runs merge
+    per-key class maxima; a tombstone removes its keys (with all their
+    statistics — a later re-add starts fresh, matching the table's
+    delete-then-re-append semantics). No-tombstone fast path is the
+    order-free class-max merge."""
     if all(kind == "k" for _g, kind, _a in entries):
         arrs = [a for _g, _k, a in entries]
-        return arrs[0] if len(arrs) == 1 else np.unique(np.concatenate(arrs))
-    cur = np.empty(0, dtype=np.int64)
-    for _g, kind, arr in sorted(entries, key=lambda e: e[0]):
+        return arrs[0] if len(arrs) == 1 else _merge_runs(arrs)
+    e = np.empty(0)
+    cur = (e.astype(np.int64), e.astype(np.float64), e.astype(np.float64))
+    for _g, kind, payload in sorted(entries, key=lambda t: t[0]):
         if kind == "k":
-            cur = np.union1d(cur, arr)
+            cur = _merge_runs([cur, payload]) if len(cur[0]) else payload
         else:
-            cur = np.setdiff1d(cur, arr, assume_unique=True)
+            keep = ~np.isin(cur[0], payload, assume_unique=True)
+            cur = (cur[0][keep], cur[1][keep], cur[2][keep])
     return cur
 
 
-def _shard_entries(dirpath: str, shard: int, prefix: str = "keys") -> list[tuple[int, str, str]]:
-    """(generation, kind, path) for a shard's add + tombstone run files."""
-    adds = _shard_run_files(dirpath, shard, prefix)
-    dels = _shard_run_files(dirpath, shard, "dels" if prefix == "keys" else "vdel")
-    return [(_run_gen(os.path.basename(p)), "k", p) for p in adds] + [
-        (_run_gen(os.path.basename(p)), "d", p) for p in dels
-    ]
-
-
-def _load_keys_shard(dirpath: str, shard: int) -> np.ndarray:
-    """The shard's run sequence folded into one sorted array (tombstones
-    applied in generation order), worker-cached keyed by the run list's
-    (name, mtime, size) fingerprint — reloaded only when an
-    absorb/compaction changes the shard."""
+def _load_runs_shard(dirpath: str, shard: int) -> tuple:
+    """The shard's runs folded into (keys, fa_ok, fa_err), worker-cached
+    keyed by the run list's (name, mtime, size) fingerprint — reloaded
+    only when an absorb/compaction changes the shard."""
     for _attempt in range(3):  # a concurrent compaction can unlink a run mid-read
-        entries = _shard_entries(dirpath, shard)
+        entries = _run_entries(dirpath, shard)
         if not entries:
-            return np.empty(0, dtype=np.int64)
+            e = np.empty(0)
+            return e.astype(np.int64), e, e
         try:
             sig = tuple((p, os.stat(p).st_mtime_ns, os.stat(p).st_size) for _g, _k, p in entries)
-            hit = _KEYS_CACHE.get((dirpath, shard), sig)
+            hit = _SHARD_CACHE.get((dirpath, shard), sig)
             if hit is None:
-                hit = _fold_key_runs([(g, k, np.load(p)) for g, k, p in entries])
-                _KEYS_CACHE.put((dirpath, shard), sig, hit, hit.nbytes)
+                hit = _fold_runs([(g, k, _load_run(p, k)) for g, k, p in entries])
+                _SHARD_CACHE.put((dirpath, shard), sig, hit, sum(a.nbytes for a in hit))
             return hit
         except FileNotFoundError:
             continue
     raise OSError(f"shard {shard} runs kept disappearing under {dirpath}")
 
 
+def _run_payload(pdf, kind: str):
+    """One shard's slice of a delta as a run payload: per-key class maxima
+    for an add run, the sorted unique keys for a tombstone run."""
+    keys = pdf["key"].to_numpy("int64")
+    if kind == "d":
+        return np.unique(keys)
+    # null status: anti_join_seen's `status < 400` is NULL -> the entry
+    # never counts as ok-class but still blocks plainly — i.e. exactly
+    # the error-class treatment, so map null -> 600.
+    # null fetched_at: NULL freshness comparisons drop the entry from
+    # every TTL-filtered live set while it still blocks the plain probe —
+    # a finite -1e308 reproduces both.
+    status = pdf["status"].fillna(600).to_numpy("int64")
+    fa = pdf["fetched_at"].fillna(-1e308).to_numpy("float64")
+    # ok-class = 100..399, matching anti_join_seen's live filter: status
+    # < 100 is the transport's -1 stamp (DNS/timeout/TLS, redirect-limit)
+    # — error-class, so force_errors retries it
+    ok = (status >= 100) & (status < 400)
+    uk, inv = np.unique(keys, return_inverse=True)
+    mok = np.full(len(uk), _NEG_INF)
+    merr = np.full(len(uk), _NEG_INF)
+    np.maximum.at(mok, inv[ok], fa[ok])
+    np.maximum.at(merr, inv[~ok], fa[~ok])
+    return uk, mok, merr
+
+
+def _write_run(dirpath: str, shard: int, kind: str, payload) -> None:
+    """Append one run of ``kind`` to a shard's generation sequence; once
+    the shard would exceed KEYS_COMPACT_RUNS runs, fold every run plus
+    this one into a single resolved add run instead. Crash-safe without
+    repair: the run is tmp+renamed, and compaction renames the merged run
+    BEFORE unlinking its inputs — a stale leftover input is a lower
+    generation already subsumed by the merged run (class-max merge is
+    idempotent; a leftover tombstone precedes the merged run)."""
+    entries = _run_entries(dirpath, shard)
+    nxt = max((g for g, _k, _p in entries), default=0) + 1
+    compact = len(entries) + 1 > KEYS_COMPACT_RUNS
+    if compact:
+        payload = _fold_runs(
+            [(g, k, _load_run(p, k)) for g, k, p in entries] + [(nxt, kind, payload)]
+        )
+        kind = "k"
+    target = os.path.join(dirpath, f"{_RUN_PREFIX[kind]}-{shard:05d}.r{nxt:06d}.npz")
+    tmp = os.path.join(dirpath, f"tmp-{shard}-{os.getpid()}.npz")
+    with open(tmp, "wb") as fh:
+        if kind == "k":
+            np.savez(fh, keys=payload[0], fa_ok=payload[1], fa_err=payload[2])
+        else:
+            np.savez(fh, keys=payload)
+    os.replace(tmp, target)
+    if compact:
+        for _g, _k, p in entries:
+            try:
+                os.unlink(p)
+            except FileNotFoundError:
+                pass
+
+
 class SeenKeyShardStore:
-    """EXACT seen-key membership as sorted int64 shard files — the
+    """The exact seen index: per-key membership plus the sufficient
+    statistics of every exactly-once mode, as sorted shard runs — the
     exactly-once filter's scale path.
 
     Why it exists: the exact ``left_anti`` join against ``seen`` reshuffles
     the seen side's keys every round (~80 GB at the 10^10-key design
-    point). This store keeps those keys as per-shard sorted arrays (same
+    point). This store keeps them as per-shard sorted arrays (same
     ``pmod(hash(key), S)`` routing as ``BloomShardStore``, so the probe
-    runs inside the already-key-partitioned dedup stage, one shard file
-    per task, ~80 MB/shard at S=1000) and answers membership by binary
-    search — no shuffle of either side, no sort, worker-cached across
-    rounds until the shard changes.
+    runs inside the already-key-partitioned dedup stage, one shard per
+    task) and answers by binary search — no shuffle of either side, no
+    sort, worker-cached across rounds until the shard changes.
 
-    Shard layout is LSM-shaped: an absorb appends a sorted-unique RUN file
-    per touched shard (write volume O(round delta), not O(total keys) — a
-    round at the design point writes ~0.8 GB of runs instead of rewriting
-    the 80 GB key set); equality deletes (uncache) absorb as TOMBSTONE
-    runs in the same generation sequence; and a shard that reaches
-    KEYS_COMPACT_RUNS runs is folded back to one resolved run on its next
-    absorb. Probes fold a shard's runs in generation order (adds union,
-    tombstones subtract — so delete-then-re-append replays exactly) into
-    one sorted array, cached per worker until the run list changes.
+    Per key two values: ``fa_ok`` = max fetched_at over non-error seen
+    entries (status 100..399, matching ``anti_join_seen``'s live filter;
+    the transport's -1 stamp is error-class) and ``fa_err`` = max over
+    error entries; either is -inf when that class has no entry. These are
+    sufficient for every predicate ``anti_join_seen`` evaluates, because
+    its live-entry condition is a conjunction of a status-class test and
+    a freshness test and seen entries only accumulate:
+
+    - plain:            blocked iff the key is present
+    - expires:          blocked iff max(fa_ok, fa_err) >= now - expires
+    - force_errors:     blocked iff fa_ok > -inf
+    - both:             blocked iff fa_ok >= now - expires
+
+    so one index serves plain crawls, TTL recrawls, force_errors and the
+    next frontier's run-start cutoff (``expires=0, now=run start``).
+
+    Shard layout is LSM-shaped: an absorb appends one sorted-unique RUN
+    file per touched shard (``vals-`` runs, 24 B/key: write volume
+    O(round delta), not O(total keys)); equality deletes (uncache) absorb
+    as key-only TOMBSTONE runs (``vdel-``) in the same generation
+    sequence; a shard that reaches KEYS_COMPACT_RUNS runs is folded back
+    to one resolved run on its next absorb. Probes fold a shard's runs in
+    generation order (adds merge class maxima, tombstones wipe — so
+    delete-then-re-append replays exactly), cached per worker until the
+    run list changes.
 
     Correctness discipline (this is TRUTH, unlike the fail-safe bloom): a
     shard must never be BEHIND the committed seen table when probed, or a
-    seen URL would be refetched. ``sync()`` enforces it: shard meta records
-    the last absorbed seen snapshot id; on round start any newer append /
-    equality-delete snapshots are absorbed (incremental O(delta) deltas),
-    and history the runs can't express (overwrite/compaction) triggers a
-    full rebuild. The probe is refused (caller falls back to the
-    anti-join) only if sync was skipped. Crash between seen commit and
-    shard add is repaired by the same catch-up on next start — the
-    snapshot id only advances AFTER the shards are written, and
-    re-absorbing a snapshot sequence is idempotent (unions and ordered
-    subtractions replay to the same fold)."""
+    seen URL would be refetched. ``sync()`` enforces it: meta records the
+    last absorbed seen snapshot id; newer append / equality-delete
+    snapshots are absorbed incrementally, and history the runs can't
+    express (overwrite/compaction, rollback) triggers a full rebuild. The
+    probe is refused (caller falls back to the anti-join) only if sync
+    was skipped. A crash between seen commit and absorb is repaired by the
+    same catch-up on next start — the snapshot id only advances AFTER the
+    runs are written, and re-absorbing a snapshot sequence replays to the
+    same fold."""
 
     def __init__(self, path: str, n_shards: int = 64):
         self.path = path
         meta = self._read_meta()
-        if meta is None:
+        if meta is None or meta.get("layout") != _LAYOUT:
+            # fresh, or a pre-merge key-only sidecar: cold until rebuilt
             self.n_shards = n_shards
             self.snapshot_id: int | None = None
-            self.n_keys = 0
         else:
             self.n_shards = int(meta["n_shards"])
             self.snapshot_id = meta["snapshot_id"]
-            self.n_keys = int(meta["n_keys"])
 
     @property
     def _meta_path(self) -> str:
@@ -637,7 +735,7 @@ class SeenKeyShardStore:
         tmp = self._meta_path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(
-                {"n_shards": self.n_shards, "snapshot_id": self.snapshot_id, "n_keys": self.n_keys},
+                {"layout": _LAYOUT, "n_shards": self.n_shards, "snapshot_id": self.snapshot_id},
                 f,
             )
         os.replace(tmp, self._meta_path)
@@ -647,115 +745,42 @@ class SeenKeyShardStore:
 
         return F.pmod(F.hash(F.col("key")), F.lit(self.n_shards))
 
-    def _absorb(self, keys_df) -> int:
-        """Distributed LSM absorb: each touched shard gains one sorted-unique
-        RUN file holding just the delta (write volume O(delta), never a
-        rewrite of the shard's existing keys); once a shard accumulates
-        KEYS_COMPACT_RUNS runs the absorb merges them into a single run.
-        Crash-safe without repair: runs are tmp+renamed, compaction renames
-        the merged run BEFORE unlinking its inputs, and membership is the
-        UNION of run files — a leftover stale run after a crash is a subset
-        of the merged run and changes nothing. Returns delta key count."""
-        from pyspark.sql import functions as F
-
+    def _absorb(self, rows_df, kind: str) -> None:
+        """Distributed LSM absorb: each touched shard gains one run of
+        ``kind`` ('k' from (key, status, fetched_at) rows, 'd' tombstones
+        from key rows) holding just the delta — never a rewrite of the
+        shard's existing runs (``_write_run``). One row per touched shard
+        is collected."""
         dirpath = self.path
+        cols = ["key", "status", "fetched_at"] if kind == "k" else ["key"]
 
         def upd(pdf):
             shard = int(pdf["_shard"].iloc[0])
-            new = np.unique(pdf["key"].to_numpy("int64"))
-            entries = _shard_entries(dirpath, shard)
-            nxt = max((g for g, _k, _p in entries), default=0) + 1
-            target = os.path.join(dirpath, f"keys-{shard:05d}.r{nxt:06d}.npy")
-            tmp = os.path.join(dirpath, f"tmp-{shard}-{os.getpid()}.npy")
-            compact = len(entries) + 1 > KEYS_COMPACT_RUNS
-            if compact:  # merge all runs + delta, tombstones resolved
-                out = _fold_key_runs(
-                    [(g, k, np.load(p)) for g, k, p in entries] + [(nxt, "k", new)]
-                )
-            else:
-                out = new
-            np.save(tmp, out)
-            os.replace(tmp, target)
-            if compact:  # drop absorbed inputs (rename-first)
-                for _g, _k, p in entries:
-                    try:
-                        os.unlink(p)
-                    except FileNotFoundError:
-                        pass
-            return pd.DataFrame({"shard": [shard], "n_keys": [len(new)]})
+            _write_run(dirpath, shard, kind, _run_payload(pdf, kind))
+            return pd.DataFrame({"shard": [shard]})
 
         os.makedirs(dirpath, exist_ok=True)
-        counts = (
-            keys_df.select("key")
+        (
+            rows_df.select(*cols)
             .withColumn("_shard", self._shard_expr())
             .groupBy("_shard")
-            .applyInPandas(upd, "shard int, n_keys long")
-            .agg(F.sum("n_keys").alias("n"))
+            .applyInPandas(upd, "shard int")
             .collect()
         )
-        return int(counts[0].n or 0)
-
-    def _absorb_deletes(self, keys_df) -> int:
-        """Absorb an equality-delete snapshot as TOMBSTONE runs — O(delta),
-        vs the full O(seen) rebuild that row-level deletes used to force.
-        Each touched shard gains one sorted-unique `dels-` run in the same
-        generation sequence as the add runs; the fold (probe time /
-        compaction) applies runs in generation order, so a key re-added
-        after the delete is seen again. Crossing KEYS_COMPACT_RUNS folds
-        everything into one resolved add run (rename-before-unlink, same
-        crash model: a stale lower-generation leftover is re-subsumed)."""
-        from pyspark.sql import functions as F
-
-        dirpath = self.path
-
-        def upd(pdf):
-            shard = int(pdf["_shard"].iloc[0])
-            dead = np.unique(pdf["key"].to_numpy("int64"))
-            entries = _shard_entries(dirpath, shard)
-            nxt = max((g for g, _k, _p in entries), default=0) + 1
-            tmp = os.path.join(dirpath, f"tmp-{shard}-{os.getpid()}.npy")
-            if len(entries) + 1 > KEYS_COMPACT_RUNS:  # fold to one resolved run
-                out = _fold_key_runs(
-                    [(g, k, np.load(p)) for g, k, p in entries] + [(nxt, "d", dead)]
-                )
-                target = os.path.join(dirpath, f"keys-{shard:05d}.r{nxt:06d}.npy")
-                np.save(tmp, out)
-                os.replace(tmp, target)
-                for _g, _k, p in entries:
-                    try:
-                        os.unlink(p)
-                    except FileNotFoundError:
-                        pass
-            else:
-                target = os.path.join(dirpath, f"dels-{shard:05d}.r{nxt:06d}.npy")
-                np.save(tmp, dead)
-                os.replace(tmp, target)
-            return pd.DataFrame({"shard": [shard], "n_keys": [len(dead)]})
-
-        os.makedirs(dirpath, exist_ok=True)
-        counts = (
-            keys_df.select("key")
-            .withColumn("_shard", self._shard_expr())
-            .groupBy("_shard")
-            .applyInPandas(upd, "shard int, n_keys long")
-            .agg(F.sum("n_keys").alias("n"))
-            .collect()
-        )
-        return int(counts[0].n or 0)
 
     def sync(self, seen_t) -> None:
-        """Bring shards up to the seen table's current snapshot: absorb
-        newer append deltas incrementally and equality-delete snapshots as
-        tombstone runs (both O(delta)); rebuild only on history the runs
-        can't express incrementally (overwrite/compaction rewrites the
-        table). Appends and edeletes are absorbed in snapshot order so the
-        run-generation sequence reproduces the table's delete-then-re-add
-        semantics. A rollback (or a branch built on an older snapshot) is
-        never incremental — the shards would keep keys the table no longer
-        holds and reject_seen would silently drop live frontier URLs, a
-        violation of exactly-once — so lineage is walked via the
-        manifest's parent pointers (``_delta_chain``); any history not
-        reaching the recorded snapshot takes the full-rebuild branch."""
+        """Bring the shards up to the seen table's current snapshot: absorb
+        newer append deltas as add runs and equality-delete snapshots as
+        tombstone runs (both O(delta)), in snapshot order so the run
+        generations reproduce the table's delete-then-re-add semantics;
+        rebuild on history the runs can't express incrementally
+        (overwrite/compaction rewrites the table). A rollback (or a branch
+        built on an older snapshot) is never incremental — the shards
+        would keep keys the table no longer holds and reject_seen would
+        silently drop live frontier URLs, a violation of exactly-once — so
+        lineage is walked via the manifest's parent pointers
+        (``_delta_chain``); any history not reaching the recorded snapshot
+        takes the full-rebuild branch."""
         cur = seen_t.current_snapshot()
         if cur is None or cur == self.snapshot_id:
             return
@@ -770,17 +795,15 @@ class SeenKeyShardStore:
         if incremental:
             for s in newer:
                 if s["op"] == "append":
-                    self._absorb(seen_t.read_delta(s["id"]).select("key"))
+                    self._absorb(seen_t.read_delta(s["id"]), "k")
                 else:
-                    self._absorb_deletes(seen_t.read_delete_delta(s["id"]).select("key"))
+                    self._absorb(seen_t.read_delete_delta(s["id"]), "d")
         else:
             import shutil
 
             shutil.rmtree(self.path, ignore_errors=True)
-            self._absorb(seen_t.read().select("key"))
-        # count once from shard metas? cheap: track approximately via absorb
+            self._absorb(seen_t.read(), "k")
         self.snapshot_id = cur
-        self.n_keys = -1  # unknown aggregate; per-shard files are the truth
         self._write_meta()
 
     def in_sync_with(self, seen_t) -> bool:
@@ -790,56 +813,72 @@ class SeenKeyShardStore:
         """Driver-side membership probe — NO Spark job: route the key to
         its shard with the pure-Python hash twin (functions/localhash.py,
         JVM-parity test-pinned) and binary-search the shard's folded runs.
-        Returns None when the store is cold (never synced) — the caller
-        falls back to the Spark path. Caller is responsible for
-        ``in_sync_with``; a stale warm store answers for its recorded
-        snapshot (interactive probes tolerate that; the crawl loop never
-        uses this path)."""
+        Returns None when the store is cold (never synced, or a pre-merge
+        sidecar) — the caller falls back to the Spark path. Caller is
+        responsible for ``in_sync_with``; a stale warm store answers for
+        its recorded snapshot (interactive probes tolerate that; the crawl
+        loop never uses this path)."""
         if self.snapshot_id is None:
             return None
         from ..functions.localhash import shard_of_key
 
-        arr = _load_keys_shard(self.path, shard_of_key(key, self.n_shards))
-        if len(arr) == 0:
-            return False
-        i = int(np.searchsorted(arr, key))
-        return i < len(arr) and int(arr[i]) == key
+        keys = _load_runs_shard(self.path, shard_of_key(key, self.n_shards))[0]
+        i = int(np.searchsorted(keys, key))
+        return i < len(keys) and int(keys[i]) == key
 
-    def reject_seen(self, frontier, bloom: "BloomShardStore | None" = None):
-        """EXACT filter: drop frontier rows whose key is in the seen set.
-        Equivalent to ``left_anti`` vs seen keys, with zero shuffle — a
-        per-task binary search against the task's shard file. Caller must
-        have sync()ed this round.
+    def reject_seen(
+        self,
+        frontier,
+        expires: float | None = None,
+        force_errors: bool = False,
+        now: float | None = None,
+        bloom: "BloomShardStore | None" = None,
+    ):
+        """EXACT filter, shard-local: equivalent to
+        ``anti_join_seen(frontier, seen, expires=..., force_errors=...,
+        now=...)`` with zero shuffle of the seen side — a per-task binary
+        search against the task's shard. Caller must have sync()ed this
+        round.
 
-        ``bloom``: optional fused short-circuit. Rows whose key the bloom
-        cannot contain skip the sorted-run search (the steady-state
-        majority: new URLs); maybe-seen rows fall through to the exact
-        search, so a bloom false positive costs one binary search — never a
-        dropped row. The caller must pass a bloom that is in_sync_with the
-        SAME seen snapshot as this store (else pass None): "definitely new"
-        is only trustworthy when the bloom holds every seen key. Both
-        stores must share the shard routing (asserted)."""
+        ``bloom``: optional fused short-circuit for the PLAIN probe (no
+        ``expires``, no ``force_errors``; ignored otherwise — a maybe-seen
+        row in a semantic probe must be judged on its statistics). Rows
+        whose key the bloom cannot contain skip the sorted-run search (the
+        steady-state majority: new URLs); maybe-seen rows fall through to
+        the exact search, so a bloom false positive costs one binary
+        search — never a dropped row. The caller must pass a bloom that is
+        in_sync_with the SAME seen snapshot as this store (else pass
+        None): "definitely new" is only trustworthy when the bloom holds
+        every seen key."""
+        import time as _time
+
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
         if self.snapshot_id is None:
             return frontier
-        if bloom is not None and (bloom.n_added == 0 or bloom.snapshot_id != self.snapshot_id):
-            bloom = None  # empty or differently-synced bloom: exact-only
-        if bloom is not None and bloom.n_shards != self.n_shards:
+        plain = expires is None and not force_errors
+        if bloom is not None and (
+            not plain
+            or bloom.n_added == 0
+            or bloom.snapshot_id != self.snapshot_id
             # shard-routing mismatch (e.g. one sidecar deleted and rebuilt
             # under a different bloom_shards setting): the bloom's shard
             # files don't correspond to this store's routing, so its
-            # "definitely new" answers are untrustworthy — degrade to
-            # exact-only, same discipline as the out-of-sync branch above.
-            # Raising here would put the crawl in a permanent per-round
-            # crash loop that only manual sidecar deletion could clear.
-            bloom = None
+            # "definitely new" answers are untrustworthy. Raising instead
+            # would put the crawl in a per-round crash loop that only
+            # manual sidecar deletion could clear.
+            or bloom.n_shards != self.n_shards
+        ):
+            bloom = None  # exact-only
         dirpath = self.path
         bloom_dir = bloom.path if bloom is not None else None
+        cutoff = None
+        if expires is not None:
+            cutoff = (_time.time() if now is None else now) - expires
 
         @F.pandas_udf(T.BooleanType())
-        def is_new(key: pd.Series, shard: pd.Series) -> pd.Series:
+        def is_fetchable(key: pd.Series, shard: pd.Series) -> pd.Series:
             keys = key.to_numpy("int64")
             out = np.ones(len(keys), dtype=bool)
             for s in shard.unique():
@@ -854,338 +893,20 @@ class SeenKeyShardStore:
                         need = b.might_contain(ks)
                 if not need.any():
                     continue  # whole batch definitely new for this shard
-                arr = _load_keys_shard(dirpath, int(s))
-                if len(arr) == 0:
-                    continue
-                sub = ks[need]
-                idx = np.minimum(np.searchsorted(arr, sub), len(arr) - 1)
-                res = np.ones(len(ks), dtype=bool)
-                res[need] = ~(arr[idx] == sub)
-                out[m] = res
-            return pd.Series(out)
-
-        return frontier.where(is_new(F.col("key"), self._shard_expr()))
-
-
-# --- valued seen shards (semantic modes: TTL expiry / force_errors) ----------------
-
-_VALS_CACHE = _ShardLRU(_CACHE_BUDGET)  # (dirpath, shard) + run fp -> (keys, fa_ok, fa_err)
-
-_NEG_INF = float("-inf")
-
-
-def _shard_val_files(dirpath: str, shard: int) -> list[str]:
-    prefix = f"vals-{shard:05d}"
-    try:
-        names = os.listdir(dirpath)
-    except FileNotFoundError:
-        return []
-    return sorted(
-        os.path.join(dirpath, n)
-        for n in names
-        if n.startswith(prefix) and n.endswith(".npz")
-    )
-
-
-def _merge_val_runs(arrs: list[tuple]) -> tuple:
-    """Union runs into (sorted unique keys, per-key class maxima)."""
-    keys = np.concatenate([a[0] for a in arrs])
-    fa_ok = np.concatenate([a[1] for a in arrs])
-    fa_err = np.concatenate([a[2] for a in arrs])
-    uk, inv = np.unique(keys, return_inverse=True)
-    mok = np.full(len(uk), _NEG_INF)
-    merr = np.full(len(uk), _NEG_INF)
-    np.maximum.at(mok, inv, fa_ok)
-    np.maximum.at(merr, inv, fa_err)
-    return uk, mok, merr
-
-
-def _val_entries(dirpath: str, shard: int) -> list[tuple[int, str, str]]:
-    """(generation, kind, path) for a shard's value runs ('k') and
-    tombstone runs ('d', plain .npy key arrays under the vdel- prefix)."""
-    adds = _shard_val_files(dirpath, shard)
-    dels = _shard_run_files(dirpath, shard, "vdel")
-    # _run_gen strips a 4-char extension: works for .npz and .npy alike
-    return [(_run_gen(os.path.basename(p)), "k", p) for p in adds] + [
-        (_run_gen(os.path.basename(p)), "d", p) for p in dels
-    ]
-
-
-def _fold_val_runs(entries: list[tuple[int, str, object]]) -> tuple:
-    """Resolve value runs + tombstones in generation order: add runs merge
-    per-key class maxima; a tombstone removes its keys (with all their
-    statistics — a later re-add starts fresh, matching the table's
-    delete-then-re-append semantics). No-tombstone fast path is the
-    order-free class-max merge."""
-    if all(kind == "k" for _g, kind, _a in entries):
-        arrs = [a for _g, _k, a in entries]
-        return arrs[0] if len(arrs) == 1 else _merge_val_runs(arrs)
-    e = np.empty(0)
-    cur = (e.astype(np.int64), e.astype(np.float64), e.astype(np.float64))
-    for _g, kind, payload in sorted(entries, key=lambda t: t[0]):
-        if kind == "k":
-            cur = _merge_val_runs([cur, payload]) if len(cur[0]) else payload
-        else:
-            keep = ~np.isin(cur[0], payload, assume_unique=True)
-            cur = (cur[0][keep], cur[1][keep], cur[2][keep])
-    return cur
-
-
-def _load_vals_shard(dirpath: str, shard: int) -> tuple:
-    for _attempt in range(3):
-        entries = _val_entries(dirpath, shard)
-        if not entries:
-            e = np.empty(0)
-            return e.astype(np.int64), e, e
-        try:
-            sig = tuple((p, os.stat(p).st_mtime_ns, os.stat(p).st_size) for _g, _k, p in entries)
-            hit = _VALS_CACHE.get((dirpath, shard), sig)
-            if hit is None:
-                loaded = []
-                for g, k, p in entries:
-                    if k == "k":
-                        z = np.load(p)
-                        loaded.append((g, k, (z["keys"], z["fa_ok"], z["fa_err"])))
-                    else:
-                        loaded.append((g, k, np.load(p)))
-                hit = _fold_val_runs(loaded)
-                _VALS_CACHE.put((dirpath, shard), sig, hit, sum(a.nbytes for a in hit))
-            return hit
-        except FileNotFoundError:
-            continue
-    raise OSError(f"value shard {shard} runs kept disappearing under {dirpath}")
-
-
-class SeenValueShardStore(SeenKeyShardStore):
-    """Seen-key shards carrying the per-key sufficient statistics for the
-    SEMANTIC exactly-once modes — TTL expiry and force_errors — so the
-    recrawl loop (the realistic continuous mode at scale: ``expires`` set,
-    every round re-examines the whole corpus) is as shuffle-free as the
-    plain path.
-
-    Per key two values: ``fa_ok`` = max fetched_at over non-error seen
-    entries (status 100..399, matching ``anti_join_seen``'s live filter;
-    the transport's -1 stamp is error-class) and
-    ``fa_err`` = max over error entries; either is -inf when that class has
-    no entry. These are sufficient for every predicate combination
-    ``anti_join_seen`` evaluates, because its live-entry condition is a
-    conjunction of a status-class test and a freshness test and seen
-    entries only accumulate:
-
-    - plain:            blocked iff any entry          (fa_ok or fa_err > -inf)
-    - expires:          blocked iff max(fa_ok, fa_err) >= now - expires
-    - force_errors:     blocked iff fa_ok > -inf
-    - both:             blocked iff fa_ok >= now - expires
-
-    Same LSM layout/discipline as the key store (O(delta) runs with
-    class-max merge on compaction, rename-before-unlink, snapshot-gated
-    sync); runs are 24 B/key npz files (240 MB/shard at S=1000 and 10^10
-    keys — still one worker-cached array set per task)."""
-
-    def probe_local(self, key: int) -> bool | None:
-        """Driver-side membership probe against the vals- run files (the
-        inherited implementation reads keys- files, which this store does
-        not write)."""
-        if self.snapshot_id is None:
-            return None
-        from ..functions.localhash import shard_of_key
-
-        keys, _fa_ok, _fa_err = _load_vals_shard(
-            self.path, shard_of_key(key, self.n_shards)
-        )
-        if len(keys) == 0:
-            return False
-        i = int(np.searchsorted(keys, key))
-        return i < len(keys) and int(keys[i]) == key
-
-    def _absorb(self, keys_df) -> int:
-        from pyspark.sql import functions as F
-
-        dirpath = self.path
-
-        def upd(pdf):
-            shard = int(pdf["_shard"].iloc[0])
-            keys = pdf["key"].to_numpy("int64")
-            # null status: anti_join_seen's `status < 400` is NULL -> the
-            # entry never counts as ok-class but still blocks plainly —
-            # i.e. exactly the error-class treatment, so map null -> 600.
-            # null fetched_at: NULL freshness comparisons drop the entry
-            # from every TTL-filtered live set while it still blocks the
-            # plain probe — a finite -1e308 reproduces both.
-            status = pdf["status"].fillna(600).to_numpy("int64")
-            fa = pdf["fetched_at"].fillna(-1e308).to_numpy("float64")
-            # ok-class = 100..399, matching anti_join_seen's live filter:
-            # status < 100 is the transport's -1 stamp (DNS/timeout/TLS,
-            # redirect-limit) — error-class, so force_errors retries it
-            ok = (status >= 100) & (status < 400)
-            uk, inv = np.unique(keys, return_inverse=True)
-            mok = np.full(len(uk), _NEG_INF)
-            merr = np.full(len(uk), _NEG_INF)
-            np.maximum.at(mok, inv[ok], fa[ok])
-            np.maximum.at(merr, inv[~ok], fa[~ok])
-            new = (uk, mok, merr)
-            entries = _val_entries(dirpath, shard)
-            nxt = max((g for g, _k, _p in entries), default=0) + 1
-            target = os.path.join(dirpath, f"vals-{shard:05d}.r{nxt:06d}.npz")
-            tmp = os.path.join(dirpath, f"tmp-{shard}-{os.getpid()}.npz")
-            compact = len(entries) + 1 > KEYS_COMPACT_RUNS
-            if compact:  # fold all runs + delta, tombstones resolved
-                loaded = []
-                for g, k, p in entries:
-                    if k == "k":
-                        z = np.load(p)
-                        loaded.append((g, k, (z["keys"], z["fa_ok"], z["fa_err"])))
-                    else:
-                        loaded.append((g, k, np.load(p)))
-                out = _fold_val_runs(loaded + [(nxt, "k", new)])
-            else:
-                out = new
-            with open(tmp, "wb") as fh:
-                np.savez(fh, keys=out[0], fa_ok=out[1], fa_err=out[2])
-            os.replace(tmp, target)
-            if compact:
-                for _g, _k, p in entries:
-                    try:
-                        os.unlink(p)
-                    except FileNotFoundError:
-                        pass
-            return pd.DataFrame({"shard": [shard], "n_keys": [len(uk)]})
-
-        os.makedirs(dirpath, exist_ok=True)
-        counts = (
-            keys_df.select("key", "status", "fetched_at")
-            .withColumn("_shard", self._shard_expr())
-            .groupBy("_shard")
-            .applyInPandas(upd, "shard int, n_keys long")
-            .agg(F.sum("n_keys").alias("n"))
-            .collect()
-        )
-        return int(counts[0].n or 0)
-
-    def _absorb_deletes(self, keys_df) -> int:
-        """Equality-delete tombstones, same discipline as the key store's:
-        one `vdel-` run per touched shard in the shared generation
-        sequence. A tombstone wipes the key's statistics entirely — the
-        table forgot the entry, so the store must too (a later re-append
-        rebuilds stats from its own run)."""
-        from pyspark.sql import functions as F
-
-        dirpath = self.path
-
-        def upd(pdf):
-            shard = int(pdf["_shard"].iloc[0])
-            dead = np.unique(pdf["key"].to_numpy("int64"))
-            entries = _val_entries(dirpath, shard)
-            nxt = max((g for g, _k, _p in entries), default=0) + 1
-            if len(entries) + 1 > KEYS_COMPACT_RUNS:  # fold to one resolved run
-                loaded = []
-                for g, k, p in entries:
-                    if k == "k":
-                        z = np.load(p)
-                        loaded.append((g, k, (z["keys"], z["fa_ok"], z["fa_err"])))
-                    else:
-                        loaded.append((g, k, np.load(p)))
-                out = _fold_val_runs(loaded + [(nxt, "d", dead)])
-                target = os.path.join(dirpath, f"vals-{shard:05d}.r{nxt:06d}.npz")
-                tmpz = os.path.join(dirpath, f"tmp-{shard}-{os.getpid()}.npz")
-                with open(tmpz, "wb") as fh:
-                    np.savez(fh, keys=out[0], fa_ok=out[1], fa_err=out[2])
-                os.replace(tmpz, target)
-                for _g, _k, p in entries:
-                    try:
-                        os.unlink(p)
-                    except FileNotFoundError:
-                        pass
-            else:
-                target = os.path.join(dirpath, f"vdel-{shard:05d}.r{nxt:06d}.npy")
-                tmp = os.path.join(dirpath, f"tmp-{shard}-{os.getpid()}.npy")
-                np.save(tmp, dead)
-                os.replace(tmp, target)
-            return pd.DataFrame({"shard": [shard], "n_keys": [len(dead)]})
-
-        os.makedirs(dirpath, exist_ok=True)
-        counts = (
-            keys_df.select("key")
-            .withColumn("_shard", self._shard_expr())
-            .groupBy("_shard")
-            .applyInPandas(upd, "shard int, n_keys long")
-            .agg(F.sum("n_keys").alias("n"))
-            .collect()
-        )
-        return int(counts[0].n or 0)
-
-    def sync(self, seen_t) -> None:
-        """Same snapshot discipline as the key store (appends + equality
-        deletes absorb O(delta), in snapshot order; other history —
-        including rollback/divergent lineage, detected via
-        ``_delta_chain`` parent walking — rebuilds), but append deltas
-        carry (key, status, fetched_at)."""
-        cur = seen_t.current_snapshot()
-        if cur is None or cur == self.snapshot_id:
-            return
-        newer = (
-            _delta_chain(seen_t, self.snapshot_id, cur)
-            if self.snapshot_id is not None
-            else None
-        )
-        incremental = newer is not None and all(
-            s["op"] in ("append", "edelete") for s in newer
-        )
-        cols = ["key", "status", "fetched_at"]
-        if incremental:
-            for s in newer:
-                if s["op"] == "append":
-                    self._absorb(seen_t.read_delta(s["id"]).select(*cols))
-                else:
-                    self._absorb_deletes(seen_t.read_delete_delta(s["id"]).select("key"))
-        else:
-            import shutil
-
-            shutil.rmtree(self.path, ignore_errors=True)
-            self._absorb(seen_t.read().select(*cols))
-        self.snapshot_id = cur
-        self.n_keys = -1
-        self._write_meta()
-
-    def reject_seen(
-        self,
-        frontier,
-        expires: float | None = None,
-        force_errors: bool = False,
-        now: float | None = None,
-    ):
-        """EXACT semantic filter, shard-local: equivalent to
-        ``anti_join_seen(frontier, seen, expires=..., force_errors=...)``
-        with zero shuffle of the seen side. Caller must have sync()ed."""
-        import time as _time
-
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        if self.snapshot_id is None:
-            return frontier
-        dirpath = self.path
-        cutoff = None
-        if expires is not None:
-            cutoff = (_time.time() if now is None else now) - expires
-
-        @F.pandas_udf(T.BooleanType())
-        def is_fetchable(key: pd.Series, shard: pd.Series) -> pd.Series:
-            keys = key.to_numpy("int64")
-            out = np.ones(len(keys), dtype=bool)
-            for s in shard.unique():
-                uk, mok, merr = _load_vals_shard(dirpath, int(s))
-                m = (shard == s).to_numpy()
+                uk, mok, merr = _load_runs_shard(dirpath, int(s))
                 if len(uk) == 0:
                     continue
-                ks = keys[m]
-                idx = np.minimum(np.searchsorted(uk, ks), len(uk) - 1)
-                found = uk[idx] == ks
-                fa_ok = np.where(found, mok[idx], _NEG_INF)
-                fa_err = np.where(found, merr[idx], _NEG_INF)
-                live = fa_ok if force_errors else np.maximum(fa_ok, fa_err)
-                blocked = live >= cutoff if cutoff is not None else live > _NEG_INF
-                out[m] = ~blocked
+                sub = ks[need]
+                idx = np.minimum(np.searchsorted(uk, sub), len(uk) - 1)
+                found = uk[idx] == sub
+                blocked = found
+                if not plain:
+                    live = mok[idx] if force_errors else np.maximum(mok[idx], merr[idx])
+                    live = np.where(found, live, _NEG_INF)
+                    blocked = live >= cutoff if cutoff is not None else live > _NEG_INF
+                res = np.ones(len(ks), dtype=bool)
+                res[need] = ~blocked
+                out[m] = res
             return pd.Series(out)
 
         return frontier.where(is_fetchable(F.col("key"), self._shard_expr()))

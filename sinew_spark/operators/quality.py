@@ -369,13 +369,15 @@ def lm_score(
     clean reference corpus). The model here is an add-one-smoothed
     bigram LM over ``reference`` (default: ``docs`` itself):
 
-        p(w2 | w1) = (c(w1,w2) + 1) / (c1(w1) + V)
+        p(w2 | w1) = (c(w1,w2) + 1) / (max(c1(w1), c(w1,w2)) + V)
 
     with c(w1,w2) the bigram count in the PRUNED top-``top_bigrams``
     table (0 when absent), c1(w1) the count of w1 as a bigram left-
     context in the pruned top-``top_unigrams`` table (0 when absent —
     OOV contexts back off to the uniform 1/V), and V the reference's
-    exact distinct-token count. Output per doc: ``n_bigrams``,
+    exact distinct-token count. The context count is floored at
+    c(w1,w2) — its true value is at least that — so a kept bigram whose
+    context was pruned still gets p <= 1. Output per doc: ``n_bigrams``,
     ``sum_nll_x`` and ``avg_nll_x`` — total and per-bigram negative
     log-likelihood in ``lp_scale`` fixed point (avg_nll_x is the log-
     perplexity up to the scale; ranking by it IS ranking by CCNet
@@ -468,9 +470,13 @@ def lm_score(
                 F.round(
                     F.log(
                         (F.coalesce(F.col("c12"), F.lit(0)) + 1).cast("double")
-                        / (F.coalesce(F.col("c1"), F.lit(0)) + vocab_n).cast(
-                            "double"
-                        )
+                        / (
+                            F.greatest(
+                                F.coalesce(F.col("c1"), F.lit(0)),
+                                F.coalesce(F.col("c12"), F.lit(0)),
+                            )
+                            + vocab_n
+                        ).cast("double")
                     )
                     * lp_scale
                 ).cast("long")

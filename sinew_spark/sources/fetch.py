@@ -57,7 +57,9 @@ FETCHED_SCHEMA = T.StructType(
         # status == 304 marks a not-modified revisit (body not re-transferred)
         T.StructField("etag", T.StringType()),
         T.StructField("last_modified", T.StringType()),
-        # wall-clock of the request incl. retries/redirect hops, for
+        # wall-clock of the request incl. retry attempts and redirect hops
+        # but NOT the retry backoff sleeps (the AIMD backoff already
+        # answers errors; counting its own sleeps would double it), for
         # latency-adaptive politeness (CrawlOptions.adaptive_politeness
         # -> scheduler.adaptive_host_delay). Observational, not replayed
         # by oracles (like fetched_at).
@@ -439,10 +441,12 @@ def _fetch_one(
     attempt only (a redirect target is a different resource). A 304
     answer is success.
     Returns (status, content_type, resp_body, final_url, n_attempts, hops,
-    error, jar_after, jar_changed, etag_out, lm_out) — jar_changed marks
-    rows that actually set/deleted cookies (the only rows that re-persist
-    the jar); etag_out/lm_out are the FINAL response's validators, for the
-    next revalidation."""
+    error, jar_after, jar_changed, etag_out, lm_out, backoff_s) —
+    jar_changed marks rows that actually set/deleted cookies (the only
+    rows that re-persist the jar); etag_out/lm_out are the FINAL
+    response's validators, for the next revalidation; backoff_s is the
+    time slept between retry attempts, which callers leave out of
+    ``latency_ms``."""
     from urllib.parse import urljoin, urlsplit
 
     from sinew_spark.functions.cookies import apply_response_cookies, cookies_for
@@ -453,6 +457,7 @@ def _fetch_one(
     jar_changed = False
     status, ct, resp_body, final_url, error = None, None, None, url, None
     etag_out, lm_out = None, None
+    backoff_s = 0.0
 
     # duck-typed transports (objects exposing only resolve_with_cookies /
     # resolve, without subclassing Fetcher) get the base delegation — each
@@ -540,9 +545,11 @@ def _fetch_one(
             # with no delay at all; floor the cap at 1s there so the
             # documented exponential backoff actually happens
             cap = rate_limit if rate_limit > 0 else 1.0
+            t_sleep = time.perf_counter()
             time.sleep(min(cap, backoff_base * (2**attempt)))
+            backoff_s += time.perf_counter() - t_sleep
     return (status, ct, resp_body, final_url, n_attempts, hops, error, jar,
-            jar_changed, etag_out, lm_out)
+            jar_changed, etag_out, lm_out, backoff_s)
 
 
 FETCH_PARSED_SCHEMA = T.StructType(
@@ -630,11 +637,11 @@ def make_fetch_fn(
                 )
             t_req = time.perf_counter()
             (status, ct, body, final_url, n_att, hops, error, jar, jar_chg,
-             e_out, lm_out) = _fetch_one(
+             e_out, lm_out, backoff_s) = _fetch_one(
                 fetcher, row.url, row.method or "GET", row.body or "", retries, effective,
                 cookies=jar, proxy=proxy, etag=p_etag, last_modified=p_lm,
             )
-            out["latency_ms"].append(int((time.perf_counter() - t_req) * 1000))
+            out["latency_ms"].append(int((time.perf_counter() - t_req - backoff_s) * 1000))
             out["status"].append(status)
             out["content_type"].append(ct)
             out["resp_body"].append(body)
@@ -732,12 +739,12 @@ def make_fetch_arrow_fn(
                 proxy = proxies[key % len(proxies)] if proxies else None
                 t_req = time.perf_counter()
                 (status, ct, body, final_url, n_att, hops, error, jar, jar_chg,
-                 e_out, lm_out) = _fetch_one(
+                 e_out, lm_out, backoff_s) = _fetch_one(
                     fetcher, url, d["method"][i] or "GET", d["body"][i] or "", retries, rate_limit,
                     cookies=jars[host], proxy=proxy, etag=prior_etag[i],
                     last_modified=prior_lm[i],
                 )
-                lat_c.append(int((time.perf_counter() - t_req) * 1000))
+                lat_c.append(int((time.perf_counter() - t_req - backoff_s) * 1000))
                 jars[host] = jar
                 status_c.append(status)
                 ct_c.append(ct)

@@ -151,175 +151,12 @@ def test_store_sync_resizes_past_capacity(spark, tmp_path):
     assert store.maybe_seen(fresh).count() < 100  # fpp back under budget
 
 
-# --- SeenKeyShardStore (exact membership, zero-shuffle anti-join path) --------
+# --- SeenKeyShardStore: the one exact seen index (zero-shuffle anti-join) -----
 
 
-def test_seen_keys_matches_anti_join(spark, tmp_path):
-    """reject_seen == left_anti join vs the same key set, exactly."""
-    from sinew_spark.operators.bloom import SeenKeyShardStore
-    from sinew_spark.plans.snapshots import SnapshotTable
-    from pyspark.sql import types as T
-
-    t = SnapshotTable(
-        spark, str(tmp_path / "seen"), T.StructType([T.StructField("key", T.LongType())])
-    )
-    t.append(spark.range(0, 3000).select((F.col("id") * 31 - 2**45).alias("key")))
-    store = SeenKeyShardStore(str(tmp_path / "ks"), n_shards=4)
-    store.sync(t)
-    assert store.in_sync_with(t)
-
-    frontier = spark.range(0, 9000).select((F.col("id") * 31 - 2**45).alias("key"))
-    exact = frontier.join(t.read(), "key", "left_anti")
-    via_store = store.reject_seen(frontier)
-    expected = sorted(r.key for r in exact.collect())
-    assert sorted(r.key for r in via_store.collect()) == expected
-
-    # fused bloom short-circuit: identical results, bit for bit
-    bloom = BloomShardStore(str(tmp_path / "bl"), capacity=10_000, n_shards=4)
-    bloom.sync(t)
-    via_fused = store.reject_seen(frontier, bloom=bloom)
-    assert sorted(r.key for r in via_fused.collect()) == expected
-
-
-def test_fused_probe_bloom_false_positive_never_drops(spark, tmp_path):
-    """THE fused-probe guarantee: a key the bloom wrongly flags as seen
-    (false positive) must fall through to the exact search and SURVIVE.
-    Modeled deterministically by adding an extra key to the bloom only —
-    indistinguishable from an FP at that key. The old standalone-prefilter
-    design dropped such URLs forever."""
-    from sinew_spark.operators.bloom import SeenKeyShardStore
-    from sinew_spark.plans.snapshots import SnapshotTable
-    from pyspark.sql import types as T
-
-    t = SnapshotTable(
-        spark, str(tmp_path / "seen"), T.StructType([T.StructField("key", T.LongType())])
-    )
-    t.append(spark.range(0, 1000).select(F.col("id").alias("key")))
-    store = SeenKeyShardStore(str(tmp_path / "ks"), n_shards=4)
-    store.sync(t)
-
-    bloom = BloomShardStore(str(tmp_path / "bl"), capacity=10_000, n_shards=4)
-    extra = 777_777  # in the bloom, NOT in seen -> a guaranteed "FP"
-    planted = spark.range(0, 1000).select(F.col("id").alias("key")).unionByName(
-        spark.createDataFrame([(extra,)], "key long")
-    )
-    bloom.add_delta(planted, snapshot_id=t.current_snapshot())
-    assert bloom.in_sync_with(t)
-
-    frontier = spark.createDataFrame([(extra,), (5,), (999_999,)], "key long")
-    out = sorted(r.key for r in store.reject_seen(frontier, bloom=bloom).collect())
-    assert out == [extra, 999_999]  # FP survived; truly-seen 5 rejected
-
-
-def test_fused_probe_ignores_differently_synced_bloom(spark, tmp_path):
-    """A bloom synced to a different seen snapshot than the key store must
-    be ignored (exact-only probe) — its definitely-new claim is stale."""
-    from sinew_spark.operators.bloom import SeenKeyShardStore
-    from sinew_spark.plans.snapshots import SnapshotTable
-    from pyspark.sql import types as T
-
-    t = SnapshotTable(
-        spark, str(tmp_path / "seen"), T.StructType([T.StructField("key", T.LongType())])
-    )
-    t.append(spark.range(0, 100).select(F.col("id").alias("key")))
-    bloom = BloomShardStore(str(tmp_path / "bl"), capacity=10_000, n_shards=4)
-    bloom.sync(t)  # synced at snapshot 1
-    t.append(spark.range(100, 200).select(F.col("id").alias("key")))
-    store = SeenKeyShardStore(str(tmp_path / "ks"), n_shards=4)
-    store.sync(t)  # synced at snapshot 2: bloom is BEHIND
-
-    # if the stale bloom were trusted, keys 100..199 would look
-    # definitely-new and skip the exact search -> refetch. They must not.
-    frontier = spark.range(0, 300).select(F.col("id").alias("key"))
-    out = sorted(r.key for r in store.reject_seen(frontier, bloom=bloom).collect())
-    assert out == list(range(200, 300))
-
-
-def test_seen_keys_incremental_and_rebuild(spark, tmp_path):
-    """Append deltas absorb incrementally; an overwrite (uncache/compact)
-    forces a rebuild; snapshot id advances only after shards are written."""
-    from sinew_spark.operators.bloom import SeenKeyShardStore
-    from sinew_spark.plans.snapshots import SnapshotTable
-    from pyspark.sql import types as T
-
-    t = SnapshotTable(
-        spark, str(tmp_path / "seen"), T.StructType([T.StructField("key", T.LongType())])
-    )
-    store = SeenKeyShardStore(str(tmp_path / "ks"), n_shards=4)
-    t.append(spark.range(0, 100).select(F.col("id").alias("key")))
-    store.sync(t)
-    t.append(spark.range(100, 200).select(F.col("id").alias("key")))
-    store.sync(t)  # incremental
-    probe = spark.range(0, 300).select(F.col("id").alias("key"))
-    assert sorted(r.key for r in store.reject_seen(probe).collect()) == list(range(200, 300))
-
-    t.delete_where(F.col("key") < 50)  # overwrite op -> rebuild on sync
-    store2 = SeenKeyShardStore(str(tmp_path / "ks"), n_shards=4)  # reopen
-    store2.sync(t)
-    kept = sorted(r.key for r in store2.reject_seen(probe).collect())
-    assert kept == list(range(0, 50)) + list(range(200, 300))
-
-
-def test_seen_keys_lsm_runs_and_compaction(spark, tmp_path):
-    """Absorbs append O(delta) run files without rewriting existing runs;
-    crossing KEYS_COMPACT_RUNS merges a shard back to one run; membership
-    is always the union. A stale leftover run (crash between compaction
-    rename and input unlink) changes nothing."""
-    import os
-    import shutil
-
-    import numpy as np
-
-    from sinew_spark.operators.bloom import (
-        KEYS_COMPACT_RUNS,
-        SeenKeyShardStore,
-        _load_keys_shard,
-        _shard_run_files,
-    )
-    from sinew_spark.plans.snapshots import SnapshotTable
-    from pyspark.sql import types as T
-
-    t = SnapshotTable(
-        spark, str(tmp_path / "seen"), T.StructType([T.StructField("key", T.LongType())])
-    )
-    store = SeenKeyShardStore(str(tmp_path / "ks"), n_shards=2)
-
-    t.append(spark.range(0, 100).select(F.col("id").alias("key")))
-    store.sync(t)
-    first = {
-        s: {(os.path.basename(p), os.stat(p).st_mtime_ns) for p in _shard_run_files(store.path, s)}
-        for s in range(2)
-    }
-    assert all(len(v) == 1 for v in first.values())
-
-    t.append(spark.range(100, 200).select(F.col("id").alias("key")))
-    store.sync(t)
-    for s in range(2):
-        now = {(os.path.basename(p), os.stat(p).st_mtime_ns) for p in _shard_run_files(store.path, s)}
-        assert first[s] <= now and len(now) == 2  # old run untouched, new run added
-
-    # drive past the compaction threshold
-    lo = 200
-    for _ in range(KEYS_COMPACT_RUNS):
-        t.append(spark.range(lo, lo + 50).select(F.col("id").alias("key")))
-        store.sync(t)
-        lo += 50
-    assert all(len(_shard_run_files(store.path, s)) <= KEYS_COMPACT_RUNS for s in range(2))
-    probe = spark.range(0, lo + 100).select(F.col("id").alias("key"))
-    assert sorted(r.key for r in store.reject_seen(probe).collect()) == list(range(lo, lo + 100))
-
-    # stale-run crash model: duplicate an existing run under a newer name
-    runs0 = _shard_run_files(store.path, 0)
-    shutil.copyfile(runs0[0], os.path.join(store.path, "keys-00000.r009999.npy"))
-    before = _load_keys_shard(store.path, 0)
-    assert sorted(r.key for r in store.reject_seen(probe).collect()) == list(range(lo, lo + 100))
-    assert np.array_equal(_load_keys_shard(store.path, 0), before)
-
-
-# --- SeenValueShardStore (semantic modes: TTL / force_errors, zero-shuffle) ----
-
-
-def _mk_seen_table(spark, path):
+def _seen_table(spark, tmp_path, name="seen"):
+    """A seen-shaped fixture table: the index absorbs (key, status,
+    fetched_at), the columns the engine's seen table always has."""
     from sinew_spark.plans.snapshots import SnapshotTable
     from pyspark.sql import types as T
 
@@ -330,19 +167,202 @@ def _mk_seen_table(spark, path):
             T.StructField("fetched_at", T.DoubleType()),
         ]
     )
-    return SnapshotTable(spark, path, schema)
+    return SnapshotTable(spark, str(tmp_path / name), schema)
 
 
-def test_seen_vals_matches_semantic_anti_join(spark, tmp_path):
-    """reject_seen(expires/force_errors) == anti_join_seen with the same
-    flags, for every mode combination — including keys holding a mix of
-    ok and error entries at different ages, absorbed across several
-    deltas (run-merge path exercised)."""
-    from sinew_spark.operators.bloom import SeenValueShardStore
+def _rows(spark, lo, hi, status=200, fetched_at=1.0, stride=1, offset=0):
+    """Seen rows for keys ``id * stride + offset``, id in [lo, hi)."""
+    return spark.range(lo, hi).select(
+        (F.col("id") * stride + offset).alias("key"),
+        F.lit(status).cast("int").alias("status"),
+        F.lit(fetched_at).cast("double").alias("fetched_at"),
+    )
+
+
+def _keys(spark, lo, hi):
+    return spark.range(lo, hi).select(F.col("id").alias("key"))
+
+
+def _probe(store, frontier, **kw):
+    return sorted(r.key for r in store.reject_seen(frontier, **kw).collect())
+
+
+def _run_names(store, shard, kind=None):
+    from sinew_spark.operators.bloom import _run_entries
+
+    return [
+        os.path.basename(p) for _g, k, p in _run_entries(store.path, shard) if kind in (None, k)
+    ]
+
+
+def test_seen_keys_matches_anti_join(spark, tmp_path):
+    """The plain probe == left_anti join vs the same key set, exactly —
+    with and without the fused bloom short-circuit."""
+    from sinew_spark.operators.bloom import SeenKeyShardStore
+
+    t = _seen_table(spark, tmp_path)
+    t.append(_rows(spark, 0, 3000, stride=31, offset=-(2**45)))
+    store = SeenKeyShardStore(str(tmp_path / "ks"), n_shards=4)
+    store.sync(t)
+    assert store.in_sync_with(t)
+
+    frontier = spark.range(0, 9000).select((F.col("id") * 31 - 2**45).alias("key"))
+    exact = frontier.join(t.read().select("key"), "key", "left_anti")
+    expected = sorted(r.key for r in exact.collect())
+    assert _probe(store, frontier) == expected
+
+    # fused bloom short-circuit: identical results, bit for bit
+    bloom = BloomShardStore(str(tmp_path / "bl"), capacity=10_000, n_shards=4)
+    bloom.sync(t)
+    assert _probe(store, frontier, bloom=bloom) == expected
+
+
+def test_fused_probe_bloom_false_positive_never_drops(spark, tmp_path):
+    """THE fused-probe guarantee: a key the bloom wrongly flags as seen
+    (false positive) must fall through to the exact search and SURVIVE.
+    Modeled deterministically by adding an extra key to the bloom only —
+    indistinguishable from an FP at that key. The old standalone-prefilter
+    design dropped such URLs forever. A semantic probe ignores the bloom."""
+    from sinew_spark.operators.bloom import SeenKeyShardStore
+
+    t = _seen_table(spark, tmp_path)
+    t.append(_rows(spark, 0, 1000, status=500))
+    store = SeenKeyShardStore(str(tmp_path / "ks"), n_shards=4)
+    store.sync(t)
+
+    bloom = BloomShardStore(str(tmp_path / "bl"), capacity=10_000, n_shards=4)
+    extra = 777_777  # in the bloom, NOT in seen -> a guaranteed "FP"
+    planted = _keys(spark, 0, 1000).unionByName(spark.createDataFrame([(extra,)], "key long"))
+    bloom.add_delta(planted, snapshot_id=t.current_snapshot())
+    assert bloom.in_sync_with(t)
+
+    frontier = spark.createDataFrame([(extra,), (5,), (999_999,)], "key long")
+    assert _probe(store, frontier, bloom=bloom) == [extra, 999_999]  # FP survived; seen 5 rejected
+    # force_errors re-admits the error-only key 5; the bloom must not
+    # short-circuit a semantic probe's decision
+    assert _probe(store, frontier, force_errors=True, bloom=bloom) == [5, extra, 999_999]
+
+
+def test_fused_probe_ignores_differently_synced_bloom(spark, tmp_path):
+    """A bloom synced to a different seen snapshot than the index must be
+    ignored (exact-only probe) — its definitely-new claim is stale."""
+    from sinew_spark.operators.bloom import SeenKeyShardStore
+
+    t = _seen_table(spark, tmp_path)
+    t.append(_rows(spark, 0, 100))
+    bloom = BloomShardStore(str(tmp_path / "bl"), capacity=10_000, n_shards=4)
+    bloom.sync(t)  # synced at snapshot 1
+    t.append(_rows(spark, 100, 200))
+    store = SeenKeyShardStore(str(tmp_path / "ks"), n_shards=4)
+    store.sync(t)  # synced at snapshot 2: bloom is BEHIND
+
+    # if the stale bloom were trusted, keys 100..199 would look
+    # definitely-new and skip the exact search -> refetch. They must not.
+    assert _probe(store, _keys(spark, 0, 300), bloom=bloom) == list(range(200, 300))
+
+
+def test_seen_keys_incremental_and_rebuild(spark, tmp_path):
+    """Append deltas absorb incrementally; an overwrite (delete_where)
+    forces a rebuild on a reopened store, statistics included; the
+    snapshot id advances only after the runs are written."""
+    from sinew_spark.operators.bloom import SeenKeyShardStore
+
+    t = _seen_table(spark, tmp_path)
+    store = SeenKeyShardStore(str(tmp_path / "ks"), n_shards=4)
+    t.append(_rows(spark, 0, 100, fetched_at=5.0))
+    store.sync(t)
+    t.append(_rows(spark, 100, 200, fetched_at=50.0))
+    store.sync(t)  # incremental
+    probe = _keys(spark, 0, 300)
+    assert _probe(store, probe) == list(range(200, 300))
+
+    t.delete_where(F.col("key") < 50)  # overwrite op -> rebuild on sync
+    store2 = SeenKeyShardStore(str(tmp_path / "ks"), n_shards=4)  # reopen
+    assert store2.in_sync_with(t) is False
+    store2.sync(t)
+    assert _probe(store2, probe) == list(range(0, 50)) + list(range(200, 300))
+    # the rebuilt runs carry fetched_at: a TTL probe re-admits the old keys
+    assert _probe(store2, probe, expires=10.0, now=55.0) == list(range(0, 100)) + list(
+        range(200, 300)
+    )
+
+
+def test_seen_keys_lsm_runs_and_compaction(spark, tmp_path):
+    """Absorbs append O(delta) run files without rewriting existing runs;
+    crossing KEYS_COMPACT_RUNS merges a shard back to one run with
+    per-key class-max semantics (an old ok entry survives a pile of newer
+    error entries for the same key). A stale leftover run (crash between
+    compaction rename and input unlink) changes nothing."""
+    import shutil
+
+    import numpy as np
+
+    from sinew_spark.operators.bloom import (
+        KEYS_COMPACT_RUNS,
+        SeenKeyShardStore,
+        _load_runs_shard,
+        _run_entries,
+    )
     from sinew_spark.operators.frontier import anti_join_seen
 
     now = 1_000_000.0
-    t = _mk_seen_table(spark, str(tmp_path / "seen"))
+    t = _seen_table(spark, tmp_path)
+    store = SeenKeyShardStore(str(tmp_path / "ks"), n_shards=2)
+
+    t.append(_rows(spark, 0, 100, fetched_at=now - 10.0))
+    store.sync(t)
+    first = {
+        s: {(os.path.basename(p), os.stat(p).st_mtime_ns) for _g, _k, p in _run_entries(store.path, s)}
+        for s in range(2)
+    }
+    assert all(len(v) == 1 for v in first.values())
+
+    t.append(_rows(spark, 100, 200, fetched_at=now - 10.0))
+    store.sync(t)
+    for s in range(2):
+        cur = {(os.path.basename(p), os.stat(p).st_mtime_ns) for _g, _k, p in _run_entries(store.path, s)}
+        assert first[s] <= cur and len(cur) == 2  # old run untouched, new run added
+
+    # drive past the compaction threshold: fresh keys plus newer error
+    # entries for the ok keys 0..49
+    lo = 200
+    for i in range(KEYS_COMPACT_RUNS):
+        t.append(
+            _rows(spark, lo, lo + 50, fetched_at=now - 5.0).unionByName(
+                _rows(spark, 0, 50, status=500, fetched_at=now - 5.0 + i)
+            )
+        )
+        store.sync(t)
+        lo += 50
+    assert all(len(_run_entries(store.path, s)) <= KEYS_COMPACT_RUNS for s in range(2))
+    probe = _keys(spark, 0, lo + 100)
+    assert _probe(store, probe) == list(range(lo, lo + 100))
+    # force_errors: the surviving ok entry still blocks 0..49
+    exact = anti_join_seen(probe, t.read(), force_errors=True, now=now)
+    assert _probe(store, probe, force_errors=True, now=now) == list(range(lo, lo + 100))
+    assert sorted(r.key for r in exact.collect()) == list(range(lo, lo + 100))
+
+    # stale-run crash model: duplicate an existing run under a newer name
+    runs0 = [p for _g, _k, p in _run_entries(store.path, 0)]
+    shutil.copyfile(runs0[0], os.path.join(store.path, "vals-00000.r009999.npz"))
+    before = _load_runs_shard(store.path, 0)
+    assert _probe(store, probe) == list(range(lo, lo + 100))
+    assert _probe(store, probe, force_errors=True, now=now) == list(range(lo, lo + 100))
+    after = _load_runs_shard(store.path, 0)
+    assert all(np.array_equal(a, b) for a, b in zip(after, before))
+
+
+def test_seen_vals_matches_semantic_anti_join(spark, tmp_path):
+    """reject_seen == anti_join_seen with the same flags, for every mode —
+    plain, expires, force_errors, both, and the next frontier's run-start
+    cutoff (expires=0, now=) — including keys holding a mix of ok and
+    error entries at different ages, absorbed across several deltas
+    (run-merge path exercised)."""
+    from sinew_spark.operators.bloom import SeenKeyShardStore
+    from sinew_spark.operators.frontier import anti_join_seen
+
+    now = 1_000_000.0
+    t = _seen_table(spark, tmp_path)
     # key k: entry classes cycle through ok-only / err-only / both; ages
     # straddle the 100s cutoff. Two appends so per-key maxima span runs.
     rows1, rows2 = [], []
@@ -353,99 +373,54 @@ def test_seen_vals_matches_semantic_anti_join(spark, tmp_path):
         rows1.append((k, 200 if cls != 1 else 500, now - age_a))
         rows2.append((k, 200 if cls == 0 else 503, now - age_b))
     t.append(spark.createDataFrame(rows1, t.schema))
-    store = SeenValueShardStore(str(tmp_path / "vs"), n_shards=4)
+    store = SeenKeyShardStore(str(tmp_path / "ks"), n_shards=4)
     store.sync(t)
     t.append(spark.createDataFrame(rows2, t.schema))
     store.sync(t)  # incremental second run
     assert store.in_sync_with(t)
 
-    frontier = spark.range(0, 800).select(F.col("id").alias("key"))
-    for expires, force_errors in [(None, False), (100.0, False), (None, True), (100.0, True)]:
+    frontier = _keys(spark, 0, 800)
+    modes = [
+        (None, False, now), (100.0, False, now), (None, True, now), (100.0, True, now),
+        (0.0, False, now - 100.0),  # run-start cutoff: attempted since now-100
+    ]
+    for expires, force_errors, at in modes:
         exact = anti_join_seen(
-            frontier, t.read(), expires=expires, force_errors=force_errors, now=now
+            frontier, t.read(), expires=expires, force_errors=force_errors, now=at
         )
-        via = store.reject_seen(frontier, expires=expires, force_errors=force_errors, now=now)
-        assert sorted(r.key for r in via.collect()) == sorted(
-            r.key for r in exact.collect()
-        ), f"divergence at expires={expires} force_errors={force_errors}"
-
-
-def test_seen_vals_plain_probe_and_rebuild(spark, tmp_path):
-    """No flags -> plain blocked-iff-any-entry (the valued store subsumes
-    the key store); an overwrite op forces a rebuild on a reopened store."""
-    from sinew_spark.operators.bloom import SeenValueShardStore
-
-    t = _mk_seen_table(spark, str(tmp_path / "seen"))
-    t.append(
-        spark.range(0, 200).select(
-            F.col("id").alias("key"),
-            F.lit(200).cast("int").alias("status"),
-            F.lit(5.0).alias("fetched_at"),
+        via = _probe(store, frontier, expires=expires, force_errors=force_errors, now=at)
+        assert via == sorted(r.key for r in exact.collect()), (
+            f"divergence at expires={expires} force_errors={force_errors}"
         )
+
+
+def test_seen_index_pre_merge_sidecar_opens_cold(spark, tmp_path):
+    """A sidecar whose meta lacks the layout marker was written by the
+    key-only store (keys- .npy runs, no statistics). It must open cold —
+    no probe answers from it — and the first sync rebuilds it, even when
+    its recorded snapshot is the table's current one."""
+    import json
+
+    import numpy as np
+
+    from sinew_spark.operators.bloom import SeenKeyShardStore
+
+    t = _seen_table(spark, tmp_path)
+    t.append(_rows(spark, 0, 100))
+    path = tmp_path / "ks"
+    path.mkdir()
+    np.save(path / "keys-00000.r000001.npy", np.arange(0, 100, dtype=np.int64))
+    (path / "meta.json").write_text(
+        json.dumps({"n_shards": 2, "snapshot_id": t.current_snapshot(), "n_keys": -1})
     )
-    store = SeenValueShardStore(str(tmp_path / "vs"), n_shards=4)
+    store = SeenKeyShardStore(str(path), n_shards=2)
+    assert store.snapshot_id is None and not store.in_sync_with(t)
+    assert store.probe_local(5) is None
     store.sync(t)
-    probe = spark.range(0, 300).select(F.col("id").alias("key"))
-    assert sorted(r.key for r in store.reject_seen(probe).collect()) == list(range(200, 300))
-
-    t.delete_where(F.col("key") < 50)  # overwrite -> rebuild
-    store2 = SeenValueShardStore(str(tmp_path / "vs"), n_shards=4)
-    store2.sync(t)
-    kept = sorted(r.key for r in store2.reject_seen(probe).collect())
-    assert kept == list(range(0, 50)) + list(range(200, 300))
-
-
-def test_seen_vals_lsm_compaction_keeps_class_maxima(spark, tmp_path):
-    """Driving a shard past KEYS_COMPACT_RUNS merges runs with per-key
-    class-max semantics — an old ok-entry must survive a pile of newer
-    error entries for the same key; a stale duplicated run (crash model)
-    changes nothing because merge is max()."""
-    import os
-    import shutil
-
-    from sinew_spark.operators.bloom import (
-        KEYS_COMPACT_RUNS,
-        SeenValueShardStore,
-        _shard_val_files,
-    )
-    from sinew_spark.operators.frontier import anti_join_seen
-
-    now = 1_000_000.0
-    t = _mk_seen_table(spark, str(tmp_path / "seen"))
-    store = SeenValueShardStore(str(tmp_path / "vs"), n_shards=2)
-    # run 1: keys 0..49 fetched OK, fresh
-    t.append(
-        spark.range(0, 50).select(
-            F.col("id").alias("key"),
-            F.lit(200).cast("int").alias("status"),
-            F.lit(now - 10.0).alias("fetched_at"),
-        )
-    )
-    store.sync(t)
-    # many error-only runs for the same keys -> compaction must keep fa_ok
-    for i in range(KEYS_COMPACT_RUNS + 2):
-        t.append(
-            spark.range(0, 50).select(
-                F.col("id").alias("key"),
-                F.lit(500).cast("int").alias("status"),
-                F.lit(now - 5.0 + i).alias("fetched_at"),
-            )
-        )
-        store.sync(t)
-    assert all(len(_shard_val_files(store.path, s)) <= KEYS_COMPACT_RUNS for s in range(2))
-
-    frontier = spark.range(0, 80).select(F.col("id").alias("key"))
-    # force_errors: the surviving ok-entry still blocks 0..49
-    blocked = store.reject_seen(frontier, force_errors=True, now=now)
-    assert sorted(r.key for r in blocked.collect()) == list(range(50, 80))
-    exact = anti_join_seen(frontier, t.read(), force_errors=True, now=now)
-    assert sorted(r.key for r in exact.collect()) == list(range(50, 80))
-
-    # stale-run crash model: re-copy an old run under a newer generation
-    runs0 = _shard_val_files(store.path, 0)
-    shutil.copyfile(runs0[0], os.path.join(store.path, "vals-00000.r009999.npz"))
-    again = store.reject_seen(frontier, force_errors=True, now=now)
-    assert sorted(r.key for r in again.collect()) == list(range(50, 80))
+    assert store.in_sync_with(t) and store.probe_local(5) is True
+    assert not list(path.glob("keys-*.npy"))
+    assert json.loads((path / "meta.json").read_text())["layout"]
+    assert _probe(store, _keys(spark, 0, 110)) == list(range(100, 110))
 
 
 def test_shard_lru_bounds_and_generations():
@@ -481,68 +456,61 @@ def test_shard_lru_bounds_and_generations():
 
 def test_seen_keys_edelete_absorbs_tombstones_not_rebuild(spark, tmp_path):
     """An equality-delete snapshot absorbs as tombstone runs — the existing
-    add runs are untouched (no O(seen) rebuild), the probe honors the
-    delete, and a re-appended key is seen again (generation order)."""
-    from sinew_spark.operators.bloom import SeenKeyShardStore, _shard_run_files
-    from sinew_spark.plans.snapshots import SnapshotTable
-    from pyspark.sql import types as T
+    add runs are untouched (no O(seen) rebuild), every probe mode honors
+    the delete, and a re-appended key is seen again with fresh statistics
+    (generation order)."""
+    from sinew_spark.operators.bloom import SeenKeyShardStore
+    from sinew_spark.operators.frontier import anti_join_seen
 
-    t = SnapshotTable(
-        spark, str(tmp_path / "seen"), T.StructType([T.StructField("key", T.LongType())])
+    now = 1_000_000.0
+    t = _seen_table(spark, tmp_path)
+    t.append(
+        spark.range(0, 1000).select(
+            F.col("id").alias("key"),
+            F.when(F.col("id") % 3 == 1, 500).otherwise(200).cast("int").alias("status"),
+            (F.lit(now) - 50.0 - (F.col("id") % 7) * 40.0).alias("fetched_at"),
+        )
     )
-    t.append(spark.range(0, 1000).select(F.col("id").alias("key")))
     store = SeenKeyShardStore(str(tmp_path / "ks"), n_shards=4)
     store.sync(t)
-    adds_before = {
-        s: [os.path.basename(p) for p in _shard_run_files(store.path, s)] for s in range(4)
-    }
+    adds_before = {s: _run_names(store, s, "k") for s in range(4)}
 
-    t.delete_keys([5, 6, 7])
+    t.delete_keys([5, 6, 7, 10])
     store.sync(t)
     assert store.in_sync_with(t)
-    adds_after = {
-        s: [os.path.basename(p) for p in _shard_run_files(store.path, s)] for s in range(4)
-    }
-    assert adds_after == adds_before  # no rebuild, no new add runs
-    assert sum(len(_shard_run_files(store.path, s, "dels")) for s in range(4)) > 0
+    assert {s: _run_names(store, s, "k") for s in range(4)} == adds_before  # no rebuild
+    assert sum(len(_run_names(store, s, "d")) for s in range(4)) > 0
 
-    probe = spark.range(0, 1010).select(F.col("id").alias("key"))
-    out = sorted(r.key for r in store.reject_seen(probe).collect())
-    assert out == [5, 6, 7] + list(range(1000, 1010))
+    probe = _keys(spark, 0, 1010)
+    assert _probe(store, probe) == [5, 6, 7, 10] + list(range(1000, 1010))
 
-    # re-append one deleted key: a higher-generation add run wins
-    t.append(spark.createDataFrame([(5,)], "key long"))
+    # re-append deleted keys: a higher-generation add run wins; 10's old
+    # error entry is gone, its fresh ok entry starts the stats over
+    t.append(spark.createDataFrame([(5, 200, now - 1.0), (10, 200, now - 1.0)], t.schema))
     store.sync(t)
-    out2 = sorted(r.key for r in store.reject_seen(probe).collect())
-    assert out2 == [6, 7] + list(range(1000, 1010))
+    assert _probe(store, probe) == [6, 7] + list(range(1000, 1010))
+    for expires, fe in [(100.0, False), (None, True), (100.0, True)]:
+        exact = anti_join_seen(probe, t.read(), expires=expires, force_errors=fe, now=now)
+        assert _probe(store, probe, expires=expires, force_errors=fe, now=now) == sorted(
+            r.key for r in exact.collect()
+        ), f"divergence at expires={expires} force_errors={fe}"
 
     # fused bloom probe agrees (stale bloom entries fall through to exact)
     bloom = BloomShardStore(str(tmp_path / "bl"), capacity=10_000, n_shards=4)
     bloom.sync(t)
-    out3 = sorted(r.key for r in store.reject_seen(probe, bloom=bloom).collect())
-    assert out3 == out2
+    assert _probe(store, probe, bloom=bloom) == [6, 7] + list(range(1000, 1010))
 
 
 def test_seen_keys_tombstone_compaction_resolves(spark, tmp_path):
     """Interleaved deletes count toward KEYS_COMPACT_RUNS; crossing it folds
     the shard to one resolved add run and membership replays exactly."""
-    import os as _os
+    from sinew_spark.operators.bloom import KEYS_COMPACT_RUNS, SeenKeyShardStore
 
-    from sinew_spark.operators.bloom import (
-        KEYS_COMPACT_RUNS,
-        SeenKeyShardStore,
-        _shard_run_files,
-    )
-    from sinew_spark.plans.snapshots import SnapshotTable
-    from pyspark.sql import types as T
-
-    t = SnapshotTable(
-        spark, str(tmp_path / "seen"), T.StructType([T.StructField("key", T.LongType())])
-    )
+    t = _seen_table(spark, tmp_path)
     store = SeenKeyShardStore(str(tmp_path / "ks"), n_shards=2)
     lo, dead = 0, []
     for i in range(KEYS_COMPACT_RUNS + 3):
-        t.append(spark.range(lo, lo + 40).select(F.col("id").alias("key")))
+        t.append(_rows(spark, lo, lo + 40))
         store.sync(t)
         if i % 2 == 0:  # interleave point deletes
             t.delete_keys([lo + 1, lo + 2])
@@ -550,85 +518,29 @@ def test_seen_keys_tombstone_compaction_resolves(spark, tmp_path):
             dead += [lo + 1, lo + 2]
         lo += 40
     for s in range(2):
-        n_runs = len(_shard_run_files(store.path, s)) + len(
-            _shard_run_files(store.path, s, "dels")
-        )
-        assert n_runs <= KEYS_COMPACT_RUNS, n_runs
-    probe = spark.range(0, lo + 50).select(F.col("id").alias("key"))
+        assert len(_run_names(store, s)) <= KEYS_COMPACT_RUNS
     expected = sorted(dead + list(range(lo, lo + 50)))
-    assert sorted(r.key for r in store.reject_seen(probe).collect()) == expected
-
-
-def test_seen_vals_edelete_tombstones_match_anti_join(spark, tmp_path):
-    """Valued shards absorb equality deletes as tombstones and keep exact
-    anti_join_seen semantics across modes; a deleted key's statistics are
-    wiped (a later re-append starts fresh)."""
-    from sinew_spark.operators.bloom import SeenValueShardStore, _shard_val_files
-    from sinew_spark.operators.frontier import anti_join_seen
-
-    now = 1_000_000.0
-    t = _mk_seen_table(spark, str(tmp_path / "seen"))
-    t.append(
-        spark.range(0, 300).select(
-            F.col("id").alias("key"),
-            F.when(F.col("id") % 3 == 1, 500).otherwise(200).cast("int").alias("status"),
-            (F.lit(now) - 50.0 - (F.col("id") % 7) * 40.0).alias("fetched_at"),
-        )
-    )
-    store = SeenValueShardStore(str(tmp_path / "vs"), n_shards=4)
-    store.sync(t)
-    vals_before = {
-        s: [os.path.basename(p) for p in _shard_val_files(store.path, s)] for s in range(4)
-    }
-    t.delete_keys([10, 11, 12, 13])
-    store.sync(t)
-    assert store.in_sync_with(t)
-    assert {
-        s: [os.path.basename(p) for p in _shard_val_files(store.path, s)] for s in range(4)
-    } == vals_before  # tombstones only, no rebuild
-
-    # old error entry deleted, fresh ok re-append: stats start fresh
-    t.append(spark.createDataFrame([(10, 200, now - 1.0)], t.schema))
-    store.sync(t)
-
-    frontier = spark.range(0, 400).select(F.col("id").alias("key"))
-    for expires, fe in [(None, False), (100.0, False), (None, True), (100.0, True)]:
-        exact = sorted(
-            r.key
-            for r in anti_join_seen(
-                frontier, t.read(), expires=expires, force_errors=fe, now=now
-            ).collect()
-        )
-        via = sorted(
-            r.key
-            for r in store.reject_seen(frontier, expires=expires, force_errors=fe, now=now).collect()
-        )
-        assert via == exact, f"divergence at expires={expires} force_errors={fe}"
+    assert _probe(store, _keys(spark, 0, lo + 50)) == expected
 
 
 # --- rollback / divergent-lineage sync (ADVICE r2: rollback_to left stores
 # --- claiming in-sync while shards held keys from rolled-back snapshots) ------
 
 
-def _key_table(spark, tmp_path, name="seen"):
-    from sinew_spark.plans.snapshots import SnapshotTable
-    from pyspark.sql import types as T
-
-    return SnapshotTable(
-        spark, str(tmp_path / name), T.StructType([T.StructField("key", T.LongType())])
-    )
-
-
 def test_seen_keys_rollback_rebuilds_not_phantom(spark, tmp_path):
     """rollback_to an older snapshot, then sync: the store must take the
     full-rebuild branch, NOT mark itself in-sync with rolled-back keys
     still in its shards — otherwise reject_seen silently drops frontier
-    URLs the table no longer marks seen (exactly-once violation)."""
+    URLs the table no longer marks seen (exactly-once violation), in the
+    plain and the semantic probe alike."""
+    import time as _time
+
     from sinew_spark.operators.bloom import SeenKeyShardStore
 
-    t = _key_table(spark, tmp_path)
-    first = t.append(spark.range(0, 1000).select(F.col("id").alias("key")))
-    t.append(spark.range(1000, 2000).select(F.col("id").alias("key")))
+    now = _time.time()
+    t = _seen_table(spark, tmp_path)
+    first = t.append(_rows(spark, 0, 1000, fetched_at=now))
+    t.append(_rows(spark, 1000, 2000, fetched_at=now))
     store = SeenKeyShardStore(str(tmp_path / "ks"), n_shards=4)
     store.sync(t)
     assert store.in_sync_with(t)
@@ -636,9 +548,9 @@ def test_seen_keys_rollback_rebuilds_not_phantom(spark, tmp_path):
     t.rollback_to(first)  # resume-from-checkpoint: keys 1000-1999 un-seen
     store.sync(t)
     assert store.in_sync_with(t)
-    frontier = spark.range(0, 2000).select(F.col("id").alias("key"))
-    survivors = sorted(r.key for r in store.reject_seen(frontier).collect())
-    assert survivors == list(range(1000, 2000))  # rolled-back keys survive
+    frontier = _keys(spark, 0, 2000)
+    assert _probe(store, frontier) == list(range(1000, 2000))  # rolled-back keys survive
+    assert _probe(store, frontier, expires=3600.0) == list(range(1000, 2000))
 
 
 def test_seen_keys_post_rollback_branch_is_not_incremental(spark, tmp_path):
@@ -648,74 +560,34 @@ def test_seen_keys_post_rollback_branch_is_not_incremental(spark, tmp_path):
     parent walk must detect the divergent branch and rebuild."""
     from sinew_spark.operators.bloom import SeenKeyShardStore
 
-    t = _key_table(spark, tmp_path)
-    first = t.append(spark.range(0, 500).select(F.col("id").alias("key")))
-    t.append(spark.range(500, 1000).select(F.col("id").alias("key")))
+    t = _seen_table(spark, tmp_path)
+    first = t.append(_rows(spark, 0, 500))
+    t.append(_rows(spark, 500, 1000))
     store = SeenKeyShardStore(str(tmp_path / "ks"), n_shards=4)
     store.sync(t)
 
     t.rollback_to(first)
-    t.append(spark.range(2000, 2500).select(F.col("id").alias("key")))
+    t.append(_rows(spark, 2000, 2500))
     store.sync(t)
     assert store.in_sync_with(t)
-    frontier = spark.range(0, 2500).select(F.col("id").alias("key"))
-    survivors = sorted(r.key for r in store.reject_seen(frontier).collect())
-    assert survivors == list(range(500, 2000))
+    assert _probe(store, _keys(spark, 0, 2500)) == list(range(500, 2000))
 
 
 def test_bloom_store_rollback_then_append_no_false_negatives(spark, tmp_path):
     """Bloom mirror of the divergent-branch case: post-rollback appends
     must end up IN the bloom (rebuild), or the fused probe's 'definitely
     new' short-circuit would skip the exact search for seen keys."""
-    t = _key_table(spark, tmp_path)
-    first = t.append(spark.range(0, 500).select(F.col("id").alias("key")))
-    t.append(spark.range(500, 1000).select(F.col("id").alias("key")))
+    t = _seen_table(spark, tmp_path)
+    first = t.append(_rows(spark, 0, 500))
+    t.append(_rows(spark, 500, 1000))
     bloom = BloomShardStore(str(tmp_path / "bl"), capacity=10_000, n_shards=4)
     bloom.sync(t)
 
     t.rollback_to(first)
-    t.append(spark.range(2000, 2500).select(F.col("id").alias("key")))
+    t.append(_rows(spark, 2000, 2500))
     bloom.sync(t)
     assert bloom.in_sync_with(t)
-    branch_keys = spark.range(2000, 2500).select(F.col("id").alias("key"))
-    assert bloom.maybe_seen(branch_keys).count() == 500  # no false negatives
-
-
-def test_seen_vals_rollback_rebuilds(spark, tmp_path):
-    """Value-store mirror: semantic probe must not reject rolled-back keys."""
-    import time as _time
-
-    from sinew_spark.operators.bloom import SeenValueShardStore
-    from sinew_spark.plans.snapshots import SnapshotTable
-    from pyspark.sql import types as T
-
-    now = _time.time()
-    schema = T.StructType(
-        [
-            T.StructField("key", T.LongType()),
-            T.StructField("status", T.IntegerType()),
-            T.StructField("fetched_at", T.DoubleType()),
-        ]
-    )
-    t = SnapshotTable(spark, str(tmp_path / "seenv"), schema)
-    first = t.append(
-        spark.range(0, 300).select(
-            F.col("id").alias("key"), F.lit(200).alias("status"), F.lit(now).alias("fetched_at")
-        )
-    )
-    t.append(
-        spark.range(300, 600).select(
-            F.col("id").alias("key"), F.lit(200).alias("status"), F.lit(now).alias("fetched_at")
-        )
-    )
-    store = SeenValueShardStore(str(tmp_path / "vs"), n_shards=4)
-    store.sync(t)
-    t.rollback_to(first)
-    store.sync(t)
-    assert store.in_sync_with(t)
-    frontier = spark.range(0, 600).select(F.col("id").alias("key"))
-    survivors = sorted(r.key for r in store.reject_seen(frontier).collect())
-    assert survivors == list(range(300, 600))
+    assert bloom.maybe_seen(_keys(spark, 2000, 2500)).count() == 500  # no false negatives
 
 
 def _strip_parents(t):
@@ -736,10 +608,10 @@ def test_legacy_manifest_linear_still_incremental(spark, tmp_path):
     grow along append lineage) and returns the chain."""
     from sinew_spark.operators.bloom import _delta_chain
 
-    t = _key_table(spark, tmp_path)
-    first = t.append(spark.range(0, 100).select(F.col("id").alias("key")))
-    t.append(spark.range(100, 200).select(F.col("id").alias("key")))
-    last = t.append(spark.range(200, 300).select(F.col("id").alias("key")))
+    t = _seen_table(spark, tmp_path)
+    first = t.append(_rows(spark, 0, 100))
+    t.append(_rows(spark, 100, 200))
+    last = t.append(_rows(spark, 200, 300))
     _strip_parents(t)
     chain = _delta_chain(t, first, last)
     assert chain is not None and [s["id"] for s in chain] == [first + 1, last]
@@ -754,21 +626,19 @@ def test_legacy_manifest_rollback_reappend_forces_rebuild(spark, tmp_path):
     and rolled-back keys survive reject_seen."""
     from sinew_spark.operators.bloom import SeenKeyShardStore, _delta_chain
 
-    t = _key_table(spark, tmp_path)
-    first = t.append(spark.range(0, 500).select(F.col("id").alias("key")))
-    abandoned = t.append(spark.range(500, 1000).select(F.col("id").alias("key")))
+    t = _seen_table(spark, tmp_path)
+    first = t.append(_rows(spark, 0, 500))
+    abandoned = t.append(_rows(spark, 500, 1000))
     store = SeenKeyShardStore(str(tmp_path / "ks"), n_shards=4)
     store.sync(t)  # records snapshot_id == abandoned
     t.rollback_to(first)
-    t.append(spark.range(2000, 2500).select(F.col("id").alias("key")))
+    t.append(_rows(spark, 2000, 2500))
     _strip_parents(t)
 
     assert _delta_chain(t, abandoned, t.current_snapshot()) is None
     store.sync(t)
     assert store.in_sync_with(t)
-    frontier = spark.range(0, 2500).select(F.col("id").alias("key"))
-    survivors = sorted(r.key for r in store.reject_seen(frontier).collect())
-    assert survivors == list(range(500, 2000))  # abandoned keys un-seen
+    assert _probe(store, _keys(spark, 0, 2500)) == list(range(500, 2000))  # abandoned keys un-seen
 
 
 def test_mixed_manifest_parentless_step_forces_rebuild(spark, tmp_path):
@@ -777,11 +647,11 @@ def test_mixed_manifest_parentless_step_forces_rebuild(spark, tmp_path):
     cannot validate (mixed provenance can hide a legacy-era rollback)."""
     from sinew_spark.operators.bloom import _delta_chain
 
-    t = _key_table(spark, tmp_path)
-    first = t.append(spark.range(0, 100).select(F.col("id").alias("key")))
-    mid = t.append(spark.range(100, 200).select(F.col("id").alias("key")))
+    t = _seen_table(spark, tmp_path)
+    first = t.append(_rows(spark, 0, 100))
+    mid = t.append(_rows(spark, 100, 200))
     _strip_parents(t)  # legacy prefix
-    last = t.append(spark.range(200, 300).select(F.col("id").alias("key")))  # parented
+    last = t.append(_rows(spark, 200, 300))  # parented
     # walk from last to first crosses the parentless mid -> unknown provenance
     assert _delta_chain(t, first, last) is None
     # but a walk that stays inside the parented suffix still works

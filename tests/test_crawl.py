@@ -113,6 +113,26 @@ def test_flaky_retry_succeeds(spark, tmpdir_path):
     assert f.n_attempts == 3
 
 
+@pytest.mark.parametrize("paced", [False, True])
+def test_latency_excludes_retry_backoff(spark, tmpdir_path, paced):
+    """latency_ms times the request's attempts, not the backoff slept
+    between them (adaptive politeness applies its own error backoff on
+    top). Two failed attempts sleep 10 + 20 ms of backoff; both fetch
+    paths — unpaced Arrow, and grouped pandas (a robots Crawl-delay row
+    forces it) — must report less than that."""
+    fetcher = FixtureFetcher(seed=42, flaky={"flaky": 3})
+    delays = spark.createDataFrame([("flaky", 0.0)], "host string, crawl_delay double")
+    c = Crawler(
+        spark, tmpdir_path + "/c", fetcher, CrawlOptions(retries=2, rate_limit=0),
+        crawl_delays=delays if paced else None,
+    )
+    c.seed(["http://flaky/x"])
+    c.run()
+    f = c.fetched_t.read().collect()[0]
+    assert f.status == 200 and f.n_attempts == 3
+    assert 0 <= f.latency_ms < 30
+
+
 def test_force_refetch(spark, tmpdir_path):
     # force bypasses the seen check (test_main.rb:28-36); deterministic rand
     # sentinel proves an actual refetch happened vs a cache hit
@@ -430,8 +450,8 @@ def test_resume_with_exact_shards(spark, tmpdir_path):
 
 
 def test_semantic_shards_path_equals_anti_join_path(spark, tmpdir_path):
-    """The valued-shard probe (SeenValueShardStore) and the exact semantic
-    anti-join are the same filter: force_errors and TTL recrawls select
+    """The seen index's semantic probe (SeenKeyShardStore) and the exact
+    semantic anti-join are the same filter: force_errors and TTL recrawls select
     identical row sets under exact_shards=True and False. Hosts h0-h2 are
     persistently flaky, so the first crawl seeds a mix of ok and error
     entries for force_errors to discriminate."""
@@ -622,15 +642,13 @@ def test_outlink_cap_keeps_seq_in_parent_slot(spark, tmpdir_path):
 
 
 def test_probe_driver_local_in_semantic_crawls(spark, tmpdir_path):
-    """TTL (expires) runs keep only the VALUED shard store in sync — the
+    """TTL (expires) runs keep the one seen index in sync — the
     interactive miss/cached probes must use it and stay driver-local
-    (zero Spark jobs), not fall through to a per-probe Spark lookup
-    because the key store is cold."""
+    (zero Spark jobs), not fall through to a per-probe Spark lookup."""
     c = make_crawler(spark, tmpdir_path, exact_shards=True, expires=3600)
     c.seed(["http://httpbingo.org/sem1", "http://httpbingo.org/sem2"])
     c.run()
-    assert not c._seen_keys.in_sync_with(c.seen_t)  # semantic: keys cold
-    assert c._seen_vals.in_sync_with(c.seen_t)
+    assert c._seen_keys.in_sync_with(c.seen_t)  # the one index is in sync
     sc = spark.sparkContext
     sc.setJobGroup("semprobe", "driver-local probe check")
     try:
@@ -640,6 +658,47 @@ def test_probe_driver_local_in_semantic_crawls(spark, tmpdir_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert tuple(sc.statusTracker().getJobIdsForGroup("semprobe")) == ()
+
+
+def test_pre_merge_key_sidecar_is_rebuilt_not_trusted(spark, tmpdir_path):
+    """A seen.keys.d written by the key-only store (keys- .npy runs, meta
+    without the layout marker) recording the CURRENT seen snapshot must
+    not be probed as in sync: it holds no per-key statistics, so trusting
+    it would report every key as new and refetch the whole seen set."""
+    import os
+
+    import numpy as np
+
+    from sinew_spark.functions.localhash import shard_of_key
+
+    seen_urls = [f"http://httpbingo.org/get?m={i}" for i in range(5)]
+    c = make_crawler(spark, tmpdir_path, exact_shards=True)
+    c.seed(seen_urls)
+    c.run()
+    keys = [r.key for r in c.seen_t.read().select("key").collect()]
+    assert len(keys) == 5
+
+    side = os.path.join(tmpdir_path, "crawl", "seen.keys.d")
+    for name in os.listdir(side):
+        os.unlink(os.path.join(side, name))
+    n_shards = c.opts.bloom_shards
+    for shard in range(n_shards):
+        run = np.array(sorted(k for k in keys if shard_of_key(k, n_shards) == shard), dtype=np.int64)
+        np.save(os.path.join(side, f"keys-{shard:05d}.r000001.npy"), run)
+    with open(os.path.join(side, "meta.json"), "w") as f:
+        json.dump(
+            {"n_shards": n_shards, "snapshot_id": c.seen_t.current_snapshot(), "n_keys": -1}, f
+        )
+
+    c2 = make_crawler(spark, tmpdir_path, exact_shards=True)
+    assert not c2._seen_keys.in_sync_with(c2.seen_t)
+    assert c2.cached(seen_urls[0])  # answered by the Spark path, not the old runs
+    c2.seed(seen_urls + ["http://httpbingo.org/get?m=new"])
+    assert c2.run_round()["selected"] == 1
+    fetched = [r.key for r in c2.fetched_t.read().select("key").collect()]
+    assert len(fetched) == len(set(fetched)) == 6  # no seen key fetched again
+    assert c2._seen_keys.in_sync_with(c2.seen_t)
+    assert c2.cached(seen_urls[0])
 
 
 def _aggregate_round(c):

@@ -134,13 +134,21 @@ def test_sidecar_store_rebuilds_across_expired_chain(spark, tmpdir_path):
     # of absorbing missing deltas (exactly-once safety).
     from sinew_spark.operators.bloom import SeenKeyShardStore
 
-    t = _mk(spark, tmpdir_path + "/seen")
-    t.overwrite(spark.createDataFrame([(1, "a")], SCHEMA))
+    # the index absorbs the seen table's (key, status, fetched_at)
+    seen_schema = T.StructType(
+        [
+            T.StructField("key", T.LongType()),
+            T.StructField("status", T.IntegerType()),
+            T.StructField("fetched_at", T.DoubleType()),
+        ]
+    )
+    t = SnapshotTable(spark, tmpdir_path + "/seen", seen_schema)
+    t.overwrite(spark.createDataFrame([(1, 200, 1.0)], seen_schema))
     store = SeenKeyShardStore(tmpdir_path + "/shards", n_shards=2)
     store.sync(t)
     # two overwrites, then expire the middle one the chain would cross
-    t.overwrite(spark.createDataFrame([(2, "b")], SCHEMA))
-    t.overwrite(spark.createDataFrame([(2, "b"), (3, "c")], SCHEMA))
+    t.overwrite(spark.createDataFrame([(2, 200, 2.0)], seen_schema))
+    t.overwrite(spark.createDataFrame([(2, 200, 2.0), (3, 200, 3.0)], seen_schema))
     t.expire_snapshots(retain_last=1)
     store.sync(t)  # must not raise; rebuild path
     df = spark.createDataFrame([(1, "x"), (2, "x"), (3, "x"), (4, "x")], SCHEMA)

@@ -174,11 +174,11 @@ def test_link_resolver_matches_urljoin(base, ref):
 )
 @settings(max_examples=150, deadline=None)
 def test_valued_shard_stats_match_brute_force(entries, n_runs, expires, force_errors):
-    """The valued store's per-key class-max statistics, merged across any
+    """The seen index's per-key class-max statistics, merged across any
     run partitioning, answer every TTL/force_errors predicate exactly like
     a brute-force scan over the raw seen entries (anti_join_seen's
     semantics: blocked iff a live entry exists)."""
-    from sinew_spark.operators.bloom import _NEG_INF, _merge_val_runs
+    from sinew_spark.operators.bloom import _NEG_INF, _merge_runs
 
     NOW = 1000.0
     cutoff = None if expires is None else NOW - expires
@@ -200,7 +200,7 @@ def test_valued_shard_stats_match_brute_force(entries, n_runs, expires, force_er
         np.maximum.at(merr, inv[~ok], fa[~ok])
         runs.append((uk, mok, merr))
     if runs:
-        uk, mok, merr = runs[0] if len(runs) == 1 else _merge_val_runs(runs)
+        uk, mok, merr = runs[0] if len(runs) == 1 else _merge_runs(runs)
     else:
         uk = np.empty(0, dtype=np.int64)
         mok = merr = np.empty(0)
@@ -236,23 +236,23 @@ def test_valued_shard_stats_match_brute_force(entries, n_runs, expires, force_er
 )
 @settings(max_examples=200, deadline=None)
 def test_key_fold_matches_set_replay(runs):
-    """_fold_key_runs resolves any interleaving of add + tombstone runs to
-    exactly the set replay in generation order — delete-then-re-append is
-    a member, append-then-delete is not (the MOR sequence rule the seen
-    table's uncache depends on)."""
-    from sinew_spark.operators.bloom import _fold_key_runs
+    """_fold_runs resolves any interleaving of add + tombstone runs to a
+    key set that is exactly the set replay in generation order —
+    delete-then-re-append is a member, append-then-delete is not (the MOR
+    sequence rule the seen table's uncache depends on)."""
+    from sinew_spark.operators.bloom import _fold_runs
 
-    entries = [
-        (g + 1, kind, np.unique(np.array(keys, dtype=np.int64)))
-        for g, (kind, keys) in enumerate(runs)
-    ]
+    entries = []
     expect: set[int] = set()
-    for _g, kind, arr in entries:
+    for g, (kind, keys) in enumerate(runs):
+        arr = np.unique(np.array(keys, dtype=np.int64))
         if kind == "k":
+            entries.append((g + 1, kind, (arr, np.zeros(len(arr)), np.full(len(arr), -np.inf))))
             expect |= set(arr.tolist())
         else:
+            entries.append((g + 1, kind, arr))
             expect -= set(arr.tolist())
-    got = _fold_key_runs(entries)
+    got = _fold_runs(entries)[0]
     assert got.tolist() == sorted(expect)
     assert (np.diff(got) > 0).all()  # sorted unique (probe binary-search contract)
 
@@ -277,10 +277,10 @@ def test_key_fold_matches_set_replay(runs):
 )
 @settings(max_examples=200, deadline=None)
 def test_val_fold_matches_dict_replay(runs):
-    """_fold_val_runs: tombstones wipe a key's statistics entirely; a later
+    """_fold_runs: tombstones wipe a key's statistics entirely; a later
     re-add rebuilds class maxima only from runs after the tombstone —
     matching a dict replay of the raw (key, status, fetched_at) stream."""
-    from sinew_spark.operators.bloom import _NEG_INF, _fold_val_runs
+    from sinew_spark.operators.bloom import _NEG_INF, _fold_runs
 
     entries = []
     expect: dict[int, list[float]] = {}
@@ -310,7 +310,7 @@ def test_val_fold_matches_dict_replay(runs):
         else:
             for k in items:
                 expect.pop(k, None)
-    uk, mok, merr = _fold_val_runs(entries)
+    uk, mok, merr = _fold_runs(entries)
     assert uk.tolist() == sorted(expect)
     for i, k in enumerate(uk.tolist()):
         assert (mok[i], merr[i]) == tuple(expect[k]), k

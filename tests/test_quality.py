@@ -290,6 +290,34 @@ def test_lm_score_pruning_and_oov(spark):
     assert out[101].avg_nll_x > out[100].avg_nll_x
 
 
+def test_lm_score_pruned_context_probability_at_most_one(spark):
+    """A kept bigram whose context fell out of the top-m context table
+    must not get p(w2|w1) > 1: the context count is floored at the
+    bigram's own count. Reference: 20 x 'a b c' and 10 x 'x y', V = 5;
+    top_unigrams=1 keeps only context 'a' (ties by token), so the kept
+    bigrams (b,c) and (x,y) have pruned contexts. Every single-bigram
+    doc's log-probability is <= 0, with the hand-computed value."""
+    import math
+
+    from sinew_spark.operators.quality import lm_score
+
+    ref = spark.createDataFrame(
+        [(i, "a b c") for i in range(20)] + [(100 + i, "x y") for i in range(10)],
+        ["doc_id", "text"],
+    )
+    docs = spark.createDataFrame(
+        [(0, "x y"), (1, "b c"), (2, "a b")], ["doc_id", "text"]
+    )
+    out = {
+        r.doc_id: r.sum_nll_x
+        for r in lm_score(docs, reference=ref, top_unigrams=1, top_bigrams=3).collect()
+    }
+    assert all(nll >= 0 for nll in out.values()), out  # every lp <= 0
+    assert out[0] == -round(math.log(11 / (10 + 5)) * 1_000_000)
+    assert out[1] == -round(math.log(21 / (20 + 5)) * 1_000_000)
+    assert out[2] == -round(math.log(21 / (20 + 5)) * 1_000_000)
+
+
 def test_lm_score_partitioning_invariant(spark, sf_dir):
     from sinew_spark.operators.quality import lm_score
 

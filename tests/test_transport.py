@@ -171,7 +171,7 @@ def test_fetch_one_threads_proxy_to_transport(loopback):
     the transport — end-to-end through resolve_with_cookies."""
     proxy_url, seen = loopback
     f = HttpFetcher(timeout=5.0)
-    status, ct, body, final_url, n_att, hops, err, jar, chg, _e, _lm = _fetch_one(
+    status, ct, body, final_url, n_att, hops, err, jar, chg, _e, _lm, _b = _fetch_one(
         f, "http://unresolvable-origin.invalid/proxied", "GET", "", 0, 0.0,
         proxy=proxy_url,
     )
@@ -250,7 +250,7 @@ def test_conditional_get_roundtrip(loopback):
     §13.1) — the recrawl-scale bandwidth saver."""
     base, seen = loopback
     f = HttpFetcher(timeout=5.0)
-    (status, _ct, body, _fu, _n, _h, err, _jar, _chg, etag, lm) = _fetch_one(
+    (status, _ct, body, _fu, _n, _h, err, _jar, _chg, etag, lm, _b) = _fetch_one(
         f, base + "/etag", "GET", "", 0, 0.0
     )
     assert status == 200 and body == "fresh content" and err is None
@@ -258,7 +258,7 @@ def test_conditional_get_roundtrip(loopback):
     assert "if-none-match" not in seen[0]["headers"]
 
     seen.clear()
-    (status, _ct, body, _fu, _n, _h, err, _jar, _chg, etag2, _lm2) = _fetch_one(
+    (status, _ct, body, _fu, _n, _h, err, _jar, _chg, etag2, _lm2, _b2) = _fetch_one(
         f, base + "/etag", "GET", "", 0, 0.0, etag=etag, last_modified=lm
     )
     assert status == 304 and body is None and err is None
@@ -287,12 +287,12 @@ def test_fixture_fetcher_304_on_matching_etag():
 
     f = FixtureFetcher(seed=42, synthetic=True, synthetic_links=2)
     url = "http://h0.synth.test/p/1"
-    (status, _ct, body, _fu, _n, _h, err, _jar, _chg, etag, _lm) = _fetch_one(
+    (status, _ct, body, _fu, _n, _h, err, _jar, _chg, etag, _lm, _b) = _fetch_one(
         f, url, "GET", "", 0, 0.0
     )
     assert status == 200 and err is None
     assert etag == '"' + hashlib.md5(body.encode()).hexdigest() + '"'
-    (status2, _ct2, body2, _fu2, _n2, _h2, _e2, _j2, _c2, etag2, _lm2) = _fetch_one(
+    (status2, _ct2, body2, _fu2, _n2, _h2, _e2, _j2, _c2, etag2, _lm2, _b2) = _fetch_one(
         f, url, "GET", "", 0, 0.0, etag=etag
     )
     assert status2 == 304 and body2 is None and etag2 == etag
