@@ -394,6 +394,63 @@ def test_seen_vals_matches_semantic_anti_join(spark, tmp_path):
         )
 
 
+def test_seen_vals_plain_probe_and_rebuild(spark, tmp_path):
+    """No flags -> plain blocked-iff-any-entry (the valued runs answer
+    plain membership); an overwrite op forces a rebuild on a reopened
+    store."""
+    from sinew_spark.operators.bloom import SeenKeyShardStore
+
+    t = _seen_table(spark, tmp_path)
+    t.append(_rows(spark, 0, 200, fetched_at=5.0))
+    store = SeenKeyShardStore(str(tmp_path / "ks"), n_shards=4)
+    store.sync(t)
+    probe = _keys(spark, 0, 300)
+    assert _probe(store, probe) == list(range(200, 300))
+
+    t.delete_where(F.col("key") < 50)  # overwrite -> rebuild
+    store2 = SeenKeyShardStore(str(tmp_path / "ks"), n_shards=4)
+    store2.sync(t)
+    assert _probe(store2, probe) == list(range(0, 50)) + list(range(200, 300))
+
+
+def test_seen_vals_lsm_compaction_keeps_class_maxima(spark, tmp_path):
+    """Driving a shard past KEYS_COMPACT_RUNS merges runs with per-key
+    class-max semantics — an old ok-entry must survive a pile of newer
+    error entries for the same key; a stale duplicated run (crash model)
+    changes nothing because merge is max()."""
+    import shutil
+
+    from sinew_spark.operators.bloom import (
+        KEYS_COMPACT_RUNS,
+        SeenKeyShardStore,
+        _run_entries,
+    )
+    from sinew_spark.operators.frontier import anti_join_seen
+
+    now = 1_000_000.0
+    t = _seen_table(spark, tmp_path)
+    store = SeenKeyShardStore(str(tmp_path / "ks"), n_shards=2)
+    # run 1: keys 0..49 fetched OK, fresh
+    t.append(_rows(spark, 0, 50, fetched_at=now - 10.0))
+    store.sync(t)
+    # many error-only runs for the same keys -> compaction must keep fa_ok
+    for i in range(KEYS_COMPACT_RUNS + 2):
+        t.append(_rows(spark, 0, 50, status=500, fetched_at=now - 5.0 + i))
+        store.sync(t)
+    assert all(len(_run_entries(store.path, s)) <= KEYS_COMPACT_RUNS for s in range(2))
+
+    frontier = _keys(spark, 0, 80)
+    # force_errors: the surviving ok-entry still blocks 0..49
+    assert _probe(store, frontier, force_errors=True, now=now) == list(range(50, 80))
+    exact = anti_join_seen(frontier, t.read(), force_errors=True, now=now)
+    assert sorted(r.key for r in exact.collect()) == list(range(50, 80))
+
+    # stale-run crash model: re-copy an old run under a newer generation
+    runs0 = [p for _g, _k, p in _run_entries(store.path, 0)]
+    shutil.copyfile(runs0[0], os.path.join(store.path, "vals-00000.r009999.npz"))
+    assert _probe(store, frontier, force_errors=True, now=now) == list(range(50, 80))
+
+
 def test_seen_index_pre_merge_sidecar_opens_cold(spark, tmp_path):
     """A sidecar whose meta lacks the layout marker was written by the
     key-only store (keys- .npy runs, no statistics). It must open cold —
@@ -523,6 +580,42 @@ def test_seen_keys_tombstone_compaction_resolves(spark, tmp_path):
     assert _probe(store, _keys(spark, 0, lo + 50)) == expected
 
 
+def test_seen_vals_edelete_tombstones_match_anti_join(spark, tmp_path):
+    """Valued runs absorb equality deletes as tombstones and keep exact
+    anti_join_seen semantics across modes; a deleted key's statistics are
+    wiped (a later re-append starts fresh)."""
+    from sinew_spark.operators.bloom import SeenKeyShardStore
+    from sinew_spark.operators.frontier import anti_join_seen
+
+    now = 1_000_000.0
+    t = _seen_table(spark, tmp_path)
+    t.append(
+        spark.range(0, 300).select(
+            F.col("id").alias("key"),
+            F.when(F.col("id") % 3 == 1, 500).otherwise(200).cast("int").alias("status"),
+            (F.lit(now) - 50.0 - (F.col("id") % 7) * 40.0).alias("fetched_at"),
+        )
+    )
+    store = SeenKeyShardStore(str(tmp_path / "ks"), n_shards=4)
+    store.sync(t)
+    adds_before = {s: _run_names(store, s, "k") for s in range(4)}
+    t.delete_keys([10, 11, 12, 13])
+    store.sync(t)
+    assert store.in_sync_with(t)
+    assert {s: _run_names(store, s, "k") for s in range(4)} == adds_before  # tombstones only
+
+    # old error entry deleted, fresh ok re-append: stats start fresh
+    t.append(spark.createDataFrame([(10, 200, now - 1.0)], t.schema))
+    store.sync(t)
+
+    frontier = _keys(spark, 0, 400)
+    for expires, fe in [(None, False), (100.0, False), (None, True), (100.0, True)]:
+        exact = anti_join_seen(frontier, t.read(), expires=expires, force_errors=fe, now=now)
+        assert _probe(store, frontier, expires=expires, force_errors=fe, now=now) == sorted(
+            r.key for r in exact.collect()
+        ), f"divergence at expires={expires} force_errors={fe}"
+
+
 # --- rollback / divergent-lineage sync (ADVICE r2: rollback_to left stores
 # --- claiming in-sync while shards held keys from rolled-back snapshots) ------
 
@@ -588,6 +681,26 @@ def test_bloom_store_rollback_then_append_no_false_negatives(spark, tmp_path):
     bloom.sync(t)
     assert bloom.in_sync_with(t)
     assert bloom.maybe_seen(_keys(spark, 2000, 2500)).count() == 500  # no false negatives
+
+
+def test_seen_vals_rollback_rebuilds(spark, tmp_path):
+    """Semantic-probe mirror: a TTL probe must not reject rolled-back keys."""
+    import time as _time
+
+    from sinew_spark.operators.bloom import SeenKeyShardStore
+
+    now = _time.time()
+    t = _seen_table(spark, tmp_path, "seenv")
+    first = t.append(_rows(spark, 0, 300, fetched_at=now))
+    t.append(_rows(spark, 300, 600, fetched_at=now))
+    store = SeenKeyShardStore(str(tmp_path / "ks"), n_shards=4)
+    store.sync(t)
+    t.rollback_to(first)
+    store.sync(t)
+    assert store.in_sync_with(t)
+    frontier = _keys(spark, 0, 600)
+    assert _probe(store, frontier) == list(range(300, 600))
+    assert _probe(store, frontier, expires=3600.0, now=now) == list(range(300, 600))
 
 
 def _strip_parents(t):
