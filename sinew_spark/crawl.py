@@ -37,7 +37,11 @@ Scale notes (100 TB design point):
   anti-join fallback serves small-seen runs
 - per-host caps bound fetch-task skew regardless of host distribution
 - parse is shuffle-free mapInPandas; no O(rows) driver pulls anywhere in
-  the round loop (stats are single-row aggregates)
+  the round loop: the round's counts are DataFrame.observe metrics of the
+  fetched write itself (one row to the driver, no job of their own)
+- a round whose every candidate was fetched held nothing back, so its next
+  frontier is the discovered links alone (empty, and committed with no
+  job, when links are not followed)
 """
 
 from __future__ import annotations
@@ -46,7 +50,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
@@ -61,6 +65,7 @@ from sinew_spark.functions.urls import (
 from sinew_spark.operators.bloom import BloomShardStore, SeenKeyShardStore
 from sinew_spark.operators.frontier import (
     FRONTIER_SCHEMA,
+    LARGE_BUDGET_ROWS,
     SEEN_SCHEMA,
     anti_join_seen,
     apply_robots,
@@ -499,6 +504,13 @@ class Crawler:
         exactly-once."""
         return self.opts.force or self.opts.force_errors or self.opts.expires is not None
 
+    def _sync_sidecars(self) -> None:
+        """Absorb the committed seen snapshot into the seen index and, in
+        plain crawls, the Bloom (see ``_reject_seen``)."""
+        self._seen_keys.sync(self.seen_t)
+        if not self._semantic:
+            self._bloom.sync(self.seen_t)
+
     def _reject_seen(
         self,
         df: DataFrame,
@@ -522,9 +534,7 @@ class Crawler:
         add_delta job (and a full first-round rebuild) there is pure
         overhead."""
         if use_shards:
-            self._seen_keys.sync(self.seen_t)
-            if not self._semantic:
-                self._bloom.sync(self.seen_t)
+            self._sync_sidecars()
         if not (use_shards and self._seen_keys.in_sync_with(self.seen_t)):
             return anti_join_seen(
                 df, self.seen_t.read(), expires=expires, force_errors=force_errors, now=now
@@ -533,6 +543,63 @@ class Crawler:
         return self._seen_keys.reject_seen(
             df, expires=expires, force_errors=force_errors, now=now, bloom=bloom
         )
+
+    def _prune_frontier(self, rows: DataFrame, use_shards: bool) -> DataFrame:
+        """The next frontier: ``rows`` without every row that can never be
+        fetched again THIS RUN (seen or attempted keys, over-depth,
+        robots-blocked, out of scope, budget-exhausted hosts), deduped by
+        key."""
+        # Plain key semantics (blocked iff ever seen) for the normal and
+        # pure-TTL paths: a key fetched this run is out of the frontier, and
+        # in TTL mode a still-fresh key cannot be fetched before the loop
+        # drains — recrawl re-enters it by re-seeding (module doctrine). The
+        # shard path absorbs the fresh delta into the index (the sync the
+        # next round would do anyway) and probes shard-local — the per-round
+        # O(seen) shuffle this join used to cost is gone.
+        #
+        # force/force_errors are DIFFERENT: a key seen only in a PREVIOUS run
+        # is exactly what these modes exist to refetch (C6, frontier.py
+        # anti_join_seen force semantics) — plain rejection here would evict
+        # a rediscovered link before any round-start filter ever saw it.
+        # Instead drop only
+        #   - keys ATTEMPTED THIS RUN (any status): fetched_at >=
+        #     _run_started_at, expressed as the probe's TTL cutoff — this is
+        #     what guarantees drain (at most one fetch per key per run, even
+        #     for a host that 500s forever);
+        #   - for force_errors additionally every ever-OK key, which that
+        #     mode never refetches.
+        if self.opts.force or self.opts.force_errors:
+            if self.opts.force_errors and not self.opts.force:
+                rows = self._reject_seen(rows, use_shards, force_errors=True)
+            # expires=0 with now pinned at run start makes the probe's TTL
+            # cutoff EXACTLY _run_started_at (blocked iff fetched_at >= run
+            # start = attempted this run) — no clock re-read, no race with
+            # stamps taken earlier this round
+            rows = self._reject_seen(
+                rows, use_shards, expires=0.0, now=self._run_started_at
+            )
+        else:
+            rows = self._reject_seen(rows, use_shards)
+        if self.opts.max_depth is not None:
+            rows = rows.where(F.col("depth") <= self.opts.max_depth)
+        if self.robots is not None:
+            rows = apply_robots(rows, self.robots)
+        if self.opts.url_allow or self.opts.url_deny:
+            # out-of-scope URLs can never be fetched — they leave the
+            # frontier here, same rule as robots/seen/depth
+            rows = apply_url_scope(rows, self.opts.url_allow, self.opts.url_deny)
+        if self.opts.host_budget is not None:
+            # budget-exhausted hosts leave the frontier too (this round's
+            # spend included) — O(hosts) broadcast anti-join
+            exhausted = (
+                self.host_counts_t.read()
+                .groupBy("host")
+                .agg(F.sum("n").alias("spent"))
+                .where(F.col("spent") >= self.opts.host_budget)
+                .select("host")
+            )
+            rows = rows.join(F.broadcast(exhausted), "host", "left_anti")
+        return dedup_within_round(rows)
 
     def run_round(self, budget: int | None = None) -> dict:
         """One frontier superstep. ``budget`` overrides opts.round_budget
@@ -548,10 +615,11 @@ class Crawler:
                 marks.append((label, time.time()))
 
         rnd = self.current_round()
-        if self.frontier_t.approx_rows() == 0:
-            # drained frontier, known from the manifest's row stats: no
-            # job, no commit (an empty round would only add vacuous
-            # fetched/seen snapshots)
+        offered = self.frontier_t.approx_rows()
+        if offered == 0 or round_budget == 0:
+            # drained frontier, known from the manifest's row stats, or a
+            # round allowed no fetch: no job, no commit (an empty round
+            # would only add vacuous fetched/seen snapshots)
             return {"round": rnd, "selected": 0, "done": True}
         frontier = self.frontier_t.read()
         mark("start")
@@ -589,14 +657,25 @@ class Crawler:
         # 3. robots gating (north-rule addition; reference lacks it)
         if self.robots is not None:
             cand = apply_robots(cand, self.robots)
+        # the round's candidate count, observed when the fetched write
+        # runs (no job of its own). It sits below shuffles, so a recomputed
+        # stage can only overcount it — and an overcount only turns off the
+        # next-frontier skip of step 8.
+        cand_obs = Observation()
+        cand = cand.observe(cand_obs, F.count(F.lit(1)).alias("n"))
 
         # 4. politeness cap + global budget
-        # cap=None skips the host window+sort entirely — an unpaced bulk
-        # crawl has no per-round politeness budget, and key-hash
-        # partitioning from the dedup already bounds fetch skew.
+        # The host window runs only where it can bind: cap=None skips it
+        # (an unpaced bulk crawl has no per-round politeness budget, and
+        # key-hash partitioning from the dedup already bounds fetch skew),
+        # and so does a frontier of at most per_host_cap rows — no host can
+        # hold more than the whole frontier.
         # host_budget adds a lifetime per-host limit: spend-so-far is an
         # O(hosts) aggregate of the per-round ledger, broadcast into the
         # same window the per-round cap uses (one window either way).
+        capped = self.opts.host_budget is not None or (
+            self.opts.per_host_cap is not None and offered > self.opts.per_host_cap
+        )
         host_remaining = None
         if (
             self.opts.host_budget is not None
@@ -609,7 +688,7 @@ class Crawler:
                     (F.lit(self.opts.host_budget) - F.sum("n")).alias("remaining")
                 )
             )
-        if self.opts.per_host_cap is not None or self.opts.host_budget is not None:
+        if capped:
             selected = per_host_cap(
                 cand,
                 self.opts.per_host_cap,
@@ -618,10 +697,13 @@ class Crawler:
             )
         else:
             selected = cand
+        if round_budget is not None and round_budget > LARGE_BUDGET_ROWS:
+            # the distributed top-k's range partitioning samples its input in
+            # a pass of its own, which the observation would count as well.
+            # An Observation keeps the metrics of the first action on its
+            # plan, so an exact count taken first pins it.
+            cand.count()
         selected = take_round_budget(selected, round_budget)
-        # `is not None`, not truthiness: an explicit budget=0 round must
-        # still report its real candidate count
-        n_candidates = cand.count() if round_budget is not None else None
 
         # Pin fetch parallelism. AQE sizes shuffle partitions by BYTES
         # (64 MB advisory), but frontier rows are slim while per-row fetch
@@ -630,9 +712,7 @@ class Crawler:
         # AQE-exempt key-hash partitioning from the dedup repartition (no
         # second shuffle); paths that re-cluster rows (host window, budget
         # sort) get an explicit round-robin repartition instead.
-        if self.opts.rate_limit <= 0 and (
-            self.opts.per_host_cap is not None or round_budget is not None
-        ):
+        if self.opts.rate_limit <= 0 and (capped or round_budget is not None):
             selected = selected.repartition(par * 2)
 
         # C11: seed each host's cookie jar from the persisted host_state.
@@ -701,7 +781,7 @@ class Crawler:
         # the fetched_t commit below; downstream stages then read the
         # committed parquet back (columnar, pruned — the seen/links/span
         # projections each touch only their columns). Emptiness is detected
-        # from the committed keys (an empty round's jobs are near-free).
+        # from the write's observed row count (step 6).
         fetched_out = fetch_rows(
             selected,
             self.fetcher,
@@ -714,10 +794,36 @@ class Crawler:
         )
 
         # 6. commit fetched + seen (including one entry per redirect hop,
-        #    base.rb:209-211)
+        #    base.rb:209-211). The round's stats ride the fetched write as
+        #    observed metrics: selected / error tallies AND redirect
+        #    presence — which decides whether the seen commit needs the
+        #    union+groupBy dedup at all. The observe is the last node before
+        #    the write, so it runs in the write's result stage, whose task
+        #    metrics Spark merges once; a single row reaches the driver
+        #    (never the keys; at the 10^10 design point a per-round key pull
+        #    would be ~10^8 rows). Redirect presence is a per-row guard (any
+        #    row with hops or a moved final_url), robust to legacy
+        #    sizeOfNull semantics.
+        err_cond = (F.col("status") >= 500) | (F.col("status") < 0)
+        st_obs = Observation()
         snap = self.fetched_t.append(
-            fetched_out.withColumn("round", F.lit(rnd)), {"round": rnd}
+            fetched_out.withColumn("round", F.lit(rnd)).observe(
+                st_obs,
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.when(err_cond, 1).otherwise(0)).alias("errors"),
+                F.sum(F.when(F.col("status") == 304, 1).otherwise(0)).alias("nm"),
+                F.sum(
+                    F.when(F.coalesce(F.size("hops"), F.lit(0)) > 0, 1).otherwise(0)
+                ).alias("hop_rows"),
+                F.max(
+                    F.coalesce(F.col("final_url") != F.col("canonical_url"), F.lit(False)).cast("int")
+                ).alias("any_moved"),
+                F.max(F.col("cookies").isNotNull().cast("int")).alias("any_cookies"),
+            ),
+            {"round": rnd},
         )
+        st = st_obs.get
+        n_candidates = int(cand_obs.get["n"])
         # read this round's rows back from the just-committed snapshot delta:
         # downstream projections are columnar scans with pruning, no JVM
         # cache. Splits sized to cores — the compressed delta is small per
@@ -725,28 +831,9 @@ class Crawler:
         # serialize the parse stage (measured: 4x wall on local[8]).
         fetched = self.fetched_t.read_delta(snap, target_partitions=par * 2)
         mark("fetch+commit")
-        # one pruned columnar AGGREGATE of this round's stats: selected /
-        # error tallies AND redirect presence — which decides whether the
-        # seen commit needs the union+groupBy dedup at all. A single row
-        # reaches the driver (never the keys; at the 10^10 design point a
-        # per-round key pull would be ~10^8 rows). Redirect presence is a
-        # per-row guard (any row with hops or a moved final_url), robust to
-        # legacy sizeOfNull semantics.
-        err_cond = (F.col("status") >= 500) | (F.col("status") < 0)
-        st = fetched.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(err_cond, 1).otherwise(0)).alias("errors"),
-            F.sum(F.when(F.col("status") == 304, 1).otherwise(0)).alias("nm"),
-            F.sum(
-                F.when(F.coalesce(F.size("hops"), F.lit(0)) > 0, 1).otherwise(0)
-            ).alias("hop_rows"),
-            F.max(
-                F.coalesce(F.col("final_url") != F.col("canonical_url"), F.lit(False)).cast("int")
-            ).alias("any_moved"),
-            F.max(F.col("cookies").isNotNull().cast("int")).alias("any_cookies"),
-        ).collect()[0]
-        has_redirects = bool((st.hop_rows or 0) > 0 or (st.any_moved or 0) > 0)
-        if int(st.n or 0) == 0:
+        has_redirects = bool((st["hop_rows"] or 0) > 0 or (st["any_moved"] or 0) > 0)
+        n_fetched = int(st["n"])
+        if n_fetched == 0:
             # every frontier row was seen, blocked or filtered, so nothing
             # was fetched: skip the empty seen append — it's history
             # noise (one vacuous snapshot per drained run at scale) and it
@@ -819,30 +906,11 @@ class Crawler:
             # dedup shuffle is pure overhead — commit the projection
             # directly (shuffle-free pruned scan + write)
             all_seen_new = seen_new
-        seen_snap = self.seen_t.append(all_seen_new, {"round": rnd})
+        # keys are unique after the round dedup and a direct row wins the
+        # min_by, so the seen delta's direct rows are exactly the fetched
+        # rows: the observed tallies are the seen commit's too
+        self.seen_t.append(all_seen_new, {"round": rnd})
         mark("seen_commit")
-        if has_redirects:
-            # hop rows exist only in the committed delta — re-aggregate from
-            # it (pruned columnar scan, one row to the driver)
-            sd = self.seen_t.read_delta(seen_snap)
-            direct = F.col("hop_of").isNull()
-            sr = sd.agg(
-                F.sum(F.when(direct, 1).otherwise(0)).alias("n"),
-                F.sum(F.when(direct & err_cond, 1).otherwise(0)).alias("errors"),
-                F.sum(
-                    F.when(direct & (F.col("status") == 304), 1).otherwise(0)
-                ).alias("nm"),
-            ).collect()[0]
-            n_selected = int(sr.n or 0)
-            n_errors = int(sr.errors or 0)
-            n_not_modified = int(sr.nm or 0)
-        else:
-            n_selected = int(st.n)
-            n_errors = int(st.errors or 0)
-            n_not_modified = int(st.nm or 0)
-        n_fetched = n_selected
-        if n_selected == 0:
-            return {"round": rnd, "selected": 0, "done": True}
 
         # host_budget spend ledger: one O(hosts) append per round (pruned
         # 1-column scan of the round's delta; 304 revalidations count —
@@ -860,11 +928,11 @@ class Crawler:
         # distributed DataFrame append (never an O(hosts) driver collect —
         # at 10^7 cookie-bearing hosts that pull is exactly the O(rows)
         # driver hop the rest of the loop eliminated). Cookie presence
-        # rides the existing 1-row stats aggregate, so cookie-oblivious
-        # fetchers (null jar column) skip the agg+append job entirely.
+        # rides the observed round stats, so cookie-oblivious fetchers
+        # (null jar column) skip the agg+append job entirely.
         cookie_thread = None
         cookie_err: list[BaseException] = []
-        if bool(st.any_cookies or 0):
+        if bool(st["any_cookies"] or 0):
             # per-RECORD merge of the host's row jars (not whole-jar
             # max_by): rows of one host can land on different partitions
             # within a round, each seeing only its own sets/deletes — the
@@ -919,10 +987,23 @@ class Crawler:
             # never touch bodies.
             mark("docs_view")
 
-            # 8. next frontier: leftover (capped-out) + discovered links.
-            # Everything that can never be fetched must leave the frontier or the
-            # loop never drains: seen keys (any round), robots-blocked, over-depth.
-            leftover = frontier
+            # 8. next frontier: leftover (held back by the cap or the budget)
+            # + discovered links. Everything that can never be fetched must
+            # leave the frontier or the loop never drains (_prune_frontier).
+            # When every candidate was fetched, nothing was held back and no
+            # old frontier row can survive that pruning. Each one was
+            #   - a candidate: now seen (in the force modes: attempted this
+            #     run);
+            #   - collapsed into a candidate by the key dedup: same key;
+            #   - dropped by depth, scope or robots: the same filters run
+            #     again;
+            #   - rejected by the round-start probe: the pruning probe
+            #     rejects a superset in every mode (plain, TTL, force_errors;
+            #     force rejects nothing at round start).
+            # host_budget rounds need no case of their own: a held-back row
+            # makes the observed candidate count exceed the fetched count.
+            leftover = None if n_candidates == n_fetched else frontier
+            next_frontier = leftover
             n_new_links = 0
             if self.opts.follow_links:
                 parsed = self.documents_t.read_delta(snap)
@@ -974,67 +1055,23 @@ class Crawler:
                         new_frontier_rows, traps, url_col="canonical_url"
                     )
                 n_new_links = new_frontier_rows.count()
-                next_frontier = leftover.unionByName(new_frontier_rows)
+                next_frontier = (
+                    new_frontier_rows
+                    if leftover is None
+                    else leftover.unionByName(new_frontier_rows)
+                )
+            if next_frontier is None:
+                # an empty next frontier, committed driver-side with no job.
+                # The pruning probe would have synced the seen sidecars; sync
+                # them anyway, so status()/cached() stay driver-local and the
+                # next round-start sync is a no-op
+                if use_shards:
+                    self._sync_sidecars()
+                self.frontier_t.overwrite([], {"round": rnd})
             else:
-                next_frontier = leftover
-            # drop rows that can never be fetched again THIS RUN. Plain key
-            # semantics (blocked iff ever seen) for the normal and pure-TTL
-            # paths: a key fetched this run is out of the frontier, and in TTL
-            # mode a still-fresh key cannot be fetched before the loop drains —
-            # recrawl re-enters it by re-seeding (module doctrine). The shard
-            # path absorbs the fresh delta into the index (the sync the next
-            # round would do anyway) and probes shard-local — the per-round
-            # O(seen) shuffle this join used to cost is gone.
-            #
-            # force/force_errors are DIFFERENT: a key seen only in a PREVIOUS
-            # run is exactly what these modes exist to refetch (C6,
-            # frontier.py anti_join_seen force semantics) — plain rejection
-            # here would evict a rediscovered link before any round-start
-            # filter ever saw it. Instead drop only
-            #   - keys ATTEMPTED THIS RUN (any status): fetched_at >=
-            #     _run_started_at, expressed as the probe's TTL cutoff — this
-            #     is what guarantees drain (at most one fetch per key per
-            #     run, even for a host that 500s forever);
-            #   - for force_errors additionally every ever-OK key, which that
-            #     mode never refetches.
-            if self.opts.force or self.opts.force_errors:
-                if self.opts.force_errors and not self.opts.force:
-                    next_frontier = self._reject_seen(
-                        next_frontier, use_shards, force_errors=True
-                    )
-                # expires=0 with now pinned at run start makes the probe's
-                # TTL cutoff EXACTLY _run_started_at (blocked iff fetched_at
-                # >= run start = attempted this run) — no clock re-read, no
-                # race with stamps taken earlier this round
-                next_frontier = self._reject_seen(
-                    next_frontier, use_shards, expires=0.0, now=self._run_started_at
+                self.frontier_t.overwrite(
+                    self._prune_frontier(next_frontier, use_shards), {"round": rnd}
                 )
-            else:
-                next_frontier = self._reject_seen(next_frontier, use_shards)
-            if self.opts.max_depth is not None:
-                next_frontier = next_frontier.where(F.col("depth") <= self.opts.max_depth)
-            if self.robots is not None:
-                next_frontier = apply_robots(next_frontier, self.robots)
-            if self.opts.url_allow or self.opts.url_deny:
-                # out-of-scope URLs can never be fetched — they leave the
-                # frontier here, same rule as robots/seen/depth
-                next_frontier = apply_url_scope(
-                    next_frontier, self.opts.url_allow, self.opts.url_deny
-                )
-            if self.opts.host_budget is not None:
-                # budget-exhausted hosts leave the frontier too (this
-                # round's spend included) — O(hosts) broadcast anti-join
-                exhausted = (
-                    self.host_counts_t.read()
-                    .groupBy("host")
-                    .agg(F.sum("n").alias("spent"))
-                    .where(F.col("spent") >= self.opts.host_budget)
-                    .select("host")
-                )
-                next_frontier = next_frontier.join(
-                    F.broadcast(exhausted), "host", "left_anti"
-                )
-            self.frontier_t.overwrite(dedup_within_round(next_frontier), {"round": rnd})
             mark("next_frontier")
         finally:
             # join the host_state append before ANY exit from the tail
@@ -1056,11 +1093,11 @@ class Crawler:
         dur = time.time() - t0
         stats = {
             "round": rnd,
-            "candidates": n_candidates if n_candidates is not None else n_selected,
-            "selected": n_selected,
+            "candidates": n_candidates,
+            "selected": n_fetched,
             "fetched": n_fetched,
-            "errors": n_errors,
-            "not_modified": n_not_modified,
+            "errors": int(st["errors"] or 0),
+            "not_modified": int(st["nm"] or 0),
             "new_links": n_new_links,
             "duration_sec": dur,
             "ts": time.time(),

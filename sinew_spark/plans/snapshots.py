@@ -219,10 +219,9 @@ class SnapshotTable:
         self._new_snapshot(cur + [d], "append", {**(meta or {}), "files": self._file_stats([d])})
         return self.current_snapshot()
 
-    def append_rows(self, rows: list[tuple], meta: dict | None = None) -> int:
-        """Driver-side append for small tables (metrics, lineage): writes
-        one parquet file via pyarrow directly — no Spark job, no task
-        scheduling. Readable by read()/read_delta() like any snapshot."""
+    def _write_rows(self, rows: list[tuple]) -> str:
+        """Write ``rows`` as one parquet file via pyarrow on the driver — no
+        Spark job, no task scheduling."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -234,12 +233,24 @@ class SnapshotTable:
         )
         cols = {n: [r[i] for r in rows] for i, n in enumerate(names)}
         pq.write_table(pa.table(cols, schema=arrow_schema), os.path.join(d, "part-0.parquet"))
+        return d
+
+    def append_rows(self, rows: list[tuple], meta: dict | None = None) -> int:
+        """Driver-side append for small tables (metrics, lineage): one
+        parquet file, no Spark job. Readable by read()/read_delta() like any
+        snapshot."""
+        d = self._write_rows(rows)
         cur = self._dirs()
         self._new_snapshot(cur + [d], "append", {**(meta or {}), "files": self._file_stats([d])})
         return self.current_snapshot()
 
-    def overwrite(self, df: DataFrame, meta: dict | None = None) -> int:
-        d = self._write_data(df.select([f.name for f in self.schema.fields]))
+    def overwrite(self, df: DataFrame | list[tuple], meta: dict | None = None) -> int:
+        """Replace the table's rows. A row list is written driver-side like
+        ``append_rows`` (``[]`` empties the table with no Spark job)."""
+        if isinstance(df, list):
+            d = self._write_rows(df)
+        else:
+            d = self._write_data(df.select([f.name for f in self.schema.fields]))
         self._new_snapshot(
             [d], "overwrite", {**(meta or {}), "files": self._file_stats([d])}, deletes=[]
         )
@@ -370,6 +381,12 @@ class SnapshotTable:
             return self.read(sid).count()
         return sum(dir_rows[d] for d in dirs)
 
+    def _empty(self) -> DataFrame:
+        """No rows, in a form the optimizer knows is empty: the false filter
+        folds into an empty LocalRelation, so a join against it is pruned
+        when the plan is built instead of shuffling an empty scan."""
+        return self.spark.createDataFrame([], self.schema).where(F.lit(False))
+
     def read_delta(self, snapshot_id: int, target_partitions: int | None = None) -> DataFrame:
         """Read only the files ADDED by the given snapshot (incremental read
         — Iceberg's incremental scan). O(delta), not O(table).
@@ -396,11 +413,11 @@ class SnapshotTable:
         if target["op"] in ("edelete", "compact"):
             # edelete adds no data files; compact adds no logical ROWS
             # (it only rewrites layout) — both are empty deltas
-            return self.spark.createDataFrame([], self.schema)
+            return self._empty()
         prev_dirs = set(prev["dirs"]) if prev and target["op"] == "append" else set()
         new_dirs = [d for d in target["dirs"] if d not in prev_dirs]
         if not new_dirs:
-            return self.spark.createDataFrame([], self.schema)
+            return self._empty()
         if target_partitions:
             self._tune_splits(target["meta"].get("files") or self._file_stats(new_dirs), target_partitions)
         return self.spark.read.schema(self.schema).parquet(*new_dirs)
@@ -477,7 +494,7 @@ class SnapshotTable:
         files are tiny, MOR_COMPACT_DELETES bounds the group count."""
         dirs = self._dirs(snapshot_id)
         if not dirs:
-            return self.spark.createDataFrame([], self.schema)
+            return self._empty()
         snap = self._snapshot(snapshot_id)
         deletes = snap.get("deletes", [])
         if not deletes:

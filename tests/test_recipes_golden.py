@@ -247,8 +247,10 @@ def test_url_join_chaining_stays_distributed(spark, tmpdir_path):
 
 def test_basic_recipe_spark_job_budget(spark, tmpdir_path):
     """A one-URL recipe's fixed cost in Spark jobs: the emit plan runs
-    once (one Arrow materialization serves the CSV and the tally) and the
-    drained second round runs none."""
+    once (one Arrow materialization serves the CSV and the tally), the
+    first round's probe of the empty seen table is pruned at plan time,
+    the round's stats ride its fetched write, its empty next frontier is
+    committed with no job, and the drained second round runs none."""
     sc = spark.sparkContext
     group = "test_basic_recipe_spark_job_budget"
     sc.setJobGroup(group, group)
@@ -270,7 +272,7 @@ def test_basic_recipe_spark_job_budget(spark, tmpdir_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert r.csv == "h1\nHerman Melville - Moby-Dick\n"
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 14
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
 
 
 def test_arrow_tally_matches_spark_count(spark):

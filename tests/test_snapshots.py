@@ -247,3 +247,35 @@ def test_lineage_dataframe(spark, tmp_path):
     assert len(sids) == 2
     parents = lin.set_index("snapshot_id")["parent_id"].to_dict()
     assert parents[sids[1]] == sids[0]
+
+
+def test_overwrite_with_rows_runs_no_job(spark, tmpdir_path):
+    """A row list overwrite is written driver-side; [] empties the table."""
+    t = SnapshotTable(spark, tmpdir_path + "/t", SCHEMA)
+    t.append(spark.createDataFrame([(1, "a"), (2, "b")], SCHEMA))
+    sc = spark.sparkContext
+    group = "test_overwrite_with_rows_runs_no_job"
+    sc.setJobGroup(group, group)
+    try:
+        t.overwrite([(3, "c")], {"round": 0})
+        assert t.approx_rows() == 1
+        t.overwrite([], {"round": 1})
+        assert t.approx_rows() == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert t.read().count() == 0
+    prev = t.snapshots()[-2]["id"]
+    assert [tuple(r) for r in t.read(prev).collect()] == [(3, "c")]
+    assert t.snapshots()[-1]["meta"]["round"] == 1
+
+
+def test_empty_table_read_is_pruned_from_joins(spark, tmpdir_path):
+    """An empty table reads as a relation the optimizer knows is empty, so
+    an anti-join against it is removed from the plan."""
+    t = SnapshotTable(spark, tmpdir_path + "/t", SCHEMA)
+    df = spark.range(5).select(F.col("id").alias("k"))
+    plan = df.join(t.read(), "k", "left_anti")._jdf.queryExecution().optimizedPlan()
+    assert "Join" not in plan.toString()
+    assert df.join(t.read(), "k", "left_anti").count() == 5
