@@ -36,7 +36,8 @@ Scale notes (100 TB design point):
   continuous-recrawl mode never joins against the seen table; the
   anti-join fallback serves small-seen runs
 - per-host caps bound fetch-task skew regardless of host distribution
-- parse is shuffle-free mapInPandas; no O(rows) driver pulls anywhere in
+- parse is fused into the Arrow fetch stage (shuffle-free mapInArrow when
+  unpaced); no O(rows) driver pulls anywhere in
   the round loop: the round's counts are DataFrame.observe metrics of the
   fetched write itself (one row to the driver, no job of their own)
 - a round whose every candidate was fetched held nothing back, so its next
@@ -708,11 +709,15 @@ class Crawler:
         # Pin fetch parallelism. AQE sizes shuffle partitions by BYTES
         # (64 MB advisory), but frontier rows are slim while per-row fetch
         # cost is high — AQE would coalesce a 10 MB frontier to one task and
-        # serialize the fetch. The uncapped unpaced path inherits the
-        # AQE-exempt key-hash partitioning from the dedup repartition (no
-        # second shuffle); paths that re-cluster rows (host window, budget
-        # sort) get an explicit round-robin repartition instead.
-        if self.opts.rate_limit <= 0 and (capped or round_budget is not None):
+        # serialize the fetch. The paced path hash-partitions by host inside
+        # fetch_rows, so any partitioning made here would be shuffled away.
+        # The uncapped unpaced path inherits the AQE-exempt key-hash
+        # partitioning from the dedup repartition (no second shuffle); unpaced
+        # paths that re-cluster rows (host window, budget sort) get an
+        # explicit round-robin repartition instead.
+        host_delays = self._throttle_delays(rnd)
+        paced = self.opts.rate_limit > 0 or host_delays is not None
+        if not paced and (capped or round_budget is not None):
             selected = selected.repartition(par * 2)
 
         # C11: seed each host's cookie jar from the persisted host_state.
@@ -789,7 +794,7 @@ class Crawler:
             retries=self.opts.retries,
             proxies=list(self.opts.proxies),
             parse=True,
-            host_delays=self._throttle_delays(rnd),
+            host_delays=host_delays,
             validators=validators,
         )
 

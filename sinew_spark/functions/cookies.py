@@ -7,8 +7,8 @@ an opaque per-host name→value dict — test-level parity, but a crawl
 spanning sibling subdomains diverged (a ``Domain=example.com`` cookie set
 on ``www`` never reached ``shop``). This module implements the real
 semantics as pure functions over a JSON-serializable jar so both fetch
-paths (grouped applyInPandas and mapInArrow) and the host_state
-persistence share one implementation:
+plans (paced per-host applyInArrow and unpaced mapInArrow, one fetch
+loop) and the host_state persistence share one implementation:
 
 - a jar is ``{"c": [record, ...]}``; each record is
   ``{n, v, d, p, ho, exp, at, mt}`` — name, value, domain, path,

@@ -1,13 +1,15 @@
 """Distributed fetch stage — per-host grouped, politeness-paced, retrying.
 
 Replaces the reference's single-threaded Faraday middleware stack
-(/root/reference/lib/sinew/base.rb:198-240) with a per-host
-``applyInPandas`` stage:
+(/root/reference/lib/sinew/base.rb:198-240) with one Arrow-native fused
+fetch(+parse) loop, run as a per-host ``applyInArrow`` stage when paced and
+as a shuffle-free ``mapInArrow`` stage when not:
 
-- frontier rows are hash-partitioned by host; each host group is fetched
-  sequentially inside one task => per-host politeness is exact while hosts
-  proceed in parallel (the reference's rate limiter is global because it is
-  single-threaded; per-host is the distributed generalization, README.md:153)
+- paced frontier rows are hash-partitioned by host; each host group is
+  fetched sequentially inside one task => per-host politeness is exact while
+  hosts proceed in parallel (the reference's rate limiter is global because
+  it is single-threaded; per-host is the distributed generalization,
+  README.md:153)
 - retry with backoff on 5xx/error, max ``retries`` extra attempts, backoff
   capped at rate_limit (base.rb:232-239 "negates Retry-After: 86400")
 - redirects followed in-stage; every hop is recorded so each hop can be
@@ -24,7 +26,6 @@ from __future__ import annotations
 
 import time
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -573,236 +574,137 @@ FETCH_PARSED_SCHEMA = T.StructType(
 )
 
 
-def make_fetch_fn(
-    fetcher: Fetcher,
-    rate_limit: float,
-    retries: int,
-    proxies: list[str] | None = None,
-    parse: bool = False,
-):
-    """Build the per-host-group pandas function. The group is fetched in
-    (priority, seq) order with rate_limit pacing between network requests.
+def _fetch_arrow(data, fetcher: Fetcher, retries: int, proxies: list[str],
+                 parse: bool, pace: float, arrow_schema) -> list:
+    """The fetch loop and typed-array builder behind both fetch plans.
 
-    parse=True fuses span/link extraction into the same pass (one UDF stage
-    and one Arrow crossing per round instead of two — the body never makes a
-    second JVM->Python trip just to be parsed)."""
-    proxies = proxies or []
+    ``data`` is a RecordBatch or Table of frontier rows (plus the optional
+    host_cookies / prior_etag / prior_last_modified columns) in fetch
+    order. ``pace`` > 0 sleeps that long between consecutive requests and
+    caps their retry backoff. Returns the columns of ``arrow_schema``:
+    the ten frontier columns passed through, then the fetch (and parse)
+    results. PySpark's pandas serializer converts struct columns
+    row-by-row in Python (~470us/doc measured for the spans column);
+    building typed pyarrow arrays directly costs ~8us/doc."""
+    import pyarrow as pa
 
-    def fetch_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        if parse:
-            from sinew_spark.functions.htmlparse import extract_spans_and_links
+    from sinew_spark.functions.cookies import dump_jar, normalize_jar, own_records
 
-        pdf = pdf.sort_values(["priority", "seq"]).reset_index(drop=True)
-        # robots Crawl-delay override: joined per host upstream; politeness
-        # only ever tightens (max of the global limit and the host's ask)
-        effective = rate_limit
-        if "host_delay" in pdf.columns and len(pdf):
-            hd = pdf["host_delay"].iloc[0]
-            if hd is not None and not pd.isna(hd):
-                effective = max(rate_limit, float(hd))
-        # C11: the host group's cookie jar, seeded from host_state via the
-        # site-merged seeding join (all rows of a group share a host, so
-        # the first row's value is the group's). The jar is the scoped RFC
-        # 6265 form; cookies_for/apply_response_cookies inside _fetch_one
-        # do the per-request scoping.
-        from sinew_spark.functions.cookies import dump_jar, normalize_jar, own_records
+    if parse:
+        # looked up per call, inside the worker, so a wrapper installed on
+        # the module there (perfbench's traced run) sees every parse
+        from sinew_spark.functions.htmlparse import extract_spans_and_links
 
-        group_host = (pdf["host"].iloc[0] or "").lower() if len(pdf) else ""
-        jar = {}
-        if "host_cookies" in pdf.columns and len(pdf) and pdf["host_cookies"].iloc[0]:
-            jar = normalize_jar(pdf["host_cookies"].iloc[0], group_host)
-        out = {
-            "status": [], "content_type": [], "resp_body": [], "final_url": [],
-            "n_attempts": [], "hops": [], "error": [], "fetched_at": [], "proxy": [],
-            "cookies": [], "etag": [], "last_modified": [], "latency_ms": [],
-        }
-        if parse:
-            out["spans"] = []
-            out["links"] = []
-        has_validators = "prior_etag" in pdf.columns
-        first = True
-        for row in pdf.itertuples(index=False):
-            if not first and effective > 0:
-                time.sleep(effective)  # politeness window within the host
-            first = False
-            # deterministic proxy rotation (replayable, unlike reference's rand)
-            proxy = proxies[row.key % len(proxies)] if proxies else None
-            p_etag = p_lm = None
-            if has_validators:
-                p_etag = row.prior_etag if isinstance(row.prior_etag, str) else None
-                p_lm = (
-                    row.prior_last_modified
-                    if isinstance(row.prior_last_modified, str)
-                    else None
-                )
-            t_req = time.perf_counter()
-            (status, ct, body, final_url, n_att, hops, error, jar, jar_chg,
-             e_out, lm_out, backoff_s) = _fetch_one(
-                fetcher, row.url, row.method or "GET", row.body or "", retries, effective,
-                cookies=jar, proxy=proxy, etag=p_etag, last_modified=p_lm,
-            )
-            out["latency_ms"].append(int((time.perf_counter() - t_req - backoff_s) * 1000))
-            out["status"].append(status)
-            out["content_type"].append(ct)
-            out["resp_body"].append(body)
-            out["final_url"].append(final_url)
-            out["n_attempts"].append(n_att)
-            out["hops"].append(hops)
-            out["error"].append(error)
-            out["fetched_at"].append(time.time())
-            out["proxy"].append(proxy)
-            out["cookies"].append(
-                dump_jar(own_records(jar, group_host)) if jar_chg else None
-            )
-            out["etag"].append(e_out)
-            out["last_modified"].append(lm_out)
-            if parse:
-                ok = status is not None and 200 <= status < 400 and body
-                if ok:
-                    spans, links = extract_spans_and_links(
-                        body, ct or "text/html", final_url or row.url
-                    )
-                    out["spans"].append(
-                        [
-                            {"kind": k, "text": t, "media_ref": m, "offset": o}
-                            for k, t, m, o in spans
-                        ]
-                    )
-                    out["links"].append(links)
-                else:
-                    out["spans"].append([])
-                    out["links"].append([])
-        pdf = pdf.drop(
-            columns=[
-                c
-                for c in ("host_cookies", "host_delay", "prior_etag",
-                          "prior_last_modified")
-                if c in pdf.columns
-            ]
+    n = data.num_rows
+    names = data.schema.names
+
+    def col(c):
+        return data.column(c).to_pylist() if c in names else [None] * n
+
+    keys, urls, methods, bodies = col("key"), col("url"), col("method"), col("body")
+    hosts, host_cookies = col("host"), col("host_cookies")
+    prior_etag, prior_lm = col("prior_etag"), col("prior_last_modified")
+    jars: dict = {}  # C11: one jar per host, threaded through its rows
+    rows = []
+    for i in range(n):
+        if i and pace > 0:
+            time.sleep(pace)  # politeness window within the host
+        url = urls[i]
+        host = (hosts[i] or "").lower()
+        if host not in jars:
+            jars[host] = normalize_jar(host_cookies[i], host)
+        # deterministic proxy rotation (replayable, unlike reference's rand)
+        proxy = proxies[keys[i] % len(proxies)] if proxies else None
+        t_req = time.perf_counter()
+        (status, ct, body, final_url, n_att, hops, error, jar, jar_chg,
+         e_out, lm_out, backoff_s) = _fetch_one(
+            fetcher, url, methods[i] or "GET", bodies[i] or "", retries, pace,
+            cookies=jars[host], proxy=proxy, etag=prior_etag[i],
+            last_modified=prior_lm[i],
         )
-        for c, v in out.items():
-            pdf[c] = v
-        return pdf
+        latency_ms = int((time.perf_counter() - t_req - backoff_s) * 1000)
+        jars[host] = jar
+        row = (
+            status, ct, body, final_url, n_att, hops, error, time.time(), proxy,
+            dump_jar(own_records(jar, host)) if jar_chg else None,
+            e_out, lm_out, latency_ms,
+        )
+        if parse:
+            if status is not None and 200 <= status < 400 and body:
+                spans, links = extract_spans_and_links(
+                    body, ct or "text/html", final_url or url
+                )
+                spans = [
+                    {"kind": k, "text": t, "media_ref": m, "offset": o}
+                    for k, t, m, o in spans
+                ]
+                row += (spans, links)
+            else:
+                row += ([], [])
+        rows.append(row)
+    out_fields = list(arrow_schema)[len(FRONTIER_ORDER):]
+    out = list(zip(*rows)) or [()] * len(out_fields)
+    return [data.column(f.name) for f in FRONTIER_ORDER] + [
+        pa.array(vals, type=f.type) for f, vals in zip(out_fields, out)
+    ]
 
-    return fetch_group
+
+def _arrow_schema(parse: bool):
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(FETCH_PARSED_SCHEMA if parse else FETCHED_SCHEMA)
 
 
 def make_fetch_arrow_fn(
     fetcher: Fetcher,
+    retries: int,
+    proxies: list[str] | None = None,
+    parse: bool = False,
+):
+    """Unpaced fused fetch(+parse) for mapInArrow: each input batch is
+    fetched in the order it arrives, with no sleep."""
+    import pyarrow as pa
+
+    proxies = proxies or []
+    arrow_schema = _arrow_schema(parse)
+
+    def fetch_batches(it):
+        for rb in it:
+            cols = _fetch_arrow(rb, fetcher, retries, proxies, parse, 0.0, arrow_schema)
+            yield pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
+
+    return fetch_batches
+
+
+def make_fetch_host_fn(
+    fetcher: Fetcher,
     rate_limit: float,
     retries: int,
     proxies: list[str] | None = None,
     parse: bool = False,
 ):
-    """Arrow-native fused fetch(+parse) for mapInArrow. PySpark's pandas
-    serializer converts struct columns row-by-row in Python (~470us/doc
-    measured for the spans column); building typed pyarrow arrays directly
-    costs ~8us/doc. Input batches arrive in frontier order; politeness-paced
-    crawls use the pandas groupBy path instead (ordering within host)."""
+    """Paced fused fetch(+parse) for groupBy("host").applyInArrow: one
+    host's rows in (priority, seq) order, nulls last, one request every
+    max(rate_limit, host_delay) seconds — a robots Crawl-delay or
+    throttle ask only ever tightens the global limit."""
     import pyarrow as pa
 
     proxies = proxies or []
+    arrow_schema = _arrow_schema(parse)
 
-    def fetch_batches(it):
-        from pyspark.sql.pandas.types import to_arrow_schema
+    def fetch_group(table):
+        table = table.sort_by(
+            [("priority", "ascending"), ("seq", "ascending")], null_placement="at_end"
+        )
+        pace = rate_limit
+        if "host_delay" in table.column_names:
+            hd = table.column("host_delay")[0].as_py()
+            if hd is not None:
+                pace = max(rate_limit, hd)
+        cols = _fetch_arrow(table, fetcher, retries, proxies, parse, pace, arrow_schema)
+        return pa.Table.from_arrays(cols, schema=arrow_schema)
 
-        if parse:
-            from sinew_spark.functions.htmlparse import extract_spans_and_links
-
-        schema = FETCH_PARSED_SCHEMA if parse else FETCHED_SCHEMA
-        arrow_schema = to_arrow_schema(schema)
-        span_type = arrow_schema.field("spans").type if parse else None
-        links_type = pa.list_(pa.string()) if parse else None
-        hops_type = pa.list_(pa.string())
-
-        from sinew_spark.functions.cookies import dump_jar, normalize_jar, own_records
-
-        for rb in it:
-            d = rb.to_pydict()
-            n = len(d["url"])
-            host_cookies = d.get("host_cookies", [None] * n)
-            prior_etag = d.get("prior_etag", [None] * n)
-            prior_lm = d.get("prior_last_modified", [None] * n)
-            jars: dict = {}  # per-host jar threading within this batch (C11)
-            status_c, ct_c, body_c, final_c = [], [], [], []
-            natt_c, hops_c, err_c, ts_c, proxy_c, cookies_c = [], [], [], [], [], []
-            etag_c, lm_c, lat_c = [], [], []
-            spans_c, links_c = [], []
-            first = True
-            for i in range(n):
-                if not first and rate_limit > 0:
-                    time.sleep(rate_limit)
-                first = False
-                key, url, host = d["key"][i], d["url"][i], d["host"][i]
-                if host not in jars:
-                    jars[host] = normalize_jar(host_cookies[i], host)
-                proxy = proxies[key % len(proxies)] if proxies else None
-                t_req = time.perf_counter()
-                (status, ct, body, final_url, n_att, hops, error, jar, jar_chg,
-                 e_out, lm_out, backoff_s) = _fetch_one(
-                    fetcher, url, d["method"][i] or "GET", d["body"][i] or "", retries, rate_limit,
-                    cookies=jars[host], proxy=proxy, etag=prior_etag[i],
-                    last_modified=prior_lm[i],
-                )
-                lat_c.append(int((time.perf_counter() - t_req - backoff_s) * 1000))
-                jars[host] = jar
-                status_c.append(status)
-                ct_c.append(ct)
-                body_c.append(body)
-                final_c.append(final_url)
-                natt_c.append(n_att)
-                hops_c.append(hops)
-                err_c.append(error)
-                ts_c.append(time.time())
-                proxy_c.append(proxy)
-                cookies_c.append(
-                    dump_jar(own_records(jar, host)) if jar_chg else None
-                )
-                etag_c.append(e_out)
-                lm_c.append(lm_out)
-                if parse:
-                    if status is not None and 200 <= status < 400 and body:
-                        spans, links = extract_spans_and_links(
-                            body, ct or "text/html", final_url or url
-                        )
-                        spans_c.append(
-                            [
-                                {"kind": k, "text": t, "media_ref": m, "offset": o}
-                                for k, t, m, o in spans
-                            ]
-                        )
-                        links_c.append(links)
-                    else:
-                        spans_c.append([])
-                        links_c.append([])
-            cols = [
-                rb.column(rb.schema.get_field_index(c))
-                for c in ("key", "url", "canonical_url", "method", "body",
-                          "priority", "depth", "seq", "attempt", "host")
-            ]
-            cols += [
-                pa.array(status_c, type=pa.int32()),
-                pa.array(ct_c, type=pa.string()),
-                pa.array(body_c, type=pa.string()),
-                pa.array(final_c, type=pa.string()),
-                pa.array(natt_c, type=pa.int32()),
-                pa.array(hops_c, type=hops_type),
-                pa.array(err_c, type=pa.string()),
-                pa.array(ts_c, type=pa.float64()),
-                pa.array(proxy_c, type=pa.string()),
-                pa.array(cookies_c, type=pa.string()),
-                pa.array(etag_c, type=pa.string()),
-                pa.array(lm_c, type=pa.string()),
-                pa.array(lat_c, type=pa.int64()),
-            ]
-            if parse:
-                cols += [
-                    pa.array(spans_c, type=span_type),
-                    pa.array(links_c, type=links_type),
-                ]
-            yield pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
-
-    return fetch_batches
+    return fetch_group
 
 
 def fetch_rows(
@@ -817,12 +719,15 @@ def fetch_rows(
 ) -> DataFrame:
     """Run the fetch stage.
 
-    rate_limit > 0: group by host, fetch each host group in one task —
-    per-host pacing is exact, hosts run in parallel (one shuffle on host).
+    rate_limit > 0: hash-partition by host, fetch each host group in one
+    task — per-host pacing is exact, hosts run in parallel. The explicit
+    repartition to 2x the default parallelism is what keeps them parallel:
+    AQE sizes shuffle partitions by bytes, and a few slim frontier rows per
+    host would otherwise coalesce every host into one task.
 
     rate_limit == 0: the politeness window imposes no ordering constraint,
-    so the groupBy shuffle (and the hot-host serialization it forces) is
-    pure waste — fetch runs as shuffle-free mapInPandas at full partition
+    so the host shuffle (and the hot-host serialization it forces) is
+    pure waste — fetch runs as shuffle-free mapInArrow at full partition
     parallelism. Same output, strictly better plan; this is the bench/replay
     fast path (the reference likewise zeroes the limiter under SINEW_TEST,
     base.rb:21).
@@ -863,14 +768,13 @@ def fetch_rows(
             "key",
             "left",
         )
+    extra = ("host_cookies", "host_delay", "prior_etag", "prior_last_modified")
+    frontier = frontier.select(
+        [f.name for f in FRONTIER_ORDER] + [c for c in extra if c in frontier.columns]
+    )
     if rate_limit > 0 or host_delays is not None:
-        fn = make_fetch_fn(fetcher, rate_limit, retries, proxies, parse=parse)
-        return frontier.groupBy("host").applyInPandas(fn, schema)
-
-    cols = [f.name for f in FRONTIER_ORDER]
-    if "host_cookies" in frontier.columns:
-        cols.append("host_cookies")
-    if "prior_etag" in frontier.columns:
-        cols += ["prior_etag", "prior_last_modified"]
-    afn = make_fetch_arrow_fn(fetcher, rate_limit, retries, proxies, parse=parse)
-    return frontier.select(cols).mapInArrow(afn, schema)
+        fn = make_fetch_host_fn(fetcher, rate_limit, retries, proxies, parse=parse)
+        par = 2 * frontier.sparkSession.sparkContext.defaultParallelism
+        return frontier.repartition(par, "host").groupBy("host").applyInArrow(fn, schema)
+    afn = make_fetch_arrow_fn(fetcher, retries, proxies, parse=parse)
+    return frontier.mapInArrow(afn, schema)

@@ -77,7 +77,7 @@ def test_cookie_jar_is_per_host(spark, tmpdir_path):
 
 
 def test_cookie_paced_path(spark, tmpdir_path):
-    """rate_limit > 0 takes the per-host applyInPandas path; the jar threads
+    """rate_limit > 0 takes the per-host applyInArrow path; the jar threads
     across sequential requests within the host group."""
     f = FixtureFetcher(seed=4)
     c = Crawler(

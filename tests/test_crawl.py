@@ -118,8 +118,8 @@ def test_latency_excludes_retry_backoff(spark, tmpdir_path, paced):
     """latency_ms times the request's attempts, not the backoff slept
     between them (adaptive politeness applies its own error backoff on
     top). Two failed attempts sleep 10 + 20 ms of backoff; both fetch
-    paths — unpaced Arrow, and grouped pandas (a robots Crawl-delay row
-    forces it) — must report less than that."""
+    plans — unpaced mapInArrow, and per-host applyInArrow (a robots
+    Crawl-delay row forces it) — must report less than that."""
     fetcher = FixtureFetcher(seed=42, flaky={"flaky": 3})
     delays = spark.createDataFrame([("flaky", 0.0)], "host string, crawl_delay double")
     c = Crawler(
@@ -273,6 +273,81 @@ def test_politeness_pacing(spark, tmpdir_path):
     c.run()
     # 3 urls on one host, 0.15s between -> >= 0.3s wall
     assert time.time() - t0 >= 0.3
+
+
+def test_paced_host_group_fetches_in_priority_seq_order(spark, tmpdir_path):
+    """Within one paced host group, rows are fetched in (priority, seq)
+    order whatever order they arrive in, and the host's cookie jar threads
+    from the first request into the later ones."""
+    from sinew_spark.operators.frontier import prepare_frontier
+
+    c = make_crawler(spark, tmpdir_path, rate_limit=0.01, retries=0)
+    rows = [  # arrival order shuffled against (priority, seq)
+        ("http://o.test/cookies?probe=c", 2.0, 1),
+        ("http://o.test/cookies/set?k=v", 0.0, 7),
+        ("http://o.test/cookies?probe=b", 1.0, 5),
+        ("http://o.test/cookies?probe=a", 1.0, 3),
+    ]
+    df = spark.createDataFrame(
+        [(u, "GET", "", p, 0, s, 0) for u, p, s in rows],
+        "url string, method string, body string, priority double, depth int, seq long, attempt int",
+    )
+    c.frontier_t.overwrite(prepare_frontier(df, c.canonicalize))
+    c.run(1)
+    fetched = c.fetched_t.read().collect()
+    assert len(fetched) == 4
+    by_time = [r.url for r in sorted(fetched, key=lambda r: r.fetched_at)]
+    assert by_time == [u for u, _p, _s in sorted(rows, key=lambda r: (r[1], r[2]))]
+    for r in fetched:
+        if "probe=" in r.url:
+            assert json.loads(r.resp_body)["cookies"] == {"k": "v"}, r.url
+
+
+def test_paced_fetch_keeps_hosts_parallel(spark):
+    """AQE sizes shuffle partitions by bytes; a few slim rows per host must
+    still land in more than one task so paced hosts run in parallel."""
+    from sinew_spark.functions.urls import make_canonicalize_udf
+    from sinew_spark.operators.frontier import prepare_frontier
+    from sinew_spark.sources.fetch import fetch_rows
+
+    df = spark.createDataFrame(
+        [(f"http://h{h}.test/p{i}", "GET", "", 0.0, 0, 10 * h + i, 0)
+         for h in range(8) for i in range(2)],
+        "url string, method string, body string, priority double, depth int, seq long, attempt int",
+    )
+    out = fetch_rows(
+        prepare_frontier(df, make_canonicalize_udf()), FixtureFetcher(seed=42),
+        rate_limit=0.01,
+    )
+    assert out.rdd.getNumPartitions() > 1
+
+
+def test_delayed_capped_round_shuffles_once_for_the_fetch(spark, tmpdir_path, monkeypatch):
+    """A robots-delayed round with a per-host cap fetches on the grouped
+    path, which hash-partitions by host itself: no round-robin repartition
+    runs in front of it."""
+    import sinew_spark.crawl as crawl_mod
+
+    plans = []
+    orig = crawl_mod.fetch_rows
+
+    def spy(*a, **k):
+        out = orig(*a, **k)
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(crawl_mod, "fetch_rows", spy)
+    delays = spark.createDataFrame([("slow.test", 0.0)], "host string, crawl_delay double")
+    c = Crawler(
+        spark, tmpdir_path + "/c", FixtureFetcher(seed=42),
+        CrawlOptions(rate_limit=0.0, retries=0, per_host_cap=2),
+        crawl_delays=delays,
+    )
+    c.seed([f"http://slow.test/p{i}" for i in range(3)] + ["http://fast.test/p0"])
+    assert c.run_round()["fetched"] == 3
+    (plan,) = plans
+    assert "RoundRobinPartitioning" not in plan, plan
+    assert plan.count("Exchange hashpartitioning(host") == 2, plan  # cap window + fetch
 
 
 def test_resume_from_checkpoint(spark, tmpdir_path):
