@@ -4766,30 +4766,32 @@ def oracle_sql() -> dict[str, str]:
     op_sql = "".join(op)
 
     # hits_scores: q_hits_scores' integer HITS update, 3 iterations
-    # unrolled with L1 renormalization per half-iteration
+    # unrolled with L1 renormalization per half-iteration. Every CTE is
+    # MATERIALIZED: each h{i}/a{i} is read twice, and DuckDB would
+    # otherwise inline the unrolled chain and recompute it per reference
     ht_scale, ht_iters = 10**9, 3
     ht = [
-        "WITH n AS (SELECT COUNT(*) AS n FROM documents), "
-        "e AS (SELECT d.doc_id AS src, "
+        "WITH n AS MATERIALIZED (SELECT COUNT(*) AS n FROM documents), "
+        "e AS MATERIALIZED (SELECT d.doc_id AS src, "
         "CAST(('0x' || substr(md5('ht|' || CAST(d.doc_id AS VARCHAR) || '|' || "
         "CAST(j.j AS VARCHAR)), 1, 15)) AS BIGINT) % (SELECT n FROM n) AS dst "
         "FROM documents d, (VALUES (0), (1)) j(j) WHERE d.doc_id % 4 <> 0), "
-        "verts AS (SELECT src AS v FROM e UNION SELECT dst FROM e), "
-        "nv AS (SELECT COUNT(*) AS nv FROM verts), "
-        f"h0 AS (SELECT v, ({ht_scale} // (SELECT nv FROM nv)) AS hub FROM verts)"
+        "verts AS MATERIALIZED (SELECT src AS v FROM e UNION SELECT dst FROM e), "
+        "nv AS MATERIALIZED (SELECT COUNT(*) AS nv FROM verts), "
+        f"h0 AS MATERIALIZED (SELECT v, ({ht_scale} // (SELECT nv FROM nv)) AS hub FROM verts)"
     ]
     for i in range(1, ht_iters + 1):
         ht.append(
-            f", ar{i} AS (SELECT e.dst AS v, SUM(h.hub) AS s "
+            f", ar{i} AS MATERIALIZED (SELECT e.dst AS v, SUM(h.hub) AS s "
             f"FROM e JOIN h{i - 1} h ON h.v = e.src GROUP BY e.dst)"
-            f", at{i} AS (SELECT SUM(s) AS t FROM ar{i})"
-            f", a{i} AS (SELECT verts.v, "
+            f", at{i} AS MATERIALIZED (SELECT SUM(s) AS t FROM ar{i})"
+            f", a{i} AS MATERIALIZED (SELECT verts.v, "
             f"COALESCE(r.s, 0) * {ht_scale} // (SELECT t FROM at{i}) AS auth "
             f"FROM verts LEFT JOIN ar{i} r ON r.v = verts.v)"
-            f", hr{i} AS (SELECT e.src AS v, SUM(a.auth) AS s "
+            f", hr{i} AS MATERIALIZED (SELECT e.src AS v, SUM(a.auth) AS s "
             f"FROM e JOIN a{i} a ON a.v = e.dst GROUP BY e.src)"
-            f", htot{i} AS (SELECT SUM(s) AS t FROM hr{i})"
-            f", h{i} AS (SELECT verts.v, "
+            f", htot{i} AS MATERIALIZED (SELECT SUM(s) AS t FROM hr{i})"
+            f", h{i} AS MATERIALIZED (SELECT verts.v, "
             f"COALESCE(r.s, 0) * {ht_scale} // (SELECT t FROM htot{i}) AS hub "
             f"FROM verts LEFT JOIN hr{i} r ON r.v = verts.v)"
         )

@@ -197,12 +197,12 @@ def revalidate_benchmark(spark, n_urls: int, change_frac: float = 0.1) -> dict:
 def dedup_benchmark(spark, n_seen: int, n_new: int) -> dict:
     """Round-2 throughput: the frontier re-offers every already-seen URL
     plus n_new fresh ones. Measures the exactly-once machinery at scale —
-    the fused bloom+exact shard probe must reject n_seen URLs and fetch
+    the exact shard probe must reject n_seen URLs and fetch
     only the n_new (BASELINE.json: 'URLs fetched+DEDUPED/sec' with a
     populated seen set, the 10^10-design-point regime where most of the
     frontier is already crawled). exact_shards is forced on so the bench
     exercises the design-point path regardless of the adaptive threshold;
-    stores are pre-synced before the timed window (in steady state the
+    the seen index is pre-synced before the timed window (in steady state the
     absorb of round N's delta happens during round N's commit, not in
     round N+1's probe)."""
     from pyspark.sql import functions as F
@@ -223,7 +223,7 @@ def dedup_benchmark(spark, n_seen: int, n_new: int) -> dict:
         c = Crawler(spark, workdir, fetcher, opts)
         seeds = gen_frontier_seeds(spark, n_seen, n_hosts=1000, hot_frac=0.2, dup_frac=0.0)
         c.frontier_t.overwrite(prepare_frontier(seeds, c.canonicalize), {"op": "seed"})
-        c.run_round()  # round 0: populate seen + bloom (not timed)
+        c.run_round()  # round 0: populate seen (not timed)
 
         # round 1 frontier: all seen URLs again + n_new fresh
         fresh = gen_frontier_seeds(spark, n_new, n_hosts=1000, hot_frac=0.2, dup_frac=0.0)
@@ -233,7 +233,6 @@ def dedup_benchmark(spark, n_seen: int, n_new: int) -> dict:
         both = prepare_frontier(seeds.unionByName(fresh), c.canonicalize)
         c.frontier_t.overwrite(both, {"op": "reseed"})
         c._seen_keys.sync(c.seen_t)  # steady-state: prior round's absorb
-        c._bloom.sync(c.seen_t)
         t0 = time.time()
         stats = c.run_round()
         elapsed = time.time() - t0
@@ -683,8 +682,8 @@ def _write_bench_md(report: dict) -> None:
         "for N vs 4N executors; see BASELINE.md). Crawl benchmark: synthetic",
         f"seed crawl of {report['crawl_urls']} URLs over 1000 hosts (20% hot-host",
         "skew, 20% duplicate URLs). Timed round:",
-        "within-round dedup -> seen filter (adaptive: fused bloom+exact",
-        "key-shard probe / anti-join) -> per-host cap -> fused",
+        "within-round dedup -> seen filter (adaptive: exact key-shard",
+        "probe / anti-join) -> per-host cap -> fused",
         "fetch+parse (one Arrow pass) -> seen/documents/metrics snapshot",
         "commits. Seeding/datagen is excluded (input synthesis, like a TPC",
         "data load). Best of 2 runs per level (JVM/page-cache variance).",

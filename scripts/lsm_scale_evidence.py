@@ -49,6 +49,13 @@ def run_file_count(workdir: str) -> int:
     return sum(len(glob.glob(os.path.join(side, f"{p}-*.npz"))) for p in ("vals", "vdel"))
 
 
+def _count_label(n: int) -> str:
+    """32000000 -> '32M', 120000 -> '120k'."""
+    if n >= 1_000_000:
+        return f"{n / 1e6:g}M"
+    return f"{n / 1e3:g}k" if n >= 1_000 else str(n)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rounds", type=int, default=16)
@@ -145,7 +152,10 @@ def main() -> None:
         tps = [x["urls_per_sec"] for x in rows[1:]] or [rows[0]["urls_per_sec"]]
         half = len(tps) // 2
         summary = {
-            "metric": "LSM seen-store round throughput flatness (32M cumulative keys)",
+            "metric": (
+                "LSM seen-store round throughput flatness "
+                f"({_count_label(total)} cumulative keys)"
+            ),
             "rounds": args.rounds,
             "per_round_urls": args.per_round,
             "cumulative_urls": total,

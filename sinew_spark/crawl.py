@@ -5,9 +5,9 @@ the cache-or-network, each emit appends a CSV row
 (/root/reference/lib/sinew/main.rb:18-29). The engine's lifecycle is a
 round loop of declarative DataFrame plans:
 
-  frontier --dedup(round)--> --seen filter (fused bloom+exact shard
-  probe | anti-join)--> --robots--> --per-host cap--> --budget-->
-  FETCH (per-host pandas groups) --> seen += keys (+redirect hops)
+  frontier --dedup(round)--> --seen filter (exact shard probe |
+  anti-join)--> --robots--> --per-host cap--> --budget-->
+  FETCH (Arrow; per-host groups when paced) --> seen += keys (+redirect hops)
   --> PARSE --> documents += spans
   --> links -> next frontier (deterministic seq)  [repeat]
 
@@ -16,10 +16,9 @@ snapshot tables (plans/snapshots.py); each round commits one snapshot per
 table, so a killed crawl resumes from the last committed round with
 identical ordering (seq is data, not runtime state). The exact seen index
 (sorted shard runs of key + per-class max fetched_at) is snapshot-synced
-truth with an anti-join fallback; the Bloom sidecar (same snapshot
-discipline) is a short-circuit consulted INSIDE the plain exact probe — a
-bloom false positive falls through to the binary search, never drops a
-row (operators/bloom.py).
+truth with an anti-join fallback, and the round's only seen sidecar: every
+probe is a binary search over its worker-cached runs (operators/bloom.py
+says why the Bloom prefilter left this path).
 
 Determinism: every row carries (priority, seq); seq for discovered links is
 parent_seq * LINK_STRIDE + link_index, so replay ordering is a pure function
@@ -31,10 +30,9 @@ Scale notes (100 TB design point):
   nothing else: the exactly-once check is a shard-local probe whose
   key-only filter Catalyst pushes below the dedup shuffle (seen rows
   never shuffle) — one seen index, SeenKeyShardStore, answers plain
-  membership (bloom short-circuit fused in) and the TTL/force_errors
-  semantics (per-key class-max fetched_at) alike, so even the
-  continuous-recrawl mode never joins against the seen table; the
-  anti-join fallback serves small-seen runs
+  membership and the TTL/force_errors semantics (per-key class-max
+  fetched_at) alike, so even the continuous-recrawl mode never joins
+  against the seen table; the anti-join fallback serves small-seen runs
 - per-host caps bound fetch-task skew regardless of host distribution
 - parse is fused into the Arrow fetch stage (shuffle-free mapInArrow when
   unpaced); no O(rows) driver pulls anywhere in
@@ -63,7 +61,7 @@ from sinew_spark.functions.urls import (
     make_canonicalize_udf,
     request_key_expr,
 )
-from sinew_spark.operators.bloom import BloomShardStore, SeenKeyShardStore
+from sinew_spark.operators.bloom import SeenKeyShardStore
 from sinew_spark.operators.frontier import (
     FRONTIER_SCHEMA,
     LARGE_BUDGET_ROWS,
@@ -78,7 +76,12 @@ from sinew_spark.operators.frontier import (
 )
 from sinew_spark.operators.parse import PARSED_SCHEMA
 from sinew_spark.plans.snapshots import SnapshotTable
-from sinew_spark.sources.fetch import FETCH_PARSED_SCHEMA, Fetcher, fetch_rows
+from sinew_spark.sources.fetch import (
+    FETCH_PARSED_SCHEMA,
+    Fetcher,
+    fetch_rows,
+    partition_by_host,
+)
 
 LINK_STRIDE = 1_000  # seq slots reserved per parent for discovered links
 
@@ -288,7 +291,10 @@ class CrawlOptions:
     # rewrite seen into compact_target_files consolidated files
     compact_seen_every: int | None = None
     compact_target_files: int = 8
+    # sizing of a standalone BloomShardStore (operators/bloom.py); the
+    # crawl round builds none
     bloom_capacity: int = 1_000_000
+    # shard count of the exact seen index
     bloom_shards: int = 8
     # exactly-once filter strategy: True = shard-local exact key probe
     # (zero shuffle — the scale path), False = exact anti-join (AQE
@@ -342,15 +348,6 @@ class Crawler:
         # is on
         self.host_counts_t = SnapshotTable(
             spark, os.path.join(workdir, "host_counts"), HOST_COUNTS_SCHEMA
-        )
-        # executor-side sharded bloom sidecar (operators/bloom.py),
-        # snapshot-synced against seen like the key store; a lost/legacy
-        # sidecar is rebuilt by its first sync() — a distributed pass (one
-        # task per shard), the driver never holds keys.
-        self._bloom = BloomShardStore(
-            os.path.join(workdir, "seen.bloom.d"),
-            capacity=self.opts.bloom_capacity,
-            n_shards=self.opts.bloom_shards,
         )
         # the exact seen index: the anti-join's zero-shuffle replacement
         # for every exactly-once mode (per-key class-max fetched_at answers
@@ -505,13 +502,6 @@ class Crawler:
         exactly-once."""
         return self.opts.force or self.opts.force_errors or self.opts.expires is not None
 
-    def _sync_sidecars(self) -> None:
-        """Absorb the committed seen snapshot into the seen index and, in
-        plain crawls, the Bloom (see ``_reject_seen``)."""
-        self._seen_keys.sync(self.seen_t)
-        if not self._semantic:
-            self._bloom.sync(self.seen_t)
-
     def _reject_seen(
         self,
         df: DataFrame,
@@ -521,28 +511,21 @@ class Crawler:
         now: float | None = None,
     ) -> DataFrame:
         """The exactly-once probe, ``anti_join_seen`` semantics. With
-        ``use_shards`` the seen index (and, for plain crawls, the Bloom
-        sidecar) is first synced to the committed seen snapshot, then
-        probed shard-local: Catalyst pushes the key-only probe filter below
-        the dedup shuffle, so seen rows never shuffle and the seen table's
-        keys are never reshuffled per round. A plain probe fuses in the
-        in-sync Bloom as a short-circuit — rows it cannot contain skip the
-        binary search, maybe-seen rows fall through to it (a false positive
-        costs one search, never a dropped URL). Without ``use_shards``
-        (small seen: AQE broadcasts it) or when the index can't sync, the
-        exact anti-join. The Bloom is only synced in plain crawls: the
-        semantic modes' round-start probe never consults it, so a per-round
-        add_delta job (and a full first-round rebuild) there is pure
-        overhead."""
+        ``use_shards`` the seen index is first synced to the committed seen
+        snapshot, then probed shard-local: Catalyst pushes the key-only
+        probe filter below the dedup shuffle, so seen rows never shuffle and
+        the seen table's keys are never reshuffled per round. Every row
+        takes the binary search over the worker-cached runs. Without
+        ``use_shards`` (small seen: AQE broadcasts it) or when the index
+        can't sync, the exact anti-join."""
         if use_shards:
-            self._sync_sidecars()
+            self._seen_keys.sync(self.seen_t)
         if not (use_shards and self._seen_keys.in_sync_with(self.seen_t)):
             return anti_join_seen(
                 df, self.seen_t.read(), expires=expires, force_errors=force_errors, now=now
             )
-        bloom = self._bloom if self._bloom.in_sync_with(self.seen_t) else None
         return self._seen_keys.reject_seen(
-            df, expires=expires, force_errors=force_errors, now=now, bloom=bloom
+            df, expires=expires, force_errors=force_errors, now=now
         )
 
     def _prune_frontier(self, rows: DataFrame, use_shards: bool) -> DataFrame:
@@ -689,9 +672,15 @@ class Crawler:
                     (F.lit(self.opts.host_budget) - F.sum("n")).alias("remaining")
                 )
             )
+        # A paced round's fetch partitions by host (partition_by_host).
+        # Partitioning the cap window's input the same way lets that one
+        # exchange serve both: the fetch's repartition then finds its
+        # partitioning already in place and is planned away.
+        host_delays = self._throttle_delays(rnd)
+        paced = self.opts.rate_limit > 0 or host_delays is not None
         if capped:
             selected = per_host_cap(
-                cand,
+                partition_by_host(cand) if paced else cand,
                 self.opts.per_host_cap,
                 host_remaining=host_remaining,
                 default_remaining=self.opts.host_budget,
@@ -715,8 +704,6 @@ class Crawler:
         # partitioning from the dedup repartition (no second shuffle); unpaced
         # paths that re-cluster rows (host window, budget sort) get an
         # explicit round-robin repartition instead.
-        host_delays = self._throttle_delays(rnd)
-        paced = self.opts.rate_limit > 0 or host_delays is not None
         if not paced and (capped or round_budget is not None):
             selected = selected.repartition(par * 2)
 
@@ -1067,11 +1054,11 @@ class Crawler:
                 )
             if next_frontier is None:
                 # an empty next frontier, committed driver-side with no job.
-                # The pruning probe would have synced the seen sidecars; sync
-                # them anyway, so status()/cached() stay driver-local and the
+                # The pruning probe would have synced the seen index; sync it
+                # anyway, so status()/cached() stay driver-local and the
                 # next round-start sync is a no-op
                 if use_shards:
-                    self._sync_sidecars()
+                    self._seen_keys.sync(self.seen_t)
                 self.frontier_t.overwrite([], {"round": rnd})
             else:
                 self.frontier_t.overwrite(
@@ -1201,9 +1188,7 @@ class Crawler:
         """Row-level delete (sinew's uncache) — O(delta) end to end at the
         10^10-key design point: a merge-on-read equality-delete snapshot
         (tiny delete file, no table rewrite) that the seen index absorbs
-        as tombstone runs on its next sync (no O(seen) rebuild). The Bloom may retain the key — fail-safe: under the
-        fused probe a stale bloom entry only sends the key to the exact
-        search, which honors the tombstone."""
+        as tombstone runs on its next sync (no O(seen) rebuild)."""
         key, _ = self._key_for(url, method, body)
         self.seen_t.delete_keys([key])
 

@@ -1,29 +1,34 @@
-"""Sharded Bloom filter for the URL-seen set.
+"""Sharded Bloom filter and the exact seen index.
 
 The exactly-once guarantee is enforced by an EXACT check — the left-anti
 join against the `seen` table, or its zero-shuffle scale path, the one
 seen index ``SeenKeyShardStore`` (sorted shard runs of every seen key with
 its per-class max fetched_at, answering plain, TTL and force_errors probes
 by binary search; the reference README's "Each URL will be hit exactly
-once"). The Bloom filter is a probabilistic short-circuit INSIDE
-that index's plain probe (``SeenKeyShardStore.reject_seen``):
-rows whose key the bloom cannot contain skip the sorted-run search; rows
-the bloom flags as maybe-seen fall through to the exact search, so a bloom
-false positive costs one redundant binary search — NEVER a dropped URL. (An
-earlier design filtered the frontier on ``~might_contain`` alone, which
-silently dropped ~fpp of genuinely-new URLs at capacity fill; the fused
-probe is the fix.)
+once"). The crawl round consults nothing else: every probed row takes the
+sorted-run search.
 
-Because "definitely new skips the exact search" is load-bearing, the bloom
-must contain EVERY key of the seen snapshot it claims to cover — an
-under-populated bloom would let a seen key skip the search and be
-refetched. ``sync()`` enforces the same snapshot discipline as the key
-index: meta records the last absorbed seen snapshot id, newer append
-deltas are absorbed before any probe, and the fused probe only consults a
-bloom that is in sync (otherwise it runs exact-only, which is always
-safe). Non-append history (uncache's delete, compaction) only ever REMOVES
-seen keys, so the stale bloom is an over-approximation — fail-safe under
-the fused probe — and sync just advances the snapshot id.
+The Bloom filter below is a standalone approximate-membership operator
+(``maybe_seen``: an over-approximation of the seen rows, no false
+negatives). It used to sit inside the index's plain probe as a
+short-circuit, letting rows it could not contain skip the search. It left
+the crawl path because it did not earn its keep there. On the recrawl
+benchmark (every seen URL re-offered plus 2 % fresh) 98 % of the probed
+keys are seen, so it could let at most the other 2 % skip the search,
+while keeping it in sync cost 3 of the round's 10 Spark jobs (about 0.8 s
+of a 4.6 s round): ``add_delta`` rewrites every touched shard's whole
+bitset each round, an O(filter) write where the index writes O(delta)
+runs. On a fresh-key-heavy crawl (about 96 % new keys per round) taking it
+out cost nothing measurable either. A future prefilter should be built from the
+index's own runs and support deletion (a cuckoo filter), so it needs no
+sync of its own.
+
+``BloomShardStore.sync()`` keeps the snapshot discipline of the key index:
+meta records the last absorbed seen snapshot id, newer append deltas are
+absorbed, and history that may add keys it lacks rebuilds it, so an
+in-sync bloom contains EVERY key of its seen snapshot. Non-append history
+(uncache's delete, compaction) only ever REMOVES seen keys, so the stale
+bloom is an over-approximation and sync just advances the snapshot id.
 
 Two layers:
 
@@ -44,21 +49,13 @@ Two layers:
   of the whole bitset. At the 10^10-key design point (~12 GB of bits at
   fpp 0.01) the driver cost is a meta.json write per round.
 
-Why keep a bloom at all when the index is exact: the bitset is ~20x
-smaller than the index runs (1.2 vs 24 bytes/key at fpp 0.01), and both
-share one worker LRU budget, so the bloom stays resident when the runs
-don't — in the steady-state crawl, where most candidates are NEW, the
-bloom answers most rows from memory and the run load/search happens only
-for the maybe-seen minority.
-
 Crash safety: shard files are written tmp+rename; the snapshot id only
 advances after the shard writes land, so a crash mid-sync is repaired by
 re-absorbing on the next sync (re-adding keys to a bloom is idempotent).
 
 False-positive budget: fpp ~ (1 - e^(-k*n/m))^k. Default sizing ~9.6 bits/key
-with k=7 gives fpp ≈ 1e-2 per probe at capacity; a false positive only costs
-a redundant exact search (never a missed fetch), so the filter can run hot.
-``sync()`` re-sizes (rebuilds at 4x) when n_added outgrows capacity.
+with k=7 gives fpp ≈ 1e-2 per probe at capacity. ``sync()`` re-sizes
+(rebuilds at 4x) when n_added outgrows capacity.
 """
 
 from __future__ import annotations
@@ -400,21 +397,17 @@ class BloomShardStore:
         return n
 
     def sync(self, seen_t) -> None:
-        """Bring the bloom up to the seen table's current snapshot — the
-        precondition for the fused probe's "definitely new skips the exact
-        search" short-circuit (module docstring). Append snapshots on the
+        """Bring the bloom up to the seen table's current snapshot, so that
+        it holds every seen key (module docstring). Append snapshots on the
         lineage path are absorbed as deltas; edelete/compact only remove
         seen keys, so the over-approximate bloom stays fail-safe and the id
         just advances. Everything else rebuilds from the full key set:
         fresh/legacy/lost sidecar, rollback or divergent history (the
-        shards may hold keys from rolled-back snapshots — the invariant
-        "bloom contains every seen key AND nothing decides on phantom
-        keys alone" needs the exact store rebuilt in lockstep; the bloom
-        rebuilds for hygiene since phantom keys degrade the prefilter),
-        an ``overwrite`` snapshot (may ADD keys; advancing past it would
-        break "bloom contains every seen key" and the short-circuit would
-        skip the exact search for genuinely-seen URLs), and outgrowing
-        capacity (4x re-size keeps amortized cost O(delta))."""
+        shards may hold keys from rolled-back snapshots; phantom keys
+        inflate the false-positive rate), an ``overwrite`` snapshot (may
+        ADD keys; advancing past it would break "bloom contains every
+        seen key" — a false negative), and outgrowing capacity (4x re-size
+        keeps amortized cost O(delta))."""
         cur = seen_t.current_snapshot()
         if cur == self.snapshot_id or cur is None:
             return
@@ -455,10 +448,9 @@ class BloomShardStore:
     def maybe_seen(self, frontier):
         """Rows the bloom flags as possibly-seen — an OVER-approximation of
         the truly-seen rows (no false negatives: every added key is
-        flagged). Diagnostics/tests surface; the engine's hot path consults
-        the bloom inside ``SeenKeyShardStore.reject_seen`` instead, where a
-        false positive falls through to the exact search rather than
-        deciding anything."""
+        flagged). Diagnostics surface: the crawl round's exactly-once
+        probe is ``SeenKeyShardStore.reject_seen``, which never consults
+        the bloom."""
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
@@ -696,7 +688,7 @@ class SeenKeyShardStore:
     delete-then-re-append replays exactly), cached per worker until the
     run list changes.
 
-    Correctness discipline (this is TRUTH, unlike the fail-safe bloom): a
+    Correctness discipline (this is TRUTH, not an approximation): a
     shard must never be BEHIND the committed seen table when probed, or a
     seen URL would be refetched. ``sync()`` enforces it: meta records the
     last absorbed seen snapshot id; newer append / equality-delete
@@ -832,24 +824,12 @@ class SeenKeyShardStore:
         expires: float | None = None,
         force_errors: bool = False,
         now: float | None = None,
-        bloom: "BloomShardStore | None" = None,
     ):
         """EXACT filter, shard-local: equivalent to
         ``anti_join_seen(frontier, seen, expires=..., force_errors=...,
         now=...)`` with zero shuffle of the seen side — a per-task binary
-        search against the task's shard. Caller must have sync()ed this
-        round.
-
-        ``bloom``: optional fused short-circuit for the PLAIN probe (no
-        ``expires``, no ``force_errors``; ignored otherwise — a maybe-seen
-        row in a semantic probe must be judged on its statistics). Rows
-        whose key the bloom cannot contain skip the sorted-run search (the
-        steady-state majority: new URLs); maybe-seen rows fall through to
-        the exact search, so a bloom false positive costs one binary
-        search — never a dropped row. The caller must pass a bloom that is
-        in_sync_with the SAME seen snapshot as this store (else pass
-        None): "definitely new" is only trustworthy when the bloom holds
-        every seen key."""
+        search of every row against the task's shard. Caller must have
+        sync()ed this round."""
         import time as _time
 
         from pyspark.sql import functions as F
@@ -858,21 +838,7 @@ class SeenKeyShardStore:
         if self.snapshot_id is None:
             return frontier
         plain = expires is None and not force_errors
-        if bloom is not None and (
-            not plain
-            or bloom.n_added == 0
-            or bloom.snapshot_id != self.snapshot_id
-            # shard-routing mismatch (e.g. one sidecar deleted and rebuilt
-            # under a different bloom_shards setting): the bloom's shard
-            # files don't correspond to this store's routing, so its
-            # "definitely new" answers are untrustworthy. Raising instead
-            # would put the crawl in a per-round crash loop that only
-            # manual sidecar deletion could clear.
-            or bloom.n_shards != self.n_shards
-        ):
-            bloom = None  # exact-only
         dirpath = self.path
-        bloom_dir = bloom.path if bloom is not None else None
         cutoff = None
         if expires is not None:
             cutoff = (_time.time() if now is None else now) - expires
@@ -882,31 +848,19 @@ class SeenKeyShardStore:
             keys = key.to_numpy("int64")
             out = np.ones(len(keys), dtype=bool)
             for s in shard.unique():
-                m = (shard == s).to_numpy()
-                ks = keys[m]
-                need = np.ones(len(ks), dtype=bool)  # rows needing exact search
-                if bloom_dir is not None:
-                    b = _load_shard(bloom_dir, int(s))
-                    # missing bloom shard = no information (lost file is
-                    # indistinguishable from never-written): search all rows
-                    if b is not None:
-                        need = b.might_contain(ks)
-                if not need.any():
-                    continue  # whole batch definitely new for this shard
                 uk, mok, merr = _load_runs_shard(dirpath, int(s))
                 if len(uk) == 0:
                     continue
-                sub = ks[need]
-                idx = np.minimum(np.searchsorted(uk, sub), len(uk) - 1)
-                found = uk[idx] == sub
+                m = (shard == s).to_numpy()
+                ks = keys[m]
+                idx = np.minimum(np.searchsorted(uk, ks), len(uk) - 1)
+                found = uk[idx] == ks
                 blocked = found
                 if not plain:
                     live = mok[idx] if force_errors else np.maximum(mok[idx], merr[idx])
                     live = np.where(found, live, _NEG_INF)
                     blocked = live >= cutoff if cutoff is not None else live > _NEG_INF
-                res = np.ones(len(ks), dtype=bool)
-                res[need] = ~blocked
-                out[m] = res
+                out[m] = ~blocked
             return pd.Series(out)
 
         return frontier.where(is_fetchable(F.col("key"), self._shard_expr()))

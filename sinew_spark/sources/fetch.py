@@ -707,6 +707,13 @@ def make_fetch_host_fn(
     return fetch_group
 
 
+def partition_by_host(df: DataFrame) -> DataFrame:
+    """The paced fetch's partitioning: hash by host into 2x the default
+    parallelism. A stage already partitioned this way reaches the fetch
+    with no further host exchange."""
+    return df.repartition(2 * df.sparkSession.sparkContext.defaultParallelism, "host")
+
+
 def fetch_rows(
     frontier: DataFrame,
     fetcher: Fetcher,
@@ -774,7 +781,6 @@ def fetch_rows(
     )
     if rate_limit > 0 or host_delays is not None:
         fn = make_fetch_host_fn(fetcher, rate_limit, retries, proxies, parse=parse)
-        par = 2 * frontier.sparkSession.sparkContext.defaultParallelism
-        return frontier.repartition(par, "host").groupBy("host").applyInArrow(fn, schema)
+        return partition_by_host(frontier).groupBy("host").applyInArrow(fn, schema)
     afn = make_fetch_arrow_fn(fetcher, retries, proxies, parse=parse)
     return frontier.mapInArrow(afn, schema)

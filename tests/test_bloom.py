@@ -196,8 +196,7 @@ def _run_names(store, shard, kind=None):
 
 
 def test_seen_keys_matches_anti_join(spark, tmp_path):
-    """The plain probe == left_anti join vs the same key set, exactly —
-    with and without the fused bloom short-circuit."""
+    """The plain probe == left_anti join vs the same key set, exactly."""
     from sinew_spark.operators.bloom import SeenKeyShardStore
 
     t = _seen_table(spark, tmp_path)
@@ -210,55 +209,6 @@ def test_seen_keys_matches_anti_join(spark, tmp_path):
     exact = frontier.join(t.read().select("key"), "key", "left_anti")
     expected = sorted(r.key for r in exact.collect())
     assert _probe(store, frontier) == expected
-
-    # fused bloom short-circuit: identical results, bit for bit
-    bloom = BloomShardStore(str(tmp_path / "bl"), capacity=10_000, n_shards=4)
-    bloom.sync(t)
-    assert _probe(store, frontier, bloom=bloom) == expected
-
-
-def test_fused_probe_bloom_false_positive_never_drops(spark, tmp_path):
-    """THE fused-probe guarantee: a key the bloom wrongly flags as seen
-    (false positive) must fall through to the exact search and SURVIVE.
-    Modeled deterministically by adding an extra key to the bloom only —
-    indistinguishable from an FP at that key. The old standalone-prefilter
-    design dropped such URLs forever. A semantic probe ignores the bloom."""
-    from sinew_spark.operators.bloom import SeenKeyShardStore
-
-    t = _seen_table(spark, tmp_path)
-    t.append(_rows(spark, 0, 1000, status=500))
-    store = SeenKeyShardStore(str(tmp_path / "ks"), n_shards=4)
-    store.sync(t)
-
-    bloom = BloomShardStore(str(tmp_path / "bl"), capacity=10_000, n_shards=4)
-    extra = 777_777  # in the bloom, NOT in seen -> a guaranteed "FP"
-    planted = _keys(spark, 0, 1000).unionByName(spark.createDataFrame([(extra,)], "key long"))
-    bloom.add_delta(planted, snapshot_id=t.current_snapshot())
-    assert bloom.in_sync_with(t)
-
-    frontier = spark.createDataFrame([(extra,), (5,), (999_999,)], "key long")
-    assert _probe(store, frontier, bloom=bloom) == [extra, 999_999]  # FP survived; seen 5 rejected
-    # force_errors re-admits the error-only key 5; the bloom must not
-    # short-circuit a semantic probe's decision
-    assert _probe(store, frontier, force_errors=True, bloom=bloom) == [5, extra, 999_999]
-
-
-def test_fused_probe_ignores_differently_synced_bloom(spark, tmp_path):
-    """A bloom synced to a different seen snapshot than the index must be
-    ignored (exact-only probe) — its definitely-new claim is stale."""
-    from sinew_spark.operators.bloom import SeenKeyShardStore
-
-    t = _seen_table(spark, tmp_path)
-    t.append(_rows(spark, 0, 100))
-    bloom = BloomShardStore(str(tmp_path / "bl"), capacity=10_000, n_shards=4)
-    bloom.sync(t)  # synced at snapshot 1
-    t.append(_rows(spark, 100, 200))
-    store = SeenKeyShardStore(str(tmp_path / "ks"), n_shards=4)
-    store.sync(t)  # synced at snapshot 2: bloom is BEHIND
-
-    # if the stale bloom were trusted, keys 100..199 would look
-    # definitely-new and skip the exact search -> refetch. They must not.
-    assert _probe(store, _keys(spark, 0, 300), bloom=bloom) == list(range(200, 300))
 
 
 def test_seen_keys_incremental_and_rebuild(spark, tmp_path):
@@ -551,11 +501,6 @@ def test_seen_keys_edelete_absorbs_tombstones_not_rebuild(spark, tmp_path):
         assert _probe(store, probe, expires=expires, force_errors=fe, now=now) == sorted(
             r.key for r in exact.collect()
         ), f"divergence at expires={expires} force_errors={fe}"
-
-    # fused bloom probe agrees (stale bloom entries fall through to exact)
-    bloom = BloomShardStore(str(tmp_path / "bl"), capacity=10_000, n_shards=4)
-    bloom.sync(t)
-    assert _probe(store, probe, bloom=bloom) == [6, 7] + list(range(1000, 1010))
 
 
 def test_seen_keys_tombstone_compaction_resolves(spark, tmp_path):

@@ -324,8 +324,9 @@ def test_paced_fetch_keeps_hosts_parallel(spark):
 
 def test_delayed_capped_round_shuffles_once_for_the_fetch(spark, tmpdir_path, monkeypatch):
     """A robots-delayed round with a per-host cap fetches on the grouped
-    path, which hash-partitions by host itself: no round-robin repartition
-    runs in front of it."""
+    path: no round-robin repartition runs in front of it, and the cap
+    window's host partitioning is the fetch's, so one host exchange
+    serves both."""
     import sinew_spark.crawl as crawl_mod
 
     plans = []
@@ -347,7 +348,7 @@ def test_delayed_capped_round_shuffles_once_for_the_fetch(spark, tmpdir_path, mo
     assert c.run_round()["fetched"] == 3
     (plan,) = plans
     assert "RoundRobinPartitioning" not in plan, plan
-    assert plan.count("Exchange hashpartitioning(host") == 2, plan  # cap window + fetch
+    assert plan.count("Exchange hashpartitioning(host") == 1, plan
 
 
 def test_resume_from_checkpoint(spark, tmpdir_path):
