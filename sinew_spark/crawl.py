@@ -6,15 +6,19 @@ the cache-or-network, each emit appends a CSV row
 round loop of declarative DataFrame plans:
 
   frontier --dedup(round)--> --seen filter (exact shard probe |
-  anti-join)--> --robots--> --per-host cap--> --budget-->
+  anti-join)--> --depth/scope/robots--> --per-host cap--> --budget-->
   FETCH (Arrow; per-host groups when paced) --> seen += keys (+redirect hops)
   --> PARSE --> documents += spans
   --> links -> next frontier (deterministic seq)  [repeat]
 
-Durability/resumability: frontier, seen, fetched, documents, metrics are
-snapshot tables (plans/snapshots.py); each round commits one snapshot per
-table, so a killed crawl resumes from the last committed round with
-identical ordering (seq is data, not runtime state). The exact seen index
+Durability/resumability: frontier, seen, fetched, host_counts, host_state
+and metrics are snapshot tables (plans/snapshots.py; documents is a view of
+fetched). ``run_round`` commits them in one fixed order — fetched, seen,
+host_counts, host_state, frontier, metrics — and the metrics row is the
+round's commit record: a Crawler opened over a round that died before it
+rolls the round's other commits back (``_recover``), so the round reruns and
+a killed crawl resumes with identical tables and ordering (seq is data, not
+runtime state). The exact seen index
 (sorted shard runs of key + per-class max fetched_at) is snapshot-synced
 truth with an anti-join fallback, and the round's only seen sidecar: every
 probe is a binary search over its worker-cached runs (operators/bloom.py
@@ -47,6 +51,7 @@ from __future__ import annotations
 
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -308,6 +313,41 @@ class CrawlOptions:
 EXACT_SHARDS_AUTO_ROWS = 5_000_000
 
 
+@dataclass
+class _Round:
+    """What a round's stages hand on: its number, the seen-probe plan, the
+    per-host fetch delays (None: unpaced unless rate_limit), the frontier it
+    read, the Observations that count its candidates and its fetched rows at
+    the fetched write, and the snapshot each of its commits made."""
+
+    rnd: int
+    use_shards: bool = False
+    host_delays: DataFrame | None = None
+    frontier: DataFrame | None = None
+    cand_obs: Observation = field(default_factory=Observation)
+    fetch_obs: Observation = field(default_factory=Observation)
+    snaps: dict = field(default_factory=dict)
+
+
+def _merge_jars(rows: DataFrame, group: str, order: str, out: str, now: float) -> DataFrame:
+    """One cookie jar per ``group`` value, as (group, out) JSON: the
+    per-record merge of the rows' jars (cookies.merge_host_jars), ties
+    ranked by ``order``. ``now`` is the run-start stamp — replay-stable
+    within the run — past which records expired >30d ago are dropped,
+    bounding jar growth on a long crawl."""
+
+    def merge(pdf):
+        import pandas as pd
+
+        from sinew_spark.functions.cookies import merge_host_jars
+
+        js = merge_host_jars(list(zip(pdf[order], pdf["host"], pdf["cookies"])), now=now)
+        return pd.DataFrame({group: [pdf[group].iloc[0]], out: [js]})
+
+    cols = list(dict.fromkeys([group, order, "host", "cookies"]))
+    return rows.select(*cols).groupBy(group).applyInPandas(merge, f"{group} string, {out} string")
+
+
 class Crawler:
     def __init__(
         self,
@@ -332,7 +372,8 @@ class Crawler:
             default_params=self.opts.params,
             ignore_params=self.opts.ignore_params,
         )
-        # one Crawler = one run: force/force_errors re-admission (step 8)
+        # one Crawler = one run: force/force_errors re-admission (the next
+        # frontier's pruning, _prune_frontier)
         # distinguishes "attempted THIS run" from "seen in a previous run"
         # by fetched_at >= this stamp — the same cross-machine clock
         # doctrine the TTL (expires) comparison already relies on
@@ -356,7 +397,8 @@ class Crawler:
         self._seen_keys = SeenKeyShardStore(
             os.path.join(workdir, "seen.keys.d"), n_shards=self.opts.bloom_shards
         )
-        self._round: int | None = None  # lazily read from metrics, then cached
+        self._round: int | None = None  # read from metrics, then cached
+        self.current_round()  # recovers a round that died before its metrics row
 
     # --- seeding ----------------------------------------------------------------
 
@@ -485,7 +527,10 @@ class Crawler:
         """The next round's number: one past the last committed metrics
         round. Every metrics snapshot records its round in its meta, so
         this is a manifest read; the aggregate over the table runs only
-        when a data dir's meta has no round (e.g. after a compaction)."""
+        when a data dir's meta has no round (e.g. after a compaction). The
+        first call (the Crawler's open) and the first after a round that
+        raised also roll back what a round without its metrics row
+        committed (``_recover``)."""
         if self._round is None:
             rounds = [m.get("round") for m in self.metrics_t.dir_metas()]
             if None in rounds:
@@ -493,8 +538,26 @@ class Crawler:
                 last = row.r
             else:
                 last = max(rounds, default=None)
-            self._round = (last if last is not None else -1) + 1
+            last = last if last is not None else -1
+            self._recover(last)
+            self._round = last + 1
         return self._round
+
+    def _recover(self, last: int) -> None:
+        """Make the crawl's state that of round ``last``, the newest round
+        with a metrics row (-1: none yet). The metrics row is a round's
+        commit record, so every table a round commits to is rolled back
+        along its parent chain to its newest snapshot from no later round;
+        a snapshot without a round (seed, compaction, uncache delete) counts
+        as no later. Manifest reads only; the seen index rebuilds on its
+        next sync (``_delta_chain``: a rollback is never incremental)."""
+        for t in (self.fetched_t, self.seen_t, self.host_counts_t, self.host_state_t, self.frontier_t):
+            snaps = {s["id"]: s for s in t.snapshots()}
+            cur = sid = t.current_snapshot()
+            while sid is not None and snaps[sid]["meta"].get("round", last) > last:
+                sid = snaps[sid].get("parent")
+            if sid != cur:
+                t.rollback_to(sid)
 
     @property
     def _semantic(self) -> bool:
@@ -528,6 +591,29 @@ class Crawler:
             df, expires=expires, force_errors=force_errors, now=now
         )
 
+    def _fetchable(self, rows: DataFrame) -> DataFrame:
+        """``rows`` without those this crawl may never fetch: over depth,
+        out of scope or robots-blocked. Row filters, so their place relative
+        to a key dedup matters (rows of one key can differ in depth)."""
+        if self.opts.max_depth is not None:
+            rows = rows.where(F.col("depth") <= self.opts.max_depth)
+        if self.opts.url_allow or self.opts.url_deny:
+            rows = apply_url_scope(rows, self.opts.url_allow, self.opts.url_deny)
+        if self.robots is not None:
+            rows = apply_robots(rows, self.robots)
+        return rows
+
+    def _host_remaining(self) -> DataFrame | None:
+        """host_budget's pages left per host, (host, remaining): an O(hosts)
+        aggregate of the spend ledger. None when no budget or no spend."""
+        if self.opts.host_budget is None or self.host_counts_t.current_snapshot() is None:
+            return None
+        return (
+            self.host_counts_t.read()
+            .groupBy("host")
+            .agg((F.lit(self.opts.host_budget) - F.sum("n")).alias("remaining"))
+        )
+
     def _prune_frontier(self, rows: DataFrame, use_shards: bool) -> DataFrame:
         """The next frontier: ``rows`` without every row that can never be
         fetched again THIS RUN (seen or attempted keys, over-depth,
@@ -537,9 +623,8 @@ class Crawler:
         # pure-TTL paths: a key fetched this run is out of the frontier, and
         # in TTL mode a still-fresh key cannot be fetched before the loop
         # drains — recrawl re-enters it by re-seeding (module doctrine). The
-        # shard path absorbs the fresh delta into the index (the sync the
-        # next round would do anyway) and probes shard-local — the per-round
-        # O(seen) shuffle this join used to cost is gone.
+        # shard path probes the index, which absorbed this round's seen
+        # delta at its commit — no per-round O(seen) shuffle.
         #
         # force/force_errors are DIFFERENT: a key seen only in a PREVIOUS run
         # is exactly what these modes exist to refetch (C6, frontier.py
@@ -564,68 +649,109 @@ class Crawler:
             )
         else:
             rows = self._reject_seen(rows, use_shards)
-        if self.opts.max_depth is not None:
-            rows = rows.where(F.col("depth") <= self.opts.max_depth)
-        if self.robots is not None:
-            rows = apply_robots(rows, self.robots)
-        if self.opts.url_allow or self.opts.url_deny:
-            # out-of-scope URLs can never be fetched — they leave the
-            # frontier here, same rule as robots/seen/depth
-            rows = apply_url_scope(rows, self.opts.url_allow, self.opts.url_deny)
-        if self.opts.host_budget is not None:
+        rows = self._fetchable(rows)
+        remaining = self._host_remaining()
+        if remaining is not None:
             # budget-exhausted hosts leave the frontier too (this round's
             # spend included) — O(hosts) broadcast anti-join
-            exhausted = (
-                self.host_counts_t.read()
-                .groupBy("host")
-                .agg(F.sum("n").alias("spent"))
-                .where(F.col("spent") >= self.opts.host_budget)
-                .select("host")
-            )
-            rows = rows.join(F.broadcast(exhausted), "host", "left_anti")
+            spent = remaining.where(F.col("remaining") <= 0).select("host")
+            rows = rows.join(F.broadcast(spent), "host", "left_anti")
         return dedup_within_round(rows)
 
     def run_round(self, budget: int | None = None) -> dict:
-        """One frontier superstep. ``budget`` overrides opts.round_budget
-        for this round (recipe limit flow control: fetch at most the rows
-        still needed instead of the whole step)."""
+        """One frontier superstep: select and fetch, then the round's
+        commits in their one fixed order — fetched, seen, host_counts,
+        host_state, frontier and last the metrics row, the round's commit
+        record. A round that stops before its metrics row is rolled back
+        whole by the next ``current_round()`` and reruns. ``budget``
+        overrides opts.round_budget for this round (recipe limit flow
+        control: fetch at most the rows still needed instead of the whole
+        step)."""
         t0 = time.time()
-        round_budget = budget if budget is not None else self.opts.round_budget
-        profile = os.environ.get("SINEW_PROFILE") == "1"
-        marks: list[tuple[str, float]] = []
-
-        def mark(label: str) -> None:
-            if profile:
-                marks.append((label, time.time()))
-
-        rnd = self.current_round()
+        r = _Round(self.current_round())
+        self._round = None  # until the metrics row commits: a rerun recovers
+        budget = budget if budget is not None else self.opts.round_budget
         offered = self.frontier_t.approx_rows()
-        if offered == 0 or round_budget == 0:
-            # drained frontier, known from the manifest's row stats, or a
-            # round allowed no fetch: no job, no commit (an empty round
-            # would only add vacuous fetched/seen snapshots)
-            return {"round": rnd, "selected": 0, "done": True}
-        frontier = self.frontier_t.read()
-        mark("start")
+        # a drained frontier (manifest row stats) or a round allowed no
+        # fetch runs no job and commits nothing
+        if offered > 0 and budget != 0:
+            r.snaps["fetched"] = self._commit_fetched(r, self._select(r, offered, budget))
+        st = r.fetch_obs.get if r.snaps else {"n": 0}
+        if st["n"] == 0:
+            # nothing fetched: every frontier row was seen, blocked or
+            # filtered. The empty fetched snapshot has no metrics row, so
+            # the next current_round() rolls it back.
+            return {"round": r.rnd, "selected": 0, "done": True}
+        # this round's rows read back from the committed delta: columnar,
+        # pruned scans; splits sized to cores, because the delta is small
+        # per byte but parse-heavy per row (128 MB splits measured 4x wall
+        # on local[8])
         par = self.spark.sparkContext.defaultParallelism
+        fetched = self.fetched_t.read_delta(r.snaps["fetched"], target_partitions=par * 2)
+        r.snaps["seen"] = self._commit_seen(r, fetched, st)
+        if self.opts.host_budget is not None:
+            # host_budget spend ledger: one O(hosts) row group (304
+            # revalidations count — they are requests against the budget)
+            r.snaps["host_counts"] = self.host_counts_t.append(
+                fetched.groupBy("host").agg(F.count(F.lit(1)).alias("n"))
+                .withColumn("round", F.lit(r.rnd)).repartition(1),
+                {"round": r.rnd},
+            )
+        # the host_state append overlaps the tail stages (independent tables,
+        # immutable plans). Leaving the block joins it before ANY exit: a
+        # retried round must not race it through SnapshotTable's
+        # unsynchronized manifest read-modify-write.
+        with ThreadPoolExecutor(1, thread_name_prefix="host_state-append") as pool:
+            jars = None
+            if st["any_cookies"]:
+                jars = pool.submit(self.host_state_t.append, self._jar_updates(r, fetched), {"round": r.rnd})
+            next_frontier, n_new_links = self._next_frontier(r, st)
+            r.snaps["frontier"] = self.frontier_t.overwrite(next_frontier, {"round": r.rnd})
+        if jars is not None:
+            r.snaps["host_state"] = jars.result()
+        stats = {
+            "round": r.rnd,
+            "candidates": int(r.cand_obs.get["n"]),
+            "selected": int(st["n"]),
+            "fetched": int(st["n"]),
+            "errors": int(st["errors"] or 0),
+            "not_modified": int(st["nm"] or 0),
+            "new_links": n_new_links,
+            "duration_sec": time.time() - t0,
+            "ts": time.time(),
+        }
+        # driver-side parquet append — a metrics row is not worth a Spark job
+        self.metrics_t.append_rows([tuple(stats.values())], {"round": r.rnd})
+        if (
+            self.opts.compact_seen_every is not None
+            and (r.rnd + 1) % self.opts.compact_seen_every == 0
+        ):
+            # a long crawl appends one seen dir per round; compaction keeps
+            # scans from paying one listing each. The seen index rebuilds on
+            # its next sync — the knob's documented cost, hence off by default
+            self.seen_t.compact(target_files=self.opts.compact_target_files)
+        self._round = r.rnd + 1
+        stats["done"] = False
+        return stats
 
-        # 1. deterministic within-round dedup (first seq wins). The
-        # explicit repartition(key) serves double duty: the groupBy reuses
-        # its hash partitioning (one shuffle, not two), AQE can't coalesce
-        # it (user-specified), and the uniform key-hash distribution is
-        # exactly what the unpaced fetch stage wants — so the fused UDF can
-        # run directly on the dedup output with no further exchange.
-        cand = dedup_within_round(frontier.repartition(par * 2, F.col("key")))
-        if self.opts.max_depth is not None:
-            cand = cand.where(F.col("depth") <= self.opts.max_depth)
-        if self.opts.url_allow or self.opts.url_deny:
-            cand = apply_url_scope(cand, self.opts.url_allow, self.opts.url_deny)
-
-        # 2. exactly-once filter (``_reject_seen``): the shard-local
-        # probe of the seen index at scale, the exact anti-join while the
-        # seen side is still broadcast-small. `force` ignores seen
-        # entirely — no filter, no sync.
-        use_shards = (
+    def _select(self, r: _Round, offered: int, budget: int | None) -> DataFrame:
+        """The round's fetch list: the frontier deduped by key, probed
+        against seen, filtered, capped per host and cut to ``budget``, each
+        row with its site's cookie jar. Fixes the round's probe and pacing
+        plans in ``r``."""
+        par = self.spark.sparkContext.defaultParallelism
+        r.frontier = self.frontier_t.read()
+        # deterministic within-round dedup (first seq wins). The explicit
+        # repartition(key) serves double duty: the groupBy reuses its hash
+        # partitioning (one shuffle, not two), AQE can't coalesce it
+        # (user-specified), and the uniform key-hash distribution is exactly
+        # what the unpaced fetch stage wants — so the fused UDF can run
+        # directly on the dedup output with no further exchange.
+        cand = dedup_within_round(r.frontier.repartition(par * 2, F.col("key")))
+        # exactly-once filter: the shard-local probe of the seen index at
+        # scale, the exact anti-join while the seen side is still
+        # broadcast-small. `force` ignores seen entirely — no filter, no sync.
+        r.use_shards = (
             self.opts.exact_shards
             if self.opts.exact_shards is not None
             else self.seen_t.approx_rows() > EXACT_SHARDS_AUTO_ROWS
@@ -633,68 +759,44 @@ class Crawler:
         if not self.opts.force:
             cand = self._reject_seen(
                 cand,
-                use_shards,
+                r.use_shards,
                 expires=self.opts.expires,
                 force_errors=self.opts.force_errors,
             )
-
-        # 3. robots gating (north-rule addition; reference lacks it)
-        if self.robots is not None:
-            cand = apply_robots(cand, self.robots)
-        # the round's candidate count, observed when the fetched write
-        # runs (no job of its own). It sits below shuffles, so a recomputed
-        # stage can only overcount it — and an overcount only turns off the
-        # next-frontier skip of step 8.
-        cand_obs = Observation()
-        cand = cand.observe(cand_obs, F.count(F.lit(1)).alias("n"))
-
-        # 4. politeness cap + global budget
-        # The host window runs only where it can bind: cap=None skips it
-        # (an unpaced bulk crawl has no per-round politeness budget, and
-        # key-hash partitioning from the dedup already bounds fetch skew),
-        # and so does a frontier of at most per_host_cap rows — no host can
-        # hold more than the whole frontier.
-        # host_budget adds a lifetime per-host limit: spend-so-far is an
-        # O(hosts) aggregate of the per-round ledger, broadcast into the
-        # same window the per-round cap uses (one window either way).
+        # the candidate count, observed when the fetched write runs (no job
+        # of its own). It sits below shuffles, so a recomputed stage can only
+        # overcount it — and an overcount only turns off the next frontier's
+        # nothing-held-back shortcut.
+        cand = self._fetchable(cand).observe(r.cand_obs, F.count(F.lit(1)).alias("n"))
+        # politeness cap + global budget. The host window runs only where it
+        # can bind: cap=None skips it (key-hash partitioning from the dedup
+        # already bounds fetch skew), and so does a frontier of at most
+        # per_host_cap rows. host_budget's lifetime limit rides the same
+        # window as a broadcast of each host's remaining spend.
         capped = self.opts.host_budget is not None or (
             self.opts.per_host_cap is not None and offered > self.opts.per_host_cap
         )
-        host_remaining = None
-        if (
-            self.opts.host_budget is not None
-            and self.host_counts_t.current_snapshot() is not None
-        ):
-            host_remaining = (
-                self.host_counts_t.read()
-                .groupBy("host")
-                .agg(
-                    (F.lit(self.opts.host_budget) - F.sum("n")).alias("remaining")
-                )
-            )
         # A paced round's fetch partitions by host (partition_by_host).
         # Partitioning the cap window's input the same way lets that one
         # exchange serve both: the fetch's repartition then finds its
         # partitioning already in place and is planned away.
-        host_delays = self._throttle_delays(rnd)
-        paced = self.opts.rate_limit > 0 or host_delays is not None
+        r.host_delays = self._throttle_delays(r.rnd)
+        paced = self.opts.rate_limit > 0 or r.host_delays is not None
+        selected = cand
         if capped:
             selected = per_host_cap(
                 partition_by_host(cand) if paced else cand,
                 self.opts.per_host_cap,
-                host_remaining=host_remaining,
+                host_remaining=self._host_remaining(),
                 default_remaining=self.opts.host_budget,
             )
-        else:
-            selected = cand
-        if round_budget is not None and round_budget > LARGE_BUDGET_ROWS:
+        if budget is not None and budget > LARGE_BUDGET_ROWS:
             # the distributed top-k's range partitioning samples its input in
             # a pass of its own, which the observation would count as well.
             # An Observation keeps the metrics of the first action on its
             # plan, so an exact count taken first pins it.
             cand.count()
-        selected = take_round_budget(selected, round_budget)
-
+        selected = take_round_budget(selected, budget)
         # Pin fetch parallelism. AQE sizes shuffle partitions by BYTES
         # (64 MB advisory), but frontier rows are slim while per-row fetch
         # cost is high — AQE would coalesce a 10 MB frontier to one task and
@@ -704,9 +806,10 @@ class Crawler:
         # partitioning from the dedup repartition (no second shuffle); unpaced
         # paths that re-cluster rows (host window, budget sort) get an
         # explicit round-robin repartition instead.
-        if not paced and (capped or round_budget is not None):
+        if not paced and (capped or budget is not None):
             selected = selected.repartition(par * 2)
-
+        if self.host_state_t.current_snapshot() is None:
+            return selected
         # C11: seed each host's cookie jar from the persisted host_state.
         # RFC 6265 domain cookies cross sibling subdomains, so the seeding
         # key is the registrable SITE (cookies.site_key): per-host latest
@@ -717,48 +820,34 @@ class Crawler:
         # per-request host/path/expiry scoping happens inside the fetch
         # UDF (cookies_for), so a sibling's host-only cookies ride along
         # but are never sent and never re-persisted (own_records).
-        if self.host_state_t.current_snapshot() is not None:
-            from sinew_spark.functions.cookies import site_key_expr
+        from sinew_spark.functions.cookies import site_key_expr
 
-            # single groupBy(site) stage: the per-record (modification
-            # stamp) merge already supersedes a host's older rows, so no
-            # separate per-host max_by pass is needed
-            run_stamp = self._run_started_at
+        jars = _merge_jars(
+            self.host_state_t.read().withColumn("site", site_key_expr(F.col("host"))),
+            "site", "round", "host_cookies", self._run_started_at,
+        )
+        return (
+            selected.withColumn("site", site_key_expr(F.col("host")))
+            .join(F.broadcast(jars), "site", "left_outer")
+            .drop("site")
+        )
 
-            def _merge_site(pdf):
-                import pandas as _pd
+    def _commit_fetched(self, r: _Round, selected: DataFrame) -> int:
+        """Fetch + parse ``selected``, FUSED into one UDF pass (one Arrow
+        crossing; the body never re-enters Python just to be parsed), and
+        commit the rows. The whole dedup->cap->fetch->parse pipeline
+        materializes exactly once, at this write; later stages read the
+        committed delta back.
 
-                from sinew_spark.functions.cookies import merge_host_jars
-
-                js = merge_host_jars(
-                    list(zip(pdf["round"], pdf["host"], pdf["cookies"])),
-                    now=run_stamp,
-                )
-                return _pd.DataFrame(
-                    {"site": [pdf["site"].iloc[0]], "host_cookies": [js]}
-                )
-
-            merged = (
-                self.host_state_t.read()
-                .withColumn("site", site_key_expr(F.col("host")))
-                .select("site", "round", "host", "cookies")
-                .groupBy("site")
-                .applyInPandas(_merge_site, "site string, host_cookies string")
-            )
-            selected = (
-                selected.withColumn("site", site_key_expr(F.col("host")))
-                .join(F.broadcast(merged), "site", "left_outer")
-                .drop("site")
-            )
-
-        # 4.6: conditional-revalidation validators. Only recrawl modes can
-        # re-offer a seen key, so the join exists only there. The validator
-        # side is a 3-column pruned scan of fetched history (etag-bearing
-        # rows only) reduced to latest-per-key — O(corpus) once per round,
-        # which a recrawl round already is; the payoff is that every
-        # unchanged page then costs a ~200-byte 304 instead of body
-        # transfer + re-parse. Keyed on the request-identity hash, same
-        # hash the frontier is already partitioned by.
+        The round's stats ride the write as observed metrics in its result
+        stage (one row to the driver, never the keys): fetched and error
+        tallies, redirect presence (any row with hops or a moved final_url
+        — decides whether the seen commit needs its union+groupBy dedup)
+        and cookie presence (decides whether host_state is written)."""
+        # conditional-revalidation validators: only recrawl modes can
+        # re-offer a seen key, so the join exists only there. A 3-column
+        # pruned scan of fetched history reduced to latest-per-key; every
+        # unchanged page then costs a ~200-byte 304 instead of a body.
         validators = None
         if (
             self.opts.revalidate
@@ -766,14 +855,6 @@ class Crawler:
             and self.fetched_t.current_snapshot() is not None
         ):
             validators = latest_validators(self.fetched_t.read())
-
-        # 5. fetch + parse, FUSED into one UDF pass (one Arrow crossing; the
-        # body never re-enters Python just to be parsed). The whole
-        # dedup->cap->fetch->parse pipeline materializes exactly ONCE — at
-        # the fetched_t commit below; downstream stages then read the
-        # committed parquet back (columnar, pruned — the seen/links/span
-        # projections each touch only their columns). Emptiness is detected
-        # from the write's observed row count (step 6).
         fetched_out = fetch_rows(
             selected,
             self.fetcher,
@@ -781,26 +862,13 @@ class Crawler:
             retries=self.opts.retries,
             proxies=list(self.opts.proxies),
             parse=True,
-            host_delays=host_delays,
+            host_delays=r.host_delays,
             validators=validators,
         )
-
-        # 6. commit fetched + seen (including one entry per redirect hop,
-        #    base.rb:209-211). The round's stats ride the fetched write as
-        #    observed metrics: selected / error tallies AND redirect
-        #    presence — which decides whether the seen commit needs the
-        #    union+groupBy dedup at all. The observe is the last node before
-        #    the write, so it runs in the write's result stage, whose task
-        #    metrics Spark merges once; a single row reaches the driver
-        #    (never the keys; at the 10^10 design point a per-round key pull
-        #    would be ~10^8 rows). Redirect presence is a per-row guard (any
-        #    row with hops or a moved final_url), robust to legacy
-        #    sizeOfNull semantics.
         err_cond = (F.col("status") >= 500) | (F.col("status") < 0)
-        st_obs = Observation()
-        snap = self.fetched_t.append(
-            fetched_out.withColumn("round", F.lit(rnd)).observe(
-                st_obs,
+        return self.fetched_t.append(
+            fetched_out.withColumn("round", F.lit(r.rnd)).observe(
+                r.fetch_obs,
                 F.count(F.lit(1)).alias("n"),
                 F.sum(F.when(err_cond, 1).otherwise(0)).alias("errors"),
                 F.sum(F.when(F.col("status") == 304, 1).otherwise(0)).alias("nm"),
@@ -812,62 +880,32 @@ class Crawler:
                 ).alias("any_moved"),
                 F.max(F.col("cookies").isNotNull().cast("int")).alias("any_cookies"),
             ),
-            {"round": rnd},
+            {"round": r.rnd},
         )
-        st = st_obs.get
-        n_candidates = int(cand_obs.get["n"])
-        # read this round's rows back from the just-committed snapshot delta:
-        # downstream projections are columnar scans with pruning, no JVM
-        # cache. Splits sized to cores — the compressed delta is small per
-        # byte but parse-heavy per row, so default 128 MB splits would
-        # serialize the parse stage (measured: 4x wall on local[8]).
-        fetched = self.fetched_t.read_delta(snap, target_partitions=par * 2)
-        mark("fetch+commit")
-        has_redirects = bool((st["hop_rows"] or 0) > 0 or (st["any_moved"] or 0) > 0)
-        n_fetched = int(st["n"])
-        if n_fetched == 0:
-            # every frontier row was seen, blocked or filtered, so nothing
-            # was fetched: skip the empty seen append — it's history
-            # noise (one vacuous snapshot per drained run at scale) and it
-            # would leave the just-synced probe sidecars one empty
-            # snapshot behind, forcing interactive status()/cached() off
-            # the driver-local fast path
-            return {"round": rnd, "selected": 0, "done": True}
-        seen_new = fetched.select(
+
+    def _commit_seen(self, r: _Round, fetched: DataFrame, st: dict) -> int:
+        """Commit the round's seen delta: one row per fetched key, plus one
+        per redirect hop and moved final URL (base.rb:209-211). On the
+        shard path the seen index absorbs it right away, so the pruning
+        probe and status()/cached() read it even when nothing is left to
+        prune."""
+        seen = fetched.select(
             "key",
             F.col("canonical_url").alias("url"),
             "method",
             "status",
             "fetched_at",
             F.lit(None).cast("string").alias("hop_of"),
-            F.lit(rnd).alias("round"),
+            F.lit(r.rnd).alias("round"),
         )
-        hops = (
-            fetched.select(
-                F.col("canonical_url").alias("hop_of"),
-                F.explode("hops").alias("hop_url"),
-                "fetched_at",
+        if st["hop_rows"] or st["any_moved"]:
+            hops = fetched.select("canonical_url", "fetched_at", F.explode("hops").alias("to"))
+            moved = fetched.where(F.col("final_url") != F.col("canonical_url"))
+            union = seen.unionByName(
+                self._redirect_seen(hops, F.lit(302), r.rnd)
+            ).unionByName(
+                self._redirect_seen(moved.withColumn("to", F.col("final_url")), F.col("status"), r.rnd)
             )
-            .withColumn("url", self.canonicalize(F.col("hop_url")))
-            .withColumn("method", F.lit("GET"))
-            .withColumn("status", F.lit(302))
-            .withColumn(
-                "key", request_key_expr(F.col("method"), F.col("url"), F.lit(""))
-            )
-            .select("key", "url", "method", "status", "fetched_at", "hop_of", F.lit(rnd).alias("round"))
-        )
-        # also mark the final_url identity as seen when redirects moved us
-        finals = (
-            fetched.where(F.col("final_url") != F.col("canonical_url"))
-            .withColumn("url", self.canonicalize(F.col("final_url")))
-            .withColumn("method", F.lit("GET"))
-            .withColumn("key", request_key_expr(F.col("method"), F.col("url"), F.lit("")))
-            .select(
-                "key", "url", "method", "status", "fetched_at",
-                F.col("canonical_url").alias("hop_of"), F.lit(rnd).alias("round"),
-            )
-        )
-        if has_redirects:
             # deterministic key-dedup: a directly-fetched row beats a hop
             # row for the same key (replay determinism — dropDuplicates
             # picks arbitrarily). (kind, url) alone can tie — two pages
@@ -875,8 +913,9 @@ class Crawler:
             # with identical key and url — so the ordering continues
             # through (status, fetched_at, hop_of) to stay total: lowest
             # status, then earliest stamp, then lexicographic hop parent.
-            union = seen_new.unionByName(hops).unionByName(finals)
-            all_seen_new = (
+            # Without redirects keys are already unique within the round
+            # and the shuffle is skipped.
+            seen = (
                 union.groupBy("key")
                 .agg(
                     F.min_by(
@@ -892,231 +931,126 @@ class Crawler:
                 )
                 .select("r.*")
             )
-        else:
-            # no hops, no moved finals this round (the common case): keys
-            # are already unique within the round, so the union+groupBy
-            # dedup shuffle is pure overhead — commit the projection
-            # directly (shuffle-free pruned scan + write)
-            all_seen_new = seen_new
-        # keys are unique after the round dedup and a direct row wins the
-        # min_by, so the seen delta's direct rows are exactly the fetched
-        # rows: the observed tallies are the seen commit's too
-        self.seen_t.append(all_seen_new, {"round": rnd})
-        mark("seen_commit")
+        sid = self.seen_t.append(seen, {"round": r.rnd})
+        if r.use_shards:
+            self._seen_keys.sync(self.seen_t)
+        return sid
 
-        # host_budget spend ledger: one O(hosts) append per round (pruned
-        # 1-column scan of the round's delta; 304 revalidations count —
-        # they are requests against the host's politeness budget)
-        if self.opts.host_budget is not None:
-            self.host_counts_t.append(
-                fetched.groupBy("host")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .withColumn("round", F.lit(rnd))
-                .repartition(1),
-                {"round": rnd},
-            )
-
-        # C11: persist each host's final cookie jar for the next round as a
-        # distributed DataFrame append (never an O(hosts) driver collect —
-        # at 10^7 cookie-bearing hosts that pull is exactly the O(rows)
-        # driver hop the rest of the loop eliminated). Cookie presence
-        # rides the observed round stats, so cookie-oblivious fetchers
-        # (null jar column) skip the agg+append job entirely.
-        cookie_thread = None
-        cookie_err: list[BaseException] = []
-        if bool(st["any_cookies"] or 0):
-            # per-RECORD merge of the host's row jars (not whole-jar
-            # max_by): rows of one host can land on different partitions
-            # within a round, each seeing only its own sets/deletes — the
-            # record-level (modification-stamp) merge keeps all of them,
-            # and tombstones let a delete beat an untouched stale copy.
-            run_stamp = self._run_started_at
-
-            def _merge_host(pdf):
-                import pandas as _pd
-
-                from sinew_spark.functions.cookies import merge_host_jars
-
-                js = merge_host_jars(
-                    list(zip(pdf["seq"], pdf["host"], pdf["cookies"])),
-                    # run-start stamp: replay-stable within the run; GC of
-                    # records expired >30d ago bounds long-crawl jar growth
-                    now=run_stamp,
-                )
-                return _pd.DataFrame({"host": [pdf["host"].iloc[0]], "cookies": [js]})
-
-            jar_updates = (
-                fetched.where(F.col("cookies").isNotNull())
-                .select("host", "seq", "cookies")
-                .groupBy("host")
-                .applyInPandas(_merge_host, "host string, cookies string")
-                .withColumn("round", F.lit(rnd))
-                # O(hosts-that-set-cookies) rows — one output file. A
-                # repartition (shuffle barrier), NOT coalesce: coalesce(1)
-                # would pull the whole merge UDF into a single task
-                .repartition(1)
-            )
-            # overlap the small append job with the round's tail stages
-            # (links/frontier) — independent tables, immutable plans;
-            # joined BEFORE the metrics commit so the round-done marker
-            # still implies durable cookie state (resume invariant)
-            import threading
-
-            def _append_jars():
-                try:
-                    self.host_state_t.append(jar_updates, {"round": rnd})
-                except BaseException as exc:  # re-raised at join
-                    cookie_err.append(exc)
-
-            cookie_thread = threading.Thread(target=_append_jars, daemon=True)
-            cookie_thread.start()
-        mark("host_state")
-        try:
-            # 7. documents = pure VIEW over the fused commit. Spans were already
-            # written once (step 6); re-encoding them into a second parquet
-            # table costed ~20s/round at 32 cores for zero information. The view
-            # projects lazily; parquet column pruning means document readers
-            # never touch bodies.
-            mark("docs_view")
-
-            # 8. next frontier: leftover (held back by the cap or the budget)
-            # + discovered links. Everything that can never be fetched must
-            # leave the frontier or the loop never drains (_prune_frontier).
-            # When every candidate was fetched, nothing was held back and no
-            # old frontier row can survive that pruning. Each one was
-            #   - a candidate: now seen (in the force modes: attempted this
-            #     run);
-            #   - collapsed into a candidate by the key dedup: same key;
-            #   - dropped by depth, scope or robots: the same filters run
-            #     again;
-            #   - rejected by the round-start probe: the pruning probe
-            #     rejects a superset in every mode (plain, TTL, force_errors;
-            #     force rejects nothing at round start).
-            # host_budget rounds need no case of their own: a held-back row
-            # makes the observed candidate count exceed the fetched count.
-            leftover = None if n_candidates == n_fetched else frontier
-            next_frontier = leftover
-            n_new_links = 0
-            if self.opts.follow_links:
-                parsed = self.documents_t.read_delta(snap)
-                links = parsed.select(
-                    F.col("seq").alias("parent_seq"),
-                    F.col("depth").alias("parent_depth"),
-                    F.posexplode("links").alias("link_idx", "url"),
-                )
-                # deterministic seq: parent slot + in-document order. The
-                # per-page outlink cap (standard crawler practice — Heritrix
-                # and Nutch both cap outlinks) keeps every link's seq inside
-                # its parent's LINK_STRIDE slot: without it link 1000 of
-                # parent p would collide with link 1 of parent p+1, and seq
-                # collisions break the replay-determinism the within-round
-                # dedup and budget selection are built on. Dropped links are
-                # deterministically the TRAILING ones in document order.
-                links = links.where(F.col("link_idx") < LINK_STRIDE - 1)
-                links = links.select(
-                    F.col("url"),
-                    F.lit("GET").alias("method"),
-                    F.lit("").alias("body"),
-                    (F.col("parent_depth") + 1).cast("double").alias("priority"),
-                    (F.col("parent_depth") + 1).alias("depth"),
-                    (F.col("parent_seq") * LINK_STRIDE + F.col("link_idx") + 1).alias("seq"),
-                    F.lit(0).alias("attempt"),
-                )
-                new_frontier_rows = prepare_frontier(links, self.canonicalize)
-                if self.opts.trap_max_urls is not None:
-                    # crawl-trap guard (operators/traps.py): template-explosion /
-                    # depth / cycle detection over THIS round's discovered links,
-                    # flagged templates pruned by broadcast anti-join before they
-                    # ever enter the frontier. Per-round detection is the
-                    # practical guard — explosions show up within one round's
-                    # fan-out (a calendar mints hundreds of same-template links
-                    # per page batch); anything slower leaks at most one round.
-                    from sinew_spark.operators.traps import (
-                        detect_crawl_traps,
-                        prune_traps,
-                    )
-
-                    traps = detect_crawl_traps(
-                        new_frontier_rows,
-                        url_col="canonical_url",
-                        max_urls_per_template=self.opts.trap_max_urls,
-                        max_depth=self.opts.trap_max_depth,
-                        max_repeated_segments=self.opts.trap_max_repeats,
-                    )
-                    new_frontier_rows = prune_traps(
-                        new_frontier_rows, traps, url_col="canonical_url"
-                    )
-                n_new_links = new_frontier_rows.count()
-                next_frontier = (
-                    new_frontier_rows
-                    if leftover is None
-                    else leftover.unionByName(new_frontier_rows)
-                )
-            if next_frontier is None:
-                # an empty next frontier, committed driver-side with no job.
-                # The pruning probe would have synced the seen index; sync it
-                # anyway, so status()/cached() stay driver-local and the
-                # next round-start sync is a no-op
-                if use_shards:
-                    self._seen_keys.sync(self.seen_t)
-                self.frontier_t.overwrite([], {"round": rnd})
-            else:
-                self.frontier_t.overwrite(
-                    self._prune_frontier(next_frontier, use_shards), {"round": rnd}
-                )
-            mark("next_frontier")
-        finally:
-            # join the host_state append before ANY exit from the tail
-            # stages (ADVICE r3): an exception in links/frontier must not
-            # leave the append racing a retried run_round -- the manifest
-            # read-modify-write in SnapshotTable._new_snapshot is not
-            # synchronized across threads, so a second concurrent append
-            # could silently drop one host_state snapshot.
-            if cookie_thread is not None:
-                cookie_thread.join()
-        if cookie_err:
-            raise cookie_err[0]
-        if profile:
-            prev = t0
-            for label, tm in marks:
-                print(f"  [round {rnd}] {label:15s} {tm - prev:7.2f}s", flush=True)
-                prev = tm
-
-        dur = time.time() - t0
-        stats = {
-            "round": rnd,
-            "candidates": n_candidates,
-            "selected": n_fetched,
-            "fetched": n_fetched,
-            "errors": int(st["errors"] or 0),
-            "not_modified": int(st["nm"] or 0),
-            "new_links": n_new_links,
-            "duration_sec": dur,
-            "ts": time.time(),
-        }
-        # driver-side parquet append — a metrics row is not worth a Spark job
-        self.metrics_t.append_rows(
-            [tuple(stats.values())], {"round": rnd}
+    def _redirect_seen(self, rows: DataFrame, status, rnd: int) -> DataFrame:
+        """Seen rows for the GET identity of each row's redirect target
+        ``to`` (a hop or the moved final URL); hop_of is the fetched row's
+        canonical URL."""
+        return rows.select(
+            self.canonicalize(F.col("to")).alias("url"),
+            status.alias("status"),
+            "fetched_at",
+            F.col("canonical_url").alias("hop_of"),
+        ).select(
+            request_key_expr(F.lit("GET"), F.col("url"), F.lit("")).alias("key"),
+            "url",
+            F.lit("GET").alias("method"),
+            "status",
+            "fetched_at",
+            "hop_of",
+            F.lit(rnd).alias("round"),
         )
-        # periodic seen-table maintenance: a long crawl appends one data
-        # dir per round; without compaction a 10^5-round crawl pays 10^5
-        # directory listings per scan. A 'compact' snapshot is an EMPTY
-        # incremental delta (snapshots.py), so downstream consumers skip
-        # it; the seen shard stores rebuild on their next sync — that
-        # amortized rebuild is the knob's documented cost, hence off by
-        # default and tuned to every-N-rounds.
-        if (
-            self.opts.compact_seen_every is not None
-            and (rnd + 1) % self.opts.compact_seen_every == 0
-        ):
-            self.seen_t.compact(target_files=self.opts.compact_target_files)
-        self._round = rnd + 1
-        stats["done"] = False
-        return stats
+
+    def _jar_updates(self, r: _Round, fetched: DataFrame) -> DataFrame:
+        """C11: each host's final cookie jar this round, for host_state — a
+        distributed append, never an O(hosts) driver collect. The merge is
+        per RECORD, not whole-jar max_by: rows of one host can land on
+        different partitions, each seeing only its own sets/deletes, and
+        tombstones let a delete beat an untouched stale copy."""
+        return (
+            _merge_jars(
+                fetched.where(F.col("cookies").isNotNull()),
+                "host", "seq", "cookies", self._run_started_at,
+            )
+            .withColumn("round", F.lit(r.rnd))
+            # O(hosts-that-set-cookies) rows — one output file. A
+            # repartition (shuffle barrier), NOT coalesce: coalesce(1)
+            # would pull the whole merge UDF into a single task
+            .repartition(1)
+        )
+
+    def _next_frontier(self, r: _Round, st: dict) -> tuple[DataFrame | list, int]:
+        """The next frontier and the count of links discovered this round:
+        leftover (held back by the cap or the budget) plus discovered links,
+        without everything that can never be fetched (_prune_frontier) or
+        the loop never drains. [] — committed with no job — when nothing is
+        left.
+
+        When every candidate was fetched, nothing was held back and no old
+        frontier row can survive the pruning. Each one was
+          - a candidate: now seen (in the force modes: attempted this run);
+          - collapsed into a candidate by the key dedup: same key;
+          - dropped by depth, scope or robots: the same filters run again;
+          - rejected by the round-start probe: the pruning probe rejects a
+            superset in every mode (plain, TTL, force_errors; force rejects
+            nothing at round start).
+        host_budget rounds need no case of their own: a held-back row makes
+        the observed candidate count exceed the fetched count."""
+        rows = None if r.cand_obs.get["n"] == st["n"] else r.frontier
+        n_new_links = 0
+        if self.opts.follow_links:
+            links = self._discovered_links(r)
+            n_new_links = links.count()
+            rows = links if rows is None else rows.unionByName(links)
+        if rows is None:
+            return [], n_new_links
+        return self._prune_frontier(rows, r.use_shards), n_new_links
+
+    def _discovered_links(self, r: _Round) -> DataFrame:
+        """This round's outlinks as frontier rows (crawl traps pruned)."""
+        parsed = self.documents_t.read_delta(r.snaps["fetched"])
+        links = parsed.select(
+            F.col("seq").alias("parent_seq"),
+            F.col("depth").alias("parent_depth"),
+            F.posexplode("links").alias("link_idx", "url"),
+        )
+        # deterministic seq: parent slot + in-document order. The per-page
+        # outlink cap (standard crawler practice — Heritrix and Nutch both
+        # cap outlinks) keeps every link's seq inside its parent's
+        # LINK_STRIDE slot: without it link 1000 of parent p would collide
+        # with link 1 of parent p+1, and seq collisions break the
+        # replay-determinism the within-round dedup and budget selection are
+        # built on. Dropped links are deterministically the TRAILING ones in
+        # document order.
+        links = links.where(F.col("link_idx") < LINK_STRIDE - 1).select(
+            F.col("url"),
+            F.lit("GET").alias("method"),
+            F.lit("").alias("body"),
+            (F.col("parent_depth") + 1).cast("double").alias("priority"),
+            (F.col("parent_depth") + 1).alias("depth"),
+            (F.col("parent_seq") * LINK_STRIDE + F.col("link_idx") + 1).alias("seq"),
+            F.lit(0).alias("attempt"),
+        )
+        rows = prepare_frontier(links, self.canonicalize)
+        if self.opts.trap_max_urls is None:
+            return rows
+        # crawl-trap guard (operators/traps.py): template-explosion / depth /
+        # cycle detection over THIS round's discovered links, flagged
+        # templates pruned by broadcast anti-join before they ever enter the
+        # frontier. Per-round detection is the practical guard — explosions
+        # show up within one round's fan-out (a calendar mints hundreds of
+        # same-template links per page batch); anything slower leaks at most
+        # one round.
+        from sinew_spark.operators.traps import detect_crawl_traps, prune_traps
+
+        traps = detect_crawl_traps(
+            rows,
+            url_col="canonical_url",
+            max_urls_per_template=self.opts.trap_max_urls,
+            max_depth=self.opts.trap_max_depth,
+            max_repeated_segments=self.opts.trap_max_repeats,
+        )
+        return prune_traps(rows, traps, url_col="canonical_url")
 
     def run(self, max_rounds: int | None = None) -> list[dict]:
         """Run rounds until the frontier drains or max_rounds. Safe to call
-        again after a crash — state is whatever the snapshot tables say."""
+        again after a crash, from a new Crawler over the same workdir: a
+        round is committed by its metrics row, and one that died before it
+        is rolled back and rerun (``_recover``)."""
         out = []
         for _ in range(max_rounds or self.opts.max_rounds):
             stats = self.run_round()

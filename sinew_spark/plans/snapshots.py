@@ -528,13 +528,15 @@ class SnapshotTable:
             out = out.unionByName(p)
         return out
 
-    def rollback_to(self, snapshot_id: int) -> None:
-        """Point current at an older snapshot (resume-from-checkpoint)."""
+    def rollback_to(self, snapshot_id: int | None) -> None:
+        """Point current at an older snapshot (resume-from-checkpoint);
+        None returns the table to empty, and its next commit starts a new
+        lineage."""
         m = self._read_manifest()
         snap = next((s for s in m["snapshots"] if s["id"] == snapshot_id), None)
-        if snap is None:
+        if snap is None and snapshot_id is not None:
             raise KeyError(f"snapshot {snapshot_id} not found")
-        if snap.get("expired"):
+        if snap is not None and snap.get("expired"):
             raise ValueError(
                 f"snapshot {snapshot_id} is expired (its data files were "
                 "garbage-collected by expire_snapshots)"

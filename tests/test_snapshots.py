@@ -35,6 +35,21 @@ def test_rollback_resume(spark, tmpdir_path):
     assert sorted(r.k for r in t.read().collect()) == [1, 9]
 
 
+def test_rollback_to_empty(spark, tmpdir_path):
+    """rollback_to(None) empties the table; the next append starts a new
+    lineage holding only its own rows."""
+    t = SnapshotTable(spark, tmpdir_path + "/t", SCHEMA)
+    t.append(spark.createDataFrame([(1, "a"), (2, "b")], SCHEMA))
+    t.rollback_to(None)
+    assert t.current_snapshot() is None
+    assert t.read().count() == 0 and t.approx_rows() == 0
+    sid = t.append(spark.createDataFrame([(9, "z")], SCHEMA))
+    assert t.snapshots()[-1]["parent"] is None
+    assert [r.k for r in t.read().collect()] == [9]
+    assert [r.k for r in t.read_delta(sid).collect()] == [9]
+    assert t.approx_rows() == 1
+
+
 def test_delete_where(spark, tmpdir_path):
     t = SnapshotTable(spark, tmpdir_path + "/t", SCHEMA)
     t.append(spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], SCHEMA))
