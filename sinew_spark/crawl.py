@@ -15,10 +15,11 @@ Durability/resumability: frontier, seen, fetched, host_counts, host_state
 and metrics are snapshot tables (plans/snapshots.py; documents is a view of
 fetched). ``run_round`` commits them in one fixed order — fetched, seen,
 host_counts, host_state, frontier, metrics — and the metrics row is the
-round's commit record: a Crawler opened over a round that died before it
-rolls the round's other commits back (``_recover``), so the round reruns and
-a killed crawl resumes with identical tables and ordering (seq is data, not
-runtime state). The exact seen index
+round's commit record: a round that raises before it rolls its other
+commits back (``_recover``), and so does a Crawler opened over a round that
+died before it, so the round reruns and a killed crawl resumes with
+identical tables and ordering (seq is data, not runtime state). The exact
+seen index
 (sorted shard runs of key + per-class max fetched_at) is snapshot-synced
 truth with an anti-join fallback, and the round's only seen sidecar: every
 probe is a binary search over its worker-cached runs (operators/bloom.py
@@ -49,6 +50,7 @@ Scale notes (100 TB design point):
 
 from __future__ import annotations
 
+import contextlib
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -528,9 +530,9 @@ class Crawler:
         round. Every metrics snapshot records its round in its meta, so
         this is a manifest read; the aggregate over the table runs only
         when a data dir's meta has no round (e.g. after a compaction). The
-        first call (the Crawler's open) and the first after a round that
-        raised also roll back what a round without its metrics row
-        committed (``_recover``)."""
+        first call (the Crawler's open) and the one a raising round makes
+        also roll back what a round without its metrics row committed
+        (``_recover``)."""
         if self._round is None:
             rounds = [m.get("round") for m in self.metrics_t.dir_metas()]
             if None in rounds:
@@ -546,18 +548,17 @@ class Crawler:
     def _recover(self, last: int) -> None:
         """Make the crawl's state that of round ``last``, the newest round
         with a metrics row (-1: none yet). The metrics row is a round's
-        commit record, so every table a round commits to is rolled back
-        along its parent chain to its newest snapshot from no later round;
-        a snapshot without a round (seed, compaction, uncache delete) counts
-        as no later. Manifest reads only; the seen index rebuilds on its
-        next sync (``_delta_chain``: a rollback is never incremental)."""
+        commit record, so every table a round commits to is rolled back to
+        its newest ancestor from no later round (None: empty); a snapshot
+        without a round (seed, compaction, uncache delete) counts as no
+        later. Manifest reads only; the seen index rebuilds on its next sync
+        (``SnapshotTable.since`` has no chain across a rollback)."""
         for t in (self.fetched_t, self.seen_t, self.host_counts_t, self.host_state_t, self.frontier_t):
-            snaps = {s["id"]: s for s in t.snapshots()}
-            cur = sid = t.current_snapshot()
-            while sid is not None and snaps[sid]["meta"].get("round", last) > last:
-                sid = snaps[sid].get("parent")
-            if sid != cur:
-                t.rollback_to(sid)
+            keep = next(
+                (s["id"] for s in t.ancestors() if s["meta"].get("round", last) <= last), None
+            )
+            if keep != t.current_snapshot():
+                t.rollback_to(keep)
 
     @property
     def _semantic(self) -> bool:
@@ -662,14 +663,26 @@ class Crawler:
         """One frontier superstep: select and fetch, then the round's
         commits in their one fixed order — fetched, seen, host_counts,
         host_state, frontier and last the metrics row, the round's commit
-        record. A round that stops before its metrics row is rolled back
-        whole by the next ``current_round()`` and reruns. ``budget``
-        overrides opts.round_budget for this round (recipe limit flow
-        control: fetch at most the rows still needed instead of the whole
-        step)."""
-        t0 = time.time()
+        record. A round that raises is rolled back before the error
+        propagates, through ``current_round()``: to the last round with a
+        metrics row, so a failure after this round's metrics row (the seen
+        compaction) keeps the round, and no seed, uncache or other commit
+        made before the next round stacks on a crashed round's commits. If
+        the rollback raises too, the original error propagates and the next
+        open recovers. ``budget`` overrides opts.round_budget for this round
+        (recipe limit flow control: fetch at most the rows still needed
+        instead of the whole step)."""
         r = _Round(self.current_round())
         self._round = None  # until the metrics row commits: a rerun recovers
+        try:
+            return self._run_round(r, budget)
+        except BaseException:
+            with contextlib.suppress(Exception):
+                self.current_round()
+            raise
+
+    def _run_round(self, r: _Round, budget: int | None) -> dict:
+        t0 = time.time()
         budget = budget if budget is not None else self.opts.round_budget
         offered = self.frontier_t.approx_rows()
         # a drained frontier (manifest row stats) or a round allowed no
@@ -727,8 +740,8 @@ class Crawler:
             and (r.rnd + 1) % self.opts.compact_seen_every == 0
         ):
             # a long crawl appends one seen dir per round; compaction keeps
-            # scans from paying one listing each. The seen index rebuilds on
-            # its next sync — the knob's documented cost, hence off by default
+            # scans from paying one listing each. It holds the same rows, so
+            # the seen index steps over it on its next sync
             self.seen_t.compact(target_files=self.opts.compact_target_files)
         self._round = r.rnd + 1
         stats["done"] = False
@@ -1122,7 +1135,9 @@ class Crawler:
         """Row-level delete (sinew's uncache) — O(delta) end to end at the
         10^10-key design point: a merge-on-read equality-delete snapshot
         (tiny delete file, no table rewrite) that the seen index absorbs
-        as tombstone runs on its next sync (no O(seen) rebuild)."""
+        as tombstone runs on its next sync (no O(seen) rebuild; nor when
+        every MOR_COMPACT_DELETES-th delete compacts the table first, a
+        snapshot the index steps over)."""
         key, _ = self._key_for(url, method, body)
         self.seen_t.delete_keys([key])
 

@@ -23,12 +23,16 @@ out cost nothing measurable either. A future prefilter should be built from the
 index's own runs and support deletion (a cuckoo filter), so it needs no
 sync of its own.
 
-``BloomShardStore.sync()`` keeps the snapshot discipline of the key index:
-meta records the last absorbed seen snapshot id, newer append deltas are
-absorbed, and history that may add keys it lacks rebuilds it, so an
-in-sync bloom contains EVERY key of its seen snapshot. Non-append history
-(uncache's delete, compaction) only ever REMOVES seen keys, so the stale
-bloom is an over-approximation and sync just advances the snapshot id.
+Both stores keep one snapshot discipline: meta records the last absorbed
+seen snapshot id, and ``sync()`` asks the seen table what lies between it
+and the current snapshot (``SnapshotTable.since``, the one parent walk).
+Appends on that chain are absorbed as deltas; a compaction holds the same
+logical rows, so sync just advances past it; an overwrite, and any history
+``since`` cannot chain (a rollback, a parentless root, an expired
+snapshot), rebuilds the store from the seen table. So an in-sync bloom
+contains EVERY key of its seen snapshot. An equality delete (uncache) only
+ever REMOVES seen keys: the index absorbs it as tombstones, and the stale
+bloom stays an over-approximation, so its sync just advances.
 
 Two layers:
 
@@ -214,72 +218,6 @@ def _load_shard(dirpath: str, shard: int) -> "BloomShards | None":
     return hit
 
 
-def _delta_chain(seen_t, from_id: int, cur: int) -> "list[dict] | None":
-    """Snapshots strictly after ``from_id`` on the lineage path to ``cur``,
-    oldest first — or None when ``from_id`` is NOT an ancestor of ``cur``
-    (``rollback_to`` moved current behind the store's recorded snapshot, or
-    onto a divergent branch built on an older snapshot). None means a
-    sidecar store cannot sync incrementally: its shards hold keys from
-    rolled-back snapshots the table no longer contains, and absorbing
-    "newer ids" would silently keep them (exactly-once violation — seen
-    filter drops frontier URLs that were never fetched on this branch).
-
-    Walks the manifest's Iceberg-style ``parent`` pointers. Legacy
-    snapshots without one (pre-parent manifests) fall back to
-    largest-smaller-id order — but ``rollback_to`` predates parent
-    pointers (ADVICE r3), so a legacy manifest can contain an abandoned
-    branch that largest-smaller-id "reaches" (rollback + re-append walks
-    onto snapshots whose keys the table no longer holds → phantom keys in
-    the exact seen shards, the exactly-once violation this walk exists to
-    prevent). The fallback is therefore gated on structural evidence of
-    linear lineage: it is only taken in an ALL-parentless manifest with
-    ``current == max(ids)``, and each fallback step from ``s`` down to its
-    presumed predecessor ``prev`` must satisfy the append-chain invariant
-    ``dirs(prev) ⊆ dirs(s)`` (cumulative data dirs only grow along
-    append/edelete lineage; a legacy rollback+re-append breaks it because
-    the abandoned append's dir is missing from the re-appended snapshot).
-    Ops that legitimately reset dirs (overwrite/compact) can't be
-    validated — unknown provenance. Any unvalidated walk returns None and
-    the store rebuilds, which is always safe."""
-    snaps = {s["id"]: s for s in seen_t.snapshots()}
-    # mixed provenance (parented snapshots stacked on a legacy prefix) or
-    # a parked rollback (current behind the id high-water mark) make the
-    # parentless fallback untrustworthy; compute once up front
-    all_parentless = snaps and all("parent" not in s for s in snaps.values())
-    legacy_linear_ok = bool(
-        all_parentless
-        and cur == max(snaps)
-        and seen_t.current_snapshot() == max(snaps)
-    )
-    chain: list[dict] = []
-    sid = cur
-    while sid is not None and sid != from_id:
-        s = snaps.get(sid)
-        if s is None or s.get("expired"):
-            # expire_snapshots keeps the manifest entry but collected the
-            # files — an incremental absorb across it would read missing
-            # deltas; rebuild from the retained current instead
-            return None
-        chain.append(s)
-        if "parent" in s:
-            sid = s["parent"]
-        elif legacy_linear_ok:
-            older = [i for i in snaps if i < sid]
-            sid = max(older) if older else None
-            if sid is not None:
-                if s.get("op") not in ("append", "edelete"):
-                    return None  # dirs reset: lineage unverifiable
-                prev_dirs = set(snaps[sid].get("dirs", []))
-                if not prev_dirs <= set(s.get("dirs", [])):
-                    return None  # abandoned-branch evidence -> rebuild
-        else:
-            return None  # unknown provenance -> force rebuild
-    if sid != from_id:
-        return None
-    chain.reverse()
-    return chain
-
-
 class BloomShardStore:
     """Directory-backed sharded Bloom sidecar; every probe and update runs
     executor-side on exactly one shard per task (module docstring).
@@ -399,27 +337,22 @@ class BloomShardStore:
     def sync(self, seen_t) -> None:
         """Bring the bloom up to the seen table's current snapshot, so that
         it holds every seen key (module docstring). Append snapshots on the
-        lineage path are absorbed as deltas; edelete/compact only remove
+        ``since`` chain are absorbed as deltas; edelete/compact only remove
         seen keys, so the over-approximate bloom stays fail-safe and the id
         just advances. Everything else rebuilds from the full key set:
-        fresh/legacy/lost sidecar, rollback or divergent history (the
-        shards may hold keys from rolled-back snapshots; phantom keys
-        inflate the false-positive rate), an ``overwrite`` snapshot (may
-        ADD keys; advancing past it would break "bloom contains every
-        seen key" — a false negative), and outgrowing capacity (4x re-size
-        keeps amortized cost O(delta))."""
+        fresh/legacy/lost sidecar, no chain (after a rollback the shards
+        may hold keys from rolled-back snapshots; phantom keys inflate the
+        false-positive rate), an ``overwrite`` snapshot (may ADD keys;
+        advancing past it would break "bloom contains every seen key" — a
+        false negative), and outgrowing capacity (4x re-size keeps
+        amortized cost O(delta))."""
         cur = seen_t.current_snapshot()
         if cur == self.snapshot_id or cur is None:
             return
-        newer = (
-            _delta_chain(seen_t, self.snapshot_id, cur)
-            if self.snapshot_id is not None
-            else None
-        )
-        if newer is None:
-            # fresh/legacy/lost sidecar/rollback: pre-size from manifest
-            # stats (free) so the rebuild lands under the fpp budget in one
-            # pass
+        newer = seen_t.since(self.snapshot_id, cur)  # None when never synced
+        if newer is None or any(s["op"] not in ("append", "edelete", "compact") for s in newer):
+            # pre-size from manifest stats (free) so the rebuild lands under
+            # the fpp budget in one pass
             est = seen_t.approx_rows()
             if est > self.capacity:
                 self.capacity = max(self.capacity * 4, est * 2)
@@ -428,16 +361,9 @@ class BloomShardStore:
         for s in newer:
             if s["op"] == "append":
                 self.add_delta(seen_t.read_delta(s["id"]).select("key"), snapshot_id=s["id"])
-            elif s["op"] in ("edelete", "compact"):
-                # keys only shrink: over-approximation is fail-safe
+            else:  # edelete/compact: keys only shrink, over-approximation is fail-safe
                 self.snapshot_id = s["id"]
                 self._write_meta()
-            else:  # overwrite/unknown may add keys the bloom lacks
-                est = seen_t.approx_rows()
-                if est > self.capacity:
-                    self.capacity = max(self.capacity * 4, est * 2)
-                self.rebuild(seen_t.read().select("key"), snapshot_id=cur)
-                return
         if self.n_added > self.capacity:  # fpp past budget: re-size + rebuild
             self.capacity = max(self.capacity * 4, self.n_added * 2)
             self.rebuild(seen_t.read().select("key"), snapshot_id=cur)
@@ -691,9 +617,11 @@ class SeenKeyShardStore:
     Correctness discipline (this is TRUTH, not an approximation): a
     shard must never be BEHIND the committed seen table when probed, or a
     seen URL would be refetched. ``sync()`` enforces it: meta records the
-    last absorbed seen snapshot id; newer append / equality-delete
-    snapshots are absorbed incrementally, and history the runs can't
-    express (overwrite/compaction, rollback) triggers a full rebuild. The
+    last absorbed seen snapshot id; the append / equality-delete
+    snapshots ``SnapshotTable.since`` chains after it are absorbed
+    incrementally, a compaction is stepped over (same logical rows), and
+    history the runs can't express (an overwrite; no chain: a rollback, a
+    parentless root, an expired snapshot) triggers a full rebuild. The
     probe is refused (caller falls back to the anti-join) only if sync
     was skipped. A crash between seen commit and absorb is repaired by the
     same catch-up on next start — the snapshot id only advances AFTER the
@@ -761,34 +689,26 @@ class SeenKeyShardStore:
         )
 
     def sync(self, seen_t) -> None:
-        """Bring the shards up to the seen table's current snapshot: absorb
-        newer append deltas as add runs and equality-delete snapshots as
-        tombstone runs (both O(delta)), in snapshot order so the run
-        generations reproduce the table's delete-then-re-add semantics;
-        rebuild on history the runs can't express incrementally
-        (overwrite/compaction rewrites the table). A rollback (or a branch
-        built on an older snapshot) is never incremental — the shards
-        would keep keys the table no longer holds and reject_seen would
-        silently drop live frontier URLs, a violation of exactly-once — so
-        lineage is walked via the manifest's parent pointers
-        (``_delta_chain``); any history not reaching the recorded snapshot
-        takes the full-rebuild branch."""
+        """Bring the shards up to the seen table's current snapshot along
+        ``SnapshotTable.since``'s chain: absorb append deltas as add runs
+        and equality-delete snapshots as tombstone runs (both O(delta)), in
+        snapshot order so the run generations reproduce the table's
+        delete-then-re-add semantics; step over compactions (same logical
+        rows, so the runs already hold them). An overwrite rewrites the
+        table, and no chain means a rollback (or a branch built on an older
+        snapshot), a parentless root or an expired snapshot: the shards
+        could keep keys the table no longer holds and reject_seen would
+        silently drop live frontier URLs, a violation of exactly-once, so
+        both rebuild from the full table."""
         cur = seen_t.current_snapshot()
         if cur is None or cur == self.snapshot_id:
             return
-        newer = (
-            _delta_chain(seen_t, self.snapshot_id, cur)
-            if self.snapshot_id is not None
-            else None
-        )
-        incremental = newer is not None and all(
-            s["op"] in ("append", "edelete") for s in newer
-        )
-        if incremental:
+        newer = seen_t.since(self.snapshot_id, cur)  # None when never synced
+        if newer is not None and all(s["op"] in ("append", "edelete", "compact") for s in newer):
             for s in newer:
                 if s["op"] == "append":
                     self._absorb(seen_t.read_delta(s["id"]), "k")
-                else:
+                elif s["op"] == "edelete":
                     self._absorb(seen_t.read_delete_delta(s["id"]), "d")
         else:
             import shutil

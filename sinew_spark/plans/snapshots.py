@@ -12,7 +12,13 @@ snapshot-versioned tables: every commit produces a new immutable snapshot
   delete (Iceberg v2 model — a small delete file of key values, O(delta);
   sinew's `uncache` path), `delete_where` is a copy-on-write rewrite for
   arbitrary predicates,
-- lineage: each snapshot records the operation + round that produced it.
+- lineage: each snapshot records the operation + round that produced it
+  and its parent, the snapshot it was built on. This module is the only
+  reader of the parent pointers: ``ancestors`` walks them (crash recovery,
+  expiry), ``since`` answers what an incremental consumer (the seen
+  index, the Bloom, ``read_delta``'s diff) must absorb to catch up, or
+  None when a rollback, a parentless root or an expired snapshot means it
+  must rebuild.
 
 Merge-on-read sequence rule (Iceberg's): an equality delete applies only
 to data files added BEFORE it, so a key re-appended after a delete is
@@ -25,8 +31,9 @@ cost is amortized over that many point deletes.
 This is the Iceberg table model implemented over plain parquet + a JSON
 manifest, because the sandbox has no Iceberg runtime jars. The API is
 format-agnostic; on a real cluster, swap `SnapshotTable` for Iceberg DDL
-(`CREATE TABLE ... USING iceberg`) — the Crawler only calls
-append/overwrite/read/current_snapshot.
+(`CREATE TABLE ... USING iceberg`) — the Crawler calls
+append/overwrite/read/read_delta, plus ancestors/rollback_to to recover a
+crashed round.
 
 Commit protocol: write data files to a new immutable directory, then
 atomically swap the manifest (write temp + rename). Single-writer (the
@@ -167,15 +174,57 @@ class SnapshotTable:
                 )
         return out
 
-    def _snapshot(self, snapshot_id: int | None = None) -> dict | None:
-        m = self._read_manifest()
+    def _snapshot(self, snapshot_id: int | None = None, m: dict | None = None) -> dict | None:
+        """The live snapshot ``snapshot_id`` (default: current; None for an
+        empty table) — the one lookup every read and rollback goes through.
+        Raises KeyError for an unknown id, ValueError for an expired one."""
+        m = m or self._read_manifest()
         sid = snapshot_id if snapshot_id is not None else m["current"]
         if sid is None:
             return None
-        for s in m["snapshots"]:
-            if s["id"] == sid:
-                return s
-        raise KeyError(f"snapshot {sid} not found in {self.path}")
+        s = next((s for s in m["snapshots"] if s["id"] == sid), None)
+        if s is None:
+            raise KeyError(f"snapshot {sid} not found in {self.path}")
+        if s.get("expired"):
+            raise ValueError(
+                f"snapshot {sid} is expired (its files were garbage-collected "
+                "by expire_snapshots)"
+            )
+        return s
+
+    def ancestors(self, snapshot_id: int | None = None) -> list[dict]:
+        """``snapshot_id`` (default: current) and the snapshots it was built
+        on, newest first, along the Iceberg-style parent pointers —
+        expired ones included (their manifest entries stay). A snapshot
+        without a ``parent`` key is a root. [] for an empty table."""
+        m = self._read_manifest()
+        snaps = {s["id"]: s for s in m["snapshots"]}
+        sid = snapshot_id if snapshot_id is not None else m["current"]
+        if sid is not None and sid not in snaps:
+            raise KeyError(f"snapshot {sid} not found in {self.path}")
+        out = []
+        while sid in snaps:
+            out.append(snaps[sid])
+            sid = snaps[sid].get("parent")
+        return out
+
+    def since(self, from_id: int | None, to_id: int | None = None) -> list[dict] | None:
+        """The snapshots after ``from_id`` on ``to_id``'s (default: current)
+        parent chain, oldest first — what an incremental consumer that has
+        absorbed ``from_id`` must absorb to reach ``to_id``. None when
+        ``from_id`` is not on that chain (``rollback_to`` moved behind it,
+        or onto a branch built on an older snapshot: the consumer holds
+        rows the table no longer does) or an expired snapshot lies between
+        them (its files are gone), and for ``from_id=None`` (nothing
+        absorbed yet): the consumer must rebuild."""
+        chain = []
+        for s in self.ancestors(to_id):
+            if s["id"] == from_id:
+                return chain[::-1]
+            if s.get("expired"):
+                return None
+            chain.append(s)
+        return None
 
     def _new_snapshot(
         self,
@@ -183,24 +232,22 @@ class SnapshotTable:
         op: str,
         meta: dict | None,
         deletes: list[dict] | None = None,
-    ) -> None:
+    ) -> int:
         """``deletes`` is the new snapshot's FULL cumulative equality-delete
         list; None inherits the current snapshot's (appends and edeletes
         carry deletes forward; overwrite/compaction resolves them to [])."""
         m = self._read_manifest()
         if deletes is None:
-            cur = self._snapshot()
+            cur = self._snapshot(m=m)
             deletes = list(cur.get("deletes", [])) if cur else []
-        # max over history, not current: after a rollback, current < max id
-        sid = max((s["id"] for s in m["snapshots"]), default=0) + 1
         m["snapshots"].append(
             {
-                "id": sid,
+                "id": self._next_id(m),
                 # Iceberg-style parent pointer: the snapshot this one was
                 # built on. After rollback_to, ids alone cannot express
                 # lineage (a post-rollback snapshot's state excludes the
-                # rolled-back ones despite their smaller ids); sidecar
-                # stores walk parents to decide incremental vs rebuild.
+                # rolled-back ones despite their smaller ids); ancestors()
+                # and since() walk it.
                 "parent": m["current"],
                 "dirs": dirs,
                 "op": op,
@@ -209,15 +256,21 @@ class SnapshotTable:
                 "deletes": deletes,
             }
         )
-        m["current"] = sid
+        m["current"] = m["snapshots"][-1]["id"]
         self._commit(m)
+        return m["current"]
+
+    @staticmethod
+    def _next_id(m: dict) -> int:
+        # max over history, not current: after a rollback, current < max id
+        return max((s["id"] for s in m["snapshots"]), default=0) + 1
 
     def append(self, df: DataFrame, meta: dict | None = None) -> int:
         """Append rows as a new snapshot (atomic)."""
         d = self._write_data(df.select([f.name for f in self.schema.fields]))
-        cur = self._dirs()
-        self._new_snapshot(cur + [d], "append", {**(meta or {}), "files": self._file_stats([d])})
-        return self.current_snapshot()
+        return self._new_snapshot(
+            self._dirs() + [d], "append", {**(meta or {}), "files": self._file_stats([d])}
+        )
 
     def _write_rows(self, rows: list[tuple]) -> str:
         """Write ``rows`` as one parquet file via pyarrow on the driver — no
@@ -240,9 +293,9 @@ class SnapshotTable:
         parquet file, no Spark job. Readable by read()/read_delta() like any
         snapshot."""
         d = self._write_rows(rows)
-        cur = self._dirs()
-        self._new_snapshot(cur + [d], "append", {**(meta or {}), "files": self._file_stats([d])})
-        return self.current_snapshot()
+        return self._new_snapshot(
+            self._dirs() + [d], "append", {**(meta or {}), "files": self._file_stats([d])}
+        )
 
     def overwrite(self, df: DataFrame | list[tuple], meta: dict | None = None) -> int:
         """Replace the table's rows. A row list is written driver-side like
@@ -251,10 +304,9 @@ class SnapshotTable:
             d = self._write_rows(df)
         else:
             d = self._write_data(df.select([f.name for f in self.schema.fields]))
-        self._new_snapshot(
+        return self._new_snapshot(
             [d], "overwrite", {**(meta or {}), "files": self._file_stats([d])}, deletes=[]
         )
-        return self.current_snapshot()
 
     def compact(self, target_files: int = 1, meta: dict | None = None) -> int:
         """Data-file compaction: rewrite the table's current LOGICAL
@@ -268,21 +320,16 @@ class SnapshotTable:
 
         Incremental consumers are unaffected by design: a compact
         snapshot adds NO logical rows, so ``read_delta`` of it is empty
-        and ``diff`` across it is empty (both test-pinned). Sidecar
-        shard stores can't express a rewrite incrementally and rebuild
-        on their next sync — schedule compactions accordingly (they
-        are rare, amortized maintenance)."""
+        and ``diff`` across it is empty (both test-pinned), and the seen
+        index and the Bloom advance past it on their next sync without
+        a rebuild."""
         if target_files <= 0:
             raise ValueError("target_files must be positive")
         df = self.read().coalesce(target_files)
         d = self._write_data(df.select([f.name for f in self.schema.fields]))
-        self._new_snapshot(
-            [d],
-            "compact",
-            {**(meta or {}), "files": self._file_stats([d])},
-            deletes=[],
+        return self._new_snapshot(
+            [d], "compact", {**(meta or {}), "files": self._file_stats([d])}, deletes=[]
         )
-        return self.current_snapshot()
 
     def delete_where(self, condition, meta: dict | None = None) -> int:
         """Row-level delete via copy-on-write rewrite — for arbitrary
@@ -319,47 +366,33 @@ class SnapshotTable:
             schema=pa.schema([(key_col, _arrow_type(field.dataType))]),
         )
         pq.write_table(tbl, os.path.join(d, "delete-0.parquet"))
-        m = self._read_manifest()
-        sid = max((s["id"] for s in m["snapshots"]), default=0) + 1
-        cur_dirs = self._dirs()
-        self._new_snapshot(
-            cur_dirs,
+        sid = self._next_id(self._read_manifest())
+        return self._new_snapshot(
+            self._dirs(),
             "edelete",
             {**(meta or {}), "n_deleted_keys": len(values)},
             deletes=cur_deletes + [{"id": sid, "dir": d, "key_col": key_col}],
         )
-        return self.current_snapshot()
 
     # --- reads ----------------------------------------------------------------
 
     def _dirs(self, snapshot_id: int | None = None) -> list[str]:
-        m = self._read_manifest()
-        sid = snapshot_id if snapshot_id is not None else m["current"]
-        if sid is None:
-            return []
-        for s in m["snapshots"]:
-            if s["id"] == sid:
-                if s.get("expired"):
-                    raise ValueError(
-                        f"snapshot {sid} is expired (its data files were "
-                        "garbage-collected by expire_snapshots)"
-                    )
-                return s["dirs"]
-        raise KeyError(f"snapshot {sid} not found in {self.path}")
+        s = self._snapshot(snapshot_id)
+        return s["dirs"] if s else []
 
     def dir_metas(self, snapshot_id: int | None = None) -> list[dict]:
         """For each data dir of a snapshot (default: current), the meta of
         the snapshot that added it — e.g. the crawl round that wrote it.
         Manifest read only; [] for an empty table."""
         m = self._read_manifest()
-        sid = snapshot_id if snapshot_id is not None else m["current"]
-        if sid is None:
+        snap = self._snapshot(snapshot_id, m)
+        if snap is None:
             return []
         added: dict[str, dict] = {}
         for s in sorted(m["snapshots"], key=lambda s: s["id"]):
             for d in s["dirs"]:
                 added.setdefault(d, s.get("meta") or {})
-        return [added[d] for d in self._dirs(sid)]
+        return [added[d] for d in snap["dirs"]]
 
     def approx_rows(self, snapshot_id: int | None = None) -> int:
         """Row count of a snapshot from manifest file stats — no Spark job,
@@ -368,18 +401,17 @@ class SnapshotTable:
         equality deletes overcount by the deleted rows — negligible for
         point deletes, and only ever biases strategy selection upward."""
         m = self._read_manifest()
-        sid = snapshot_id if snapshot_id is not None else m["current"]
-        if sid is None:
+        snap = self._snapshot(snapshot_id, m)
+        if snap is None:
             return 0
         dir_rows: dict[str, int] = {}
         for s in m["snapshots"]:
             for f in s["meta"].get("files", []):
                 d = os.path.dirname(f["file"])
                 dir_rows[d] = dir_rows.get(d, 0) + f["rows"]
-        dirs = self._dirs(sid)
-        if not all(d in dir_rows for d in dirs):  # stats missing: count once
-            return self.read(sid).count()
-        return sum(dir_rows[d] for d in dirs)
+        if not all(d in dir_rows for d in snap["dirs"]):  # stats missing: count once
+            return self.read(snap["id"]).count()
+        return sum(dir_rows[d] for d in snap["dirs"])
 
     def _empty(self) -> DataFrame:
         """No rows, in a form the optimizer knows is empty: the false filter
@@ -396,25 +428,16 @@ class SnapshotTable:
         stage is CPU-heavy per row (parse UDF): the default 128 MB splits
         would coalesce a small compressed delta into 1-2 partitions and
         serialize the work regardless of cluster size."""
-        m = self._read_manifest()
-        target = prev = None
-        for s in m["snapshots"]:
-            if s["id"] == snapshot_id:
-                target = s
-                break
-            prev = s
-        if target is None:
-            raise KeyError(f"snapshot {snapshot_id} not found in {self.path}")
-        if target.get("expired"):
-            raise ValueError(
-                f"snapshot {snapshot_id} is expired (its data files were "
-                "garbage-collected by expire_snapshots)"
-            )
+        target = self._snapshot(snapshot_id)
         if target["op"] in ("edelete", "compact"):
             # edelete adds no data files; compact adds no logical ROWS
             # (it only rewrites layout) — both are empty deltas
             return self._empty()
-        prev_dirs = set(prev["dirs"]) if prev and target["op"] == "append" else set()
+        # an append's rows are the dirs it added to its PARENT (not to the
+        # previous manifest entry, which after a rollback is an abandoned
+        # sibling); an overwrite's are all of its dirs
+        parent = self.ancestors(snapshot_id)[1:2] if target["op"] == "append" else []
+        prev_dirs = set(parent[0]["dirs"]) if parent else set()
         new_dirs = [d for d in target["dirs"] if d not in prev_dirs]
         if not new_dirs:
             return self._empty()
@@ -442,11 +465,6 @@ class SnapshotTable:
         """The key values deleted BY the given edelete snapshot — the
         incremental feed for sidecar stores absorbing tombstones."""
         s = self._snapshot(snapshot_id)
-        if s.get("expired"):
-            raise ValueError(
-                f"snapshot {snapshot_id} is expired (its delete files were "
-                "garbage-collected by expire_snapshots)"
-            )
         mine = [dl for dl in s.get("deletes", []) if dl["id"] == snapshot_id]
         if not mine:
             return self.spark.createDataFrame([], T.StructType([]))
@@ -492,10 +510,10 @@ class SnapshotTable:
         (sequence rule — a delete hits only dirs added before it), each
         group anti-joined against its broadcast delete keys. Point-delete
         files are tiny, MOR_COMPACT_DELETES bounds the group count."""
-        dirs = self._dirs(snapshot_id)
+        snap = self._snapshot(snapshot_id)
+        dirs = snap["dirs"] if snap else []
         if not dirs:
             return self._empty()
-        snap = self._snapshot(snapshot_id)
         deletes = snap.get("deletes", [])
         if not deletes:
             return self.spark.read.schema(self.schema).parquet(*dirs)
@@ -533,14 +551,8 @@ class SnapshotTable:
         None returns the table to empty, and its next commit starts a new
         lineage."""
         m = self._read_manifest()
-        snap = next((s for s in m["snapshots"] if s["id"] == snapshot_id), None)
-        if snap is None and snapshot_id is not None:
-            raise KeyError(f"snapshot {snapshot_id} not found")
-        if snap is not None and snap.get("expired"):
-            raise ValueError(
-                f"snapshot {snapshot_id} is expired (its data files were "
-                "garbage-collected by expire_snapshots)"
-            )
+        if snapshot_id is not None:
+            self._snapshot(snapshot_id, m)  # raises: unknown or expired
         m["current"] = snapshot_id
         self._commit(m)
 
@@ -560,16 +572,16 @@ class SnapshotTable:
         including branches abandoned by ``rollback_to`` — is expired.
 
         Metadata is KEPT, files are collected: expired manifest entries
-        stay (marked ``expired: true``, dir lists intact) because the
-        merge-on-read sequence rule derives each dir's add-sequence from
-        the full snapshot history, and `read_delta` derives deltas from
-        predecessor dir NAME sets — deleting entries would silently
-        change both (resurrecting MOR-deleted rows); deleting only the
-        unreferenced directories keeps every retained read bit-identical.
-        Reads/rollbacks of an expired snapshot raise; sidecar shard
-        stores whose sync chain crosses an expired snapshot rebuild from
-        the (retained) current instead of absorbing a broken delta
-        (bloom.py `_delta_chain` returns None on expired chain members).
+        stay (marked ``expired: true``, dir lists and parent pointers
+        intact) because the merge-on-read sequence rule derives each
+        dir's add-sequence from the full snapshot history, and
+        `read_delta` derives an append's delta from its parent's dir NAME
+        set — deleting entries would silently change both (resurrecting
+        MOR-deleted rows); deleting only the unreferenced directories
+        keeps every retained read bit-identical. Reads/rollbacks of an
+        expired snapshot raise; sidecar shard stores whose sync chain
+        crosses an expired snapshot rebuild from the (retained) current
+        instead of absorbing a broken delta (``since`` returns None).
 
         Crash ordering: the manifest (with expired flags) is committed
         BEFORE any rmtree, so a crash mid-collection leaves only orphan
@@ -592,21 +604,14 @@ class SnapshotTable:
             if snaps[pin].get("expired"):
                 raise ValueError(f"keep_ids snapshot {pin} is already expired")
             live.add(pin)
-        sid, n = m["current"], 0
-        while sid is not None and n < retain_last:
-            if sid not in snaps:
-                break
-            if not snaps[sid].get("expired"):
-                # only LIVE ancestors count toward retain_last and join
-                # the retained set — an expired one has no files and
-                # cannot serve as a resume point.  The walk CONTINUES
-                # through expired gaps rather than stopping: an older
-                # ancestor kept live by a keep_ids pin in an earlier
-                # call is still a valid resume point and must not be
-                # collected just because a gap sits above it.
-                live.add(sid)
-                n += 1
-            sid = snaps[sid].get("parent")
+        # only LIVE ancestors count toward retain_last and join the
+        # retained set — an expired one has no files and cannot serve as a
+        # resume point.  The walk CONTINUES through expired gaps rather
+        # than stopping: an older ancestor kept live by a keep_ids pin in
+        # an earlier call is still a valid resume point and must not be
+        # collected just because a gap sits above it.
+        kept = [s["id"] for s in self.ancestors() if not s.get("expired")]
+        live.update(kept[:retain_last])
         referenced: set = set()
         for i in live:
             s = snaps.get(i)

@@ -503,6 +503,44 @@ def test_seen_keys_edelete_absorbs_tombstones_not_rebuild(spark, tmp_path):
         ), f"divergence at expires={expires} force_errors={fe}"
 
 
+def test_seen_keys_table_compaction_advances_not_rebuild(spark, tmp_path, monkeypatch):
+    """The MOR_COMPACT_DELETES-th+1 point delete compacts the table first.
+    The compaction holds the same logical rows, so the index steps over it:
+    nine deletes, each synced, never remove the store directory (the
+    LSM's own run fold at KEYS_COMPACT_RUNS may still merge runs), and the
+    probe stays the exact anti-join. compact() between syncs does the same."""
+    import shutil
+
+    from sinew_spark.operators.bloom import SeenKeyShardStore
+    from sinew_spark.operators.frontier import anti_join_seen
+    from sinew_spark.plans.snapshots import MOR_COMPACT_DELETES
+
+    t = _seen_table(spark, tmp_path)
+    t.append(_rows(spark, 0, 200))
+    store = SeenKeyShardStore(str(tmp_path / "ks"), n_shards=4)
+    store.sync(t)
+    removed = []
+    real_rmtree = shutil.rmtree
+
+    def rmtree(path, *a, **kw):
+        removed.append(str(path))
+        return real_rmtree(path, *a, **kw)
+
+    monkeypatch.setattr(shutil, "rmtree", rmtree)
+    for i in range(MOR_COMPACT_DELETES + 1):
+        t.delete_keys([10 * i])
+        store.sync(t)
+    assert "compact" in {s["op"] for s in t.snapshots()}
+    t.append(_rows(spark, 200, 220))
+    t.compact()
+    store.sync(t)
+    assert store.in_sync_with(t)
+    assert store.path not in removed
+    probe = _keys(spark, 0, 230)
+    exact = sorted(r.key for r in anti_join_seen(probe, t.read()).collect())
+    assert _probe(store, probe) == exact == [10 * i for i in range(9)] + list(range(220, 230))
+
+
 def test_seen_keys_tombstone_compaction_resolves(spark, tmp_path):
     """Interleaved deletes count toward KEYS_COMPACT_RUNS; crossing it folds
     the shard to one resolved add run and membership replays exactly."""
@@ -660,29 +698,36 @@ def _strip_parents(t):
     t._commit(m)
 
 
-def test_legacy_manifest_linear_still_incremental(spark, tmp_path):
-    """A genuinely linear pre-parent manifest keeps the O(delta) path:
-    _delta_chain validates the fallback steps structurally (dirs only
-    grow along append lineage) and returns the chain."""
-    from sinew_spark.operators.bloom import _delta_chain
+def test_legacy_manifest_parentless_forces_rebuild(spark, tmp_path):
+    """A snapshot without a parent pointer is a root: lineage is never
+    inferred from id order, so even a linear pre-parent manifest has no
+    chain from an older snapshot, and a store synced there rebuilds
+    (always safe) into the table's exact key set."""
+    from sinew_spark.operators.bloom import SeenKeyShardStore
 
     t = _seen_table(spark, tmp_path)
     first = t.append(_rows(spark, 0, 100))
+    store = SeenKeyShardStore(str(tmp_path / "ks"), n_shards=4)
+    store.sync(t)
     t.append(_rows(spark, 100, 200))
     last = t.append(_rows(spark, 200, 300))
     _strip_parents(t)
-    chain = _delta_chain(t, first, last)
-    assert chain is not None and [s["id"] for s in chain] == [first + 1, last]
+    assert t.since(first, last) is None
+    assert t.since(last, last) == []
+    store.sync(t)
+    assert store.in_sync_with(t)
+    assert all(len(_run_names(store, s)) == 1 for s in range(4))  # one rebuilt run each
+    assert _probe(store, _keys(spark, 0, 310)) == list(range(300, 310))
 
 
 def test_legacy_manifest_rollback_reappend_forces_rebuild(spark, tmp_path):
     """The ADVICE r3 hole: a LEGACY manifest containing rollback +
     re-append has current == max(ids), so id order alone 'reaches' a
     from_id on the abandoned branch and would absorb incrementally,
-    keeping phantom rolled-back keys in the exact shards. The dirs
-    superset check must detect the abandoned branch; the store rebuilds
-    and rolled-back keys survive reject_seen."""
-    from sinew_spark.operators.bloom import SeenKeyShardStore, _delta_chain
+    keeping phantom rolled-back keys in the exact shards. The parentless
+    current is a root, so the walk never reaches the abandoned snapshot;
+    the store rebuilds and rolled-back keys survive reject_seen."""
+    from sinew_spark.operators.bloom import SeenKeyShardStore
 
     t = _seen_table(spark, tmp_path)
     first = t.append(_rows(spark, 0, 500))
@@ -693,7 +738,7 @@ def test_legacy_manifest_rollback_reappend_forces_rebuild(spark, tmp_path):
     t.append(_rows(spark, 2000, 2500))
     _strip_parents(t)
 
-    assert _delta_chain(t, abandoned, t.current_snapshot()) is None
+    assert t.since(abandoned, t.current_snapshot()) is None
     store.sync(t)
     assert store.in_sync_with(t)
     assert _probe(store, _keys(spark, 0, 2500)) == list(range(500, 2000))  # abandoned keys un-seen
@@ -703,14 +748,12 @@ def test_mixed_manifest_parentless_step_forces_rebuild(spark, tmp_path):
     """Parented snapshots stacked on a legacy prefix: the walk must stop
     trusting the manifest the moment it reaches a parentless snapshot it
     cannot validate (mixed provenance can hide a legacy-era rollback)."""
-    from sinew_spark.operators.bloom import _delta_chain
-
     t = _seen_table(spark, tmp_path)
     first = t.append(_rows(spark, 0, 100))
     mid = t.append(_rows(spark, 100, 200))
     _strip_parents(t)  # legacy prefix
     last = t.append(_rows(spark, 200, 300))  # parented
     # walk from last to first crosses the parentless mid -> unknown provenance
-    assert _delta_chain(t, first, last) is None
+    assert t.since(first, last) is None
     # but a walk that stays inside the parented suffix still works
-    assert [s["id"] for s in _delta_chain(t, mid, last)] == [last]
+    assert [s["id"] for s in t.since(mid, last)] == [last]

@@ -129,3 +129,21 @@ def test_crash_at_each_commit_resumes_to_uninterrupted_run(
     got = _outcome(c)
     assert len(set(got["fetched_keys"])) == len(got["fetched_keys"])  # no key fetched twice
     assert got == uninterrupted[shape]
+
+
+def test_uncache_after_a_crashed_round_resumes_to_uninterrupted_run(
+    spark, tmpdir_path, uninterrupted
+):
+    """A round that raises rolls its commits back before the error
+    propagates, so an uncache made before the next run() (a snapshot
+    without a round) is not stacked on the crashed round's seen commit and
+    cannot keep that commit alive through the rerun."""
+    c = _crawler(spark, tmpdir_path, "links")
+    c.seed(SHAPES["links"][1])
+    before = _current_snapshots(c)
+    _crash(c, "frontier")  # the round's fetched and seen commits have landed
+    del c.frontier_t.overwrite  # undo the injected crash
+    assert _current_snapshots(c) == before
+    c.uncache("http://never.test/")
+    c.run()
+    assert _outcome(c) == uninterrupted["links"]

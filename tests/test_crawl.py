@@ -574,7 +574,9 @@ def test_host_state_append_joined_on_tail_failure(spark, tmpdir_path):
     """ADVICE r3: if a tail stage (links/next-frontier) raises, the
     background host_state append must be JOINED before run_round exits —
     otherwise a retried round races a live append through SnapshotTable's
-    unsynchronized manifest read-modify-write and can drop a snapshot."""
+    unsynchronized manifest read-modify-write and can drop a snapshot.
+    The failed round is then rolled back, which must come after the
+    append landed."""
     import threading
 
     c = make_crawler(spark, tmpdir_path)
@@ -597,9 +599,11 @@ def test_host_state_append_joined_on_tail_failure(spark, tmpdir_path):
         if t.ident not in before and t.is_alive() and "append" in (t.name or "").lower()
     ]
     assert not leaked
-    # and the cookie state for the round IS durable (join happened)
-    assert c.host_state_t.current_snapshot() is not None
-    rows = c.host_state_t.read().collect()
+    # the round's cookie state was committed before run_round exited (the
+    # join happened), and the crashed round's rollback came after it
+    landed = [s["id"] for s in c.host_state_t.snapshots()]
+    assert landed and c.host_state_t.current_snapshot() is None
+    rows = c.host_state_t.read(landed[-1]).collect()
     assert any("tok" in (r.cookies or "") for r in rows)
 
 

@@ -209,7 +209,8 @@ def test_compact_preserves_rows_resolves_deletes(spark, tmpdir_path):
 def test_crawl_with_periodic_seen_compaction(spark, tmpdir_path):
     """A multi-round crawl with compact_seen_every behaves identically to
     one without: same seen contents, exactly-once intact across the
-    compaction + shard-store rebuild, fewer live data dirs."""
+    compaction on the anti-join path and on the seen-index path (which
+    steps over it), fewer live data dirs."""
     from sinew_spark.crawl import Crawler, CrawlOptions
     from sinew_spark.sources.fetch import FixtureFetcher
 
@@ -227,16 +228,21 @@ def test_crawl_with_periodic_seen_compaction(spark, tmpdir_path):
         return c
 
     plain = run("plain")
-    compacted = run("compact", compact_seen_every=2, compact_target_files=1)
-
     a = sorted(
         (r.url, r.status, r.round) for r in plain.seen_t.read().collect()
     )
-    b = sorted(
-        (r.url, r.status, r.round) for r in compacted.seen_t.read().collect()
-    )
-    assert a == b
-    assert len(compacted.seen_t._dirs()) < len(plain.seen_t._dirs())
+    for exact_shards in (None, True):
+        compacted = run(
+            f"compact_{exact_shards}",
+            compact_seen_every=2,
+            compact_target_files=1,
+            exact_shards=exact_shards,
+        )
+        b = sorted(
+            (r.url, r.status, r.round) for r in compacted.seen_t.read().collect()
+        )
+        assert a == b
+        assert len(compacted.seen_t._dirs()) < len(plain.seen_t._dirs())
 
 
 def test_lineage_dataframe(spark, tmp_path):
@@ -294,3 +300,69 @@ def test_empty_table_read_is_pruned_from_joins(spark, tmpdir_path):
     plan = df.join(t.read(), "k", "left_anti")._jdf.queryExecution().optimizedPlan()
     assert "Join" not in plan.toString()
     assert df.join(t.read(), "k", "left_anti").count() == 5
+
+
+def _ks(df):
+    return sorted(r.k for r in df.collect())
+
+
+def test_read_delta_after_rollback_is_the_appended_rows_only(spark, tmpdir_path):
+    """An append's delta is what it added to its parent, not to the previous
+    manifest entry: after a rollback that entry is an abandoned sibling, a
+    compaction or a delete_where overwrite, whose dirs the new append never
+    carried."""
+    def rows(*ks):
+        return spark.createDataFrame([(k, str(k)) for k in ks], SCHEMA)
+
+    t = SnapshotTable(spark, tmpdir_path + "/compact", SCHEMA)
+    t.append(rows(1, 2))
+    s2 = t.append(rows(3))
+    t.compact()
+    t.rollback_to(s2)
+    assert _ks(t.read_delta(t.append(rows(4)))) == [4]
+    assert _ks(t.read()) == [1, 2, 3, 4]
+
+    t = SnapshotTable(spark, tmpdir_path + "/overwrite", SCHEMA)
+    s1 = t.append(rows(1, 2))
+    t.delete_where(F.col("k") == 2)
+    t.rollback_to(s1)
+    assert _ks(t.read_delta(t.append(rows(5)))) == [5]
+    assert _ks(t.read()) == [1, 2, 5]
+
+
+def test_ancestors_and_since_follow_parents(spark, tmpdir_path):
+    """ancestors walks parent pointers newest first; since chains a
+    consumer's snapshot to a later one, oldest first, or returns None when
+    a rollback left it off the chain, an expired snapshot lies between, or
+    rollback_to(None) started a new root."""
+    t = SnapshotTable(spark, tmpdir_path + "/t", SCHEMA)
+    row = spark.createDataFrame([(1, "a")], SCHEMA)
+    assert t.ancestors() == [] and t.since(None) is None
+    s1 = t.append(row)
+    s2 = t.append(row)
+    s3 = t.append(row)
+    assert [s["id"] for s in t.ancestors()] == [s3, s2, s1]
+    assert [s["id"] for s in t.ancestors(s2)] == [s2, s1]
+    assert [s["id"] for s in t.since(s1)] == [s2, s3]
+    assert t.since(s3) == []
+
+    # rollback branch: s2 and s3 are abandoned, s4 is built on s1
+    t.rollback_to(s1)
+    s4 = t.append(row)
+    assert [s["id"] for s in t.ancestors()] == [s4, s1]
+    assert [s["id"] for s in t.since(s1)] == [s4]
+    assert t.since(s2) is None and t.since(s3) is None
+    assert [s["id"] for s in t.since(s1, s3)] == [s2, s3]  # the old branch still chains
+
+    # an expired member between the consumer and current breaks the chain
+    s5 = t.append(row)
+    t.expire_snapshots(retain_last=1, keep_ids=[s1])  # s4 expires
+    assert [s["id"] for s in t.ancestors()] == [s5, s4, s1]
+    assert t.since(s1) is None
+    assert t.since(s4) == [t.ancestors()[0]]
+
+    # rollback_to(None): the next commit is a root with no ancestors
+    t.rollback_to(None)
+    s6 = t.append(row)
+    assert [s["id"] for s in t.ancestors()] == [s6]
+    assert t.since(s1) is None and t.since(s5) is None
