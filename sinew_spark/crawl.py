@@ -415,11 +415,8 @@ class Crawler:
             else:
                 url, method, body = u, "GET", ""
             rows.append((url, method.upper(), body, priority, 0, i, 0))
-        df = self.spark.createDataFrame(
-            rows, "url string, method string, body string, priority double, depth int, seq long, attempt int"
-        )
-        prepared = prepare_frontier(df, self.canonicalize)
-        self.frontier_t.overwrite(prepared, {"op": "seed", "n": len(rows)})
+        schema = "url string, method string, body string, priority double, depth int, seq long, attempt int"
+        self.seed_df(self.spark.createDataFrame(rows, schema))
 
     @staticmethod
     def post_json(url: str, obj) -> tuple[str, str, str]:

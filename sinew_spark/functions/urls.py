@@ -78,12 +78,13 @@ def canonicalize_url_str(
 
 
 # Already-canonical grammar: absolute http(s), lowercase host (no port /
-# userinfo / credentials), non-empty path, no query/fragment/whitespace.
+# userinfo / credentials), non-empty path, no query/fragment/whitespace
+# (``\Z``, not ``$``: ``$`` also matches before a final newline).
 # Such URLs are fixpoints of canonicalize_url_str *provided* the path has
 # no '.'/'..' segments (second regex) — so they can skip per-row urllib
 # entirely. Real frontiers are dominated by these (links already pass
 # through the canonicalizer once before re-entering the frontier).
-_FAST_CANONICAL_RE = re.compile(r"^https?://[a-z0-9](?:[a-z0-9.-]*[a-z0-9])?/[^?#\s]*$")
+_FAST_CANONICAL_RE = re.compile(r"^https?://[a-z0-9](?:[a-z0-9.-]*[a-z0-9])?/[^?#\s]*\Z")
 _DOT_SEGMENT_RE = re.compile(r"/\.\.?(?:/|$)")
 
 

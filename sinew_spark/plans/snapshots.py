@@ -16,9 +16,16 @@ snapshot-versioned tables: every commit produces a new immutable snapshot
   and its parent, the snapshot it was built on. This module is the only
   reader of the parent pointers: ``ancestors`` walks them (crash recovery,
   expiry), ``since`` answers what an incremental consumer (the seen
-  index, the Bloom, ``read_delta``'s diff) must absorb to catch up, or
-  None when a rollback, a parentless root or an expired snapshot means it
-  must rebuild.
+  index, the Bloom) must absorb to catch up, or None when a rollback, a
+  parentless root or an expired snapshot means it must rebuild.
+
+A manifest entry records only what its commit changed (Iceberg's model):
+``added``, the data dirs it wrote (one for append/overwrite/compact, none
+for an equality delete). A snapshot's dir list is derived by walking the
+parent pointers back to the newest overwrite or compact or to a root, so
+the manifest grows with the snapshot count, not its square. An entry from
+before this format carries its snapshot's full ``dirs`` list instead; the
+walk stops there, so old manifests open as they are.
 
 Merge-on-read sequence rule (Iceberg's): an equality delete applies only
 to data files added BEFORE it, so a key re-appended after a delete is
@@ -97,7 +104,7 @@ class SnapshotTable:
         never a torn or empty file."""
         tmp = self._manifest_path + f".tmp.{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
+            f.write(json.dumps(manifest))
             f.flush()
             os.fsync(f.fileno())
         os.replace(tmp, self._manifest_path)  # atomic on POSIX
@@ -198,15 +205,20 @@ class SnapshotTable:
         expired ones included (their manifest entries stay). A snapshot
         without a ``parent`` key is a root. [] for an empty table."""
         m = self._read_manifest()
-        snaps = {s["id"]: s for s in m["snapshots"]}
         sid = snapshot_id if snapshot_id is not None else m["current"]
-        if sid is not None and sid not in snaps:
+        out = list(self._walk(m, sid))
+        if sid is not None and not out:
             raise KeyError(f"snapshot {sid} not found in {self.path}")
-        out = []
-        while sid in snaps:
-            out.append(snaps[sid])
-            sid = snaps[sid].get("parent")
         return out
+
+    @staticmethod
+    def _walk(m: dict, sid: int | None):
+        """Manifest entries from ``sid`` along the parent pointers, newest
+        first (nothing for None or an unknown id)."""
+        snaps = {s["id"]: s for s in m["snapshots"]}
+        while sid in snaps:
+            yield snaps[sid]
+            sid = snaps[sid].get("parent")
 
     def since(self, from_id: int | None, to_id: int | None = None) -> list[dict] | None:
         """The snapshots after ``from_id`` on ``to_id``'s (default: current)
@@ -228,14 +240,16 @@ class SnapshotTable:
 
     def _new_snapshot(
         self,
-        dirs: list[str],
+        added: list[str],
         op: str,
         meta: dict | None,
         deletes: list[dict] | None = None,
     ) -> int:
-        """``deletes`` is the new snapshot's FULL cumulative equality-delete
-        list; None inherits the current snapshot's (appends and edeletes
-        carry deletes forward; overwrite/compaction resolves them to [])."""
+        """``added`` is the data dirs this commit wrote (the rest of its
+        dir list is derived, see ``_dirs``). ``deletes`` is the new
+        snapshot's FULL cumulative equality-delete list; None inherits the
+        current snapshot's (appends and edeletes carry deletes forward;
+        overwrite/compaction resolves them to [])."""
         m = self._read_manifest()
         if deletes is None:
             cur = self._snapshot(m=m)
@@ -249,7 +263,7 @@ class SnapshotTable:
                 # rolled-back ones despite their smaller ids); ancestors()
                 # and since() walk it.
                 "parent": m["current"],
-                "dirs": dirs,
+                "added": added,
                 "op": op,
                 "ts": time.time(),
                 "meta": meta or {},
@@ -268,9 +282,7 @@ class SnapshotTable:
     def append(self, df: DataFrame, meta: dict | None = None) -> int:
         """Append rows as a new snapshot (atomic)."""
         d = self._write_data(df.select([f.name for f in self.schema.fields]))
-        return self._new_snapshot(
-            self._dirs() + [d], "append", {**(meta or {}), "files": self._file_stats([d])}
-        )
+        return self._new_snapshot([d], "append", {**(meta or {}), "files": self._file_stats([d])})
 
     def _write_rows(self, rows: list[tuple]) -> str:
         """Write ``rows`` as one parquet file via pyarrow on the driver — no
@@ -293,9 +305,7 @@ class SnapshotTable:
         parquet file, no Spark job. Readable by read()/read_delta() like any
         snapshot."""
         d = self._write_rows(rows)
-        return self._new_snapshot(
-            self._dirs() + [d], "append", {**(meta or {}), "files": self._file_stats([d])}
-        )
+        return self._new_snapshot([d], "append", {**(meta or {}), "files": self._file_stats([d])})
 
     def overwrite(self, df: DataFrame | list[tuple], meta: dict | None = None) -> int:
         """Replace the table's rows. A row list is written driver-side like
@@ -368,7 +378,7 @@ class SnapshotTable:
         pq.write_table(tbl, os.path.join(d, "delete-0.parquet"))
         sid = self._next_id(self._read_manifest())
         return self._new_snapshot(
-            self._dirs(),
+            [],
             "edelete",
             {**(meta or {}), "n_deleted_keys": len(values)},
             deletes=cur_deletes + [{"id": sid, "dir": d, "key_col": key_col}],
@@ -376,23 +386,40 @@ class SnapshotTable:
 
     # --- reads ----------------------------------------------------------------
 
-    def _dirs(self, snapshot_id: int | None = None) -> list[str]:
-        s = self._snapshot(snapshot_id)
-        return s["dirs"] if s else []
+    def _dirs(self, snapshot_id: int | None = None, m: dict | None = None) -> list[str]:
+        """A snapshot's (default: current) data dirs, oldest first: the
+        ``added`` lists along its parent chain back to the newest
+        overwrite or compact or to a root. An entry written before
+        ``added`` existed carries its full ``dirs`` list, which ends the
+        walk."""
+        m = m or self._read_manifest()
+        snap = self._snapshot(snapshot_id, m)
+        parts = []
+        for s in self._walk(m, snap["id"]) if snap else ():
+            parts.append(s.get("added", s.get("dirs")))
+            if "added" not in s or s["op"] in ("overwrite", "compact"):
+                break
+        return [d for p in reversed(parts) for d in p]
+
+    @staticmethod
+    def _adders(m: dict) -> dict[str, dict]:
+        """Each data dir -> the manifest entry that added it: its add
+        sequence (merge-on-read), meta (``dir_metas``) and file stats
+        (``approx_rows``). Entries are stored in id order, so for a
+        full-``dirs`` entry the first one listing a dir is its adder."""
+        out: dict[str, dict] = {}
+        for s in m["snapshots"]:
+            for d in s.get("added", s.get("dirs")):
+                out.setdefault(d, s)
+        return out
 
     def dir_metas(self, snapshot_id: int | None = None) -> list[dict]:
         """For each data dir of a snapshot (default: current), the meta of
         the snapshot that added it — e.g. the crawl round that wrote it.
         Manifest read only; [] for an empty table."""
         m = self._read_manifest()
-        snap = self._snapshot(snapshot_id, m)
-        if snap is None:
-            return []
-        added: dict[str, dict] = {}
-        for s in sorted(m["snapshots"], key=lambda s: s["id"]):
-            for d in s["dirs"]:
-                added.setdefault(d, s.get("meta") or {})
-        return [added[d] for d in snap["dirs"]]
+        adders = self._adders(m)
+        return [adders[d].get("meta") or {} for d in self._dirs(snapshot_id, m)]
 
     def approx_rows(self, snapshot_id: int | None = None) -> int:
         """Row count of a snapshot from manifest file stats — no Spark job,
@@ -401,17 +428,11 @@ class SnapshotTable:
         equality deletes overcount by the deleted rows — negligible for
         point deletes, and only ever biases strategy selection upward."""
         m = self._read_manifest()
-        snap = self._snapshot(snapshot_id, m)
-        if snap is None:
-            return 0
-        dir_rows: dict[str, int] = {}
-        for s in m["snapshots"]:
-            for f in s["meta"].get("files", []):
-                d = os.path.dirname(f["file"])
-                dir_rows[d] = dir_rows.get(d, 0) + f["rows"]
-        if not all(d in dir_rows for d in snap["dirs"]):  # stats missing: count once
-            return self.read(snap["id"]).count()
-        return sum(dir_rows[d] for d in snap["dirs"])
+        adders = self._adders(m)
+        files = [adders[d]["meta"].get("files") for d in self._dirs(snapshot_id, m)]
+        if not all(files):  # stats missing: count once
+            return self.read(snapshot_id).count()
+        return sum(f["rows"] for fs in files for f in fs)
 
     def _empty(self) -> DataFrame:
         """No rows, in a form the optimizer knows is empty: the false filter
@@ -428,17 +449,13 @@ class SnapshotTable:
         stage is CPU-heavy per row (parse UDF): the default 128 MB splits
         would coalesce a small compressed delta into 1-2 partitions and
         serialize the work regardless of cluster size."""
-        target = self._snapshot(snapshot_id)
-        if target["op"] in ("edelete", "compact"):
-            # edelete adds no data files; compact adds no logical ROWS
-            # (it only rewrites layout) — both are empty deltas
-            return self._empty()
-        # an append's rows are the dirs it added to its PARENT (not to the
-        # previous manifest entry, which after a rollback is an abandoned
-        # sibling); an overwrite's are all of its dirs
-        parent = self.ancestors(snapshot_id)[1:2] if target["op"] == "append" else []
-        prev_dirs = set(parent[0]["dirs"]) if parent else set()
-        new_dirs = [d for d in target["dirs"] if d not in prev_dirs]
+        m = self._read_manifest()
+        target = self._snapshot(snapshot_id, m)
+        # edelete adds no data files; compact adds no logical ROWS (it only
+        # rewrites layout) — both are empty deltas
+        new_dirs = [] if target["op"] == "compact" else [
+            d for d, s in self._adders(m).items() if s["id"] == target["id"]
+        ]
         if not new_dirs:
             return self._empty()
         if target_partitions:
@@ -510,22 +527,20 @@ class SnapshotTable:
         (sequence rule — a delete hits only dirs added before it), each
         group anti-joined against its broadcast delete keys. Point-delete
         files are tiny, MOR_COMPACT_DELETES bounds the group count."""
-        snap = self._snapshot(snapshot_id)
-        dirs = snap["dirs"] if snap else []
+        m = self._read_manifest()
+        snap = self._snapshot(snapshot_id, m)
+        dirs = self._dirs(snapshot_id, m)
         if not dirs:
             return self._empty()
         deletes = snap.get("deletes", [])
         if not deletes:
             return self.spark.read.schema(self.schema).parquet(*dirs)
-        # first snapshot id that carried each dir = the dir's add sequence
-        first_seen: dict[str, int] = {}
-        for s in sorted(self._read_manifest()["snapshots"], key=lambda s: s["id"]):
-            for d in s["dirs"]:
-                first_seen.setdefault(d, s["id"])
+        # the id of the entry that added each dir = the dir's add sequence
+        adders = self._adders(m)
         key_col = deletes[0]["key_col"]
         groups: dict[tuple, list[str]] = {}
         for d in dirs:
-            appl = tuple(dl["id"] for dl in deletes if dl["id"] > first_seen.get(d, 0))
+            appl = tuple(dl["id"] for dl in deletes if dl["id"] > adders[d]["id"])
             groups.setdefault(appl, []).append(d)
         field = next(f for f in self.schema.fields if f.name == key_col)
         del_schema = T.StructType([field])
@@ -572,16 +587,17 @@ class SnapshotTable:
         including branches abandoned by ``rollback_to`` — is expired.
 
         Metadata is KEPT, files are collected: expired manifest entries
-        stay (marked ``expired: true``, dir lists and parent pointers
-        intact) because the merge-on-read sequence rule derives each
-        dir's add-sequence from the full snapshot history, and
-        `read_delta` derives an append's delta from its parent's dir NAME
-        set — deleting entries would silently change both (resurrecting
-        MOR-deleted rows); deleting only the unreferenced directories
-        keeps every retained read bit-identical. Reads/rollbacks of an
-        expired snapshot raise; sidecar shard stores whose sync chain
-        crosses an expired snapshot rebuild from the (retained) current
-        instead of absorbing a broken delta (``since`` returns None).
+        stay (marked ``expired: true``, added lists and parent pointers
+        intact) because a retained snapshot's dir list is derived along
+        its parent chain from them, and the merge-on-read sequence rule
+        takes each dir's add-sequence from the entry that added it —
+        deleting entries would silently change both (losing files or
+        resurrecting MOR-deleted rows); deleting only the unreferenced
+        directories keeps every retained read bit-identical.
+        Reads/rollbacks of an expired snapshot raise; sidecar shard stores
+        whose sync chain crosses an expired snapshot rebuild from the
+        (retained) current instead of absorbing a broken delta (``since``
+        returns None).
 
         Crash ordering: the manifest (with expired flags) is committed
         BEFORE any rmtree, so a crash mid-collection leaves only orphan
@@ -614,20 +630,16 @@ class SnapshotTable:
         live.update(kept[:retain_last])
         referenced: set = set()
         for i in live:
-            s = snaps.get(i)
-            if s is None:
-                continue
-            referenced.update(s["dirs"])
-            referenced.update(dl["dir"] for dl in s.get("deletes", []))
+            referenced.update(self._dirs(i, m))
+            referenced.update(dl["dir"] for dl in snaps[i].get("deletes", []))
         newly = 0
         for s in m["snapshots"]:
             if s["id"] not in live and not s.get("expired"):
                 s["expired"] = True
                 newly += 1
         self._commit(m)  # flags first; rmtree after (see crash ordering)
-        all_dirs: set = set()
+        all_dirs = set(self._adders(m))
         for s in m["snapshots"]:
-            all_dirs.update(s["dirs"])
             all_dirs.update(dl["dir"] for dl in s.get("deletes", []))
         removed = 0
         for d in sorted(all_dirs - referenced):

@@ -688,12 +688,14 @@ def test_seen_vals_rollback_rebuilds(spark, tmp_path):
 
 def _strip_parents(t):
     """Simulate a pre-upgrade manifest: rollback_to predates parent
-    pointers, so legacy manifests carry none (ADVICE r3 scenario)."""
-    import json
-
-    with open(t._manifest_path) as f:
-        m = json.load(f)
+    pointers, so legacy manifests carry none (ADVICE r3 scenario), and
+    each entry lists all of its snapshot's data dirs, not the ones it
+    added."""
+    m = t._read_manifest()
+    full = {s["id"]: t._dirs(s["id"]) for s in m["snapshots"]}
     for s in m["snapshots"]:
+        s["dirs"] = full[s["id"]]
+        s.pop("added", None)
         s.pop("parent", None)
     t._commit(m)
 

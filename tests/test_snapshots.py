@@ -366,3 +366,84 @@ def test_ancestors_and_since_follow_parents(spark, tmpdir_path):
     s6 = t.append(row)
     assert [s["id"] for s in t.ancestors()] == [s6]
     assert t.since(s1) is None and t.since(s5) is None
+
+
+def test_manifest_grows_linearly_with_appends(spark, tmpdir_path):
+    """Each entry records only the dirs its commit added, so an
+    append-per-round table's manifest grows with its snapshot count, not
+    its square (full dir lists made 200 appends ~16x the size of 50)."""
+    import os
+
+    t = SnapshotTable(spark, tmpdir_path + "/t", SCHEMA)
+    size = {}
+    for n in range(1, 201):
+        t.append_rows([(n, "x")], {"round": n})
+        size[n] = os.path.getsize(t._manifest_path)
+    assert size[200] < 5 * size[50]
+    assert _ks(t.read()) == list(range(1, 201))
+
+
+def test_entries_name_only_their_own_dirs(spark, tmpdir_path):
+    """append/append_rows/overwrite/compact record the one dir they wrote,
+    an edelete none; the snapshot's dir list is derived from them."""
+    import os
+
+    t = SnapshotTable(spark, tmpdir_path + "/t", SCHEMA)
+    t.append(spark.createDataFrame([(1, "a")], SCHEMA))
+    t.append_rows([(2, "b")])
+    t.delete_keys([1], key_col="k")
+    t.overwrite([(3, "c")])
+    t.append_rows([(4, "d")])
+    t.compact()
+    t.append_rows([(5, "e")])
+    for s in t.snapshots():
+        assert "dirs" not in s
+        assert s["added"] == sorted({os.path.dirname(f["file"]) for f in s["meta"].get("files", [])})
+    assert [len(s["added"]) for s in t.snapshots()] == [1, 1, 0, 1, 1, 1, 1]
+    assert t._dirs() == [t.snapshots()[-2]["added"][0], t.snapshots()[-1]["added"][0]]
+    assert _ks(t.read()) == [3, 4, 5]
+
+
+def test_legacy_full_dirs_manifest_reads_the_same(spark, tmpdir_path):
+    """A manifest in the format written before entries recorded ``added``
+    (a full ``dirs`` list per entry, a parentless root, a pending equality
+    delete) reads the same, and a new append stacks on it: rows, dirs, dir
+    metas, approx rows and deltas as if the table had never been
+    converted."""
+    t = SnapshotTable(spark, tmpdir_path + "/t", SCHEMA)
+    t.append(spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], SCHEMA), {"round": 0})
+    s2 = t.append_rows([(4, "d")], {"round": 1})
+    t.delete_keys([2, 4], key_col="k")
+    s4 = t.append_rows([(2, "b2")], {"round": 2})  # re-appended after the delete: visible
+
+    def state():
+        return (
+            sorted((r.k, r.v) for r in t.read().collect()),
+            t._dirs(),
+            [m.get("round") for m in t.dir_metas()],
+            t.approx_rows(),
+            _ks(t.read_delta(s4)),
+            _ks(t.read(s2)),
+        )
+
+    before = state()
+    assert before[0] == [(1, "a"), (2, "b2"), (3, "c")]
+    m = t._read_manifest()
+    full = {s["id"]: t._dirs(s["id"]) for s in m["snapshots"]}
+    for s in m["snapshots"]:
+        s["dirs"] = full[s["id"]]
+        del s["added"]
+    del m["snapshots"][0]["parent"]
+    t._commit(m)
+    assert state() == before
+
+    s5 = t.append_rows([(5, "e")], {"round": 3})
+    new_dir = t.snapshots()[-1]["added"]
+    assert len(new_dir) == 1 and "dirs" not in t.snapshots()[-1]
+    rows, dirs, rounds, approx, _, _ = before
+    assert sorted((r.k, r.v) for r in t.read().collect()) == rows + [(5, "e")]
+    assert t._dirs() == dirs + new_dir
+    assert [m.get("round") for m in t.dir_metas()] == rounds + [3]
+    assert t.approx_rows() == approx + 1
+    assert _ks(t.read_delta(s5)) == [5]
+    assert _ks(t.read_delta(s4)) == [2]

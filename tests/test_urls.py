@@ -90,6 +90,26 @@ def test_canonicalize_udf(spark):
     assert got == ["http://x.com/p?a=1", None]
 
 
+def test_trailing_newline_one_canonical_key(spark):
+    """The fast path strips a trailing newline as the slow path does, so
+    ``http://h.test/p\n`` and ``http://h.test/p`` are one page with one
+    key, in an all-fast batch and in a batch that also needs the slow
+    path (coalesce(1): both URLs in the same Arrow batch)."""
+    from sinew_spark.operators.frontier import prepare_frontier
+
+    assert canonicalize_url_str("http://h.test/p\n") == "http://h.test/p"
+    udf = make_canonicalize_udf()
+    for extra in ([], ["HTTP://H.test/q"]):
+        urls = ["http://h.test/p\n", "http://h.test/p"] + extra
+        df = spark.createDataFrame(
+            [(u, "GET", "", 0.0, 0, i, 0) for i, u in enumerate(urls)],
+            "url string, method string, body string, priority double, depth int, seq long, attempt int",
+        ).coalesce(1)
+        got = prepare_frontier(df, udf).orderBy("seq").collect()
+        assert got[0].canonical_url == got[1].canonical_url == "http://h.test/p"
+        assert got[0].key == got[1].key
+
+
 def test_surt_key_expr(spark):
     from sinew_spark.functions.urls import surt_key_expr
 
