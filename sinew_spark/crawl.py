@@ -81,7 +81,6 @@ from sinew_spark.operators.frontier import (
     prepare_frontier,
     take_round_budget,
 )
-from sinew_spark.operators.parse import PARSED_SCHEMA
 from sinew_spark.plans.snapshots import SnapshotTable
 from sinew_spark.sources.fetch import (
     FETCH_PARSED_SCHEMA,
@@ -123,7 +122,6 @@ HOST_COUNTS_SCHEMA = T.StructType(
 )
 
 _FETCHED_WITH_ROUND = T.StructType(FETCH_PARSED_SCHEMA.fields + [T.StructField("round", T.IntegerType())])
-_PARSED_WITH_ROUND = T.StructType(PARSED_SCHEMA.fields + [T.StructField("round", T.IntegerType())])
 
 
 def latest_validators(fetched: DataFrame) -> DataFrame:
@@ -320,7 +318,8 @@ class _Round:
     """What a round's stages hand on: its number, the seen-probe plan, the
     per-host fetch delays (None: unpaced unless rate_limit), the frontier it
     read, the Observations that count its candidates and its fetched rows at
-    the fetched write, and the snapshot each of its commits made."""
+    the fetched write and its discovered links at the frontier overwrite,
+    and the snapshot each of its commits made."""
 
     rnd: int
     use_shards: bool = False
@@ -328,6 +327,7 @@ class _Round:
     frontier: DataFrame | None = None
     cand_obs: Observation = field(default_factory=Observation)
     fetch_obs: Observation = field(default_factory=Observation)
+    links_obs: Observation = field(default_factory=Observation)
     snaps: dict = field(default_factory=dict)
 
 
@@ -715,8 +715,9 @@ class Crawler:
             jars = None
             if st["any_cookies"]:
                 jars = pool.submit(self.host_state_t.append, self._jar_updates(r, fetched), {"round": r.rnd})
-            next_frontier, n_new_links = self._next_frontier(r, st)
-            r.snaps["frontier"] = self.frontier_t.overwrite(next_frontier, {"round": r.rnd})
+            r.snaps["frontier"] = self.frontier_t.overwrite(
+                self._next_frontier(r, st), {"round": r.rnd}
+            )
         if jars is not None:
             r.snaps["host_state"] = jars.result()
         stats = {
@@ -726,7 +727,8 @@ class Crawler:
             "fetched": int(st["n"]),
             "errors": int(st["errors"] or 0),
             "not_modified": int(st["nm"] or 0),
-            "new_links": n_new_links,
+            # observed at the frontier overwrite, which has run by now
+            "new_links": int(r.links_obs.get["n"]) if self.opts.follow_links else 0,
             "duration_sec": time.time() - t0,
             "ts": time.time(),
         }
@@ -871,7 +873,6 @@ class Crawler:
             rate_limit=self.opts.rate_limit,
             retries=self.opts.retries,
             proxies=list(self.opts.proxies),
-            parse=True,
             host_delays=r.host_delays,
             validators=validators,
         )
@@ -983,12 +984,11 @@ class Crawler:
             .repartition(1)
         )
 
-    def _next_frontier(self, r: _Round, st: dict) -> tuple[DataFrame | list, int]:
-        """The next frontier and the count of links discovered this round:
-        leftover (held back by the cap or the budget) plus discovered links,
-        without everything that can never be fetched (_prune_frontier) or
-        the loop never drains. [] — committed with no job — when nothing is
-        left.
+    def _next_frontier(self, r: _Round, st: dict) -> DataFrame | list:
+        """The next frontier: leftover (held back by the cap or the budget)
+        plus discovered links, counted into ``r.links_obs``, without
+        everything that can never be fetched (_prune_frontier) or the loop
+        never drains. [] — committed with no job — when nothing is left.
 
         When every candidate was fetched, nothing was held back and no old
         frontier row can survive the pruning. Each one was
@@ -1001,14 +1001,13 @@ class Crawler:
         host_budget rounds need no case of their own: a held-back row makes
         the observed candidate count exceed the fetched count."""
         rows = None if r.cand_obs.get["n"] == st["n"] else r.frontier
-        n_new_links = 0
         if self.opts.follow_links:
-            links = self._discovered_links(r)
-            n_new_links = links.count()
+            # the discovered-link count rides the overwrite that writes them
+            links = self._discovered_links(r).observe(r.links_obs, F.count(F.lit(1)).alias("n"))
             rows = links if rows is None else rows.unionByName(links)
         if rows is None:
-            return [], n_new_links
-        return self._prune_frontier(rows, r.use_shards), n_new_links
+            return []
+        return self._prune_frontier(rows, r.use_shards)
 
     def _discovered_links(self, r: _Round) -> DataFrame:
         """This round's outlinks as frontier rows (crawl traps pruned)."""

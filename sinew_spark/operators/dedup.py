@@ -263,38 +263,6 @@ def simhash_expr(text_col, bits: int = SIMHASH_BITS):
     )
 
 
-def make_simhash_udf(seed: int = 42):
-    """64-bit SimHash over whitespace tokens (vectorized inner loop).
-    Legacy path — ``simhash_expr`` computes the signature JVM-side with a
-    SQL-replayable hash and is preferred everywhere."""
-
-    @F.pandas_udf(T.LongType())
-    def simhash(texts: pd.Series) -> pd.Series:
-        shifts = np.arange(64, dtype=np.uint64)
-        weights = (np.uint64(1) << shifts).astype(np.uint64)
-
-        out = []
-        for t in texts:
-            if t is None:
-                out.append(None)
-                continue
-            toks = pd.Series(t.lower().split(), dtype="object")
-            if toks.empty:
-                out.append(0)
-                continue
-            # vectorized stable 64-bit token hashes (siphash, fixed key)
-            h = pd.util.hash_array(
-                toks.to_numpy(), hash_key="sinew-simhash-16", categorize=False
-            )
-            bits = (h[:, None] >> shifts[None, :]) & np.uint64(1)  # (n_tok, 64)
-            acc = (2 * bits.astype(np.int64) - 1).sum(axis=0)
-            v = int(weights[acc > 0].sum(dtype=np.uint64))
-            out.append(v - (1 << 64) if v >= (1 << 63) else v)
-        return pd.Series(out, dtype="object")
-
-    return simhash
-
-
 def hamming_block_pairs(
     sigs: DataFrame,
     max_hamming: int = 3,

@@ -545,9 +545,10 @@ def bootstrap_crawl_from_warc(
     not meaningful), and no HTTP validators (the archive stores content
     digests, not origin ETags; a revalidating recrawl simply refetches).
     Duplicate URLs in the archive resolve to the latest WARC-Date. One
-    key-shuffle for the dedup + one join to attach parsed spans —
-    bootstrap is a one-time O(archive) job, file-parallel on the read
-    side. Returns the number of pages imported.
+    key-shuffle for the dedup, then ``span_arrays`` appends the parsed
+    spans and links in the same pass (mapInArrow) — bootstrap is a
+    one-time O(archive) job, file-parallel on the read side. Returns the
+    number of pages imported.
 
     ``content_types``: only records whose Content-Type starts with one of
     these prefixes are imported (default: the textual types). The
@@ -557,11 +558,16 @@ def bootstrap_crawl_from_warc(
     Binary records are SKIPPED (not imported, not marked seen), so a
     later crawl can still fetch them live. Pass () to disable the gate
     (archives known to be all-text)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.window import Window
 
     from sinew_spark.functions.charset import decode_auto
     from sinew_spark.functions.urls import host_expr, request_key_expr
-    from sinew_spark.operators.parse import parse_documents
+    from sinew_spark.operators.parse import span_arrays
+    from sinew_spark.sources.fetch import FETCH_PARSED_SCHEMA, FETCHED_SCHEMA
+
+    arrow_schema = to_arrow_schema(FETCH_PARSED_SCHEMA)
 
     recs = read_warc(crawler.spark, in_dir, glob=glob).where(
         F.col("warc_type") == "response"
@@ -611,34 +617,27 @@ def bootstrap_crawl_from_warc(
     # incremental archives); deterministic via (fetched_at, url) order
     w = Window.partitionBy("key").orderBy(F.desc("fetched_at"), F.desc("url"))
     base = base.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
-    fetch_like = base.select(
-        "key",
-        F.col("url"),
-        "canonical_url",
-        "method",
-        "body",
-        F.lit(0.0).alias("priority"),
-        F.lit(0).alias("depth"),
-        F.col("key").alias("seq"),
-        F.lit(0).alias("attempt"),
-        "host",
-        "status",
-        "content_type",
-        "resp_body",
-        F.col("canonical_url").alias("final_url"),
-        F.lit(1).alias("n_attempts"),
-        F.array().cast("array<string>").alias("hops"),
-        F.lit(None).cast("string").alias("error"),
-        "fetched_at",
-        F.lit(None).cast("string").alias("proxy"),
-        F.lit(None).cast("string").alias("cookies"),
-        F.lit(None).cast("string").alias("etag"),
-        F.lit(None).cast("string").alias("last_modified"),
-        # archive replays carry no live request timing
-        F.lit(None).cast("long").alias("latency_ms"),
-    )
-    parsed = parse_documents(fetch_like).select("seq", "spans", "links")
-    full = fetch_like.join(parsed, "seq").withColumn("round", F.lit(-1))
+    # FETCHED_SCHEMA's columns in its order and types: one attempt, no hops,
+    # final_url = canonical_url; no error, proxy, cookies, validators or
+    # live request timing (null)
+    fixed = {
+        "priority": F.lit(0.0), "depth": F.lit(0), "seq": F.col("key"), "attempt": F.lit(0),
+        "final_url": F.col("canonical_url"), "n_attempts": F.lit(1), "hops": F.array(),
+    }
+    fetch_like = base.select([
+        fixed.get(f.name, F.col(f.name) if f.name in base.columns else F.lit(None))
+        .cast(f.dataType).alias(f.name)
+        for f in FETCHED_SCHEMA.fields
+    ])
+
+    def add_spans(it):
+        for rb in it:
+            spans, links = span_arrays(
+                *(rb.column(c).to_pylist() for c in ("status", "content_type", "resp_body", "final_url"))
+            )
+            yield pa.RecordBatch.from_arrays(rb.columns + [spans, links], schema=arrow_schema)
+
+    full = fetch_like.mapInArrow(add_spans, FETCH_PARSED_SCHEMA).withColumn("round", F.lit(-1))
     snap = crawler.fetched_t.append(full, {"op": "warc_bootstrap"})
     imported = crawler.fetched_t.read_delta(snap)
     n = imported.count()

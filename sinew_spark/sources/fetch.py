@@ -2,7 +2,7 @@
 
 Replaces the reference's single-threaded Faraday middleware stack
 (/root/reference/lib/sinew/base.rb:198-240) with one Arrow-native fused
-fetch(+parse) loop, run as a per-host ``applyInArrow`` stage when paced and
+fetch+parse loop, run as a per-host ``applyInArrow`` stage when paced and
 as a shuffle-free ``mapInArrow`` stage when not:
 
 - paced frontier rows are hash-partitioned by host; each host group is
@@ -18,6 +18,12 @@ as a shuffle-free ``mapInArrow`` stage when not:
 - proxy rotation: deterministic pseudo-random proxy per request
   (base.rb:62-64,178-184) — derived from the key hash so replay is stable
 
+The engine makes one transport call per request hop,
+``Fetcher.resolve_validated``; a transport that needs no cookies, proxy
+or validators implements ``resolve`` alone and inherits the default. The
+fetched bodies are parsed in the same pass by the one span builder,
+``operators/parse.span_arrays``.
+
 Skew control: per-host round caps (operators/frontier.py) bound group size
 before this stage; a hot host never exceeds ``per_host_cap`` rows per round.
 """
@@ -29,6 +35,8 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from sinew_spark.operators.parse import LINKS_TYPE, SPAN_TYPE, span_arrays
 
 MAX_REDIRECT_HOPS = 10
 
@@ -74,71 +82,45 @@ FRONTIER_ORDER = FETCHED_SCHEMA.fields[:10]
 
 
 class Fetcher:
-    """Transport interface. resolve() must be a pure function of
-    (url, method, body, attempt) for deterministic replay."""
+    """Transport interface. The engine calls ``resolve_validated`` once per
+    request hop and nothing else. A simple transport implements only
+    ``resolve``; the default ``resolve_validated`` wraps it with no cookie,
+    proxy or validator support. Both must be pure functions of their
+    arguments for deterministic replay."""
 
     def resolve(self, url: str, method: str, body: str, attempt: int) -> tuple:
         """-> (status:int, content_type:str, body:str|None, redirect_to:str|None)"""
         raise NotImplementedError
-
-    def resolve_with_cookies(
-        self, url: str, method: str, body: str, attempt: int, cookies: dict,
-        proxy: str | None = None,
-    ) -> tuple:
-        """Cookie-aware transport (C11 — the reference's faraday
-        cookie_jar, base.rb:204). ``cookies`` is the flat name→value view
-        the ENGINE computed for this request (RFC 6265 scoping lives in
-        functions/cookies.py, not in transports); the returned
-        ``cookies_after`` is the transport's post-request view — new or
-        changed names are Set-Cookies (dict values carry
-        domain/path/max_age attributes), missing sent names are
-        deletions. ``proxy`` is the rotation-selected proxy URL for this
-        request (C10, reference base.rb:178-184) — network transports
-        MUST route through it; fixture transports may ignore it. Default:
-        cookie-oblivious delegation.
-        -> (status, content_type, body, redirect_to, cookies_after)."""
-        return (*self.resolve(url, method, body, attempt), cookies)
 
     def resolve_validated(
         self, url: str, method: str, body: str, attempt: int, cookies: dict,
         proxy: str | None = None, etag: str | None = None,
         last_modified: str | None = None,
     ) -> tuple:
-        """Conditional-request transport (HTTP revalidation). ``etag`` /
-        ``last_modified`` are the validators the engine stored from a prior
-        fetch of this URL; a supporting transport sends them as
-        If-None-Match / If-Modified-Since and may answer (304, ct, None,
-        None, ...) when the origin says not-modified — the recrawl-scale
-        bandwidth saver (an unchanged page costs ~200 bytes, no body
-        transfer, no re-parse). The last two return slots are the
-        validators of THIS response (None if the origin sent none).
+        """One request hop.
 
-        Default: delegates to resolve_with_cookies with no validator
-        support (never 304s, returns no validators) — user Fetcher
-        subclasses that predate this contract keep working, including ones
-        whose resolve_with_cookies lacks the ``proxy`` kwarg (sniffed once
-        and cached on the instance).
+        ``cookies`` is the flat name→value view the ENGINE computed for this
+        request (C11 — the reference's faraday cookie_jar, base.rb:204; RFC
+        6265 scoping lives in functions/cookies.py, not in transports); the
+        returned ``cookies_after`` is the transport's post-request view —
+        new or changed names are Set-Cookies (dict values carry
+        domain/path/max_age attributes), missing sent names are deletions.
+        ``proxy`` is the rotation-selected proxy URL for this request (C10,
+        reference base.rb:178-184) — network transports MUST route through
+        it; fixture transports may ignore it. ``etag`` / ``last_modified``
+        are the validators the engine stored from a prior fetch of this URL;
+        a supporting transport sends them as If-None-Match /
+        If-Modified-Since and may answer (304, ct, None, None, ...) when the
+        origin says not-modified — the recrawl-scale bandwidth saver (an
+        unchanged page costs ~200 bytes, no body transfer, no re-parse). The
+        last two return slots are the validators of THIS response (None if
+        the origin sent none).
+
+        Default: ``resolve`` with the cookies passed through unchanged, no
+        proxy and no validators (never 304s).
         -> (status, content_type, body, redirect_to, cookies_after,
             etag_out, last_modified_out)."""
-        takes_proxy = getattr(self, "_takes_proxy", None)
-        if takes_proxy is None:
-            import inspect
-
-            try:
-                takes_proxy = (
-                    "proxy" in inspect.signature(self.resolve_with_cookies).parameters
-                )
-            except (TypeError, ValueError):
-                takes_proxy = False
-            try:
-                self._takes_proxy = takes_proxy
-            except Exception:
-                pass
-        if takes_proxy:
-            r = self.resolve_with_cookies(url, method, body, attempt, cookies, proxy=proxy)
-        else:
-            r = self.resolve_with_cookies(url, method, body, attempt, cookies)
-        return (*r, None, None)
+        return (*self.resolve(url, method, body, attempt), cookies, None, None)
 
 
 class FixtureFetcher(Fetcher):
@@ -192,64 +174,62 @@ class FixtureFetcher(Fetcher):
             )
         return self._web.resolve(url, method, body)
 
-    def resolve_with_cookies(self, url, method, body, attempt, cookies, proxy=None):
-        """httpbin-style cookie endpoints for C11 tests: /cookies/set?k=v
-        adds cookies (attribute params __domain/__path/__max_age apply to
-        the cookies set in that request) and redirects to /cookies, which
-        echoes the request's applicable cookies as JSON; /cookies/del?name=k
-        drops k from the visible jar. Everything else is cookie-oblivious."""
+    def resolve_validated(
+        self, url, method, body, attempt, cookies, proxy=None, etag=None,
+        last_modified=None,
+    ):
+        """``resolve`` plus httpbin-style cookie endpoints for C11 tests and
+        deterministic revalidation.
+
+        /cookies/set?k=v adds cookies (attribute params
+        __domain/__path/__max_age apply to the cookies set in that request)
+        and redirects to /cookies, which echoes the request's applicable
+        cookies as JSON; /cookies/setnr sets without the redirect;
+        /cookies/del?name=k drops k from the visible jar. Everything else is
+        cookie-oblivious.
+
+        Every 200 response carries a strong ETag = md5(body) (a pure
+        function of the page, so replay-stable); a request presenting that
+        ETag gets 304 with no body — exactly the origin-side behavior a
+        validator-aware recrawl exploits."""
+        import hashlib as _h
         import json as _json
         from urllib.parse import parse_qsl, urlsplit
 
         parts = urlsplit(url)
+        q = dict(parse_qsl(parts.query, keep_blank_values=True))
+        after = cookies
         if parts.path == "/cookies/setnr":
             # set without redirecting (302-free cookie traffic — lets the
             # bench isolate jar cost from redirect-commit cost)
-            q = dict(parse_qsl(parts.query, keep_blank_values=True))
-            new = dict(cookies)
-            new.update(q)
-            return (200, "application/json", _json.dumps({"cookies": new}, sort_keys=True), None, new)
-        if parts.path == "/cookies/set":
-            q = dict(parse_qsl(parts.query, keep_blank_values=True))
+            after = {**cookies, **q}
+            r = (200, "application/json", _json.dumps({"cookies": after}, sort_keys=True), None)
+        elif parts.path == "/cookies/set":
             attrs = {}
             for a in ("domain", "path", "max_age"):
                 if f"__{a}" in q:
                     attrs[a] = q.pop(f"__{a}")
             if "max_age" in attrs:
                 attrs["max_age"] = float(attrs["max_age"])
-            new = dict(cookies)
+            after = dict(cookies)
             for k, v in q.items():
-                new[k] = {"v": v, **attrs} if attrs else v
-            loc = f"{parts.scheme}://{parts.netloc}/cookies"
-            return (302, "text/html", "", loc, new)
-        if parts.path == "/cookies/del":
-            q = dict(parse_qsl(parts.query, keep_blank_values=True))
+                after[k] = {"v": v, **attrs} if attrs else v
+            r = (302, "text/html", "", f"{parts.scheme}://{parts.netloc}/cookies")
+        elif parts.path == "/cookies/del":
             gone = set((q.get("name") or "").split(","))
-            new = {k: v for k, v in cookies.items() if k not in gone}
-            return (200, "application/json", _json.dumps({"cookies": new}, sort_keys=True), None, new)
-        if parts.path == "/cookies":
-            return (200, "application/json", _json.dumps({"cookies": cookies}, sort_keys=True), None, cookies)
-        return (*self.resolve(url, method, body, attempt), cookies)
-
-    def resolve_validated(
-        self, url, method, body, attempt, cookies, proxy=None, etag=None,
-        last_modified=None,
-    ):
-        """Deterministic revalidation: every 200 response carries a strong
-        ETag = md5(body) (a pure function of the page, so replay-stable);
-        a request presenting that ETag gets 304 with no body — exactly the
-        origin-side behavior a validator-aware recrawl exploits."""
-        import hashlib as _h
-
-        status, ct, resp_body, redirect, after = self.resolve_with_cookies(
-            url, method, body, attempt, cookies, proxy=proxy
-        )
+            after = {k: v for k, v in cookies.items() if k not in gone}
+            r = (200, "application/json", _json.dumps({"cookies": after}, sort_keys=True), None)
+        elif parts.path == "/cookies":
+            r = (200, "application/json", _json.dumps({"cookies": cookies}, sort_keys=True), None)
+        else:
+            r = self.resolve(url, method, body, attempt)
+        status, ct, resp_body = r[:3]
         if status != 200 or resp_body is None:
-            return (status, ct, resp_body, redirect, after, None, None)
+            return (*r, after, None, None)
         cur = '"' + _h.md5(resp_body.encode("utf-8", "replace")).hexdigest() + '"'
         if etag is not None and etag == cur:
             return (304, ct, None, None, after, cur, None)
-        return (status, ct, resp_body, redirect, after, cur, None)
+        return (*r, after, cur, None)
 
 
 class HttpFetcher(Fetcher):
@@ -272,31 +252,21 @@ class HttpFetcher(Fetcher):
         self.insecure = insecure
         self.utf8 = utf8
 
-    def resolve(self, url, method, body, attempt):
-        status, ct, text, redirect, _set, _e, _lm = self._request(url, method, body, None)
-        return (status, ct, text, redirect)
-
-    def resolve_with_cookies(self, url, method, body, attempt, cookies, proxy=None):
-        """Real-network cookie support: the engine's applicable view goes
-        out as a Cookie header; Set-Cookie response headers come back as
-        attribute-carrying dict entries per the transport contract (the
-        engine's RFC 6265 jar does the scoping/expiry). The rotation-
-        selected ``proxy`` routes the request (C10, base.rb:178-184)."""
-        s, ct, text, redirect, after, _e, _lm = self.resolve_validated(
-            url, method, body, attempt, cookies, proxy=proxy
-        )
-        return (s, ct, text, redirect, after)
-
     def resolve_validated(
         self, url, method, body, attempt, cookies, proxy=None, etag=None,
         last_modified=None,
     ):
-        """Real-network conditional request: prior validators go out as
-        If-None-Match / If-Modified-Since; the origin's 304 comes back as
-        status 304 with no body, and the response's ETag / Last-Modified
-        headers are returned for the engine to store for the NEXT
-        revalidation (RFC 9110 §13.1; the recrawl analog of httpdisk's
-        cache, which the reference can't do because it never revalidates)."""
+        """Real-network request. The engine's applicable cookie view goes
+        out as a Cookie header; Set-Cookie response headers come back as
+        attribute-carrying dict entries per the transport contract (the
+        engine's RFC 6265 jar does the scoping/expiry). The rotation-
+        selected ``proxy`` routes the request (C10, base.rb:178-184).
+        Prior validators go out as If-None-Match / If-Modified-Since; the
+        origin's 304 comes back as status 304 with no body, and the
+        response's ETag / Last-Modified headers are returned for the engine
+        to store for the NEXT revalidation (RFC 9110 §13.1; the recrawl
+        analog of httpdisk's cache, which the reference can't do because it
+        never revalidates)."""
         import time as _t
 
         from sinew_spark.functions.cookies import (
@@ -434,10 +404,10 @@ def _fetch_one(
     Secure cookies are withheld from non-https hops) and the transport's
     response cookies fold back with domain/path/expiry semantics
     (functions/cookies.py). ``cookies`` is a normalized scoped jar
-    ({(domain, path, name): record}); returns it updated. ``proxy`` is the
-    rotation-selected proxy for this request — threaded via the
-    resolve_validated transport entry (C10; the base delegation sniffs
-    legacy resolve_with_cookies signatures). ``etag``/``last_modified``
+    ({(domain, path, name): record}); returns it updated. Every hop is one
+    ``fetcher.resolve_validated`` call, the only transport entry the engine
+    uses; ``proxy`` is the rotation-selected proxy for this request (C10).
+    ``etag``/``last_modified``
     are prior validators for the SEED url — sent on the first hop of each
     attempt only (a redirect target is a different resource). A 304
     answer is success.
@@ -460,28 +430,6 @@ def _fetch_one(
     etag_out, lm_out = None, None
     backoff_s = 0.0
 
-    # duck-typed transports (objects exposing only resolve_with_cookies /
-    # resolve, without subclassing Fetcher) get the base delegation — each
-    # missing layer falls through to the Fetcher default applied to the
-    # duck, so a resolve-only object works end to end (the base
-    # resolve_validated would otherwise die on the duck's missing
-    # resolve_with_cookies attribute before ever delegating)
-    resolve_validated = getattr(fetcher, "resolve_validated", None)
-    if resolve_validated is None:
-        if getattr(fetcher, "resolve_with_cookies", None) is not None:
-            # cookie-aware duck: the base delegation (incl. its proxy-kwarg
-            # signature sniff) works as an unbound call
-            def resolve_validated(*a, **k):
-                return Fetcher.resolve_validated(fetcher, *a, **k)
-        else:
-            # resolve-only duck: delegate straight to resolve — the base
-            # resolve_validated would die on the missing
-            # resolve_with_cookies attribute before ever delegating
-            def resolve_validated(url, method, body, attempt, cookies,
-                                  proxy=None, etag=None, last_modified=None):
-                r = fetcher.resolve(url, method, body, attempt)
-                return (*r, cookies, None, None)
-
     def _do(cur, m, b, attempt, first_hop):
         nonlocal jar_changed, etag_out, lm_out
         parts = urlsplit(cur)
@@ -491,12 +439,10 @@ def _fetch_one(
         sent = cookies_for(
             jar, host, req_path, now, secure=(parts.scheme or "").lower() == "https"
         )
-        status, ct, resp_body, redirect, after, e_out, l_out = (
-            resolve_validated(
-                cur, m, b, attempt, sent, proxy=proxy,
-                etag=etag if first_hop else None,
-                last_modified=last_modified if first_hop else None,
-            )
+        status, ct, resp_body, redirect, after, e_out, l_out = fetcher.resolve_validated(
+            cur, m, b, attempt, sent, proxy=proxy,
+            etag=etag if first_hop else None,
+            last_modified=last_modified if first_hop else None,
         )
         etag_out, lm_out = e_out, l_out
         jar_changed |= apply_response_cookies(
@@ -555,45 +501,24 @@ def _fetch_one(
 
 FETCH_PARSED_SCHEMA = T.StructType(
     FETCHED_SCHEMA.fields
-    + [
-        T.StructField(
-            "spans",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("kind", T.StringType()),
-                        T.StructField("text", T.StringType()),
-                        T.StructField("media_ref", T.StringType()),
-                        T.StructField("offset", T.IntegerType()),
-                    ]
-                )
-            ),
-        ),
-        T.StructField("links", T.ArrayType(T.StringType())),
-    ]
+    + [T.StructField("spans", SPAN_TYPE), T.StructField("links", LINKS_TYPE)]
 )
 
 
 def _fetch_arrow(data, fetcher: Fetcher, retries: int, proxies: list[str],
-                 parse: bool, pace: float, arrow_schema) -> list:
+                 pace: float, arrow_schema) -> list:
     """The fetch loop and typed-array builder behind both fetch plans.
 
     ``data`` is a RecordBatch or Table of frontier rows (plus the optional
     host_cookies / prior_etag / prior_last_modified columns) in fetch
     order. ``pace`` > 0 sleeps that long between consecutive requests and
     caps their retry backoff. Returns the columns of ``arrow_schema``:
-    the ten frontier columns passed through, then the fetch (and parse)
-    results. PySpark's pandas serializer converts struct columns
-    row-by-row in Python (~470us/doc measured for the spans column);
-    building typed pyarrow arrays directly costs ~8us/doc."""
+    the ten frontier columns passed through, then the fetch results as
+    typed pyarrow arrays, then the spans and links ``span_arrays`` parses
+    from the fetched bodies."""
     import pyarrow as pa
 
     from sinew_spark.functions.cookies import dump_jar, normalize_jar, own_records
-
-    if parse:
-        # looked up per call, inside the worker, so a wrapper installed on
-        # the module there (perfbench's traced run) sees every parse
-        from sinew_spark.functions.htmlparse import extract_spans_and_links
 
     n = data.num_rows
     names = data.schema.names
@@ -624,53 +549,38 @@ def _fetch_arrow(data, fetcher: Fetcher, retries: int, proxies: list[str],
         )
         latency_ms = int((time.perf_counter() - t_req - backoff_s) * 1000)
         jars[host] = jar
-        row = (
+        rows.append((
             status, ct, body, final_url, n_att, hops, error, time.time(), proxy,
             dump_jar(own_records(jar, host)) if jar_chg else None,
             e_out, lm_out, latency_ms,
-        )
-        if parse:
-            if status is not None and 200 <= status < 400 and body:
-                spans, links = extract_spans_and_links(
-                    body, ct or "text/html", final_url or url
-                )
-                spans = [
-                    {"kind": k, "text": t, "media_ref": m, "offset": o}
-                    for k, t, m, o in spans
-                ]
-                row += (spans, links)
-            else:
-                row += ([], [])
-        rows.append(row)
-    out_fields = list(arrow_schema)[len(FRONTIER_ORDER):]
+        ))
+    out_fields = list(arrow_schema)[len(FRONTIER_ORDER):-2]
     out = list(zip(*rows)) or [()] * len(out_fields)
-    return [data.column(f.name) for f in FRONTIER_ORDER] + [
-        pa.array(vals, type=f.type) for f, vals in zip(out_fields, out)
-    ]
+    return (
+        [data.column(f.name) for f in FRONTIER_ORDER]
+        + [pa.array(vals, type=f.type) for f, vals in zip(out_fields, out)]
+        # status, content_type, resp_body, final_url
+        + list(span_arrays(*out[:4]))
+    )
 
 
-def _arrow_schema(parse: bool):
+def _arrow_schema():
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    return to_arrow_schema(FETCH_PARSED_SCHEMA if parse else FETCHED_SCHEMA)
+    return to_arrow_schema(FETCH_PARSED_SCHEMA)
 
 
-def make_fetch_arrow_fn(
-    fetcher: Fetcher,
-    retries: int,
-    proxies: list[str] | None = None,
-    parse: bool = False,
-):
-    """Unpaced fused fetch(+parse) for mapInArrow: each input batch is
+def make_fetch_arrow_fn(fetcher: Fetcher, retries: int, proxies: list[str] | None = None):
+    """Unpaced fused fetch+parse for mapInArrow: each input batch is
     fetched in the order it arrives, with no sleep."""
     import pyarrow as pa
 
     proxies = proxies or []
-    arrow_schema = _arrow_schema(parse)
+    arrow_schema = _arrow_schema()
 
     def fetch_batches(it):
         for rb in it:
-            cols = _fetch_arrow(rb, fetcher, retries, proxies, parse, 0.0, arrow_schema)
+            cols = _fetch_arrow(rb, fetcher, retries, proxies, 0.0, arrow_schema)
             yield pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
 
     return fetch_batches
@@ -681,16 +591,15 @@ def make_fetch_host_fn(
     rate_limit: float,
     retries: int,
     proxies: list[str] | None = None,
-    parse: bool = False,
 ):
-    """Paced fused fetch(+parse) for groupBy("host").applyInArrow: one
+    """Paced fused fetch+parse for groupBy("host").applyInArrow: one
     host's rows in (priority, seq) order, nulls last, one request every
     max(rate_limit, host_delay) seconds — a robots Crawl-delay or
     throttle ask only ever tightens the global limit."""
     import pyarrow as pa
 
     proxies = proxies or []
-    arrow_schema = _arrow_schema(parse)
+    arrow_schema = _arrow_schema()
 
     def fetch_group(table):
         table = table.sort_by(
@@ -701,7 +610,7 @@ def make_fetch_host_fn(
             hd = table.column("host_delay")[0].as_py()
             if hd is not None:
                 pace = max(rate_limit, hd)
-        cols = _fetch_arrow(table, fetcher, retries, proxies, parse, pace, arrow_schema)
+        cols = _fetch_arrow(table, fetcher, retries, proxies, pace, arrow_schema)
         return pa.Table.from_arrays(cols, schema=arrow_schema)
 
     return fetch_group
@@ -720,11 +629,10 @@ def fetch_rows(
     rate_limit: float = 0.0,
     retries: int = 2,
     proxies: list[str] | None = None,
-    parse: bool = False,
     host_delays: DataFrame | None = None,
     validators: DataFrame | None = None,
 ) -> DataFrame:
-    """Run the fetch stage.
+    """Run the fetch stage, with each fetched body parsed in the same pass.
 
     rate_limit > 0: hash-partition by host, fetch each host group in one
     task — per-host pacing is exact, hosts run in parallel. The explicit
@@ -754,9 +662,9 @@ def fetch_rows(
     If-Modified-Since; a 304 answer costs no body transfer and no parse.
 
     Input columns: key, url, canonical_url, method, body, priority, depth,
-    seq, attempt, host. Output: FETCHED_SCHEMA.
+    seq, attempt, host. Output: FETCH_PARSED_SCHEMA (FETCHED_SCHEMA plus
+    spans and links).
     """
-    schema = FETCH_PARSED_SCHEMA if parse else FETCHED_SCHEMA
     if host_delays is not None:
         frontier = frontier.join(
             F.broadcast(
@@ -780,7 +688,7 @@ def fetch_rows(
         [f.name for f in FRONTIER_ORDER] + [c for c in extra if c in frontier.columns]
     )
     if rate_limit > 0 or host_delays is not None:
-        fn = make_fetch_host_fn(fetcher, rate_limit, retries, proxies, parse=parse)
-        return partition_by_host(frontier).groupBy("host").applyInArrow(fn, schema)
-    afn = make_fetch_arrow_fn(fetcher, retries, proxies, parse=parse)
-    return frontier.mapInArrow(afn, schema)
+        fn = make_fetch_host_fn(fetcher, rate_limit, retries, proxies)
+        return partition_by_host(frontier).groupBy("host").applyInArrow(fn, FETCH_PARSED_SCHEMA)
+    afn = make_fetch_arrow_fn(fetcher, retries, proxies)
+    return frontier.mapInArrow(afn, FETCH_PARSED_SCHEMA)

@@ -110,7 +110,9 @@ def test_http_fetcher_options_plumbing():
 
     f = HttpFetcher(timeout=0.2, headers={"User-Agent": "sinew-spark"}, insecure=True)
     assert f.headers["User-Agent"] == "sinew-spark"
-    status, ct, body, redirect = f.resolve("http://127.0.0.1:9/none", "GET", "", 0)
+    status, ct, body, redirect, *_ = f.resolve_validated(
+        "http://127.0.0.1:9/none", "GET", "", 0, {}
+    )
     assert status == -1 and redirect is None
 
     o = CrawlOptions(headers={"X-A": "1"}, insecure=True)

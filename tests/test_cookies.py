@@ -354,14 +354,14 @@ def test_http_fetcher_cookie_round_trip_no_network():
                     ["fresh=1; Domain=ex.test; Max-Age=60", "bad"], None, None)
 
     f = Stub()
-    status, ct, text, redirect, after = f.resolve_with_cookies(
+    status, ct, text, redirect, after, _etag, _lm = f.resolve_validated(
         "http://www.ex.test/p", "GET", "", 0, {"old": "x"}
     )
     assert status == 200 and seen["cookie_hdr"] == "old=x"
     assert after["old"] == "x"
     assert after["fresh"]["v"] == "1" and after["fresh"]["domain"] == "ex.test"
-    # plain resolve() stays cookie-free
-    assert f.resolve("http://www.ex.test/p", "GET", "", 0)[0] == 200
+    # an empty jar sends no Cookie header
+    assert f.resolve_validated("http://www.ex.test/p", "GET", "", 0, {})[0] == 200
     assert seen["cookie_hdr"] is None
 
 

@@ -245,6 +245,38 @@ def test_revisit_round_spark_job_budget(spark, tmpdir_path):
     assert c.run_round() == {"round": stats["round"] + 1, "selected": 0, "done": True}
 
 
+def test_follow_links_round_spark_job_budget(spark, tmpdir_path):
+    """One follow_links round over the crash test's link graph. The
+    discovered links are counted by an Observation on the frontier overwrite
+    that writes them, so counting runs no job of its own: the round takes 6
+    Spark jobs (8 with a links.count(), which cost 2)."""
+    pages = {
+        "http://w.test/": '<a href="/a">a</a> <a href="/b">b</a>',
+        "http://w.test/a": '<a href="/b">b</a> <a href="/c">c</a>',
+        "http://w.test/b": "leaf",
+        "http://w.test/c": "leaf",
+    }
+    c = Crawler(
+        spark, tmpdir_path + "/c", FixtureFetcher(seed=42, extra_pages=pages),
+        CrawlOptions(retries=0, follow_links=True, max_depth=2),
+    )
+    c.seed(["http://w.test/"])
+    sc = spark.sparkContext
+    group = "test_follow_links_round_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        stats = c.run_round()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert stats["new_links"] == 2
+    assert c.metrics_t.read().collect()[0].new_links == 2
+    assert sorted(r.url for r in c.frontier_t.read().collect()) == [
+        "http://w.test/a", "http://w.test/b",
+    ]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
+
+
 def test_large_budget_round_counts_candidates_once(spark, tmpdir_path, monkeypatch):
     """The distributed top-k (budgets above LARGE_BUDGET_ROWS) samples its
     input in a pass of its own; the candidate count still counts each

@@ -9,16 +9,22 @@ no external network. Covers round-4 parity items:
   faraday-encoding stack, base.rb:2 + Gemfile).
 - Secure cookies withheld from plain-http requests (RFC 6265 §5.4
   step 1; the reference's http-cookie jar does the same).
+
+It also pins the fetch stage's single paths: every request hop is one
+``resolve_validated`` call, and one span builder serves the fetch stage and
+``parse_documents``.
 """
 
 from __future__ import annotations
 
 import gzip
 import http.server
+import json
 import threading
 import zlib
 
 import pytest
+from pyspark.sql import functions as F
 
 from sinew_spark.sources.fetch import HttpFetcher, _fetch_one
 
@@ -168,7 +174,7 @@ def test_no_proxy_goes_direct(loopback):
 
 def test_fetch_one_threads_proxy_to_transport(loopback):
     """The crawl path (_fetch_one) hands the rotation-selected proxy to
-    the transport — end-to-end through resolve_with_cookies."""
+    the transport — end-to-end through resolve_validated."""
     proxy_url, seen = loopback
     f = HttpFetcher(timeout=5.0)
     status, ct, body, final_url, n_att, hops, err, jar, chg, _e, _lm, _b = _fetch_one(
@@ -177,20 +183,6 @@ def test_fetch_one_threads_proxy_to_transport(loopback):
     )
     assert status == 200 and body == "via-proxy" and err is None
     assert seen[0]["requestline"].startswith("GET http://unresolvable-origin.invalid/proxied")
-
-
-def test_fetch_one_without_proxy_kwarg_transport():
-    """A user Fetcher subclass predating the proxy contract (5-arg
-    resolve_with_cookies) still works — the proxy is simply not passed."""
-
-    class Legacy:
-        def resolve_with_cookies(self, url, method, body, attempt, cookies):
-            return (200, "text/plain", "legacy-ok", None, cookies)
-
-    status, _ct, body, *_rest = _fetch_one(
-        Legacy(), "http://h.test/", "GET", "", 0, 0.0, proxy="http://p.test:3128"
-    )
-    assert status == 200 and body == "legacy-ok"
 
 
 def test_gzip_negotiated_and_decoded(loopback):
@@ -439,18 +431,137 @@ def test_307_preserves_method_and_body():
     ]
 
 
-def test_resolve_only_duck_transport_works():
-    """An object exposing ONLY resolve() — no Fetcher subclassing, no
-    resolve_with_cookies — must work through _fetch_one (the documented
-    duck contract); the base delegation used to die on the missing
-    attribute before ever delegating."""
-    from sinew_spark.sources.fetch import _fetch_one
+# --- one transport call, one span builder ------------------------------------
 
-    class Duck:
-        def resolve(self, url, method, body, attempt):
-            return (200, "text/plain", f"ok:{url}", None)
 
-    status, ct, body, final_url, *_ = _fetch_one(
-        Duck(), "http://d.test/x", "GET", "", retries=0, rate_limit=0.0
+def _recording_fetcher(path, **kwargs):
+    """A FixtureFetcher subclass that overrides resolve_validated and calls
+    super() (the shape of a tracing transport), appending each requested
+    URL to ``path``: the fetch runs in Python workers, so the driver reads
+    the calls back from disk. Defined locally so that cloudpickle ships the
+    class to the workers by value."""
+    from sinew_spark.sources.fetch import FixtureFetcher
+
+    class Recording(FixtureFetcher):
+        def resolve_validated(self, url, method, body, attempt, cookies,
+                              proxy=None, etag=None, last_modified=None):
+            with open(path, "a") as f:
+                f.write(url + "\n")
+            return super().resolve_validated(
+                url, method, body, attempt, cookies, proxy=proxy, etag=etag,
+                last_modified=last_modified,
+            )
+
+    return Recording(**kwargs)
+
+
+def test_resolve_validated_override_sees_every_request_of_a_round(spark, tmpdir_path):
+    """Every hop of a crawl round is one resolve_validated call, cookie
+    endpoints and their redirects included, so a subclass that wraps it
+    sees each request once."""
+    from sinew_spark.crawl import Crawler, CrawlOptions
+
+    calls = tmpdir_path + "/calls.txt"
+    c = Crawler(
+        spark, tmpdir_path + "/c", _recording_fetcher(calls, seed=42),
+        CrawlOptions(retries=0),
     )
-    assert status == 200 and body == "ok:http://d.test/x"
+    c.seed([
+        "http://ck.test/cookies/set?a=1",
+        "http://httpbingo.org/redirect/2",
+        "http://httpbingo.org/html",
+    ])
+    assert c.run_round()["fetched"] == 3
+    with open(calls) as f:
+        got = sorted(f.read().split())
+    assert got == sorted([
+        "http://ck.test/cookies/set?a=1",
+        "http://ck.test/cookies",
+        "http://httpbingo.org/redirect/2",
+        "http://httpbingo.org/redirect/1",
+        "http://httpbingo.org/get",
+        "http://httpbingo.org/html",
+    ])
+    # the cookie endpoint ran inside the overridden call: /cookies echoed
+    # the jar its redirect set
+    body = c.fetched_t.read().where("url = 'http://ck.test/cookies/set?a=1'").first().resp_body
+    assert json.loads(body) == {"cookies": {"a": "1"}}
+
+
+def test_span_builder_parses_each_document_once(monkeypatch):
+    """span_arrays looks extract_spans_and_links up on its module at call
+    time and calls it once per parseable row (status 200-399 and a
+    non-empty body); every other row gets empty spans and links."""
+    from sinew_spark.functions import htmlparse
+    from sinew_spark.operators.parse import span_arrays
+
+    orig = htmlparse.extract_spans_and_links
+    seen = []
+
+    def counting(body, ct, base):
+        seen.append(base)
+        return orig(body, ct, base)
+
+    monkeypatch.setattr(htmlparse, "extract_spans_and_links", counting)
+    page = '<p>hi</p><a href="/next">n</a>'
+    rows = [
+        (200, "text/html", page, "http://s.test/a"),
+        (301, None, page, "http://s.test/b"),
+        (200, "application/json", '{"k": 1}', "http://s.test/c"),
+        (404, "text/html", page, "http://s.test/d"),
+        (304, "text/html", None, "http://s.test/e"),
+        (200, "text/html", "", "http://s.test/f"),
+        (None, None, page, "http://s.test/g"),
+        (-1, "", "timeout", "http://s.test/h"),
+    ]
+    spans, links = span_arrays(*zip(*rows))
+    assert seen == ["http://s.test/a", "http://s.test/b", "http://s.test/c"]
+    assert links.to_pylist() == [
+        ["http://s.test/next"], ["http://s.test/next"], [], [], [], [], [], [],
+    ]
+    want = orig(page, "text/html", "http://s.test/a")[0]
+    assert [tuple(s.values()) for s in spans.to_pylist()[0]] == want
+    assert [len(s) for s in spans.to_pylist()[2:]] == [1, 0, 0, 0, 0, 0]
+
+
+def test_parse_documents_and_fetch_rows_build_the_same_spans(spark):
+    """The fetch stage and parse_documents share one span builder: a 200
+    page, a 404, a 304 with a null body and a row with a null final_url
+    (parse_documents falls back to canonical_url) get equal spans and
+    links both ways."""
+    from sinew_spark.functions.urls import make_canonicalize_udf
+    from sinew_spark.operators.frontier import prepare_frontier
+    from sinew_spark.operators.parse import parse_documents
+    from sinew_spark.sources.fetch import FETCH_PARSED_SCHEMA, FixtureFetcher, fetch_rows
+
+    page, missing, cached = "http://sp.test/", "http://sp.test/gone", "http://sp.test/same"
+    f = FixtureFetcher(seed=42, extra_pages={
+        page: '<h1>t</h1><a href="/x">x</a><img src="i.png" alt="a">',
+        missing: (404, "text/html", "<p>not found</p>", None),
+        cached: '<p>unchanged</p><a href="/y">y</a>',
+    })
+    etag = f.resolve_validated(cached, "GET", "", 0, {})[5]
+    frontier = prepare_frontier(
+        spark.createDataFrame(
+            [(u, "GET", "", 0.0, 0, i, 0) for i, u in enumerate((page, missing, cached))],
+            "url string, method string, body string, priority double, depth int, seq long, attempt int",
+        ),
+        make_canonicalize_udf(),
+    )
+    validators = frontier.where(F.col("url") == cached).select(
+        "key", F.lit(etag).alias("etag"), F.lit(None).cast("string").alias("last_modified")
+    )
+    fetched = fetch_rows(frontier, f, retries=0, validators=validators).collect()
+    by_seq = {r.seq: r for r in fetched}
+    assert [by_seq[i].status for i in range(3)] == [200, 404, 304]
+    assert by_seq[2].resp_body is None
+    # the 200 page again, with a null final_url
+    no_final = by_seq[0].asDict() | {"seq": 3, "final_url": None}
+    docs = parse_documents(
+        spark.createDataFrame([r.asDict() for r in fetched] + [no_final], FETCH_PARSED_SCHEMA)
+    ).collect()
+    parsed = {d.seq: (d.spans, d.links) for d in docs}
+    assert {s: (r.spans, r.links) for s, r in by_seq.items()} == {s: parsed[s] for s in range(3)}
+    assert parsed[3] == parsed[0]
+    assert parsed[0][1] == ["http://sp.test/x"] and len(parsed[0][0]) == 3
+    assert parsed[1] == parsed[2] == ([], [])
